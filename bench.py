@@ -66,8 +66,6 @@ HEADLINE = [
     "dim_date_full",
     "text_stats",
     "dedup_exact_groups",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
     "embedding_topk_bruteforce",
     "embedding_ann_lsh",
     "agg_cube",

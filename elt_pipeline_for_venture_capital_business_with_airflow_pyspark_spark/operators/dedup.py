@@ -10,12 +10,18 @@ path — and all avoid driver-side materialization:
                  baseline the approximate methods are tested against.
 - minhash_lsh  : MinHash signatures + banded LSH candidate join →
                  the 100 TB path (cost ≈ linear in corpus + candidate
-                 pairs). Signature hashing is seeded xxhash64, fully
-                 JVM-side.
-- simhash      : 64-bit SimHash fingerprints + chunk-banding for
-                 hamming-distance candidates.
+                 pairs). Signatures hash polynomial char-k-grams
+                 through an affine family, so every value is
+                 reproducible in ANSI SQL and oracle-hash-checkable.
+- simhash      : 60-bit SimHash fingerprints over the same polynomial
+                 grams + chunk-banding (:func:`hamming_near_pairs`)
+                 for hamming-distance candidates.
 - embedding near-dup: cosine ≥ threshold pairs on an embedding column
                  (see ``similarity`` for the ANN machinery).
+
+Each family has ONE implementation. Pair graphs resolve to clusters
+through :func:`connected_components` (large-star/small-star) and
+keep-first survivorship (:func:`survivors_from_edges`).
 
 Scale notes (100 TB): the shingle inverted index must drop
 ultra-frequent shingles (``max_shingle_freq``) or the hottest shingle
@@ -254,66 +260,6 @@ def _universal_hash_params(num_hashes: int, seed: int = 1337) -> list[tuple[int,
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """MinHash signatures: sig[i] = min over shingles of hash_i(shingle).
-
-    One explode + one groupBy computing all ``num_hashes`` mins in a
-    single aggregation pass (map-side partial min → the shuffle ships
-    only 64 ints per doc). Each shingle is hashed ONCE (xxhash64,
-    folded to 31 bits); the ``num_hashes`` family members are cheap
-    universal-hash derivations a_i*h+b_i — 1 string hash + k multiplies
-    per shingle instead of k string hashes.
-
-    Formulation note: a row-local variant (transform/array_min over a
-    shingle array, zero shuffle) was benchmarked ~3× slower — Spark's
-    higher-order lambdas are not whole-stage-codegen'd, while this
-    explode + 64-way min aggregate JITs end-to-end. The shuffle ships
-    partial mins only, so codegen wins.
-    """
-    idx = TX.shingle_stream(df, id_col, text_col, n).select(
-        "id", F.pmod(F.xxhash64("shingle"), F.lit(2147483647)).alias("h")
-    )
-    params = _universal_hash_params(num_hashes)
-    # the mod p is essential: an affine map without it is monotone in h,
-    # making every family member pick the same min shingle. Each min is
-    # ONE parsed expression (round-13): 64 per-node builds cost ~0.5 s
-    # of py4j driver time per plan construction; parse is type- and
-    # value-identical (int literals coerce exactly as F.lit ints).
-    mins = [
-        F.expr(f"min(pmod(`h` * {a} + {b}, 2147483647)) AS h{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sig = idx.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Near-duplicate pairs via banded MinHash LSH.
-
-    ``bands`` bands of ``num_hashes/bands`` rows; docs colliding in ≥1
-    band become candidates (prob ≈ 1-(1-s^r)^b); candidates are scored
-    by estimated Jaccard = fraction of matching signature positions,
-    kept at ``est_jaccard ≥ threshold``. Candidate generation is a
-    hash-key equi-join → linear scale-out; no |corpus|² stage anywhere.
-    """
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
-    return banded_pairs(sig, num_hashes, bands, threshold)
-
-
 def band_entries(
     sig: DataFrame,
     num_hashes: int = 64,
@@ -421,7 +367,8 @@ def banded_pairs(
     """LSH banding over a (id, signature array) frame: band-bucket
     collision candidates, deduped, then scored by estimated Jaccard
     (= fraction of matching signature positions) and thresholded.
-    Shared tail of every minhash variant.
+    The full-pair tail of :func:`minhash_lsh_pairs_poly` and of the
+    shard-internal leg of :func:`incremental_lsh_pairs`.
 
     Hot-bucket guard (VERDICT r9 #1): identical signatures collapse
     to one representative BEFORE the band self-join, then scored
@@ -596,8 +543,8 @@ def _score_candidates(
     candidate set, far smaller than the band join.
 
     Signatures are projected to ``array<int>`` for the scoring join:
-    every minhash family here is mod-2^31 (poly and xxhash variants
-    both), so the cast is lossless and the join rows carry half the
+    signature values are reduced mod the 31-bit prime (2^31 - 1), so
+    the cast is lossless and the join rows carry half the
     bytes — on a boilerplate-heavy corpus the candidate set is the
     biggest intermediate of the whole pipeline (r10 octave stress:
     175M candidates at the sf10 decade), and row width is what
@@ -637,63 +584,6 @@ def _score_candidates(
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-
-
-def simhash_long(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash fingerprint per document as a single LONG.
-
-    For each bit b: sum over tokens of ±1 (sign of token-hash bit b);
-    fingerprint bit b = 1 iff the sum > 0. One explode + one groupBy
-    with 64 vectorized ±1-vote sum aggregates (map-side partials, bit
-    tests are literal shiftright+mask — the whole aggregate is
-    whole-stage-codegen'd; a row-local higher-order-lambda variant
-    benchmarked ~3× slower because HOF lambdas are interpreted), then
-    the votes fold into the long row-side via an OR chain. A long
-    fingerprint makes downstream hamming distance one
-    ``bit_count(a ^ b)``.
-
-    Output: ``simhash`` long (bit i votes token-hash bit i);
-    empty docs → 0.
-    """
-    ids = df.select(F.col(id_col).alias("id"))
-    tok = df.select(
-        F.col(id_col).alias("id"), F.explode(TX.tokens(text_col)).alias("tok")
-    ).select("id", F.xxhash64("tok").alias("h"))
-    # one parsed expression per vote / for the OR fold (round-13, see
-    # minhash_signatures — same trees, none of the per-node py4j cost)
-    votes = tok.groupBy("id").agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (shiftright(`h`, {i}) & 1) != 0 "
-                f"THEN 1 ELSE -1 END) AS v{i}"
-            )
-            for i in range(64)
-        ]
-    )
-
-    def bit_sql(i: int) -> str:
-        return (
-            f"CASE WHEN `v{i}` > 0 THEN shiftleft(CAST(1 AS BIGINT), {i}) "
-            f"ELSE CAST(0 AS BIGINT) END"
-        )
-
-    fp = F.expr(
-        "(" + " | ".join(bit_sql(i) for i in range(64)) + ")"
-    )
-    sh = votes.select("id", fp.alias("simhash"))
-    # empty docs produce no token rows — restore them with the zero hash
-    return ids.join(sh, "id", "left").select(
-        "id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash")
-    )
-
-
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """String-rendered SimHash: 64-char '0'/'1' string, char j = bit
-    j-1 of :func:`simhash_long` (LSB first). Kept as the readable /
-    cross-system-exportable form; the long form is the compute path."""
-    sh = simhash_long(df, id_col, text_col)
-    bits = F.reverse(F.lpad(F.bin(F.col("simhash")), 64, "0"))
-    return sh.select("id", bits.alias("simhash_bits"))
 
 
 def hash_chunk_entries(
@@ -842,59 +732,13 @@ def hamming_near_pairs(
     return intra.unionByName(cross)
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) ≤ max_hamming via chunk
-    banding (pigeonhole: distance ≤ h ⇒ ≥1 of h+1 chunks equal), then
-    exact hamming filter on candidates — the generic
-    :func:`hamming_near_pairs` over SimHash fingerprints. The chunk
-    count auto-sizes to ``max(4, max_hamming + 1)``; before round 9's
-    refactor a max_hamming > 3 request silently kept 4 chunks, which
-    could MISS pairs whose differing bits touch all four chunks."""
-    sh = simhash_long(df, id_col, text_col)
-    return hamming_near_pairs(
-        sh,
-        id_col="id",
-        hash_col="simhash",
-        max_hamming=max_hamming,
-        n_chunks=max(4, max_hamming + 1),
-    )
-
-
 class ConnectedComponentsDidNotConverge(RuntimeError):
-    """Raised when a connected-components loop exhausts ``max_iter``
+    """Raised when :func:`connected_components` exhausts ``max_iter``
     without reaching its fixpoint. A non-converged label frame is
-    plausible-looking but WRONG (labels mid-propagation / multi-parent
-    edges), and downstream survivorship would silently keep the wrong
-    documents — so non-convergence is an error by default, never a
-    degraded answer (round-12 advice: the 300-node diameter-stress
-    test proves min-label at its default budget returns wrong labels,
-    and only oracle-hashed runs would have caught it)."""
-
-
-def _handle_nonconvergence(
-    which: str, max_iter: int, on_max_iter: str
-) -> None:
-    msg = (
-        f"{which} did not converge within max_iter={max_iter} rounds; "
-        "labels are NOT component minima. Raise max_iter or use "
-        "connected_components_star (O(log^2 n) rounds on any graph)."
-    )
-    if on_max_iter == "raise":
-        raise ConnectedComponentsDidNotConverge(msg)
-    if on_max_iter == "warn":
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-    elif on_max_iter != "return":
-        raise ValueError(
-            f"on_max_iter must be 'raise', 'warn' or 'return', got "
-            f"{on_max_iter!r}"
-        )
+    plausible-looking but WRONG (multi-parent edges mid-contraction),
+    and downstream survivorship would silently keep the wrong
+    documents — so non-convergence is always an error, never a
+    degraded answer."""
 
 
 def connected_components(
@@ -903,177 +747,22 @@ def connected_components(
     id_col: str = "id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_iter: int = 20,
-    stats: dict | None = None,
-    on_max_iter: str = "raise",
-) -> DataFrame:
-    """Connected components over a near-duplicate pair graph — the
-    cluster-resolution step that turns pairwise dedup output into
-    "keep one per group" decisions.
-
-    Iterative min-label propagation: every node starts labeled with
-    its own id; each round every node takes the min label among itself
-    and its neighbors; fixpoint = components (label = min node id in
-    the component). Rounds needed = graph diameter — near-dup clusters
-    are shallow (stars/cliques), so convergence is typically 2-3
-    rounds; ``max_iter`` bounds adversarial chains.
-
-    Scale notes, each one load-bearing at 100 TB:
-
-    - The symmetrized EDGE frame is checkpointed ONCE before the loop.
-      Its lineage is usually an expensive pair-generation join (blocked
-      linkage scoring, LSH banding) — without the checkpoint every
-      round's join re-evaluates that whole upstream plan (the exact
-      persist-before-iterate failure mode the round-7 BPE advice
-      flagged; measured 24 s → ~10 s on link_golden_records).
-    - Only EDGE-INCIDENT nodes iterate. In a sparse link graph nodes
-      vastly outnumber linked nodes; a node with no edges can never
-      receive a message, so its label provably stays its own id —
-      singletons are appended after the loop with component = id,
-      never shuffled through the rounds.
-    - Labels are ``localCheckpoint``-ed per round to cut the lineage
-      (an unbounded iterative plan otherwise recompiles and recomputes
-      from scratch every round); early-exit via an isEmpty probe on
-      the changed-label set. For graphs with huge diameter use
-      :func:`connected_components_star` (alternating large-star/
-      small-star, O(log² n) rounds — same signature, equivalence
-      pinned by tests/test_cc_star.py); for shallow dedup graphs this
-      simple form is the right trade.
-    - NON-CONVERGENCE IS AN ERROR: if ``max_iter`` rounds pass without
-      the fixpoint, the labels are mid-propagation garbage, so the
-      default raises :class:`ConnectedComponentsDidNotConverge`
-      instead of returning them. ``on_max_iter``: ``"raise"``
-      (default) / ``"warn"`` / ``"return"`` (diagnostics only — e.g.
-      the diameter-stress test inspects the wrong labels on purpose).
-      ``stats`` (if a dict is passed) records ``rounds`` and
-      ``converged`` either way.
-    """
-    # pre-partition the iterated frames on their JOIN keys before the
-    # checkpoint (round-13, guide §2.4): localCheckpoint preserves
-    # physical partitioning, so every round's sym⋈labels join reuses
-    # hash(b)/hash(id) instead of re-exchanging both sides — the round
-    # job drops from 3 exchanges to 1 (the label re-aggregation, which
-    # a union of differently-keyed inputs genuinely needs). sym is
-    # additionally sorted on b so the sort-merge join's streamed side
-    # needs no per-round sort.
-    sym = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-        )
-        .repartition(F.col("b"))
-        .sortWithinPartitions("b")
-        .localCheckpoint(eager=True)
-    )
-
-    all_nodes = nodes.select(F.col(id_col).alias("id"))
-    edge_nodes = sym.select(F.col("a").alias("id")).distinct().join(
-        all_nodes, "id"
-    )
-    labels = edge_nodes.select("id", F.col("id").alias("comp"))
-    labels = labels.repartition(F.col("id")).localCheckpoint(eager=True)
-
-    from pyspark.sql import Observation
-
-    # convergence probe FOLDED into the round's one materializing
-    # action (round-13, guide §2.4/§1.5): the previous shape ran a
-    # second job per round — new_labels ⋈ labels on id (two more
-    # exchanges) probed with isEmpty(). Instead the old label rides
-    # the union tagged __is_old (exactly one old row per id, so
-    # min(when(__is_old, comp)) IS the previous label), and an
-    # observe() metric counts changed ids DURING the eager
-    # localCheckpoint job. The label frames and the convergence
-    # decisions are unchanged (ids the old inner-join probe skipped —
-    # edge endpoints absent from `nodes` on their first round — have
-    # NULL __old, and comp != NULL is NULL, which sum() skips,
-    # matching the inner join).
-    def _step(lbl: DataFrame) -> "tuple[DataFrame, Observation]":
-        msgs = sym.join(lbl, sym["b"] == lbl["id"]).select(
-            F.col("a").alias("id"), "comp", F.lit(False).alias("__is_old")
-        )
-        obs = Observation()
-        agg = (
-            msgs.unionByName(
-                lbl.select("id", "comp", F.lit(True).alias("__is_old"))
-            )
-            .groupBy("id")
-            .agg(
-                F.min("comp").alias("comp"),
-                F.min(F.when(F.col("__is_old"), F.col("comp"))).alias("__old"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("comp") != F.col("__old")).cast("int")
-                ).alias("n_changed"),
-            )
-        )
-        return agg.select("id", "comp"), obs
-
-    # TWO propagation steps fuse into each materializing job (round-13,
-    # guide §2.4 "fuse one job per round out of the iterative
-    # drivers"): step 2 consumes step 1's plan directly — its
-    # aggregation exchange is shared between step 2's join and union
-    # via exchange reuse, and the checkpointed frames' preserved
-    # hash(b)/hash(id) partitioning keeps the joins exchange-free — so
-    # the serial job chain (the 8→32-core scaling ceiling) halves.
-    # Labels after a fused job are IDENTICAL to two sequential rounds,
-    # and propagating a fixpoint is the identity, so overshooting by
-    # one step when step 1 already converged changes nothing; `rounds`
-    # still counts the propagation steps the result needed, exactly as
-    # the one-step loop reported them.
-    converged = False
-    rounds = 0
-    while rounds < max_iter and not converged:
-        step1, obs1 = _step(labels)
-        if rounds + 1 < max_iter:
-            step2, obs2 = _step(step1)
-            labels = step2.localCheckpoint(eager=True)
-            if int(obs1.get["n_changed"] or 0) == 0:
-                rounds += 1
-                converged = True
-            else:
-                rounds += 2
-                converged = int(obs2.get["n_changed"] or 0) == 0
-        else:
-            labels = step1.localCheckpoint(eager=True)
-            rounds += 1
-            converged = int(obs1.get["n_changed"] or 0) == 0
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if not converged:
-        _handle_nonconvergence("connected_components", max_iter, on_max_iter)
-    singletons = all_nodes.join(edge_nodes, "id", "left_anti").select(
-        "id", F.col("id").alias("comp")
-    )
-    return labels.unionByName(singletons).select(
-        "id", F.col("comp").alias("component")
-    )
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    on_max_iter: str = "raise",
 ) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond" — public algorithm), same signature and output contract
-    as :func:`connected_components`.
+    """Connected components over a pair graph — the cluster-resolution
+    step that turns pairwise dedup/linkage output into "keep one per
+    group" decisions. Returns ``(id, component)`` for every node, the
+    component label being the min node id in the component.
 
-    This is the large-diameter escape hatch the min-label docstring
-    names: min-label propagation needs O(diameter) rounds, so an
-    adversarial near-dup CHAIN (serial plagiarism: A≈B≈C≈…, each
-    pair near-dup but ends unrelated) of length d costs d rounds at
-    100 TB. Large-star/small-star contracts path length by roughly
-    half per round and provably converges in O(log² n) rounds on any
-    graph, each round two groupBys over the current edge set.
+    Algorithm: alternating LARGE-STAR / SMALL-STAR (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond" — public
+    algorithm). It contracts path length by roughly half per round
+    and provably converges in O(log² n) rounds on any graph, each
+    round two groupBys over the current edge set — so an adversarial
+    near-dup CHAIN (serial plagiarism: A≈B≈C≈…, each pair near-dup
+    but the ends unrelated) costs O(log² d) rounds, not the O(d) of
+    label propagation.
 
     Mechanics (edges held DIRECTED child→parent with parent < child,
     so every step strictly decreases labels and termination is
@@ -1086,24 +775,22 @@ def connected_components_star(
       emit (p, m) for every other parent p and (x, m) — x's parent
       list collapses into a star on its minimum.
 
-    Fixpoint = every edge is (node, component-min); detected by an
-    exceptAll emptiness probe on the canonical edge frame. Per-round
-    ``localCheckpoint`` cuts lineage exactly as in the min-label
-    form; singletons bypass the loop. ``stats['rounds']`` /
-    ``stats['converged']`` (if a dict is passed) record the round
-    count and whether the fixpoint break fired — the equivalence and
-    diameter-stress tests pin the O(log²) vs O(d) separation.
+    Fixpoint = every edge is (node, component-min). Per-round
+    ``localCheckpoint`` cuts the lineage (an unbounded iterative plan
+    otherwise recompiles and recomputes from scratch every round).
+
+    Only EDGES iterate: a node with no edges provably labels itself,
+    so nodes meet the result once, in the final left join, never in
+    the rounds. Edges whose endpoints are not both in ``nodes`` are
+    dropped before the loop, so every label is a node id. The output
+    has one row per ``nodes`` row.
 
     Exhausting ``max_iter`` without the fixpoint raises
-    :class:`ConnectedComponentsDidNotConverge` by default
-    (``on_max_iter`` as in :func:`connected_components`): the
-    post-loop min-aggregate over a non-converged multi-parent edge
-    set is NOT the component minimum, so returning it silently would
-    hand downstream survivorship plausible-looking wrong labels. At
-    the default budget this cannot fire on real graphs — 50 rounds
-    covers n beyond any physical corpus (O(log² n)) — so the raise
-    is a guard against misconfigured small budgets, not a runtime
-    hazard.
+    :class:`ConnectedComponentsDidNotConverge`. At the default budget
+    this cannot fire on real graphs — 50 rounds covers n beyond any
+    physical corpus (O(log² n)) — so the raise guards misconfigured
+    small budgets. ``stats`` (if a dict is passed) records ``rounds``
+    and ``converged``.
     """
     sym = edges.select(
         F.col(src_col).alias("a"), F.col(dst_col).alias("b")
@@ -1112,16 +799,19 @@ def connected_components_star(
     ).filter(F.col("a") != F.col("b"))
 
     all_nodes = nodes.select(F.col(id_col).alias("id"))
-    edge_nodes = sym.select(F.col("a").alias("id")).distinct().join(
-        all_nodes, "id"
-    ).localCheckpoint(eager=True)
-
-    # canonical directed form: (x child, p parent), p < x
+    # canonical directed form: (x child, p parent), p < x, over edges
+    # whose endpoints are BOTH nodes — a dangling endpoint would
+    # otherwise become the label of real nodes. sym holds every edge
+    # in both orientations, so once rows whose `a` is not a node are
+    # dropped, an edge keeps both orientations (min(a) != max(a)) iff
+    # neither endpoint dangles. The groupBy is the dedup of the
+    # canonical pairs, so the restriction costs one semi-join.
     cur = (
-        sym.select(
-            F.greatest("a", "b").alias("x"), F.least("a", "b").alias("p")
-        )
-        .distinct()
+        sym.join(all_nodes.select(F.col("id").alias("a")), "a", "semi")
+        .groupBy(F.greatest("a", "b").alias("x"), F.least("a", "b").alias("p"))
+        .agg((F.min("a") != F.max("a")).alias("__both"))
+        .filter(F.col("__both"))
+        .select("x", "p")
         .localCheckpoint(eager=True)
     )
     rounds = 0
@@ -1176,29 +866,17 @@ def connected_components_star(
         stats["rounds"] = rounds
         stats["converged"] = converged
     if not converged:
-        _handle_nonconvergence(
-            "connected_components_star", max_iter, on_max_iter
+        raise ConnectedComponentsDidNotConverge(
+            f"connected_components did not converge within "
+            f"max_iter={max_iter} rounds; labels are NOT component minima"
         )
 
-    # at fixpoint every node carries exactly one parent, so this is a
-    # no-op pass over single-parent rows; under on_max_iter="return"/
-    # "warn" it collapses a non-converged node's residual parent list
-    # (NOT necessarily to the component minimum — which is why
-    # non-convergence raises by default)
-    labels = (
-        edge_nodes.join(
-            cur.select(F.col("x").alias("id"), F.col("p").alias("comp")),
-            "id",
-            "left",
-        )
-        .groupBy("id")
-        .agg(F.min(F.coalesce("comp", "id")).alias("comp"))
-    )
-    singletons = all_nodes.join(edge_nodes, "id", "left_anti").select(
-        "id", F.col("id").alias("comp")
-    )
-    return labels.unionByName(singletons).select(
-        "id", F.col("comp").alias("component")
+    # at fixpoint every non-root node carries exactly one parent (the
+    # min is a no-op pass over single-parent rows); roots and nodes
+    # without edges have none and label themselves
+    parent = cur.groupBy(F.col("x").alias("id")).agg(F.min("p").alias("comp"))
+    return all_nodes.join(parent, "id", "left").select(
+        "id", F.coalesce("comp", "id").alias("component")
     )
 
 
@@ -1219,19 +897,18 @@ def survivors_from_edges(
     consumer (VERDICT r10 #5: the composed flagship was recomputing
     edges a sibling query had already built in the same run).
 
-    Routed through :func:`connected_components_star` (round-12
-    advice): a PERSISTED edge set is exactly where an adversarial
-    deep chain can show up unannounced — the caller didn't just build
-    the graph, so no human is watching its shape — and the star form
-    converges in O(log² n) rounds on ANY graph, where min-label's
-    O(diameter) could exhaust its budget (and since round 12,
-    non-convergence raises rather than returning wrong labels).
+    Routed through :func:`connected_components`: a PERSISTED edge set
+    is exactly where an adversarial deep chain can show up
+    unannounced — the caller didn't just build the graph, so no human
+    is watching its shape — and large-star/small-star converges in
+    O(log² n) rounds on ANY graph.
 
     Returns ``(doc_id, component, kept)`` where ``kept ⟺ doc_id is
     its component's min`` — identical output contract to the
-    one-call composed form.
+    one-call composed form. Edges to ids outside ``nodes`` are
+    ignored, so every component keeps exactly one survivor.
     """
-    comp = connected_components_star(
+    comp = connected_components(
         nodes.select(id_col),
         edges,
         id_col=id_col,
@@ -1270,13 +947,19 @@ def minhash_signatures_poly(
     num_hashes: int = 64,
     prime: int = 2147483647,
 ) -> DataFrame:
-    """MinHash signatures over polynomial char-k-gram hashes — the
-    fully SQL-replicable variant: the gram hash (Σ ascii·31^j), the
-    affine family ((a·h + b) mod p) and therefore every signature
+    """MinHash signatures over polynomial char-k-gram hashes:
+    sig[i] = min over grams of ((a_i·h + b_i) mod p). The gram hash
+    (Σ ascii·31^j), the affine family and therefore every signature
     value are bit-identical computable in ANSI SQL, so the WHOLE LSH
-    dedup pipeline is oracle-hash-checkable (the xxhash variant in
-    :func:`minhash_signatures` is rows-only checkable). Same plan
-    shape: explode grams → one groupBy computing all mins map-side.
+    dedup pipeline is oracle-hash-checkable.
+
+    Plan: explode grams → one groupBy computing all ``num_hashes``
+    mins in a single aggregation pass (map-side partial min → the
+    shuffle ships only 64 ints per doc). A row-local variant
+    (transform/array_min over a gram array, zero shuffle) was
+    benchmarked ~3× slower — Spark's higher-order lambdas are not
+    whole-stage-codegen'd, while this explode + 64-way min aggregate
+    JITs end-to-end.
     """
     # gram hash is a small int; the affine multiply needs 64-bit room
     # (a < 2^31, h < 2^17 → product < 2^48, ANSI-safe as long)
@@ -1284,7 +967,11 @@ def minhash_signatures_poly(
         "id", F.col("h").cast("long").alias("h")
     )
     params = _universal_hash_params(num_hashes)
-    # one parsed expression per min (round-13, see minhash_signatures)
+    # the mod p is essential: an affine map without it is monotone in
+    # h, making every family member pick the same min gram. Each min is
+    # ONE parsed expression (round-13): 64 per-node builds cost ~0.5 s
+    # of py4j driver time per plan construction; parse is type- and
+    # value-identical (int literals coerce exactly as F.lit ints).
     mins = [
         F.expr(f"min(pmod(`h` * {a} + {b}, {int(prime)})) AS h{i}")
         for i, (a, b) in enumerate(params)
@@ -1309,14 +996,6 @@ def minhash_lsh_pairs_poly(
     re-implementation, end to end."""
     sig = minhash_signatures_poly(df, id_col, text_col, k, num_hashes)
     return banded_pairs(sig, num_hashes, bands, threshold)
-
-
-def _sig_fn(signature: str):
-    if signature == "poly":
-        return minhash_signatures_poly
-    if signature == "xxhash":
-        return minhash_signatures
-    raise ValueError(f"unknown signature family: {signature!r}")
 
 
 def _index_fs(spark, path: str):
@@ -1369,6 +1048,22 @@ def read_lsh_meta(spark, path: str) -> dict | None:
     return _json.loads(rows[0]["value"]) if rows else None
 
 
+def _poly_index_meta(spark, path: str) -> dict | None:
+    """:func:`read_lsh_meta`, refusing an index whose metadata names
+    another signature family. The metadata is read from disk, so an
+    index written elsewhere (or by an older build) must fail loudly
+    rather than be probed or appended with polynomial signatures it
+    cannot match."""
+    meta = read_lsh_meta(spark, path)
+    if meta is not None and meta.get("signature") != "poly":
+        raise ValueError(
+            f"LSH index at {path} holds {meta.get('signature')!r} "
+            "signatures; only 'poly' (minhash_signatures_poly) indexes "
+            "can be probed or appended"
+        )
+    return meta
+
+
 def build_lsh_index(
     docs: DataFrame,
     path: str,
@@ -1377,7 +1072,6 @@ def build_lsh_index(
     k: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    signature: str = "poly",
     mode: str = "overwrite",
     signatures: DataFrame | None = None,
 ) -> None:
@@ -1409,15 +1103,19 @@ def build_lsh_index(
     file listing, and a live plan that anti-joins against it would
     re-evaluate to empty for the band write.
 
+    Appending to an index whose metadata names another signature
+    family raises before anything is written.
+
     Durability note: signatures commit before bands — a crash between
     the two writes leaves a detectable torn state (signature ids with
     no band entries). Run :func:`repair_lsh_index` on recovery; see
     :func:`verify_lsh_index`."""
     spark = docs.sparkSession
+    meta = _poly_index_meta(spark, path) if mode == "append" else None
     sig = (
         signatures
         if signatures is not None
-        else _sig_fn(signature)(docs, id_col, text_col, k, num_hashes)
+        else minhash_signatures_poly(docs, id_col, text_col, k, num_hashes)
     )
     sig.write.mode(mode).parquet(f"{path}/signatures")
     if signatures is not None:
@@ -1438,14 +1136,12 @@ def build_lsh_index(
     band_entries(shard_sig, num_hashes, bands).write.mode(
         mode
     ).partitionBy("band").parquet(f"{path}/bands")
-    meta = {
-        "k": k,
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "signature": signature,
-    }
-    if mode != "append" or read_lsh_meta(spark, path) is None:
-        _write_lsh_meta(spark, path, meta)
+    if meta is None:
+        _write_lsh_meta(
+            spark,
+            path,
+            {"k": k, "num_hashes": num_hashes, "bands": bands, "signature": "poly"},
+        )
 
 
 def read_lsh_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
@@ -1613,7 +1309,6 @@ def incremental_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    signature: str = "poly",
     update_index: bool = True,
     broadcast_new: bool = True,
     signatures: DataFrame | None = None,
@@ -1640,7 +1335,9 @@ def incremental_lsh_pairs(
     ``full_pairs(corpus ∪ shard) == full_pairs(corpus) ∪
     incremental_lsh_pairs(shard, index(corpus))`` — signatures and
     band buckets are per-document, so restricting candidate
-    generation to pairs touching the shard loses nothing.
+    generation to pairs touching the shard loses nothing. The shard
+    is signed with :func:`minhash_signatures_poly`; an index whose
+    metadata names another signature family raises.
 
     Scale shape: the corpus index is SCANNED once and never shuffled —
     with ``broadcast_new=True`` (default) the shard's band entries
@@ -1683,7 +1380,7 @@ def incremental_lsh_pairs(
         # returned pairs never re-shingles anything
         build_lsh_index(
             new_docs, index_path, id_col, text_col, k, num_hashes,
-            bands, signature, mode="append",
+            bands, mode="append",
         )
         sig_all, bands_all = read_lsh_index(spark, index_path)
         new_sig = sig_all.join(new_ids, "id", "semi")
@@ -1691,6 +1388,7 @@ def incremental_lsh_pairs(
         new_bands = bands_all.join(new_ids, "id", "semi")
         corpus_bands = bands_all.join(new_ids, "id", "left_anti")
     else:
+        _poly_index_meta(spark, index_path)
         if signatures is not None:
             new_sig = signatures
         else:
@@ -1699,7 +1397,7 @@ def incremental_lsh_pairs(
             # shard-internal banded_pairs) and a broadcast exchange
             # never reuses a shuffle exchange — cut it once. Shard-
             # sized state (|shard| × 64 ints), never corpus-sized.
-            new_sig = _sig_fn(signature)(
+            new_sig = minhash_signatures_poly(
                 new_docs, id_col, text_col, k, num_hashes
             ).localCheckpoint(eager=True)
         new_bands = band_entries(new_sig, num_hashes, bands)
@@ -1752,9 +1450,10 @@ def simhash_poly(
     affine family ((a_j·h + b_j) mod p ≥ (p+1)/2). Like
     :func:`minhash_signatures_poly`, every intermediate is exact
     integer arithmetic — the fingerprint longs hash-match an ANSI-SQL
-    twin bit for bit (the xxhash :func:`simhash_long` is rows-only
-    checkable). ``bits`` ≤ 62 keeps the packed long positive in both
-    engines. Plan: explode grams → one groupBy with ``bits`` sums.
+    twin bit for bit. ``bits`` ≤ 62 keeps the packed long positive in
+    both engines. Plan: explode grams → one groupBy with ``bits`` sums.
+    Near-dup pairs are :func:`hamming_near_pairs` over the
+    ``fingerprint`` column.
     """
     half = (prime + 1) // 2
     idx = TX.char_gram_hashes(df, id_col, text_col, k).select(
@@ -1762,7 +1461,7 @@ def simhash_poly(
     )
     params = _universal_hash_params(bits, seed=4242)
     # one parsed expression per vote / for the packed fold (round-13,
-    # see minhash_signatures — same trees, none of the py4j cost)
+    # see minhash_signatures_poly — same trees, none of the py4j cost)
     votes = [
         F.expr(
             f"sum(CASE WHEN pmod(`h` * {a} + {b}, {int(prime)}) >= {half} "

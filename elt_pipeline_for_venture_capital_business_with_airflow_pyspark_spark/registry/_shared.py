@@ -121,15 +121,23 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.stream
     incremental as INC,
 )
 
-# sf0.001 root for the driver's entry() smoke contract, derived from
-# the same env plumbing the bench uses (sibling directory of
-# $SPARK_GRAFT_SF_DIR) instead of a hardcoded testdata literal
-SF001 = _os.path.join(
-    _os.path.dirname(
-        _os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1").rstrip("/")
-    ),
-    "sf0.001",
-)
+_DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
+
+def _sf001_dir(sf_dir: str) -> str:
+    """sf0.001 root for the driver's entry() smoke contract: the
+    sibling directory of ``sf_dir`` (the bench's $SPARK_GRAFT_SF_DIR),
+    as an absolute path. A relative or non-sibling ``sf_dir`` whose
+    sibling does not exist falls back to the default root's sibling."""
+    derived = _os.path.join(
+        _os.path.dirname(_os.path.abspath(sf_dir.rstrip("/"))), "sf0.001"
+    )
+    if _os.path.isdir(derived):
+        return derived
+    return _os.path.join(_os.path.dirname(_DEFAULT_SF_DIR), "sf0.001")
+
+
+SF001 = _sf001_dir(_os.environ.get("SPARK_GRAFT_SF_DIR", _DEFAULT_SF_DIR))
 
 
 def _dsum(col: F.Column) -> F.Column:

@@ -74,7 +74,7 @@ _WINDOW_ORDER: list[str] = [
     "text_homoglyph_fold", "text_pack_chunks", "sample_quota_mix",
     # dedup family (LSH twins → r10 grouped star form → r11 composed
     # flagship; ngram_jaccard + edit1_names rotated to the tail in
-    # r10, exact_groups + connected_components in r11 —
+    # r10, exact_groups in r11 —
     # dedup_survivors hash-checks CC + keep-first end to end via its
     # recursive-CTE oracle, so the CC semantics stay under the hard
     # hash check)
@@ -138,11 +138,8 @@ _WINDOW_ORDER: list[str] = [
 ]
 
 # Seeded-hash queries whose banding math is not ANSI-SQL-expressible,
-# each mapped to the bit-identical polynomial-hash twin that IS
-# oracle-checked inside the window.
+# each mapped to the oracle-checked twin inside the window.
 _NO_ORACLE_TWINS: dict[str, str] = {
-    "dedup_minhash_lsh": "dedup_minhash_poly",
-    "dedup_simhash": "dedup_simhash_poly",
     "embedding_near_dup_lsh": "embedding_near_dup_sqlcheck",
     "embedding_ann_lsh": "embedding_ann_sqlcheck",
     "embedding_ivf_topk": "embedding_ivf_sqlcheck",

@@ -38,8 +38,8 @@ def _curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     fingerprint, min-id canonical survivor) → deterministic md5-prefix
     train/eval split (~5% eval). Every stage is the scale path: one
     scan, one dedup shuffle, split is a pushed-down predicate. The
-    near-dup LSH stage is exercised separately (dedup_minhash_lsh) —
-    its banding is not ANSI-SQL-expressible."""
+    near-dup LSH stage is exercised and hash-checked separately
+    (dedup_minhash_poly, dedup_survivors)."""
     docs = read_table(spark, sf, "documents")
     scored = docs.filter(
         F.col("text").isNotNull() & (F.length("text") >= 120)

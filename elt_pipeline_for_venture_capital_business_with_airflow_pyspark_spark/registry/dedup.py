@@ -1,11 +1,12 @@
-"""Registry family: dedup (20 queries).
+"""Registry family: dedup (17 queries).
+
+Every entry runs the one implementation of its operator family:
+polynomial-hash MinHash/SimHash (oracle-hash-checkable end to end) and
+large-star/small-star connected components.
 
 - dedup_exact_groups
 - dedup_ngram_jaccard
-- dedup_connected_components
 - dedup_components_star
-- dedup_minhash_lsh
-- dedup_simhash
 - dedup_minhash_poly
 - dedup_minhash_grouped
 - dedup_incremental_lsh
@@ -78,9 +79,9 @@ def _dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     return DD.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
 
 
-# shared by the min-label and large-star/small-star CC entries: both
-# implementations must hash-match the same recursive-CTE closure
-_CC_NGRAM_ORACLE = """
+@_register(
+    "dedup_components_star",
+    """
     WITH RECURSIVE tok AS (
       SELECT doc_id, CASE WHEN trim(text) = '' THEN [] ELSE string_split_regex(trim(text), '\\s+') END AS t
       FROM documents
@@ -111,15 +112,14 @@ _CC_NGRAM_ORACLE = """
       SELECT e.b AS id, r.comp AS comp FROM reach r JOIN e ON e.a = r.id
     )
     SELECT id, MIN(comp) AS component FROM reach GROUP BY id
-    """
-
-
-@_register("dedup_connected_components", _CC_NGRAM_ORACLE)
-def _dedup_connected_components(spark: SparkSession, sf: str) -> DataFrame:
+    """,
+)
+def _dedup_components_star(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster resolution over the exact-Jaccard near-dup graph:
-    iterative min-label propagation (operators.dedup.
-    connected_components) vs a DuckDB recursive-CTE transitive
-    closure — the full dedup pipeline's last step, oracle-checked."""
+    large-star/small-star connected components (operators.dedup.
+    connected_components, Kiveris et al. 2014 — O(log² n) rounds on
+    any graph) vs a DuckDB recursive-CTE transitive closure — the
+    full dedup pipeline's last step, oracle-checked."""
     docs = read_table(spark, sf, "documents")
     pairs = DD.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
     return DD.connected_components(
@@ -129,51 +129,12 @@ def _dedup_connected_components(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_register("dedup_components_star", _CC_NGRAM_ORACLE)
-def _dedup_components_star(spark: SparkSession, sf: str) -> DataFrame:
-    """The SAME near-dup graph resolved by the alternating
-    large-star/small-star algorithm (operators.dedup.
-    connected_components_star, Kiveris et al. 2014 — the
-    large-diameter escape hatch, O(log² n) rounds vs min-label's
-    O(diameter)) against the IDENTICAL recursive-CTE oracle as
-    ``dedup_connected_components``: both implementations must
-    hash-match the same transitive closure, so algorithm swaps can
-    never silently change cluster assignments."""
-    docs = read_table(spark, sf, "documents")
-    pairs = DD.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.8)
-    return DD.connected_components_star(
-        docs.select("doc_id"),
-        pairs.select("id_a", "id_b"),
-        id_col="doc_id",
-    )
-
-
-@_register("dedup_minhash_lsh", None)  # seeded-hash signatures: not SQL-expressible
-def _dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs — the linear-cost 100 TB dedup path.
-    Verified in tests against dedup_ngram_jaccard (recall on planted
-    near-dups); the driver records a rows-only check here."""
-    docs = read_table(spark, sf, "documents")
-    return DD.minhash_lsh_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, threshold=0.7
-    )
-
-
-@_register("dedup_simhash", None)
-def _dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    """SimHash fingerprints + hamming≤3 candidate pairs via chunk
-    banding (rows-only check; hash function not replicable in SQL)."""
-    docs = read_table(spark, sf, "documents")
-    return DD.simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
-
-
 @_register("dedup_minhash_poly", _minhash_poly_sql())
 def _dedup_minhash_poly(spark: SparkSession, sf: str) -> DataFrame:
     """Banded MinHash-LSH near-dup pairs, fully oracle-hash-checked:
     polynomial char-3-gram hashes + affine family make every signature
     value, every band-bucket collision and every estimated-Jaccard
-    score bit-identical in ANSI SQL (unlike the xxhash variant, which
-    is rows-only checkable)."""
+    score bit-identical in ANSI SQL."""
     docs = read_table(spark, sf, "documents")
     return DD.minhash_lsh_pairs_poly(docs, "doc_id", "text", threshold=0.5).select(
         "id_a", "id_b", "est_jaccard"
@@ -291,8 +252,7 @@ def _dedup_incremental_lsh_probe(spark: SparkSession, sf: str) -> DataFrame:
 @_register("dedup_simhash_poly", _simhash_poly_sql())
 def _dedup_simhash_poly(spark: SparkSession, sf: str) -> DataFrame:
     """60-bit SimHash fingerprints, fully oracle-hash-checked via the
-    polynomial-gram + affine-family construction (the xxhash simhash
-    is rows-only checkable)."""
+    polynomial-gram + affine-family construction."""
     docs = read_table(spark, sf, "documents")
     return DD.simhash_poly(docs, "doc_id", "text").select(
         F.col("id").alias("doc_id"), "fingerprint"
@@ -333,21 +293,17 @@ def _dedup_edit1_names(spark: SparkSession, sf: str) -> DataFrame:
 def _dedup_near_dup_survivors(spark: SparkSession, sf: str) -> DataFrame:
     """The end-to-end near-dup CURATION decision, fully hash-checked:
     banded MinHash-LSH candidate pairs (polynomial hashes, no
-    all-pairs) → connected components (iterative min-label
-    propagation) → one canonical survivor per duplicate cluster
-    (min doc_id), every doc labeled keep/drop. This is the complete
-    shape a 100 TB near-dup pass takes; each stage is also verified
-    separately (dedup_minhash_poly, dedup_connected_components)."""
+    all-pairs) → keep-first survivorship over their connected
+    components (operators.dedup.survivors_from_edges) → one canonical
+    survivor per duplicate cluster (min doc_id), every doc labeled
+    keep/drop. This is the complete shape a 100 TB near-dup pass
+    takes; each stage is also verified separately
+    (dedup_minhash_poly, dedup_components_star)."""
     docs = read_table(spark, sf, "documents")
     pairs = DD.minhash_lsh_pairs_poly(docs, "doc_id", "text", threshold=0.5)
-    comp = DD.connected_components(
-        docs.select("doc_id"), pairs.select("id_a", "id_b"), id_col="doc_id"
-    )
-    return comp.select(
-        F.col("id").alias("doc_id"),
-        "component",
-        (F.col("id") == F.col("component")).alias("keep"),
-    )
+    return DD.survivors_from_edges(
+        docs, pairs.select("id_a", "id_b"), id_col="doc_id"
+    ).withColumnRenamed("kept", "keep")
 
 
 @_register(
@@ -431,7 +387,7 @@ def _dedup_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
 def _dedup_cluster_size_histogram(spark: SparkSession, sf: str) -> DataFrame:
     """Duplicate-cluster size distribution — the dedup QA report
     (how much of the corpus sits in 2-, 3-, k-member duplicate
-    clusters; singletons = unique docs). Exact-Jaccard pairs → min-label
+    clusters; singletons = unique docs). Exact-Jaccard pairs →
     connected components → two tiny re-aggregations; the histogram
     itself adds no meaningful shuffle cost over the CC pass."""
     docs = read_table(spark, sf, "documents")
@@ -510,7 +466,7 @@ def _dedup_survivors_sql() -> str:
     recursive transitive closure → keep-first survivorship. The edge
     CTEs are lifted from _minhash_grouped_parts (a WITH cannot nest
     inside a CTE body); the closure mirrors the
-    dedup_connected_components oracle's recursive CTE."""
+    dedup_components_star oracle's recursive CTE."""
     ctes, edge_select = _minhash_grouped_parts()
     return f"""
     WITH RECURSIVE {ctes}, star AS (
@@ -535,8 +491,8 @@ def _dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
     """THE composed dedup flagship (round 10): what a user actually
     runs to dedup a 100 TB corpus in one call — guarded star-form
     MinHash-LSH edges (linear candidate AND edge volume on
-    boilerplate; dedup_minhash_grouped's contract) → checkpointed
-    min-label connected components → keep-first survivorship
+    boilerplate; dedup_minhash_grouped's contract) → large-star/
+    small-star connected components → keep-first survivorship
     (kept ⟺ doc_id is its component's min). Every stage is the
     registry's own oracle-checked operator; this entry hash-checks
     their COMPOSITION end to end, proving the star-form edge set
@@ -582,8 +538,8 @@ def _dedup_edges_build(spark: SparkSession, sf: str) -> DataFrame:
 @_register("dedup_survivors_from_edges", _dedup_survivors_sql())
 def _dedup_survivors_from_edges(spark: SparkSession, sf: str) -> DataFrame:
     """PROBE leg of the edges→survivors lifecycle (VERDICT r10 #5):
-    survivorship from the PERSISTED edge set — checkpointed min-label
-    connected components + keep-first, never re-shingling the corpus.
+    survivorship from the PERSISTED edge set — connected components +
+    keep-first, never re-shingling the corpus.
     Identical output (and oracle) to the one-call ``dedup_survivors``
     composition; the split is what a daily pipeline actually runs,
     and it removes the bench-level redundancy where the composed

@@ -150,8 +150,8 @@ def _link_fellegi_sunter(spark: SparkSession, sf: str) -> DataFrame:
 def _link_golden_records(spark: SparkSession, sf: str) -> DataFrame:
     """End-to-end entity resolution (linkage.link_pairs →
     dedup.connected_components → linkage.golden_records): score-linked
-    part pairs cluster into components (iterative min-label
-    propagation vs the oracle's recursive transitive closure) and
+    part pairs cluster into components (large-star/small-star vs
+    the oracle's recursive transitive closure) and
     each component collapses to ONE golden row by deterministic MDM
     survivorship — p_name/p_size from the lowest-id member holding a
     non-null value (source-priority coalesce, a sorted-struct fold in

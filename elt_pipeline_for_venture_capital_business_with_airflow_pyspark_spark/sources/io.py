@@ -597,7 +597,11 @@ def read_parquet_if_exists(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame | None:
     """Read a parquet table, returning None ONLY when the path does not
-    exist. Every other failure raises."""
+    exist. Every other failure raises — including a missing path with
+    a :func:`replace_parquet_atomic` leftover (``__swap_old`` /
+    ``__swap_new``) beside it: that is a swap interrupted between its
+    two renames, and reading it as "no table yet" would rebuild the
+    table from scratch and let the next swap delete the only copy."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -613,6 +617,15 @@ def read_parquet_if_exists(
                 except Exception:
                     pass
         if cond == "PATH_NOT_FOUND" or "[PATH_NOT_FOUND]" in str(e):
+            hpath = spark._jvm.org.apache.hadoop.fs.Path
+            fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+            for leftover in (path + "__swap_old", path + "__swap_new"):
+                if fs.exists(hpath(leftover)):
+                    raise IOError(
+                        f"{path} is missing but swap leftover {leftover} "
+                        "exists (interrupted replace_parquet_atomic); "
+                        f"restore it to {path} before rerunning"
+                    ) from e
             return None
         raise
 

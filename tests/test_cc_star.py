@@ -1,7 +1,8 @@
 """Large-star/small-star connected components (VERDICT r10 #7 —
-Kiveris et al. 2014): equivalence to the min-label form on every
-graph shape, and the diameter-stress separation that motivates it
-(O(log² n) rounds vs O(diameter))."""
+Kiveris et al. 2014): equivalence to a Python union-find reference on
+every graph shape, the diameter-stress round bound that motivates it
+(O(log² n) rounds vs O(diameter)), and keep-first survivorship on
+top of it."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     dedup as DD,
 )
+from test_property_lm_ccstar import _union_find
 
 
 def _frames(spark, n_nodes, edge_list):
@@ -44,86 +46,62 @@ GRAPHS = {
 
 
 @pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_star_equals_min_label(spark, name):
+def test_star_equals_union_find(spark, name):
     n, edge_list = GRAPHS[name]
     nodes, edges = _frames(spark, n, edge_list)
-    a = _labels(DD.connected_components(nodes, edges))
-    b = _labels(DD.connected_components_star(nodes, edges))
-    assert a == b, f"{name}: star vs min-label disagree"
+    got = _labels(DD.connected_components(nodes, edges))
+    assert got == _union_find(n, edge_list), f"{name}: star vs union-find disagree"
 
 
-def test_star_equals_min_label_random_graph(spark):
+def test_star_equals_union_find_random_graph(spark):
     rng = random.Random(42)
     n = 120
     edge_list = [
         (rng.randrange(n), rng.randrange(n)) for _ in range(180)
     ]
     nodes, edges = _frames(spark, n, edge_list)
-    a = _labels(DD.connected_components(nodes, edges, max_iter=200))
-    b = _labels(DD.connected_components_star(nodes, edges))
-    assert a == b
+    assert _labels(DD.connected_components(nodes, edges)) == _union_find(
+        n, edge_list
+    )
 
 
-def test_diameter_stress_star_wins(spark):
+def test_diameter_stress_converges_in_few_rounds(spark):
     """Adversarial near-dup chain (serial plagiarism): a path of 300
-    nodes has diameter 299. Min-label at its default round budget
-    (20) CANNOT have converged — path contraction is one hop per
-    round — while large-star/small-star halves path lengths and
-    lands the exact answer well inside that same budget."""
+    nodes has diameter 299. Label propagation would need 299 rounds;
+    large-star/small-star halves path lengths and lands the exact
+    answer within a 20-round budget."""
     n = 300
     nodes, edges = _frames(spark, n, [(i, i + 1) for i in range(n - 1)])
 
     stats: dict = {}
     got = _labels(
-        DD.connected_components_star(nodes, edges, max_iter=20, stats=stats)
+        DD.connected_components(nodes, edges, max_iter=20, stats=stats)
     )
     assert got == {i: 0 for i in range(n)}
+    assert stats["converged"] is True
     assert stats["rounds"] <= 12, (
         f"star variant needed {stats['rounds']} rounds on a 300-path"
     )
 
-    # min-label at the same budget must REFUSE to answer (round-12
-    # advice: before this guard it silently returned wrong labels)
-    with pytest.raises(DD.ConnectedComponentsDidNotConverge):
-        DD.connected_components(nodes, edges, max_iter=20)
 
-    # diagnostics path: on_max_iter="return" exposes the wrong labels
-    # (proving the raise is load-bearing) and flags them in stats
-    mstats: dict = {}
-    wrong = _labels(
-        DD.connected_components(
-            nodes, edges, max_iter=20, stats=mstats, on_max_iter="return"
-        )
-    )
-    assert mstats["converged"] is False
-    assert wrong != {i: 0 for i in range(n)}, (
-        "min-label unexpectedly converged a 299-diameter path in 20 "
-        "rounds — the escape hatch would be unnecessary"
-    )
-
-
-def test_star_raises_on_exhausted_budget(spark):
-    """The star form refuses a budget it cannot converge in, and
-    stats reports converged=False under the diagnostics escape."""
+def test_raises_on_exhausted_budget(spark):
+    """A budget the algorithm cannot converge in raises (never returns
+    mid-contraction labels), and stats records converged=False."""
     n = 64
     nodes, edges = _frames(spark, n, [(i, i + 1) for i in range(n - 1)])
-    with pytest.raises(DD.ConnectedComponentsDidNotConverge):
-        DD.connected_components_star(nodes, edges, max_iter=1)
     stats: dict = {}
-    DD.connected_components_star(
-        nodes, edges, max_iter=1, stats=stats, on_max_iter="return"
-    )
+    with pytest.raises(DD.ConnectedComponentsDidNotConverge):
+        DD.connected_components(nodes, edges, max_iter=1, stats=stats)
     assert stats["converged"] is False
     ok: dict = {}
-    DD.connected_components_star(nodes, edges, stats=ok)
+    DD.connected_components(nodes, edges, stats=ok)
     assert ok["converged"] is True
 
 
 def test_survivors_from_edges_handles_deep_chain(spark):
-    """survivors_from_edges routes through the star CC (round-12
-    advice), so a 300-node near-dup chain — which would exhaust
-    min-label's default budget — resolves exactly at the DEFAULT
-    budget: one component, min id kept."""
+    """survivors_from_edges routes through the star CC, so a 300-node
+    near-dup chain resolves exactly at the DEFAULT budget: one
+    component, min id kept."""
     n = 300
     nodes, edges = _frames(spark, n, [(i, i + 1) for i in range(n - 1)])
     out = DD.survivors_from_edges(
@@ -136,16 +114,30 @@ def test_survivors_from_edges_handles_deep_chain(spark):
 
 
 def test_star_survivors_composition(spark):
-    """survivors_from_edges semantics hold when fed through the star
-    CC as well: same kept set as min-label on a mixed graph."""
+    """Component minima on a mixed graph are exactly the ids
+    survivorship keeps."""
     n, edge_list = 12, [(0, 1), (1, 2), (4, 5), (5, 6), (6, 4)]
     nodes, edges = _frames(spark, n, edge_list)
-    comp = DD.connected_components_star(nodes, edges)
+    comp = DD.connected_components(nodes, edges)
     kept = {
         r["id"]
         for r in comp.filter(F.col("id") == F.col("component")).collect()
     }
     assert kept == {0, 3, 4, 7, 8, 9, 10, 11}
+
+
+def test_survivors_ignore_dangling_edge_endpoints(spark):
+    """Edges to ids outside ``nodes`` are dropped before the loop, so
+    every label is a node id and no cluster loses its survivor. Node
+    0 is absent: docs 1 and 2 are only linked through it."""
+    nodes = spark.createDataFrame([(1,), (2,), (5,)], "doc_id long")
+    edges = spark.createDataFrame([(0, 1), (0, 2)], "id_a long, id_b long")
+    out = {
+        r["doc_id"]: (r["component"], r["kept"])
+        for r in DD.survivors_from_edges(nodes, edges).collect()
+    }
+    assert out == {1: (1, True), 2: (2, True), 5: (5, True)}
+
 
 # round-13: GATE-covered heavy suite — deselected from the default
 # (driver-budget) collection, runs via tools/round_gate.py / -m 'slow or not slow'

@@ -86,6 +86,26 @@ def test_n_day_append_composes_to_full_build(spark, sf_dir, tmp_path):
     }
 
 
+def test_index_of_another_signature_family_is_refused(spark, sf_dir, tmp_path):
+    """Index metadata is read from disk: an index whose meta names a
+    signature family other than ``poly`` raises on probe and on
+    append — it is never probed or extended with poly signatures —
+    and the refused append writes nothing."""
+    docs = _docs(spark, sf_dir)
+    index = str(tmp_path / "idx")
+    DD.build_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), index)
+    meta = dict(DD.read_lsh_meta(spark, index), signature="xxhash")
+    DD._write_lsh_meta(spark, index, meta)
+    before = _sig_set(DD.read_lsh_index(spark, index)[0])
+    shard = docs.filter(F.col("doc_id") % 2 == 1)
+    for update_index in (True, False):
+        with pytest.raises(ValueError, match="xxhash"):
+            DD.incremental_lsh_pairs(shard, index, update_index=update_index)
+    with pytest.raises(ValueError, match="xxhash"):
+        DD.build_lsh_index(shard, index, mode="append")
+    assert _sig_set(DD.read_lsh_index(spark, index)[0]) == before
+
+
 def test_compact_lsh_index_preserves_results_and_cuts_files(
     spark, sf_dir, tmp_path
 ):

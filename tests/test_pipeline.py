@@ -158,6 +158,22 @@ def test_airflow_dag_import_gated():
         assert {t.task_id for t in dag.tasks} == set(P.WAREHOUSE_ORDER)
 
 
+def test_swap_leftover_is_an_error_not_an_empty_table(spark, staging_dir, tmp_path):
+    """A table missing beside a swap leftover is a swap interrupted
+    between its two renames. The daily merge must refuse to run rather
+    than rebuild the dim from that day's rows alone (keys restarting
+    at 1), and must leave the leftover — the only copy — in place."""
+    import os
+
+    wh = str(tmp_path / "wh_swap")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    os.rename(f"{wh}/dim_company", f"{wh}/dim_company__swap_old")
+    with pytest.raises(IOError, match="dim_company__swap_old"):
+        P.run_warehouse_table(spark, "dim_company", staging_dir, wh, ds="2013-07-02")
+    assert not os.path.exists(f"{wh}/dim_company")
+    assert spark.read.parquet(f"{wh}/dim_company__swap_old").count() == 3
+
+
 def test_run_single_table_unit(spark, staging_dir, tmp_path):
     """Per-table task unit: dims then one fact, exactly as an external
     scheduler would drive it."""

@@ -46,15 +46,6 @@ SHUFFLE_BUDGET = {
     "multimodal_features": 0,
     "dedup_latest_wins": 1,
     "tumbling_window_agg": 1,
-    # r10 hot-bucket guard: shingle->signature groupBy + the
-    # identical-signature collapse window (partitionBy full signature)
-    # + the candidate dedup; the expansion joins ride broadcasts /
-    # ReusedExchange (measured 3 real exchanges at both SFs)
-    "dedup_minhash_lsh": 3,
-    # r10 hot-bucket guard: simhash groupBy(id) + the identical-
-    # fingerprint collapse window + the candidate dedup (measured 3
-    # real exchanges at both SFs)
-    "dedup_simhash": 3,
     "embedding_topk_bruteforce": 1,
     "embedding_ann_lsh": 2,
     "agg_cube": 1,

@@ -8,6 +8,8 @@ performance bug that no row-comparison would ever catch.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -337,3 +339,33 @@ def test_topk_per_group_uses_window_group_limit(spark, sf_dir):
         "== Initial Plan =="
     )[0]
     assert "WindowGroupLimit" in final, final
+
+
+def test_ivf_probe_prunes_cell_partitions(spark, sf_dir, tmp_path):
+    """Scale contract: ivf_probe_index reads only the probed cell
+    directories. The cells scan carries a dynamicpruningexpression on
+    the ``cell`` partition column, fed by the probe broadcast (no
+    driver-side collect of the cell ids, no post-scan data filter)."""
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
+        similarity as SIM,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    index = str(tmp_path / "ivf")
+    SIM.build_ivf_index(emb, index, n_centroids=8)
+    queries = emb.filter(F.col("vec_id") % 7 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    df = SIM.ivf_probe_index(queries, index, k=3, n_probe=2)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    # the cells table is the only scan with the ``cell`` partition
+    # column (locations are truncated in plan strings)
+    cell_scans = [
+        l for l in executed.splitlines()
+        if re.search(r"FileScan parquet \[[^\]]*\bcell#", l)
+    ]
+    assert cell_scans, "no scan of the cells table in the executed plan"
+    for scan in cell_scans:
+        pf = scan.split("PartitionFilters: ", 1)[1].split("], ")[0]
+        assert "dynamicpruningexpression(cell" in pf, scan

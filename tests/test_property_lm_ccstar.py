@@ -70,7 +70,7 @@ def test_cc_star_matches_union_find(spark, n, edges):
         edf = edf.filter(F.lit(False))
     got = {
         r["id"]: r["component"]
-        for r in DD.connected_components_star(nodes, edf).collect()
+        for r in DD.connected_components(nodes, edf).collect()
     }
     assert got == expected
 

@@ -186,6 +186,39 @@ def test_window_outputs_are_canonicalizer_safe(spark, sf_dir):
     assert not offenders, f"non-scalar window outputs: {offenders}"
 
 
+def test_sf001_resolves_relative_sf_dir(sf_dir, tmp_path, monkeypatch):
+    """A relative $SPARK_GRAFT_SF_DIR (``sf0.1``) must still give
+    entry() an absolute, existing sf0.001 root: the value's own
+    sibling when it exists, else the default root's sibling."""
+    import os
+    import subprocess
+    import sys
+
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.registry._shared import (
+        _sf001_dir,
+    )
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark"
+        ".registry._shared import SF001; print(SF001)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": "sf0.1"},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip().splitlines()[-1]
+    assert out == sf_dir
+
+    (tmp_path / "sf0.1").mkdir()
+    (tmp_path / "sf0.001").mkdir()
+    monkeypatch.chdir(tmp_path)
+    assert _sf001_dir("sf0.1") == str(tmp_path / "sf0.001")
+
+
 def test_readme_registry_block_in_sync():
     """The README's generated registry table must match _REGISTRY
     exactly (VERDICT r6 item 8): a registered-but-undocumented query,

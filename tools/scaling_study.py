@@ -1,8 +1,8 @@
 """Scaling study for the fixed-overhead LSH/ANN claim (VERDICT r02 #2).
 
-The defense of the 2.4-2.7 s dedup_minhash_lsh / dedup_simhash /
-embedding_ann_lsh bench entries is "per-stage fixed overhead that
-amortizes at scale". This measures it: run the trio at sf0.1 (5,000
+The defense of the LSH/ANN entries (dedup_minhash_poly,
+embedding_ann_lsh) is "per-stage fixed overhead that amortizes at
+scale". This measures it: run the pair at sf0.1 (5,000
 docs / 2,000 vectors) and at a locally generated 10x set (~sf1:
 50,000 docs / 20,000 vectors), and report the observed scaling
 exponent  log(t_10x / t_1x) / log(10)  per query. Exponent < 1 ⇒
@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF01 = "/root/testdata/sf0.1"
 TILE = 10
-QUERIES = ["dedup_minhash_lsh", "dedup_simhash", "embedding_ann_lsh"]
+QUERIES = ["dedup_minhash_poly", "embedding_ann_lsh"]
 
 
 def build_10x(out_dir: str) -> None:
