@@ -7,8 +7,9 @@ append (warehouse, `dags/vcapital_warehouse/tasks/components/load.py:68-73`)
 — it never computes what actually *changed* between runs. A snapshot
 diff is the missing primitive that turns full daily extracts into an
 incremental changeset (feedable straight into
-``sources.io.upsert_parquet`` / ``write_jdbc``), and at 100 TB it is
-the difference between rewriting a table and touching 0.1% of it.
+``sources.io.upsert_parquet_files``, which rewrites only the files the
+changed keys live in, or ``write_jdbc``), and at 100 TB it is the
+difference between rewriting a table and touching 0.1% of it.
 
 Scale shape: ONE full-outer shuffle join on the natural key — no
 window, no row amplification. Both sides are pruned to

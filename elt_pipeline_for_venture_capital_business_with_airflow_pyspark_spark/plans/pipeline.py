@@ -11,7 +11,10 @@ call these functions directly — there is nothing Airflow-specific to
 port.
 
 Differences from the reference, by design (SURVEY.md §2.9):
-- writes are idempotent overwrites, not blind appends (quirk .4);
+- reruns converge instead of duplicating (quirk .4): a full build
+  overwrites, and a daily run appends only keys the warehouse lacks
+  and upserts facts on their natural id, rewriting only the files
+  those ids live in (see :func:`run_warehouse_table`);
 - incremental mode filters on the SAME path the full load uses, so the
   incremental/full path mismatch bug (quirk .3) cannot exist;
 - dim_people and bridge_company_people are built (quirk .6 — declared
@@ -99,9 +102,9 @@ def build_warehouse(
 
 
 # incremental-merge metadata: surrogate + natural key per dim, natural
-# id per fact. dim_date (static spine), dim_people and
-# bridge_company_people (full-load staging inputs, see read_staging)
-# rebuild wholesale every run.
+# id per fact. dim_people and bridge_company_people (full-load staging
+# inputs, see read_staging) rebuild wholesale every run; the static
+# dim_date spine is written once.
 _DIM_KEYS = {
     "dim_company": ("sk_company_id", "nk_company_id"),
     "dim_funds": ("sk_fund_id", "nk_fund_id"),
@@ -129,20 +132,31 @@ def run_warehouse_table(
     Full mode (``ds=None``): idempotent overwrite.
 
     Incremental mode (``ds`` set): staging is sliced to the day and the
-    warehouse MERGES instead of overwriting — a daily run must not
-    replace a table with only that day's rows:
+    warehouse MERGES instead of overwriting, writing only what the day
+    changed — existing data files are never rewritten wholesale:
 
+    - dim_date: a committed spine (its ``_SUCCESS`` marker, no Spark
+      job) is left alone; a missing or uncommitted one is written;
     - sliced dims (dim_company, dim_funds): natural keys not yet in the
-      warehouse are appended with surrogate keys continuing from
-      ``max_key(existing)`` (the BIGSERIAL posture — existing rows keep
-      their keys, so facts never dangle); known keys stay untouched;
-    - facts: upsert on the natural id (rerunning a day converges
-      instead of duplicating, fixing reference quirk §2.9.4);
-    - dim_date / dim_people / bridge_company_people: full rebuild each
-      run (static spine resp. full-load staging inputs).
+      warehouse get surrogate keys continuing from ``max_key(existing)``
+      (the BIGSERIAL posture — existing rows keep their keys, so facts
+      never dangle) and are appended as one new file
+      (``sources.io.append_parquet``); known keys stay untouched;
+    - facts: upsert on the natural id through
+      ``sources.io.upsert_parquet_files`` — only the files holding one
+      of the day's ids are rewritten, usually none, so the commit is a
+      plain append (rerunning a day converges instead of duplicating,
+      fixing reference quirk §2.9.4);
+    - dim_people / bridge_company_people: full rebuild each run
+      (full-load staging inputs).
 
-    Self-referencing merges land via ``replace_parquet_atomic`` (the
-    merge plan reads the same path it replaces).
+    Every daily commit adds files before it removes any, so a crash
+    never loses a row. A dim that crashes after its append reruns as a
+    no-op: its new keys are in the warehouse, the anti-join drops them,
+    and nothing is appended. A fact upsert that crashes between its
+    append and its deletes leaves duplicate ids; the rerun of the same
+    ``(table, ds)`` finds both copies among the touched files and
+    rewrites them into one.
     """
     from ..operators.surrogate import max_key
 
@@ -153,7 +167,8 @@ def run_warehouse_table(
         return spark.read.parquet(f"{warehouse_dir}/{table}")
 
     if name == "dim_date":
-        SIO.write_parquet(DDATE.build_dim_date(spark), path, mode="overwrite")
+        if ds is None or not SIO.is_committed(spark, path):
+            SIO.write_parquet(DDATE.build_dim_date(spark), path, mode="overwrite")
         return
     if name == "dim_people":
         SIO.write_parquet(
@@ -190,8 +205,7 @@ def run_warehouse_table(
                 on="object_id",
                 how="left_anti",
             )
-            fresh = build_dim(unseen, max_key(old, sk))
-            SIO.replace_parquet_atomic(spark, old.unionByName(fresh), path)
+            SIO.append_parquet(build_dim(unseen, max_key(old, sk)), path)
         return
 
     if name in _FACT_KEYS:
@@ -210,11 +224,10 @@ def run_warehouse_table(
                 staging["acquisition"], _persisted("dim_company"),
                 _persisted("dim_date"),
             )
-        if ds is None or SIO.read_parquet_if_exists(spark, path) is None:
+        if ds is None:
             SIO.write_parquet(df, path, mode="overwrite")
         else:
-            merged = SIO.upsert_parquet(spark, df, path, keys=[_FACT_KEYS[name]])
-            SIO.replace_parquet_atomic(spark, merged, path)
+            SIO.upsert_parquet_files(spark, df, path, keys=[_FACT_KEYS[name]])
         return
 
     raise ValueError(f"unknown warehouse table: {name}")

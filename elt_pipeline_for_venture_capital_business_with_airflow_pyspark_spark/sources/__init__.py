@@ -8,5 +8,5 @@ from .io import (  # noqa: F401
     write_orc,
     write_parquet,
     write_jdbc,
-    upsert_parquet,
+    upsert_parquet_files,
 )

@@ -12,7 +12,8 @@ Scale posture:
   rerun duplicates);
 - upsert (S7, reference staging load.py:94-118 via pangres) is the
   dedup-union rewrite: new ∪ (old ⟕anti new) — no MERGE needed on
-  plain parquet, single shuffle on the key.
+  plain parquet, single shuffle on the key — applied per file: only
+  the files holding one of the new keys are rewritten.
 """
 
 from __future__ import annotations
@@ -546,23 +547,109 @@ def merge_upsert(
     return new_df.unionByName(keep_old)
 
 
-def upsert_parquet(
+def is_committed(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds a committed write: the ``_SUCCESS``
+    marker the output committer creates last. Pure FS metadata (no
+    job); a missing table and a write that died before its commit both
+    read False."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    marker = hpath(f"{path}/_SUCCESS")
+    return bool(marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(marker))
+
+
+def _append_file(df: DataFrame, path: str, n_files: int = 1) -> None:
+    # at most n_files new files, written by as many parallel tasks
+    df.coalesce(n_files).write.mode("append").option("compression", "zstd").parquet(path)
+
+
+def append_parquet(df: DataFrame, path: str) -> None:
+    """Add ``df`` to the parquet table at ``path`` as ONE new data file;
+    every existing file keeps its name and bytes. An empty ``df``
+    writes nothing (Spark would commit an empty file), so replaying an
+    append whose rows are already in the table leaves it as it is.
+
+    ``df`` is persisted for the emptiness probe and the write, so its
+    plan runs once even when it reads ``path`` itself (the new file
+    lands under a fresh name, never over a file being read)."""
+    df = df.persist()
+    try:
+        if not df.isEmpty():
+            _append_file(df, path)
+    finally:
+        df.unpersist()
+
+
+def remove_files(spark: SparkSession, files: list[str]) -> None:
+    """Delete data files given as ``_metadata.file_path`` URIs."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    for f in files:
+        p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
+        if not p.getFileSystem(conf).delete(p, False):
+            raise IOError(f"could not delete {f}")
+
+
+def upsert_parquet_files(
     spark: SparkSession,
     new_df: DataFrame,
     path: str,
     keys: list[str],
     order_by: str | None = None,
-) -> DataFrame:
-    """Key-upsert onto a parquet table: :func:`merge_upsert` against the
-    current contents of ``path``. Single-writer assumed, same as the
-    reference.
+) -> None:
+    """Key-upsert ``new_df`` into the parquet table at ``path`` in
+    place, rewriting only the data files that hold one of its keys
+    (file-level copy-on-write; S7, reference staging load.py:94-118).
 
-    Only a missing path is treated as an empty table; any other read
-    failure (corrupt footer, permissions, transient FS error)
-    propagates — silently treating those as "table does not exist"
-    would make the next overwrite drop the existing data."""
-    old = read_parquet_if_exists(spark, path)
-    return merge_upsert(new_df, old, keys, order_by)
+    One scan of the table's key columns, semi-joined with the keys of
+    ``new_df`` (AQE picks the join strategy from the persisted delta's
+    size), lists the touched files (``_metadata.file_path``). The commit
+    then appends :func:`merge_upsert` of ``new_df`` over the touched
+    files' rows as at most as many new files as it touched (one when it
+    touched none), and only then deletes the touched files. With no
+    touched file, the common case for a day of
+    new facts, the commit is a plain append; an empty ``new_df`` skips
+    the scan and writes nothing. Footer min/max cannot stand in for the
+    key scan: keys that arrive spread over the key range overlap every
+    file's range.
+
+    The add-then-remove order never loses a row. A crash between the
+    append and the last delete leaves both copies of the touched keys
+    (duplicate keys, no lost rows); rerunning the same upsert finds both
+    copies among its touched files and rewrites them into one, because
+    the touched rows are deduplicated on the key before the merge.
+    Single writer assumed, same as the reference.
+
+    Only a missing path is an empty table (the upsert then writes the
+    table); any other read failure (corrupt footer, permissions,
+    transient FS error) propagates."""
+    key_schema = T.StructType([new_df.schema[k] for k in keys])
+    table = read_parquet_if_exists(spark, path, schema=key_schema)
+    if table is None:
+        write_parquet(merge_upsert(new_df, None, keys, order_by), path)
+        return
+    new_df = new_df.persist()  # read by the probe, the key scan and the merge
+    try:
+        if new_df.isEmpty():
+            return
+        hits = (
+            table.select(*keys, F.col("_metadata.file_path").alias("__file"))
+            .join(new_df.select(*keys), on=keys, how="left_semi")
+            .select("__file")
+            .distinct()
+            .collect()
+        )
+        touched = sorted(r["__file"] for r in hits)
+        old = None
+        if touched:
+            jvm = spark._jvm
+            files = [jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)).toString() for f in touched]
+            old = spark.read.schema(new_df.schema).parquet(*files).dropDuplicates(keys)
+        # one file for a plain append; a rewrite keeps the touched
+        # files' parallelism instead of funnelling them through one task
+        _append_file(merge_upsert(new_df, old, keys, order_by), path, max(1, len(touched)))
+        remove_files(spark, touched)
+    finally:
+        new_df.unpersist()
 
 
 def delete_keys(

@@ -15,7 +15,7 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.schema
 )
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import (
     read_table,
-    upsert_parquet,
+    upsert_parquet_files,
     write_parquet,
 )
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.streaming import (
@@ -32,8 +32,8 @@ def test_upsert_parquet_latest_wins(spark, tmp_path):
     batch = spark.createDataFrame(
         [(2, "b2", 2), (2, "b1", 1), (3, "c", 1)], schema="id int, v string, ver int"
     )
-    merged = upsert_parquet(spark, batch, path, keys=["id"], order_by="ver")
-    got = {r["id"]: r["v"] for r in merged.collect()}
+    upsert_parquet_files(spark, batch, path, keys=["id"], order_by="ver")
+    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}  # update wins, latest-ver wins, insert
 
 
@@ -42,11 +42,9 @@ def test_upsert_idempotent(spark, tmp_path):
     reference's append-only rerun-duplicates quirk §2.9.4)."""
     path = str(tmp_path / "t2")
     batch = spark.createDataFrame([(1, "a", 1)], schema="id int, v string, ver int")
-    write_parquet(upsert_parquet(spark, batch, path, ["id"], "ver"), path + "_out")
-    merged_again = upsert_parquet(
-        spark, batch, path + "_out", keys=["id"], order_by="ver"
-    )
-    assert merged_again.count() == 1
+    upsert_parquet_files(spark, batch, path, ["id"], "ver")
+    upsert_parquet_files(spark, batch, path, keys=["id"], order_by="ver")
+    assert spark.read.parquet(path).count() == 1
 
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir, tmp_path):
@@ -217,15 +215,16 @@ def test_upsert_parquet_missing_path_vs_corrupt(spark, tmp_path):
 
     missing = str(tmp_path / "never_written")
     batch = spark.createDataFrame([(1, 10)], ["id", "v"])
-    out = SIO.upsert_parquet(spark, batch, missing, keys=["id"])
-    assert out.count() == 1  # missing path == empty table
+    SIO.upsert_parquet_files(spark, batch, missing, keys=["id"])
+    assert spark.read.parquet(missing).count() == 1  # missing path == empty table
 
     corrupt = tmp_path / "corrupt_tbl"
     corrupt.mkdir()
     (corrupt / "part-00000.parquet").write_bytes(b"not a parquet file")
     import pytest as _pytest
     with _pytest.raises(Exception):
-        SIO.upsert_parquet(spark, batch, str(corrupt), keys=["id"]).collect()
+        SIO.upsert_parquet_files(spark, batch, str(corrupt), keys=["id"])
+    assert (corrupt / "part-00000.parquet").read_bytes() == b"not a parquet file"
 
 
 def test_delete_keys_right_to_be_forgotten(spark, tmp_path):

@@ -6,18 +6,37 @@ incremental slice path."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
 from decimal import Decimal
 
 import pytest
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import schemas
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.plans import (
+    orchestrate as ORCH,
+)
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.plans import (
     pipeline as P,
+)
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import (
+    io as SIO,
 )
 
 TS = dt.datetime(2013, 7, 1, 12, 0, 0)
 TS_OLD = dt.datetime(2013, 6, 1, 12, 0, 0)
 D = dt.date(2013, 7, 1)
+TS_NEXT = dt.datetime(2013, 7, 2, 12, 0, 0)
+D_NEXT = dt.date(2013, 7, 2)
+DS_NEXT = "2013-07-03"  # slices created_at::date == 2013-07-02
+
+# the tables a daily run merges into; the other three are rebuilt
+MERGED = ("dim_company", "dim_funds", "fct_investments", "fct_ipos", "fct_acquisition")
+FACT_KEYS = {
+    "fct_investments": "dd_investment_id",
+    "fct_ipos": "dd_ipo_id",
+    "fct_acquisition": "dd_acquisition_id",
+}
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +82,55 @@ def staging_dir(spark, tmp_path_factory):
             "overwrite"
         ).parquet(f"{root}/{name}")
     return str(root)
+
+
+@pytest.fixture(scope="module")
+def next_day_staging(spark, staging_dir, tmp_path_factory):
+    """The fixture staging zone plus one later day of new entities and
+    facts only (created 2013-07-02): a company, a fund, a round, an
+    investment, an IPO and an acquisition. A daily run of
+    ``DS_NEXT`` after a full build of ``staging_dir`` is insert-only."""
+    root = str(tmp_path_factory.mktemp("staging_next") / "staging")
+    shutil.copytree(staging_dir, root)
+    rows = {
+        "company": [
+            (4, "c:3", None, "south", "3 Elm St", None, "la", None, None, "us", None, None, TS_NEXT, TS_NEXT),
+            (5, "f:2", None, None, None, None, None, None, None, None, None, None, TS_NEXT, TS_NEXT),
+        ],
+        "funds": [
+            ("11", "f:2", " Fund Two ", D_NEXT, Decimal("200.00"), "USD", None, "desc 2", TS_NEXT, TS_NEXT),
+        ],
+        "funding_rounds": [
+            (101, "c:3", D_NEXT, "series-a", "a", Decimal("7.00"), Decimal("7.00"), "USD",
+             None, None, None, None, None, None, "2", True, False, None, TS_NEXT, TS_NEXT),
+        ],
+        "investments": [(1002, 101, "c:3", "f:2", TS_NEXT, TS_NEXT)],
+        "ipos": [
+            ("501", "c:3", Decimal("2000.00"), "USD", Decimal("20.00"), "USD",
+             TS_NEXT, "DEF", None, "ipo 2", TS_NEXT, TS_NEXT),
+        ],
+        "acquisition": [
+            (701, "c:3", "c:2", "stock", Decimal("80.00"), "USD", TS_NEXT, None, "deal 2", TS_NEXT, TS_NEXT),
+        ],
+    }
+    for name, data in rows.items():
+        spark.createDataFrame(data, schema=schemas.STAGING[name]).coalesce(1).write.mode(
+            "append"
+        ).parquet(f"{root}/{name}")
+    return root
+
+
+def _data_files(path: str) -> dict[str, int]:
+    """Data file name -> size in bytes of one table directory."""
+    return {
+        n: os.path.getsize(os.path.join(path, n))
+        for n in os.listdir(path)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    }
+
+
+def _rows(spark, path: str) -> list[tuple]:
+    return sorted((tuple(r) for r in spark.read.parquet(path).collect()), key=repr)
 
 
 def test_pipeline_end_to_end(spark, staging_dir, tmp_path):
@@ -282,3 +350,122 @@ def test_failure_message_reference_fields():
         assert field in msg
     # formatter never raises on an empty context
     assert "?" in AD.format_failure_message({})
+
+
+def test_daily_merge_is_delta_proportional(spark, staging_dir, next_day_staging, tmp_path):
+    """An insert-only daily run leaves every existing data file of
+    dim_date and the merged tables as it is and adds at most one file
+    per merged table; replaying the day rewrites only that day's file
+    and changes no row."""
+    wh = str(tmp_path / "wh_delta")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    tables = ("dim_date", *MERGED)
+    base = {t: _data_files(f"{wh}/{t}") for t in tables}
+
+    P.run_warehouse_pipeline(spark, next_day_staging, wh, ds=DS_NEXT)
+    day = {t: _data_files(f"{wh}/{t}") for t in tables}
+    for t in tables:
+        assert {n: day[t].get(n) for n in base[t]} == base[t], t
+        assert len(set(day[t]) - set(base[t])) <= (0 if t == "dim_date" else 1), t
+    assert spark.read.parquet(f"{wh}/dim_company").count() == 5
+    assert spark.read.parquet(f"{wh}/fct_investments").count() == 2
+    content = {t: _rows(spark, f"{wh}/{t}") for t in MERGED}
+
+    P.run_warehouse_pipeline(spark, next_day_staging, wh, ds=DS_NEXT)
+    replay = {t: _data_files(f"{wh}/{t}") for t in tables}
+    for t in tables:
+        assert {n: replay[t].get(n) for n in base[t]} == base[t], t
+        day_file = set(day[t]) - set(base[t])
+        assert set(day[t]) - set(replay[t]) <= day_file, t
+        assert len(set(replay[t]) - set(day[t])) <= len(day_file), t
+    assert replay["dim_date"] == base["dim_date"]
+    for t in MERGED:
+        assert _rows(spark, f"{wh}/{t}") == content[t], t
+
+
+def test_fact_commit_crash_between_append_and_delete_recovers(
+    spark, staging_dir, tmp_path, monkeypatch
+):
+    """A fact upsert that dies after its append committed but before
+    the touched file is deleted leaves duplicate keys, never lost rows,
+    and no success in the ledger; rerunning the date removes the
+    duplicates and the warehouse equals a full build."""
+    wh = str(tmp_path / "wh_crash_fact")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    ledger = ORCH.RunLedger(str(tmp_path / "ledger.jsonl"))
+
+    def delete_fails(spark_, files):
+        raise IOError("injected fault in the delete step")
+
+    monkeypatch.setattr(SIO, "remove_files", delete_fails)
+    with pytest.raises(IOError, match="injected"):
+        ORCH.run_backfill(spark, staging_dir, wh, "2013-07-02", "2013-07-02", ledger)
+    fct = spark.read.parquet(f"{wh}/fct_investments")
+    assert fct.count() == 2
+    assert fct.select("dd_investment_id").distinct().count() == 1
+    assert ledger.status("vc_warehouse", "fct_investments", "2013-07-02") == "failed"
+
+    monkeypatch.undo()
+    ORCH.run_backfill(spark, staging_dir, wh, "2013-07-02", "2013-07-02", ledger)
+    for t, key in FACT_KEYS.items():
+        df = spark.read.parquet(f"{wh}/{t}")
+        assert df.count() == df.select(key).distinct().count(), t
+    ref = str(tmp_path / "wh_ref")
+    P.run_warehouse_pipeline(spark, staging_dir, ref)
+    for t in P.WAREHOUSE_ORDER:
+        assert _rows(spark, f"{wh}/{t}") == _rows(spark, f"{ref}/{t}"), t
+
+
+def test_dim_append_crash_before_ledger_success_reruns_clean(
+    spark, staging_dir, next_day_staging, tmp_path, monkeypatch
+):
+    """A dim run that dies after its append, before the ledger records
+    success, is rerun: the rerun appends nothing and the surrogate keys
+    stay dense 1..N."""
+    wh = str(tmp_path / "wh_crash_dim")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    ledger = ORCH.RunLedger(str(tmp_path / "ledger.jsonl"))
+    append = SIO.append_parquet
+
+    def append_then_fail(df, path, *args, **kwargs):
+        append(df, path, *args, **kwargs)
+        raise RuntimeError("injected fault after the append")
+
+    monkeypatch.setattr(SIO, "append_parquet", append_then_fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        ORCH.run_backfill(spark, next_day_staging, wh, DS_NEXT, DS_NEXT, ledger)
+    assert ledger.status("vc_warehouse", "dim_company", DS_NEXT) == "failed"
+    crashed = _data_files(f"{wh}/dim_company")
+
+    monkeypatch.undo()
+    report = ORCH.run_backfill(spark, next_day_staging, wh, DS_NEXT, DS_NEXT, ledger)
+    assert report[DS_NEXT]["ran"] == list(P.WAREHOUSE_ORDER[1:])
+    assert _data_files(f"{wh}/dim_company") == crashed
+    for t, (sk, nk) in {
+        "dim_company": ("sk_company_id", "nk_company_id"),
+        "dim_funds": ("sk_fund_id", "nk_fund_id"),
+    }.items():
+        rows = spark.read.parquet(f"{wh}/{t}").select(sk, nk).collect()
+        assert sorted(r[sk] for r in rows) == list(range(1, len(rows) + 1)), t
+        assert len({r[nk] for r in rows}) == len(rows), t
+    assert spark.read.parquet(f"{wh}/dim_company").count() == 5
+    assert spark.read.parquet(f"{wh}/fct_investments").count() == 2
+
+
+def test_daily_dim_date_written_only_when_not_committed(spark, staging_dir, tmp_path):
+    """A daily run writes the spine when it is missing or its write
+    never committed (no ``_SUCCESS``), and leaves a committed one alone."""
+    wh = str(tmp_path / "wh_date")
+    path = f"{wh}/dim_date"
+    P.run_warehouse_table(spark, "dim_date", staging_dir, wh, ds="2013-07-02")
+    first = _data_files(path)
+    assert first and spark.read.parquet(path).count() == 29220
+
+    P.run_warehouse_table(spark, "dim_date", staging_dir, wh, ds="2013-07-02")
+    assert _data_files(path) == first
+
+    os.remove(f"{path}/_SUCCESS")
+    P.run_warehouse_table(spark, "dim_date", staging_dir, wh, ds="2013-07-02")
+    rewritten = _data_files(path)
+    assert rewritten and set(rewritten).isdisjoint(first)
+    assert os.path.exists(f"{path}/_SUCCESS")

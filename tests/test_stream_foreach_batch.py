@@ -37,11 +37,9 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     emit([(1, datetime(2024, 1, 1, 10), 1.0), (2, datetime(2024, 1, 1, 10), 2.0)])
 
     def sink(batch_df, batch_id):
-        merged = SIO.upsert_parquet(
+        SIO.upsert_parquet_files(
             batch_df.sparkSession, batch_df, tgt, keys=["k"], order_by="ts"
         )
-        # localCheckpoint: materialize BEFORE overwriting the dir we read
-        merged.localCheckpoint().write.mode("overwrite").parquet(tgt)
 
     stream = (
         spark.readStream.schema(SCHEMA)

@@ -10,6 +10,12 @@ Also asserts replay IDEMPOTENCY across the whole range: a second
 run_backfill over the same 100 dates must skip every task and leave
 every warehouse table's row count unchanged.
 
+The daily merge appends instead of rewriting, so it trades rewritten
+records for data files. Per replay the tool reports both sides, read
+from directory listings and parquet footers between dates (no Spark
+job): records written per date (rows of the data files each date
+added) and the data files of every merged table after the last date.
+
 Usage: python tools/backfill_octave.py    (prints one JSON line;
 paste the table into BENCH_SCALING.md)
 """
@@ -19,12 +25,16 @@ from __future__ import annotations
 import datetime as dt
 import json
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 from decimal import Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+import pyarrow.parquet as pq
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import (  # noqa: E402
     schemas,
@@ -40,6 +50,8 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sessio
 )
 
 D0 = dt.date(2013, 7, 1)
+# the tables a daily run merges into by appending files
+MERGED = ("dim_company", "dim_funds", "fct_investments", "fct_ipos", "fct_acquisition")
 
 
 def synth_staging(spark, root: str, n_days: int) -> None:
@@ -94,16 +106,35 @@ def synth_staging(spark, root: str, n_days: int) -> None:
         ).parquet(f"{root}/{name}")
 
 
+def data_files(wh: str) -> dict[str, dict[str, int]]:
+    """table -> {data file: rows}, from listings and footers only."""
+    out: dict[str, dict[str, int]] = {}
+    for t in P.WAREHOUSE_ORDER:
+        d = Path(wh) / t
+        files = sorted(d.glob("*.parquet")) if d.is_dir() else []
+        out[t] = {f.name: pq.read_metadata(f).num_rows for f in files if not f.name.startswith((".", "_"))}
+    return out
+
+
 def replay(spark, staging: str, work: str, n_days: int) -> dict:
     wh = f"{work}/wh_{n_days}"
     led = O.RunLedger(f"{work}/ledger_{n_days}.jsonl")
-    # backfill ds D+1 .. D+n (each ds slices created_at = ds-1)
+    # backfill ds D+1 .. D+n (each ds slices created_at = ds-1), one
+    # date per call so the files each date added can be told apart
     start = (D0 + dt.timedelta(days=1)).isoformat()
     end = (D0 + dt.timedelta(days=n_days)).isoformat()
-    t0 = time.time()
-    rep = O.run_backfill(spark, staging, wh, start, end, led)
-    wall = time.time() - t0
-    ran = sum(len(r["ran"]) for r in rep.values())
+    wall = 0.0
+    ran = 0
+    written: list[int] = []
+    files = data_files(wh)
+    for ds in O.date_range(start, end):
+        t0 = time.time()
+        rep = O.run_backfill(spark, staging, wh, ds, ds, led)
+        wall += time.time() - t0
+        ran += sum(len(r["ran"]) for r in rep.values())
+        now = data_files(wh)
+        written.append(sum(n for t in now for f, n in now[t].items() if f not in files[t]))
+        files = now
     fct = spark.read.parquet(f"{wh}/fct_investments").count()
     # idempotency: the replay re-run must be all skips, counts frozen
     t1 = time.time()
@@ -122,6 +153,11 @@ def replay(spark, staging: str, work: str, n_days: int) -> dict:
         "sec_per_date": round(wall / n_days, 3),
         "resume_wall_sec": round(resume_wall, 2),
         "fct_rows": fct,
+        # the first date builds every table from scratch
+        "records_first_date": written[0],
+        "records_per_date_median": statistics.median(written[1:] or written),
+        "records_per_date_max": max(written[1:] or written),
+        "data_files": {t: len(files[t]) for t in MERGED},
     }
 
 
