@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .operators import dedup as DD
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -1707,10 +1709,8 @@ def image_near_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     ``(id_a, id_b, hamming)`` with id_a < id_b. Candidates come from
     16-bit chunk equality (hamming ≤ 3 ⇒ ≥1 of 4 chunks equal), so
     the join is equi-key and shuffle-partitioned — never all-pairs."""
-    from .operators.dedup import hamming_near_pairs
-
     fp = phash_images(media).filter(F.col("phash").isNotNull())
-    return hamming_near_pairs(
+    return DD.hamming_near_pairs(
         fp, id_col="media_id", hash_col="phash", max_hamming=max_hamming
     )
 
@@ -1821,257 +1821,31 @@ def extract_spectral_features(
 
 
 # --------------------------------------------------------------------------
-# Persisted + incremental pHash image-dedup index — round 9
-# continuation. The IMAGE sibling of operators/dedup.py's persisted
-# MinHash-LSH text index: a daily 100-TB media pipeline does not
-# re-decode its whole corpus per run; it hashes each day's shard,
-# probes a persisted chunk table, and appends. Fingerprints are ONE
-# long each, so the whole index is ~16 bytes/image of hash state plus
-# the 4-row chunk expansion — pixels never persist, never shuffle.
+# Persisted + incremental pHash image-dedup index — the image family of
+# the banded-hash index lifecycle in operators/dedup.py (build, probe,
+# append, verify, repair and the exactly-once stream sink are all
+# there). A daily media pipeline does not re-decode its whole corpus
+# per run: it hashes each day's shard, probes the persisted chunk
+# table and appends. Fingerprints are ONE long each, so the whole
+# index is ~16 bytes/image of hash state plus the n_chunks-row chunk
+# expansion — pixels never persist, never shuffle.
 # --------------------------------------------------------------------------
 
 
-def phash_index_exists(spark, path: str) -> bool:
-    """True iff a persisted pHash index exists at ``path`` — presence
-    of its ``hashes`` table (written first, so it exists for any index
-    in any state including a torn append). Same explicit-existence
-    policy as ``dedup.lsh_index_exists``: a transient read failure
-    must surface, never masquerade as "no index yet"."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(f"{path}/hashes")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def build_phash_index(
-    media: DataFrame,
-    path: str,
-    *,
-    n_chunks: int = 4,
-    mode: str = "overwrite",
-    fingerprints: DataFrame | None = None,
-) -> None:
-    """Persist a corpus image-dedup index: ``<path>/hashes``
-    (id, phash) and ``<path>/chunks`` (id, h, chunk, val) partitioned
-    by ``chunk`` — a chunk-restricted probe prunes at the directory
-    level, and within a chunk ``val`` is the equi-join key.
-
-    ``fingerprints`` may carry a precomputed ``(media_id, phash)``
-    frame (e.g. the incremental path, which hashes the shard once for
-    both probe and append); must be lineage-free w.r.t. this index
-    (``localCheckpoint()`` if its plan reads ``<path>/hashes``).
-    Hashes commit before chunks — a crash between the writes leaves a
-    detectable torn state; :func:`verify_phash_index` reports it and
-    :func:`repair_phash_index` re-expands from hashes (a cheap
-    projection — pixels are never needed again)."""
-    from .operators.dedup import hash_chunk_entries
-
-    spark = media.sparkSession
-    fp = (
-        fingerprints
-        if fingerprints is not None
-        else phash_images(media).filter(F.col("phash").isNotNull())
-    )
-    fp.write.mode(mode).parquet(f"{path}/hashes")
-    if fingerprints is not None:
-        shard_fp = fingerprints
-    else:
-        # derive chunks from the JUST-WRITTEN hashes: the expensive
-        # decode+DCT ran once for the hash write; the chunk write is a
-        # cheap projection over its output
-        shard_fp = spark.read.parquet(f"{path}/hashes")
-        if mode == "append":
-            shard_fp = shard_fp.join(
-                F.broadcast(
-                    media.select(F.col("media_id").alias("probe_id"))
-                ),
-                F.col("media_id") == F.col("probe_id"),
-                "semi",
-            )
-    hash_chunk_entries(
-        shard_fp, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-    ).write.mode(mode).partitionBy("chunk").parquet(f"{path}/chunks")
-
-
-def read_phash_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(hashes, chunks) frames of a persisted index, with the exact
-    schemas ``hash_chunk_entries`` produces (chunk is
-    partition-encoded; cast back to int for join parity). An index
-    built from an EMPTY corpus has a chunks dir with no partition
-    directories (a partitioned write of zero rows emits no files), so
-    schema inference has nothing to read — that ONE case (checked
-    explicitly: no ``chunk=*`` subdirectories) falls back to an empty
-    typed frame. Every other failure propagates — a blanket fallback
-    would silently answer "no corpus candidates" and turn an
-    infrastructure fault into a wrong dedup result (same policy as
-    ``dedup.read_lsh_index``)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    chunks_dir = hpath(f"{path}/chunks")
-    fs = chunks_dir.getFileSystem(spark._jsc.hadoopConfiguration())
-    hashes = spark.read.parquet(f"{path}/hashes")
-    has_partitions = fs.exists(chunks_dir) and any(
-        st.isDirectory() and st.getPath().getName().startswith("chunk=")
-        for st in fs.listStatus(chunks_dir)
-    )
-    if has_partitions:
-        chunks = spark.read.parquet(f"{path}/chunks").select(
-            "id", "h", F.col("chunk").cast("int").alias("chunk"), "val"
-        )
-    else:
-        id_type = hashes.schema["media_id"].dataType.simpleString()
-        chunks = spark.createDataFrame(
-            [], f"id {id_type}, h long, chunk int, val long"
-        )
-    return hashes, chunks
-
-
-def verify_phash_index(spark, path: str, n_chunks: int = 4) -> dict:
-    """Consistency report: every hash id must carry exactly
-    ``n_chunks`` chunk entries and every chunk id a hash. One scan of
-    each table — run on recovery/startup, not per batch."""
-    hashes, chunks = read_phash_index(spark, path)
-    per_id = chunks.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    joined = (
-        hashes.select(F.col("media_id").alias("id"))
-        .join(per_id, "id", "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_hashes"),
-            F.sum(F.when(F.col("n").isNull(), 1).otherwise(0)).alias("missing"),
-            F.sum(
-                F.when(
-                    F.col("n").isNotNull() & (F.col("n") != n_chunks), 1
-                ).otherwise(0)
-            ).alias("incomplete"),
-        )
-        .first()
-    )
-    orphans = per_id.join(
-        hashes.select(F.col("media_id").alias("id")), "id", "left_anti"
-    ).count()
-    missing = int(joined["missing"] or 0)
-    incomplete = int(joined["incomplete"] or 0)
-    return {
-        "hashes": int(joined["n_hashes"]),
-        "missing_chunk_ids": missing,
-        "incomplete_chunk_ids": incomplete,
-        "orphan_chunk_ids": int(orphans),
-        "consistent": missing == 0 and incomplete == 0 and orphans == 0,
-    }
-
-
-def repair_phash_index(spark, path: str, n_chunks: int = 4) -> dict:
-    """Rebuild chunk entries for hash ids that lost them (torn
-    append), or the whole chunks table for pathological states —
-    always sound because chunks are a pure function of hashes.
-    Idempotent; returns the post-repair verify report."""
-    from .operators.dedup import hash_chunk_entries
-    from .sources.io import replace_parquet_atomic
-
-    report = verify_phash_index(spark, path, n_chunks)
-    if report["consistent"]:
-        return report
-    hashes, chunks = read_phash_index(spark, path)
-    if report["incomplete_chunk_ids"] or report["orphan_chunk_ids"]:
-        replace_parquet_atomic(
-            spark,
-            hash_chunk_entries(
-                hashes, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-            ),
-            f"{path}/chunks",
-            partition_by=["chunk"],
-        )
-    else:
-        missing = hashes.join(
-            chunks.select("id").dropDuplicates(["id"]),
-            hashes["media_id"] == F.col("id"),
-            "left_anti",
-        )
-        hash_chunk_entries(
-            missing, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-        ).write.mode("append").partitionBy("chunk").parquet(f"{path}/chunks")
-    return verify_phash_index(spark, path, n_chunks)
-
-
-def incremental_phash_pairs(
-    new_media: DataFrame,
-    index_path: str,
-    *,
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-    update_index: bool = True,
-    broadcast_new: bool = True,
-    fingerprints: DataFrame | None = None,
-    max_bucket_size: int | None = None,
+def _phash_cross_pairs(
+    cand: DataFrame,
+    _corpus: DataFrame,
+    _shard: DataFrame,
+    _meta: dict,
+    max_hamming: int,
 ) -> DataFrame:
-    """Incremental image near-dup: today's shard vs a persisted pHash
-    index, WITHOUT re-decoding anything in the corpus.
-
-    Hot-bucket posture (round 10, same as
-    ``dedup.incremental_lsh_pairs``): the shard-internal leg runs the
-    structural identical-fingerprint guard inside
-    ``hamming_near_pairs``; the corpus-vs-shard leg defends with
-    ``max_bucket_size`` — a per-(chunk,val) cap on CORPUS entries
-    joined against the shard (one count aggregate over the index
-    scan, co-partitioned with the probe key; a meme reposted a
-    million times floods one bucket). Unset (default) is exact.
-
-    Returns every pair with ``hamming ≤ max_hamming`` touching ≥1 new
-    image — new-vs-corpus plus new-vs-new — as ``(id_a, id_b,
-    hamming)`` with id_a < id_b. Equivalence contract (tested): given
-    disjoint ids, ``image_near_pairs(corpus ∪ shard) ==
-    image_near_pairs(corpus) ∪ incremental_phash_pairs(shard,
-    index(corpus))``.
-
-    Scale shape: the corpus chunk table is SCANNED once and never
-    shuffled — with ``broadcast_new=True`` the shard's chunk entries
-    (|shard| × n_chunks rows of four small columns) broadcast onto it,
-    so the day's cost is O(|shard| decode + |index| scan +
-    |candidates|). Set ``broadcast_new=False`` for shards too large to
-    broadcast (hash join on (chunk, val)). With ``update_index`` the
-    shard then appends (hashes first — same torn-state detectability
-    as the build)."""
-    from .operators.dedup import hamming_near_pairs, hash_chunk_entries
-
-    spark = new_media.sparkSession
-    if max_hamming >= n_chunks:
-        raise ValueError(
-            f"pigeonhole banding needs max_hamming < n_chunks "
-            f"(got {max_hamming} >= {n_chunks})"
-        )
-    if fingerprints is not None:
-        # caller owns materialization (contract: lineage-free w.r.t.
-        # this index, already checkpointed if reused across steps)
-        fp = fingerprints
-    else:
-        # the shard probes AND appends: evaluate the decode+DCT once
-        fp = (
-            phash_images(new_media)
-            .filter(F.col("phash").isNotNull())
-            .localCheckpoint()
-        )
-
-    _hashes, corpus_chunks = read_phash_index(spark, index_path)
-    if max_bucket_size is not None:
-        ok = (
-            corpus_chunks.groupBy("chunk", "val")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
-        corpus_chunks = corpus_chunks.join(ok, ["chunk", "val"])
-    new_chunks = hash_chunk_entries(
-        fp, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-    )
-    probe = F.broadcast(new_chunks) if broadcast_new else new_chunks
+    """Corpus × shard chunk collisions scored by Hamming distance on
+    the fingerprints riding the chunk rows (no rejoin with the hashes
+    table). Corpus and shard ids are disjoint by contract; pairs come
+    out in canonical ``id_a < id_b`` order."""
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    cross = (
-        corpus_chunks.alias("c")
-        .join(probe.alias("n"), on=["chunk", "val"])
-        # corpus and shard ids are disjoint by contract; emit in
-        # canonical id_a < id_b order without losing either direction
-        .select(
+    return (
+        cand.select(
             F.least(F.col("c.id"), F.col("n.id")).alias("id_a"),
             F.greatest(F.col("c.id"), F.col("n.id")).alias("id_b"),
             F.when(F.col("c.id") < F.col("n.id"), F.col("c.h"))
@@ -2084,27 +1858,92 @@ def incremental_phash_pairs(
         # dedup AFTER the hamming filter (round-13, guide §2.3): the
         # distance is a pure function of the fingerprints riding the
         # rows, so multi-chunk duplicates carry identical rows and
-        # deduping the post-filter survivors equals the old pre-filter
+        # deduping the post-filter survivors equals a pre-filter
         # dropDuplicates — on far fewer shuffled bytes (bounded ×n_chunks)
         .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
-    within = hamming_near_pairs(
-        fp,
-        id_col="media_id",
-        hash_col="phash",
-        max_hamming=max_hamming,
-        n_chunks=n_chunks,
-    )
-    pairs = cross.unionByName(within)
-    if update_index:
-        build_phash_index(
-            new_media,
-            index_path,
-            n_chunks=n_chunks,
-            mode="append",
-            fingerprints=fp,
+
+
+# image pHash: hashes (media_id, phash) → chunks (id, h, chunk, val);
+# meta {n_chunks, fingerprint: "phash64"}. Signs (media_id, payload).
+PHASH_INDEX = DD.BandedIndex(
+    source="hashes",
+    id_col="media_id",
+    entries="chunks",
+    part="chunk",
+    bucket="val",
+    per_id="n_chunks",
+    tag={"fingerprint": "phash64"},
+    sign=lambda media, m: phash_images(media).filter(
+        F.col("phash").isNotNull()
+    ),
+    expand=lambda fp, m: DD.hash_chunk_entries(
+        fp, "media_id", "phash", m["n_chunks"]
+    ),
+    near_pairs=lambda fp, m, max_hamming, cap: DD.hamming_near_pairs(
+        fp, "media_id", "phash", max_hamming, m["n_chunks"]
+    ),
+    cross_pairs=_phash_cross_pairs,
+)
+
+
+def build_phash_index(
+    media: DataFrame,
+    path: str,
+    *,
+    n_chunks: int = 4,
+    mode: str = "overwrite",
+) -> None:
+    """Persist a corpus image-dedup index (``dedup.write_index`` with
+    :data:`PHASH_INDEX`): ``<path>/hashes`` (media_id, phash),
+    ``<path>/chunks`` (id, h, chunk, val) partitioned by ``chunk`` and
+    ``<path>/meta``. ``mode="append"`` raises before writing if
+    ``n_chunks`` differs from the index's meta. The decode+DCT runs
+    once; the chunk write is a projection of the checkpointed hashes."""
+    fp = PHASH_INDEX.sign(media, {}).localCheckpoint(eager=False)
+    DD.write_index(fp, path, PHASH_INDEX, {"n_chunks": n_chunks}, mode)
+
+
+def incremental_phash_pairs(
+    new_media: DataFrame,
+    index_path: str,
+    *,
+    max_hamming: int = 3,
+    update_index: bool = True,
+    broadcast_new: bool = True,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Incremental image near-dup: today's shard vs a persisted pHash
+    index (``dedup.probe_index`` with :data:`PHASH_INDEX`), WITHOUT
+    re-decoding anything in the corpus; the chunking is the index's
+    own ``n_chunks``.
+
+    Returns every pair with ``hamming ≤ max_hamming`` touching ≥1 new
+    image — new-vs-corpus plus new-vs-new — as ``(id_a, id_b,
+    hamming)`` with id_a < id_b. Equivalence contract (tested): given
+    disjoint ids, ``image_near_pairs(corpus ∪ shard) ==
+    image_near_pairs(corpus) ∪ incremental_phash_pairs(shard,
+    index(corpus))``. Raises before any write when ``max_hamming`` is
+    not below the index's ``n_chunks`` (pigeonhole banding would miss
+    pairs). See ``dedup.probe_index`` for ``update_index``,
+    ``broadcast_new`` and ``max_bucket_size``."""
+    meta = DD.read_index_meta(new_media.sparkSession, index_path, PHASH_INDEX)
+    if max_hamming >= meta["n_chunks"]:
+        raise ValueError(
+            f"pigeonhole banding needs max_hamming < n_chunks "
+            f"(got {max_hamming} >= {meta['n_chunks']})"
         )
-    return pairs
+    # the shard probes AND (with update_index) appends: decode once
+    fp = PHASH_INDEX.sign(new_media, meta).localCheckpoint(eager=True)
+    return DD.probe_index(
+        fp,
+        index_path,
+        PHASH_INDEX,
+        max_hamming,
+        update_index=update_index,
+        broadcast_new=broadcast_new,
+        max_bucket_size=max_bucket_size,
+    )

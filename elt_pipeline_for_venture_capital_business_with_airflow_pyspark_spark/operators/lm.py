@@ -56,9 +56,9 @@ the overflow is a documented knob, not a surprise.
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import DataFrame, functions as F
+
+from ..sources.io import read_meta, write_meta
 
 __all__ = [
     "lm_score_stupid_backoff",
@@ -67,7 +67,6 @@ __all__ = [
     "lm_index_append",
     "lm_index_read",
     "lm_index_score",
-    "read_lm_meta",
 ]
 
 # fixed-point exponent for the backoff fraction and mantissa width of
@@ -461,46 +460,19 @@ def lm_score_kneser_ney(
 # persisted / incremental LM index (VERDICT r11 #4)
 #
 # Every other heavy family carries a persist/append/probe lifecycle
-# (LSH: operators/dedup.py build_lsh_index; IVF: operators/similarity;
-# pHash: operators/multimodal) — the LM family was the one rebuilding
-# its trained state per call. The index is simply the three exact
+# (LSH and pHash: the banded-hash index in operators/dedup.py; IVF:
+# operators/similarity) — the LM family was the one rebuilding its
+# trained state per call. The index is simply the three exact
 # BIGINT n-gram count tables as parquet; counts are ADDITIVE, so a
 # daily shard appends by per-key summation instead of retraining on
 # the whole corpus (at 100 TB: one shard scan + three count-table
 # merges vs a full corpus rescan). Scoring from the index is
 # bit-identical to in-plan training by construction — both feed the
 # same _score_backoff_from_counts arithmetic — and the registry
-# entries pin it with the SAME oracle SQL as the in-plan entry.
+# entries pin it with the SAME oracle SQL as the in-plan entry. The
+# ``<path>/meta`` file is the shared one (sources/io.write_meta /
+# read_meta); here it doubles as the commit marker, written LAST.
 # ---------------------------------------------------------------------------
-
-
-def _lm_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
-
-
-def _write_lm_meta(spark, path: str, meta: dict) -> None:
-    """One-line JSON under ``<path>/meta`` (same direct-stream write
-    as the LSH index's metadata — the text SINK costs ~4.5 s per write
-    — and same naming rule: NOT underscore-prefixed, Spark hides
-    ``_*`` paths from its readers)."""
-    from ..sources.io import write_small_text
-
-    write_small_text(spark, f"{path}/meta", _json.dumps(meta, sort_keys=True))
-
-
-def read_lm_meta(spark, path: str) -> dict | None:
-    """Index parameters + tokenizer contract, or None if no index has
-    been committed at ``path`` (build writes meta LAST, so its
-    presence certifies all three count tables landed)."""
-    _, hpath, fs = _lm_fs(spark, path)
-    if not fs.exists(hpath(f"{path}/meta")):
-        return None
-    rows = spark.read.text(f"{path}/meta").collect()
-    return _json.loads(rows[0]["value"]) if rows else None
 
 
 def lm_index_build(
@@ -517,18 +489,16 @@ def lm_index_build(
     a crash mid-build leaves no meta, and every reader
     (:func:`lm_index_read`, :func:`lm_index_append`,
     :func:`lm_index_score`) treats meta-absent as "no index", so a
-    torn build can never be half-read (the LSH index's
-    signatures-first discipline, operators/dedup.py
-    build_lsh_index). ``mode`` is plumbing for recovery tools;
-    appends go through :func:`lm_index_append`, which merges counts
-    rather than unioning files."""
+    torn build can never be half-read. ``mode`` is plumbing for
+    recovery tools; appends go through :func:`lm_index_append`, which
+    merges counts rather than unioning files."""
     spark = train_docs.sparkSession
     train_toks = train_docs.select(_tokens(text_col).alias("ts"))
     uni, bi, tri = _ngram_count_tables(train_toks)
     uni.write.mode(mode).parquet(f"{path}/unigrams")
     bi.write.mode(mode).parquet(f"{path}/bigrams")
     tri.write.mode(mode).parquet(f"{path}/trigrams")
-    _write_lm_meta(
+    write_meta(
         spark,
         path,
         {
@@ -547,7 +517,7 @@ def lm_index_read(
     if the index was never committed (meta absent) — a missing index
     must surface loudly, not as an empty LM that scores everything at
     the OOV floor."""
-    if read_lm_meta(spark, path) is None:
+    if read_meta(spark, path) is None:
         raise ValueError(
             f"no committed LM index at {path} (meta absent) — run "
             "lm_index_build first"

@@ -33,12 +33,9 @@ def index_kind(spark: SparkSession, path: str) -> str:
     ``signatures``+``bands`` dirs, an IVF index ``centroids``+
     ``cells``). Raises ValueError on anything else — an unknown
     layout must never be 'maintained' by guesswork."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
 
     def _exists(sub: str) -> bool:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        return p.getFileSystem(conf).exists(p)
+        return IO.path_exists(spark, f"{path}/{sub}")
 
     if _exists("signatures") and _exists("bands"):
         return "lsh"

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.io import read_meta, write_meta
+
 __all__ = [
     "cap_per_group",
     "weighted_mix",
@@ -39,7 +41,6 @@ __all__ = [
     "dsir_index_read",
     "dsir_index_append",
     "dsir_score_from_index",
-    "read_dsir_meta",
 ]
 
 
@@ -705,34 +706,9 @@ def dsir_gumbel_topk(
 # pool is never re-featurized to score a new shard — the ≤n_buckets
 # count table persists, shards fold their counts in, and scoring
 # reads one tiny parquet table. Same durability discipline as
-# operators/lm.lm_index_build: data tables commit first, meta LAST,
-# meta-absent reads as "no index".
-
-
-def _dsir_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
-
-
-def _write_dsir_meta(spark, path: str, meta: dict) -> None:
-    import json as _json
-
-    from ..sources.io import write_small_text
-
-    write_small_text(spark, f"{path}/meta", _json.dumps(meta, sort_keys=True))
-
-
-def read_dsir_meta(spark, path: str) -> dict | None:
-    import json as _json
-
-    _, hpath, fs = _dsir_fs(spark, path)
-    if not fs.exists(hpath(f"{path}/meta")):
-        return None
-    rows = spark.read.text(f"{path}/meta").collect()
-    return _json.loads(rows[0]["value"]) if rows else None
+# operators/lm.lm_index_build: data tables commit first, the shared
+# ``<path>/meta`` (sources/io.write_meta) LAST, meta-absent reads as
+# "no index".
 
 
 def dsir_index_build(
@@ -762,7 +738,7 @@ def dsir_index_build(
         )
     )
     bt.write.mode(mode).parquet(f"{path}/buckets")
-    _write_dsir_meta(
+    write_meta(
         spark,
         path,
         {"featurizer": "char3_poly31_alnum", "n_buckets": n_buckets, "k": k},
@@ -773,7 +749,7 @@ def dsir_index_read(spark, path: str) -> tuple[DataFrame, dict]:
     """(bucket table, meta) — raises if never committed: a missing
     distribution must surface loudly, not as an all-zero prior that
     weights every doc identically."""
-    meta = read_dsir_meta(spark, path)
+    meta = read_meta(spark, path)
     if meta is None:
         raise ValueError(
             f"no committed DSIR index at {path} (meta absent) — run "

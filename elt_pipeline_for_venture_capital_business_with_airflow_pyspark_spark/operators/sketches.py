@@ -805,24 +805,14 @@ def hll_index_window_estimate(
     independent of raw-data size — the query shape that replaces
     recounting history at 100 TB."""
     # a register table built from an EMPTY corpus has no day=…
-    # partition directories at all (a partitioned write of zero rows
-    # emits no files) — that ONE case (checked explicitly, same
-    # convention as dedup.read_lsh_index) yields an empty register
-    # frame; every other read failure propagates.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    rdir = hpath(f"{path}/registers")
-    fs = rdir.getFileSystem(spark._jsc.hadoopConfiguration())
-    has_partitions = fs.exists(rdir) and any(
-        st.isDirectory() and st.getPath().getName().startswith(f"{day_col}=")
-        for st in fs.listStatus(rdir)
-    )
-    if has_partitions:
-        regs = spark.read.parquet(f"{path}/registers").filter(
-            (F.col(day_col) >= F.lit(start)) & (F.col(day_col) <= F.lit(end))
-        )
-    else:
-        regs = spark.createDataFrame([], "bucket bigint, r int")
+    # partition directories at all; read_partitioned answers that ONE
+    # case with an empty register frame, every other failure propagates
+    from ..sources.io import read_partitioned
+
+    regs = read_partitioned(
+        spark, f"{path}/registers", day_col,
+        f"bucket bigint, r int, `{day_col}` string",
+    ).filter((F.col(day_col) >= F.lit(start)) & (F.col(day_col) <= F.lit(end)))
     merged = regs.groupBy("bucket").agg(F.max("r").alias("r"))
     return hll_det_estimate(merged, [], m=m)
 

@@ -3,33 +3,27 @@
 The reference delegates surrogate keys to Postgres BIGSERIAL on append
 (reference: dataset/warehouse/init_dwh.sql:32, loaded via
 dags/vcapital_warehouse/tasks/components/load.py:68-73). A sequence is
-inherently single-writer; the distributed equivalents:
+inherently single-writer; the distributed equivalent is a dense rank
+over the natural key — reproducible across runs, required wherever
+goldens/oracles compare key values. Implemented as a TWO-PHASE
+partitioned rank (no global single-reducer sort): every row gets an
+order-preserving BUCKET id computed from the row's own value against
+exact min/max aggregates (uniform-width slices of the first key's
+range; string keys map through their first 8 UTF-8 bytes read as a
+big-endian integer — monotone, prefix ties share a bucket), a
+per-bucket ``row_number()`` window ranks within buckets, and broadcast
+prefix-sum offsets over the per-bucket counts (ONE ROW PER BUCKET,
+KB-sized at any scale) splice the buckets into the global sequence.
+The data never funnels through one reducer.
 
-- ``deterministic`` (default): dense rank over the natural key —
-  reproducible across runs, required wherever goldens/oracles compare
-  key values. Implemented as a TWO-PHASE partitioned rank (no global
-  single-reducer sort): every row gets an order-preserving BUCKET id
-  computed from the row's own value against exact min/max aggregates
-  (uniform-width slices of the first key's range; string keys map
-  through their first 8 UTF-8 bytes read as a big-endian integer —
-  monotone, prefix ties share a bucket), a per-bucket
-  ``row_number()`` window ranks within buckets, and broadcast
-  prefix-sum offsets over the per-bucket counts (ONE ROW PER BUCKET,
-  KB-sized at any scale) splice the buckets into the global
-  sequence. The data never funnels through one reducer.
-
-  Why buckets instead of ``repartitionByRange``: the range
-  partitioner SAMPLES its boundaries, and a DataFrame diamond (the
-  data path and the counts path both consume the partitioned frame)
-  evaluates the exchange twice — two samplings, two different
-  boundary sets, offsets that do not match positions. Silent key
-  corruption that only appears once partition counts grow (caught at
-  sf0.1; sf0.01 fit one sampling pass). Bucket ids are a pure
-  function of the row value and two exact aggregates, so every
-  re-evaluation agrees by construction.
-- ``fast``: ``monotonically_increasing_id() + offset`` — no shuffle,
-  not reproducible; for append-heavy fact loads where the key only
-  needs uniqueness.
+Why buckets instead of ``repartitionByRange``: the range partitioner
+SAMPLES its boundaries, and a DataFrame diamond (the data path and the
+counts path both consume the partitioned frame) evaluates the exchange
+twice — two samplings, two different boundary sets, offsets that do
+not match positions. Silent key corruption that only appears once
+partition counts grow (caught at sf0.1; sf0.01 fit one sampling pass).
+Bucket ids are a pure function of the row value and two exact
+aggregates, so every re-evaluation agrees by construction.
 
 Bucket-balance caveat: uniform-width slices assume the first key is
 roughly uniform over its range (surrogate-key inputs — sequential
@@ -40,10 +34,9 @@ buckets, degrading parallelism but never correctness; raise
 ``offset`` carries the max existing key so incremental loads keep
 appending to the sequence instead of restarting at 1.
 
-Natural keys must uniquely identify rows in ``deterministic`` mode —
-with duplicate keys the tie order (hence key assignment among the
-tied rows) is not reproducible, exactly as with a global
-``row_number()`` over a non-unique ordering.
+Natural keys must uniquely identify rows — with duplicate keys the tie
+order (hence key assignment among the tied rows) is not reproducible,
+exactly as with a global ``row_number()`` over a non-unique ordering.
 """
 
 from __future__ import annotations
@@ -250,14 +243,8 @@ def add_surrogate_key(
     key_name: str,
     natural_keys: list[str],
     offset: int = 0,
-    mode: str = "deterministic",
     num_buckets: int | None = None,
 ) -> DataFrame:
-    if mode == "fast":
-        sk = F.monotonically_increasing_id() + F.lit(offset + 1)
-        return df.select(sk.alias(key_name), "*")
-    if mode != "deterministic":
-        raise ValueError(f"unknown surrogate-key mode: {mode}")
     # the surrogate key IS the two-phase bucketed rank over the
     # natural key (see bucketed_rank for the plan shape)
     ranked = bucketed_rank(

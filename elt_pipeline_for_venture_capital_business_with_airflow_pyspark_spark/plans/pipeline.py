@@ -72,35 +72,6 @@ def read_staging(
     return out
 
 
-def build_warehouse(
-    spark: SparkSession, staging: dict[str, DataFrame]
-) -> dict[str, DataFrame]:
-    """Compose all warehouse tables as lazy DataFrames, dependency-
-    ordered. Nothing executes here — callers write or collect."""
-    dim_date = DDATE.build_dim_date(spark)
-    dim_company = WH.build_dim_company(staging["company"])
-    dim_funds = WH.build_dim_funds(staging["funds"], dim_date)
-    dim_people = WH.build_dim_people(staging["people"])
-    tables: dict[str, DataFrame] = {
-        "dim_date": dim_date,
-        "dim_company": dim_company,
-        "dim_funds": dim_funds,
-        "dim_people": dim_people,
-        "fct_investments": WH.build_fct_investments(
-            staging["investments"], staging["funding_rounds"],
-            dim_company, dim_funds, dim_date,
-        ),
-        "fct_ipos": WH.build_fct_ipos(staging["ipos"], dim_company, dim_date),
-        "fct_acquisition": WH.build_fct_acquisition(
-            staging["acquisition"], dim_company, dim_date
-        ),
-        "bridge_company_people": WH.build_bridge_company_people(
-            staging["relationships"], dim_people, dim_company
-        ),
-    }
-    return {name: tables[name] for name in WAREHOUSE_ORDER}
-
-
 # incremental-merge metadata: surrogate + natural key per dim, natural
 # id per fact. dim_people and bridge_company_people (full-load staging
 # inputs, see read_staging) rebuild wholesale every run; the static

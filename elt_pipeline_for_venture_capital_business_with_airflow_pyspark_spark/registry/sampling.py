@@ -481,9 +481,9 @@ def _dsir_inc_bootstrap(spark: SparkSession, sf: str) -> str:
     SMP.dsir_index_append(
         docs.filter((F.col("doc_id") % 5).isin(0, 3, 4)), target, path
     )
-    meta = SMP.read_dsir_meta(spark, path) or {}
+    meta = SIO.read_meta(spark, path) or {}
     meta["state"] = _DSIR_INC_TAG
-    SMP._write_dsir_meta(spark, path, meta)
+    SIO.write_meta(spark, path, meta)
     return path
 
 
@@ -544,7 +544,7 @@ def _sample_dsir_index_score(spark: SparkSession, sf: str) -> DataFrame:
     probed read-only — the daily marginal cost."""
     docs = read_table(spark, sf, "documents")
     path = _dsir_inc_path(sf)
-    meta = SMP.read_dsir_meta(spark, path)
+    meta = SIO.read_meta(spark, path)
     if meta is None or meta.get("state") != _DSIR_INC_TAG:
         _dsir_inc_bootstrap(spark, sf)
     target = (F.col("lang") == "en") & (F.col("doc_id") % 10 == 0)

@@ -1258,9 +1258,9 @@ def _lm_inc_bootstrap(spark: SparkSession, sf: str) -> str:
     LM.lm_index_append(
         docs.filter((F.col("doc_id") % 5).isin(3, 4)), path
     )
-    meta = LM.read_lm_meta(spark, path) or {}
+    meta = SIO.read_meta(spark, path) or {}
     meta["state"] = _LM_INC_TAG
-    LM._write_lm_meta(spark, path, meta)
+    SIO.write_meta(spark, path, meta)
     return path
 
 
@@ -1338,7 +1338,7 @@ def _text_lm_index_score(spark: SparkSession, sf: str) -> DataFrame:
     probed read-only — the daily marginal cost."""
     docs = read_table(spark, sf, "documents")
     path = _lm_inc_path(sf)
-    meta = LM.read_lm_meta(spark, path)
+    meta = SIO.read_meta(spark, path)
     if meta is None or meta.get("state") != _LM_INC_TAG:
         _lm_inc_bootstrap(spark, sf)
     return LM.lm_index_score(

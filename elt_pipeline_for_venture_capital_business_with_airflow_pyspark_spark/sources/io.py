@@ -18,6 +18,8 @@ Scale posture:
 
 from __future__ import annotations
 
+import json as _json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -265,6 +267,68 @@ def write_csv(
     ).csv(path)
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(jvm, Path, FileSystem)`` for ``path``: the one Hadoop
+    FileSystem handle every table, index and pointer helper uses, so
+    local, HDFS and object-store paths resolve through the same
+    configuration."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    return jvm, hpath, hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Explicit existence test (pure FS metadata, no job)."""
+    _, hpath, fs = hadoop_fs(spark, path)
+    return bool(fs.exists(hpath(path)))
+
+
+def write_meta(spark: SparkSession, path: str, meta: dict) -> None:
+    """Persist a table's or index's parameters as one-line JSON under
+    ``<path>/meta`` (via :func:`write_small_text`). NOT
+    underscore-prefixed: Spark's file index treats ``_*`` paths as
+    hidden, which would make the metadata unreadable by the very
+    reader that wrote it. The name cannot collide with data — data
+    tables are read through their explicit subpaths, never by sweeping
+    the root."""
+    write_small_text(spark, f"{path}/meta", _json.dumps(meta, sort_keys=True))
+
+
+def read_meta(spark: SparkSession, path: str) -> dict | None:
+    """The dict :func:`write_meta` stored under ``path``, or None when
+    no meta has been written there. Read through the FileSystem
+    stream, like the version pointer: no Spark job per lookup."""
+    _, hpath, fs = hadoop_fs(spark, path)
+    meta = hpath(f"{path}/meta/part-00000")
+    if not fs.exists(meta):
+        return None
+    stream = fs.open(meta)
+    try:
+        return _json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+    finally:
+        stream.close()
+
+
+def read_partitioned(
+    spark: SparkSession, path: str, partition_col: str, empty_schema
+) -> DataFrame:
+    """Read a parquet table written ``partitionBy(partition_col)``.
+    A partitioned write of zero rows emits no ``partition_col=*``
+    directories, so schema inference has nothing to read: that ONE
+    case (checked explicitly, as is a missing directory) returns an
+    empty frame of ``empty_schema``. Every other failure — corrupt
+    footer, permissions, transient FS error — propagates: a blanket
+    fallback would turn an infrastructure fault into "no rows"."""
+    _, hpath, fs = hadoop_fs(spark, path)
+    d = hpath(path)
+    if fs.exists(d) and any(
+        st.isDirectory() and st.getPath().getName().startswith(f"{partition_col}=")
+        for st in fs.listStatus(d)
+    ):
+        return spark.read.parquet(path)
+    return spark.createDataFrame([], empty_schema)
+
+
 def write_small_text(spark: SparkSession, dir_path: str, content: str) -> None:
     """One-line text "table" written via a direct FileSystem stream +
     temp-file rename, readable by ``spark.read.text(dir_path)`` exactly
@@ -279,10 +343,8 @@ def write_small_text(spark: SparkSession, dir_path: str, content: str) -> None:
     crash mid-write leaves either no dir or a hidden temp — both read
     as "no meta", preserving every index's meta-commits-LAST
     durability contract."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    _, hpath, fs = hadoop_fs(spark, dir_path)
     d = hpath(dir_path)
-    fs = d.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(d):
         fs.delete(d, True)
     fs.mkdirs(d)
@@ -372,10 +434,8 @@ def replace_parquet_atomic(
     immutable ``_versions/v{n}`` dirs and visibility is published by
     the tiny ``_LATEST`` pointer file, the manifest-pointer pattern
     object stores need."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    _, hpath, fs = hadoop_fs(spark, path)
     jpath = hpath(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     staged, backup = hpath(path + "__swap_new"), hpath(path + "__swap_old")
 
     if fs.exists(staged):
@@ -411,9 +471,8 @@ def compact_parquet(
     count. The rewrite lands via :func:`replace_parquet_atomic`
     (rename swap), so the data is written once and a mid-compaction
     crash never destroys the original."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     it = fs.listFiles(jpath, True)
     byte_total = 0
     while it.hasNext():
@@ -429,9 +488,8 @@ def compact_parquet(
 def parquet_file_count(spark: SparkSession, path: str) -> int:
     """Recursive data-file count under a table dir (parquet files
     only — markers/checksums skipped). Pure FS metadata, no job."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     n = 0
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -461,9 +519,8 @@ def compact_partitioned_parquet(
     construction; lands via the same rename swap as
     :func:`replace_parquet_atomic` (see its object-store caveat).
     Returns the new file count."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     byte_total = 0
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -552,9 +609,7 @@ def is_committed(spark: SparkSession, path: str) -> bool:
     marker the output committer creates last. Pure FS metadata (no
     job); a missing table and a write that died before its commit both
     read False."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    marker = hpath(f"{path}/_SUCCESS")
-    return bool(marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(marker))
+    return path_exists(spark, f"{path}/_SUCCESS")
 
 
 def _append_file(df: DataFrame, path: str, n_files: int = 1) -> None:
@@ -704,10 +759,8 @@ def read_parquet_if_exists(
                 except Exception:
                     pass
         if cond == "PATH_NOT_FOUND" or "[PATH_NOT_FOUND]" in str(e):
-            hpath = spark._jvm.org.apache.hadoop.fs.Path
-            fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
             for leftover in (path + "__swap_old", path + "__swap_new"):
-                if fs.exists(hpath(leftover)):
+                if path_exists(spark, leftover):
                     raise IOError(
                         f"{path} is missing but swap leftover {leftover} "
                         "exists (interrupted replace_parquet_atomic); "
@@ -726,9 +779,8 @@ def table_file_stats(spark: SparkSession, path: str) -> dict:
     scan; alert when ``mean_bytes`` falls well below the writer's
     target (e.g. <25% of 256 MB) and compact.
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    _, hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     sizes = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -762,17 +814,9 @@ def _vname(version: int) -> str:
     return f"v{version:05d}"
 
 
-def _versions_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    base = hpath(path)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
-
-
 def list_versions(spark: SparkSession, path: str) -> list[int]:
     """All committed snapshot versions of a versioned table, ascending."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    jvm, hpath, fs = hadoop_fs(spark, path)
     vdir = hpath(f"{path}/{_VERSIONS_DIR}")
     if not fs.exists(vdir):
         return []
@@ -792,7 +836,7 @@ def latest_version(spark: SparkSession, path: str) -> int | None:
     and valid, else the highest committed snapshot (pointer-loss
     recovery — a crash between pointer delete and rename cannot lose
     the table)."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    jvm, hpath, fs = hadoop_fs(spark, path)
     ptr = hpath(f"{path}/{_LATEST_FILE}")
     versions = list_versions(spark, path)
     if not versions:
@@ -817,7 +861,7 @@ def _point_latest(spark: SparkSession, path: str, version: int) -> None:
     highest-committed-version fallback (which only engages when no
     pointer exists at all). Falls back to delete-then-rename only on
     filesystems whose FileContext doesn't support overwriting rename."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    jvm, hpath, fs = hadoop_fs(spark, path)
     tmp = hpath(f"{path}/{_LATEST_FILE}__tmp")
     ptr = hpath(f"{path}/{_LATEST_FILE}")
     out = fs.create(tmp, True)
@@ -913,7 +957,7 @@ def write_versioned(
     lost-update race a daily pipeline actually hits.
     """
     spark = df.sparkSession
-    jvm, hpath, fs = _versions_fs(spark, path)
+    jvm, hpath, fs = hadoop_fs(spark, path)
     if expected_parent is not _EXPECTED_UNSET:
         current = latest_version(spark, path)
         if current != expected_parent:
@@ -1009,7 +1053,7 @@ def vacuum_versioned(spark: SparkSession, path: str) -> list[str]:
     run vacuum from the single-writer owner, the same assumption the
     commit protocol already documents for reservation markers on
     object stores."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    jvm, hpath, fs = hadoop_fs(spark, path)
     vdir = hpath(f"{path}/{_VERSIONS_DIR}")
     deleted: list[str] = []
     if not fs.exists(vdir):

@@ -7,6 +7,10 @@ The reference's "stream" is an Airflow daily batch with a
 late data is silently ignored. The engine keeps batch-incremental as
 the contract and adds a true Structured Streaming mode with
 watermarked tumbling windows as the scale path for continuous feeds.
+Continuous near-dup detection (:func:`streaming_index_dedup`) is one
+stream start for both persisted index families (text MinHash-LSH,
+image pHash); its exactly-once micro-batch sink is
+``operators.dedup.index_sink_batch``.
 """
 
 from __future__ import annotations
@@ -243,134 +247,27 @@ def dedup_stream(
     )
 
 
-def lsh_sink_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    pairs_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> None:
-    """One micro-batch through the persisted LSH corpus index, with
-    EXACTLY-ONCE pair output within a checkpoint lineage. Write order
-    is the whole safety argument:
-
-    1. ids already in the index are dropped (explicit
-       ``lsh_index_exists`` existence test — a transient read failure
-       on a real index raises and lets the checkpoint retry the batch,
-       it is never mistaken for first-batch bootstrap);
-    2. the batch's near-dup pairs are computed WITHOUT updating the
-       index and land as an idempotent overwrite of the
-       ``batch_id=<n>`` partition of ``pairs_path``;
-    3. only then is the shard appended to the index.
-
-    A crash before (3) replays into the same state: the ids are still
-    unindexed, the pairs recompute identically, and the partition
-    overwrite replaces — never duplicates — the earlier attempt. A
-    crash after (3) replays to an empty ``fresh`` set, and because the
-    append is the LAST durable step, "already indexed" proves the
-    pairs already landed — the batch skips safely. (The prior design
-    appended the index first, so that same skip silently LOST the
-    batch's pairs — at-most-once, not exactly-once.) A crash inside
-    (3) itself can tear signatures/bands; ``repair_on_start`` in
-    :func:`streaming_incremental_dedup` heals it on restart.
-
-    The signature frame is computed once and locally checkpointed
-    across steps (2) and (3) — the shingle→sign pipeline never runs
-    twice, and the checkpoint's lineage truncation keeps step (3)'s
-    self-referencing write from re-evaluating it (see inline note).
-    ``batch_id`` partitions are scoped to one checkpoint lineage:
-    restarting from a FRESH checkpoint over the same paths is safe
-    only because already-indexed ids skip in (1); pointing a new
-    lineage over a partially-overlapping corpus at the same
-    ``pairs_path`` may re-key surviving pairs under new batch ids
-    (at-least-once across lineages)."""
-    from ..operators import dedup as DD
-
-    spark = batch_df.sparkSession
-    bootstrap = not DD.lsh_index_exists(spark, index_path)
-    if bootstrap:
-        fresh = batch_df
-    else:
-        existing, _ = DD.read_lsh_index(spark, index_path)
-        fresh = batch_df.join(
-            existing.select(F.col("id").alias(id_col)), id_col, "left_anti"
-        )
-    if fresh.isEmpty():
-        return
-    # localCheckpoint, NOT persist: `fresh`'s plan anti-joins against
-    # the index's signatures parquet, and step (3)'s append to that
-    # very path triggers Spark's recacheByPath — a merely-persisted
-    # frame would be invalidated and RE-EVALUATED against the
-    # refreshed file listing, where the anti-join now excludes the
-    # shard's own just-appended ids and everything downstream (the
-    # band append) silently evaluates to empty. Checkpointing
-    # truncates the lineage so the signatures are physically
-    # materialized once and never recomputed. (Executor loss drops
-    # local checkpoint blocks — the batch then fails and foreachBatch
-    # retries it, which the write order makes safe.)
-    sig = DD.minhash_signatures_poly(
-        fresh, id_col, text_col, k, num_hashes
-    ).localCheckpoint(eager=True)
-    try:
-        if bootstrap:
-            pairs = DD.banded_pairs(sig, num_hashes, bands, threshold)
-        else:
-            pairs = DD.incremental_lsh_pairs(
-                fresh,
-                index_path,
-                id_col,
-                text_col,
-                k=k,
-                num_hashes=num_hashes,
-                bands=bands,
-                threshold=threshold,
-                update_index=False,
-                signatures=sig,
-            )
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_path}/batch_id={batch_id}"
-        )
-        DD.build_lsh_index(
-            fresh,
-            index_path,
-            id_col,
-            text_col,
-            k,
-            num_hashes,
-            bands,
-            mode="overwrite" if bootstrap else "append",
-            signatures=sig,
-        )
-    finally:
-        sig.unpersist(blocking=False)
-
-
-def streaming_incremental_dedup(
+def streaming_index_dedup(
     stream: DataFrame,
     index_path: str,
     pairs_path: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
+    fam,
+    params: dict,
+    cutoff: float,
     repair_on_start: bool = True,
 ):
-    """Continuous NEAR-dup detection: each micro-batch of documents is
-    signed, checked against the persisted LSH corpus index
-    (``operators.dedup.incremental_lsh_pairs``), appended to that
-    index, and its near-dup pairs (vs the whole corpus so far AND
-    within the batch) land in ``pairs_path`` tagged with the batch id.
-    The daily-shard cadence of ``dedup_incremental_lsh`` compressed to
-    micro-batch latency — per-batch cost is O(|batch| + one index
-    scan), never O(corpus).
+    """Continuous NEAR-dup detection against a persisted banded-hash
+    index: ``operators.dedup.LSH_INDEX`` for ``(doc_id, text)``
+    documents (``cutoff`` = Jaccard threshold, ``params`` = ``k``,
+    ``num_hashes``, ``bands``) or ``multimodal.PHASH_INDEX`` for
+    ``(media_id, payload)`` images (``cutoff`` = max Hamming
+    distance, ``params`` = ``n_chunks``). Each micro-batch is
+    fingerprinted, probed against the index, and its pairs (vs the
+    whole corpus so far AND within the batch) land in ``pairs_path``
+    tagged with the batch id before the batch is appended — the
+    daily-shard cadence compressed to micro-batch latency; per-batch
+    cost is O(|batch| + one index scan), never O(corpus).
 
     Bootstraps from nothing: with no index at ``index_path`` the first
     batch becomes the initial corpus (its intra-batch pairs are still
@@ -378,172 +275,20 @@ def streaming_incremental_dedup(
     this is the fuzzy one — the two compose, exact-first.
 
     Replay safety: foreachBatch is at-least-once; pair output is made
-    exactly-once (within a checkpoint lineage) by
-    :func:`lsh_sink_batch`'s write order — pairs land as an idempotent
-    ``batch_id`` partition overwrite BEFORE the index append, and
-    already-indexed ids (detected by an explicit index existence test,
-    never an exception fallback) skip the batch entirely, which is
-    safe precisely because the append commits last. With
-    ``repair_on_start`` (default) the index is verified once at query
-    start and any torn signatures/bands append (a crash inside the
-    append) is healed from the signatures source of truth before the
-    first batch runs.
-    """
-    from ..operators import dedup as DD
-
-    if repair_on_start and lsh_index_exists_safe(stream, index_path):
-        spark = stream.sparkSession
-        DD.repair_lsh_index(spark, index_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        lsh_sink_batch(
-            batch_df,
-            batch_id,
-            index_path,
-            pairs_path,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            k=k,
-            num_hashes=num_hashes,
-            bands=bands,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def lsh_index_exists_safe(stream: DataFrame, index_path: str) -> bool:
-    """Existence + repairability test used by ``repair_on_start``: an
-    index is repairable iff its signatures table AND _meta exist (a
-    pre-metadata index verifies only with explicit parameters)."""
+    exactly-once (within a checkpoint lineage) by the write order of
+    ``operators.dedup.index_sink_batch``. With ``repair_on_start``
+    (default) the index is verified once at query start and a torn
+    append (a crash inside it) is healed from the index's source table
+    before the first batch runs."""
     from ..operators import dedup as DD
 
     spark = stream.sparkSession
-    return DD.lsh_index_exists(spark, index_path) and (
-        DD.read_lsh_meta(spark, index_path) is not None
-    )
-
-
-def phash_sink_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    pairs_path: str,
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-) -> None:
-    """One micro-batch of IMAGES through the persisted pHash corpus
-    index — the visual twin of :func:`lsh_sink_batch`, with the same
-    exactly-once write order (round-9 continuation):
-
-    1. already-indexed media ids drop via an explicit
-       ``phash_index_exists`` test + anti-join (a transient index
-       read failure raises and lets the checkpoint retry — never
-       mistaken for first-batch bootstrap);
-    2. the batch's near-dup pairs (vs corpus + within batch) land as
-       an idempotent overwrite of the ``batch_id=<n>`` partition;
-    3. only then does the shard append to the index.
-
-    The fingerprint frame is decoded/DCT'd ONCE and locally
-    checkpointed across (2) and (3) — same recacheByPath hazard as
-    the LSH sink: step (3) rewrites the very hashes parquet the
-    anti-join read, so an un-truncated lineage would re-evaluate to
-    empty for the chunk append."""
-    from .. import multimodal as MM
-    from ..operators import dedup as DD
-
-    spark = batch_df.sparkSession
-    bootstrap = not MM.phash_index_exists(spark, index_path)
-    if bootstrap:
-        fresh = batch_df
-    else:
-        existing, _ = MM.read_phash_index(spark, index_path)
-        fresh = batch_df.join(
-            existing.select("media_id"), "media_id", "left_anti"
-        )
-    if fresh.isEmpty():
-        return
-    fp = (
-        MM.phash_images(fresh)
-        .filter(F.col("phash").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    try:
-        if bootstrap:
-            pairs = DD.hamming_near_pairs(
-                fp,
-                id_col="media_id",
-                hash_col="phash",
-                max_hamming=max_hamming,
-                n_chunks=n_chunks,
-            )
-        else:
-            pairs = MM.incremental_phash_pairs(
-                fresh,
-                index_path,
-                max_hamming=max_hamming,
-                n_chunks=n_chunks,
-                update_index=False,
-                fingerprints=fp,
-            )
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_path}/batch_id={batch_id}"
-        )
-        MM.build_phash_index(
-            fresh,
-            index_path,
-            n_chunks=n_chunks,
-            mode="overwrite" if bootstrap else "append",
-            fingerprints=fp,
-        )
-    finally:
-        fp.unpersist(blocking=False)
-
-
-def streaming_image_dedup(
-    stream: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    checkpoint: str,
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-    repair_on_start: bool = True,
-):
-    """Continuous image near-dup detection: each micro-batch of
-    ``(media_id, payload)`` rows is pHashed, checked against the
-    persisted chunk index (``multimodal.incremental_phash_pairs``),
-    appended, and its pairs land in ``pairs_path`` tagged with the
-    batch id — the daily-shard cadence of
-    ``multimodal_phash_incremental`` compressed to micro-batch
-    latency. Per-batch cost is O(|batch| decode + one index scan),
-    never O(corpus); pixels never persist in state, only 8-byte
-    fingerprints.
-
-    Bootstraps from nothing (first batch becomes the corpus, its
-    intra-batch pairs still emitted). Replay safety: at-least-once
-    foreachBatch made exactly-once within a checkpoint lineage by
-    :func:`phash_sink_batch`'s write order. With ``repair_on_start``
-    a torn hashes/chunks append heals from the hashes source of
-    truth before the first batch."""
-    from .. import multimodal as MM
-
-    if repair_on_start:
-        spark = stream.sparkSession
-        if MM.phash_index_exists(spark, index_path):
-            MM.repair_phash_index(spark, index_path, n_chunks=n_chunks)
+    if repair_on_start and DD.index_exists(spark, index_path, fam):
+        DD.repair_index(spark, index_path, fam)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        phash_sink_batch(
-            batch_df,
-            batch_id,
-            index_path,
-            pairs_path,
-            max_hamming=max_hamming,
-            n_chunks=n_chunks,
+        DD.index_sink_batch(
+            batch_df, batch_id, index_path, pairs_path, fam, params, cutoff
         )
 
     return (

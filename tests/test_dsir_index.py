@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     sampling as SMP,
 )
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources.io import (
+    read_meta,
+)
 
 _T = "12345 67890 12345 67890"
 _R1 = "67890 12345 67890"
@@ -84,7 +87,7 @@ def test_meta_params_round_trip(spark, tmp_path):
     full = _full(spark)
     path = str(tmp_path / "idx64")
     SMP.dsir_index_build(full, F.col("is_t"), path, n_buckets=64, k=4)
-    meta = SMP.read_dsir_meta(spark, path)
+    meta = read_meta(spark, path)
     assert meta["n_buckets"] == 64 and meta["k"] == 4
     # scorer must follow the index's featurizer, not its defaults:
     # every scored bucket id stays under the index's n_buckets

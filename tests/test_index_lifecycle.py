@@ -19,11 +19,9 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.source
     io as IO,
     read_table,
 )
-from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.streaming import (
-    incremental as INC,
-)
 
 K_DAYS = 5
+LSH_PARAMS = {"k": 3, "num_hashes": 64, "bands": 16}
 
 
 def _docs(spark, sf_dir):
@@ -62,8 +60,8 @@ def test_n_day_append_composes_to_full_build(spark, sf_dir, tmp_path):
 
     full = str(tmp_path / "full")
     DD.build_lsh_index(docs, full)
-    sig_inc, bands_inc = DD.read_lsh_index(spark, index)
-    sig_full, bands_full = DD.read_lsh_index(spark, full)
+    sig_inc, bands_inc = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig_full, bands_full = DD.read_index(spark, full, DD.LSH_INDEX)
     assert _sig_set(sig_inc) == _sig_set(sig_full)
     assert _band_set(bands_inc) == _band_set(bands_full)
 
@@ -78,7 +76,7 @@ def test_n_day_append_composes_to_full_build(spark, sf_dir, tmp_path):
     assert accumulated == want - day0_internal
 
     # index is self-describing across the lifecycle
-    assert DD.read_lsh_meta(spark, index) == {
+    assert IO.read_meta(spark, index) == {
         "k": 3,
         "num_hashes": 64,
         "bands": 16,
@@ -94,16 +92,16 @@ def test_index_of_another_signature_family_is_refused(spark, sf_dir, tmp_path):
     docs = _docs(spark, sf_dir)
     index = str(tmp_path / "idx")
     DD.build_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), index)
-    meta = dict(DD.read_lsh_meta(spark, index), signature="xxhash")
-    DD._write_lsh_meta(spark, index, meta)
-    before = _sig_set(DD.read_lsh_index(spark, index)[0])
+    meta = dict(IO.read_meta(spark, index), signature="xxhash")
+    IO.write_meta(spark, index, meta)
+    before = _sig_set(spark.read.parquet(f"{index}/signatures"))
     shard = docs.filter(F.col("doc_id") % 2 == 1)
     for update_index in (True, False):
         with pytest.raises(ValueError, match="xxhash"):
             DD.incremental_lsh_pairs(shard, index, update_index=update_index)
     with pytest.raises(ValueError, match="xxhash"):
         DD.build_lsh_index(shard, index, mode="append")
-    assert _sig_set(DD.read_lsh_index(spark, index)[0]) == before
+    assert _sig_set(spark.read.parquet(f"{index}/signatures")) == before
 
 
 def test_compact_lsh_index_preserves_results_and_cuts_files(
@@ -120,7 +118,7 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
             docs.filter(F.col("doc_id") % K_DAYS == day), index
         ).count()
 
-    sig_before, bands_before = DD.read_lsh_index(spark, index)
+    sig_before, bands_before = DD.read_index(spark, index, DD.LSH_INDEX)
     sig_snap, bands_snap = _sig_set(sig_before), _band_set(bands_before)
     files_before = IO.parquet_file_count(spark, f"{index}/bands")
 
@@ -132,7 +130,7 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
     assert files_before >= 16 * (K_DAYS - 1)
     assert files_after == 16
 
-    sig_after, bands_after = DD.read_lsh_index(spark, index)
+    sig_after, bands_after = DD.read_index(spark, index, DD.LSH_INDEX)
     assert _sig_set(sig_after) == sig_snap
     assert _band_set(bands_after) == bands_snap
 
@@ -153,7 +151,7 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
     }
     assert got == want
     # still consistent per the verifier
-    assert DD.verify_lsh_index(spark, index)["consistent"]
+    assert DD.verify_index(spark, index, DD.LSH_INDEX)["consistent"]
 
 
 def test_torn_append_detected_and_repaired(spark, sf_dir, tmp_path):
@@ -172,21 +170,21 @@ def test_torn_append_detected_and_repaired(spark, sf_dir, tmp_path):
         "append"
     ).parquet(f"{index}/signatures")
 
-    report = DD.verify_lsh_index(spark, index)
+    report = DD.verify_index(spark, index, DD.LSH_INDEX)
     assert not report["consistent"]
     assert report["missing_band_ids"] == shard.count()
     assert report["incomplete_band_ids"] == 0
     assert report["orphan_band_ids"] == 0
 
-    healed = DD.repair_lsh_index(spark, index)
+    healed = DD.repair_index(spark, index, DD.LSH_INDEX)
     assert healed["consistent"]
     # idempotent: repairing a consistent index is a no-op
-    assert DD.repair_lsh_index(spark, index)["consistent"]
+    assert DD.repair_index(spark, index, DD.LSH_INDEX)["consistent"]
 
     clean = str(tmp_path / "clean")
     DD.build_lsh_index(corpus.unionByName(shard), clean)
-    sig_r, bands_r = DD.read_lsh_index(spark, index)
-    sig_c, bands_c = DD.read_lsh_index(spark, clean)
+    sig_r, bands_r = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig_c, bands_c = DD.read_index(spark, clean, DD.LSH_INDEX)
     assert _sig_set(sig_r) == _sig_set(sig_c)
     assert _band_set(bands_r) == _band_set(bands_c)
 
@@ -221,11 +219,11 @@ def test_orphan_band_entries_trigger_full_rebuild(spark, sf_dir, tmp_path):
         16,
     )
     orphans.write.mode("append").partitionBy("band").parquet(f"{index}/bands")
-    report = DD.verify_lsh_index(spark, index)
+    report = DD.verify_index(spark, index, DD.LSH_INDEX)
     assert report["orphan_band_ids"] > 0
-    healed = DD.repair_lsh_index(spark, index)
+    healed = DD.repair_index(spark, index, DD.LSH_INDEX)
     assert healed["consistent"]
-    sig, bands = DD.read_lsh_index(spark, index)
+    sig, bands = DD.read_index(spark, index, DD.LSH_INDEX)
     assert _band_set(bands) == _band_set(
         DD.band_entries(sig, 64, 16)
     )
@@ -241,7 +239,7 @@ def test_read_lsh_index_raises_on_corrupt_bands(spark, sf_dir, tmp_path):
     bad = tmp_path / "idx" / "bands" / "band=0" / "part-corrupt.parquet"
     bad.write_bytes(b"this is not a parquet file")
     with pytest.raises(Exception):
-        sig, bands = DD.read_lsh_index(spark, index)
+        sig, bands = DD.read_index(spark, index, DD.LSH_INDEX)
         bands.count()
 
 
@@ -249,9 +247,9 @@ def test_missing_index_read_raises_not_empty(spark, tmp_path):
     """Reading a nonexistent index path raises (typo'd path is an
     error, not an empty corpus); existence is queried explicitly."""
     missing = str(tmp_path / "nope")
-    assert not DD.lsh_index_exists(spark, missing)
+    assert not DD.index_exists(spark, missing, DD.LSH_INDEX)
     with pytest.raises(Exception):
-        DD.read_lsh_index(spark, missing)
+        DD.read_index(spark, missing, DD.LSH_INDEX)
 
 
 def test_sink_crash_between_pairs_and_append_is_exactly_once(
@@ -267,19 +265,16 @@ def test_sink_crash_between_pairs_and_append_is_exactly_once(
     index = str(tmp_path / "idx")
     pairs = str(tmp_path / "pairs")
 
-    INC.lsh_sink_batch(b0, 0, index, pairs)
-    n_sig_after_b0 = DD.read_lsh_index(spark, index)[0].count()
+    DD.index_sink_batch(b0, 0, index, pairs, DD.LSH_INDEX, LSH_PARAMS, 0.5)
+    n_sig_after_b0 = DD.read_index(spark, index, DD.LSH_INDEX)[0].count()
 
     # crashed attempt at batch 1: pairs written, index append skipped
-    sig1 = DD.minhash_signatures_poly(b1, "doc_id", "text", 3, 64)
-    crashed_pairs = DD.incremental_lsh_pairs(
-        b1, index, update_index=False, signatures=sig1
-    )
+    crashed_pairs = DD.incremental_lsh_pairs(b1, index, update_index=False)
     crashed_pairs.write.mode("overwrite").parquet(f"{pairs}/batch_id=1")
-    assert DD.read_lsh_index(spark, index)[0].count() == n_sig_after_b0
+    assert DD.read_index(spark, index, DD.LSH_INDEX)[0].count() == n_sig_after_b0
 
     # replay the batch through the real sink
-    INC.lsh_sink_batch(b1, 1, index, pairs)
+    DD.index_sink_batch(b1, 1, index, pairs, DD.LSH_INDEX, LSH_PARAMS, 0.5)
     got = _pair_set(
         spark.read.parquet(pairs).select("id_a", "id_b", "est_jaccard")
     )
@@ -290,10 +285,10 @@ def test_sink_crash_between_pairs_and_append_is_exactly_once(
     )
     assert got == want  # nothing lost, nothing duplicated
     # and the append completed
-    assert DD.read_lsh_index(spark, index)[0].count() == b0.count() + b1.count()
+    assert DD.read_index(spark, index, DD.LSH_INDEX)[0].count() == b0.count() + b1.count()
 
     # second replay (crash AFTER append): skips cleanly, pairs intact
-    INC.lsh_sink_batch(b1, 1, index, pairs)
+    DD.index_sink_batch(b1, 1, index, pairs, DD.LSH_INDEX, LSH_PARAMS, 0.5)
     assert (
         _pair_set(
             spark.read.parquet(pairs).select("id_a", "id_b", "est_jaccard")
@@ -508,11 +503,10 @@ def test_maybe_compact_index_lsh_kind_detection_and_threshold(
     )
     for day in (1, 2, 3, 4):
         DD.incremental_lsh_pairs(
-            docs.filter(F.col("doc_id") % 5 == day),
-            index, k=3, num_hashes=16, bands=4,
+            docs.filter(F.col("doc_id") % 5 == day), index
         ).collect()
     assert MNT.index_kind(spark, index) == "lsh"
-    before = _sig_set(DD.read_lsh_index(spark, index)[0])
+    before = _sig_set(DD.read_index(spark, index, DD.LSH_INDEX)[0])
 
     # mean-size guard: with a tiny floor fraction the mean is "fine",
     # so even a high file count must NOT trigger
@@ -524,7 +518,7 @@ def test_maybe_compact_index_lsh_kind_detection_and_threshold(
     r = MNT.maybe_compact_index(spark, index, min_files=4)
     assert r["kind"] == "lsh" and r["compacted"]
     assert r["report"]["bands_files"][1] <= r["report"]["bands_files"][0]
-    assert _sig_set(DD.read_lsh_index(spark, index)[0]) == before
+    assert _sig_set(DD.read_index(spark, index, DD.LSH_INDEX)[0]) == before
 
     with _pytest.raises(ValueError):
         MNT.index_kind(spark, str(tmp_path / "not_an_index"))

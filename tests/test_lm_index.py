@@ -14,6 +14,9 @@ from pyspark.sql import functions as F
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     lm as LM,
 )
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources.io import (
+    read_meta,
+)
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -47,7 +50,7 @@ def test_read_raises_without_committed_meta(spark, tmp_path):
     uni.write.parquet(f"{p}/unigrams")
     bi.write.parquet(f"{p}/bigrams")
     tri.write.parquet(f"{p}/trigrams")
-    assert LM.read_lm_meta(spark, p) is None
+    assert read_meta(spark, p) is None
     with pytest.raises(ValueError, match="no committed LM index"):
         LM.lm_index_read(spark, p)
 

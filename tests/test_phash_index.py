@@ -9,14 +9,17 @@ import numpy as np
 import pytest
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
+    PHASH_INDEX,
     build_phash_index,
     encode_ppm,
     image_near_pairs,
     incremental_phash_pairs,
-    phash_index_exists,
-    read_phash_index,
-    repair_phash_index,
-    verify_phash_index,
+)
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.dedup import (
+    index_exists,
+    read_index,
+    repair_index,
+    verify_index,
 )
 
 
@@ -53,18 +56,19 @@ def index_path(tmp_path):
 
 
 def test_build_verify_and_exists(spark, index_path):
-    assert not phash_index_exists(spark, index_path)
+    assert not index_exists(spark, index_path, PHASH_INDEX)
     build_phash_index(_media(spark, CORPUS), index_path)
-    assert phash_index_exists(spark, index_path)
-    report = verify_phash_index(spark, index_path)
+    assert index_exists(spark, index_path, PHASH_INDEX)
+    report = verify_index(spark, index_path, PHASH_INDEX)
     assert report == {
         "hashes": 4,
         "missing_chunk_ids": 0,
         "incomplete_chunk_ids": 0,
         "orphan_chunk_ids": 0,
+        "chunks_per_id": 4,
         "consistent": True,
     }
-    hashes, chunks = read_phash_index(spark, index_path)
+    hashes, chunks = read_index(spark, index_path, PHASH_INDEX)
     assert hashes.count() == 4 and chunks.count() == 16
 
 
@@ -103,7 +107,7 @@ def test_broadcast_flag_result_invariant(spark, index_path):
 def test_update_index_appends_and_next_shard_sees_it(spark, index_path):
     build_phash_index(_media(spark, CORPUS), index_path)
     incremental_phash_pairs(_media(spark, SHARD), index_path)
-    assert verify_phash_index(spark, index_path)["hashes"] == 8
+    assert verify_index(spark, index_path, PHASH_INDEX)["hashes"] == 8
     # a second day's shard: dup of a FIRST-shard family (5)
     day2 = _pairs(
         incremental_phash_pairs(
@@ -134,13 +138,13 @@ def test_repair_torn_append(spark, index_path):
     )
 
     build_phash_index(_media(spark, CORPUS + SHARD), index_path)
-    hashes, chunks = read_phash_index(spark, index_path)
+    hashes, chunks = read_index(spark, index_path, PHASH_INDEX)
     # simulate a torn append: drop every chunk row of two ids
     torn = chunks.filter(~chunks["id"].isin(10, 12)).localCheckpoint()
     replace_parquet_atomic(spark, torn, f"{index_path}/chunks", partition_by=["chunk"])
-    rep = verify_phash_index(spark, index_path)
+    rep = verify_index(spark, index_path, PHASH_INDEX)
     assert not rep["consistent"] and rep["missing_chunk_ids"] == 2
-    after = repair_phash_index(spark, index_path)
+    after = repair_index(spark, index_path, PHASH_INDEX)
     assert after["consistent"]
     # repaired index probes identically to an untorn one
     got = _pairs(
@@ -155,7 +159,7 @@ def test_incremental_rejects_bad_band_config(spark, index_path):
     build_phash_index(_media(spark, CORPUS), index_path)
     with pytest.raises(ValueError):
         incremental_phash_pairs(
-            _media(spark, SHARD), index_path, max_hamming=4, n_chunks=4
+            _media(spark, SHARD), index_path, max_hamming=4
         )
 
 
@@ -166,7 +170,7 @@ def test_empty_corpus_index_probes_cleanly(spark, index_path):
     its within-shard dups."""
     empty = _media(spark, [])
     build_phash_index(empty, index_path)
-    assert verify_phash_index(spark, index_path)["hashes"] == 0
+    assert verify_index(spark, index_path, PHASH_INDEX)["hashes"] == 0
     got = _pairs(
         incremental_phash_pairs(
             _media(spark, [(1, 0), (2, 0)]), index_path, update_index=False

@@ -11,6 +11,8 @@ Runs, suite-wide:
      extreme values / ties+skew / partitioning invariance / sf0.1
      window)
   4. the doc drift guards (README registry block, PLANS.md)
+  5. the persisted-index lifecycle suites (LSH, pHash, their stream
+     sinks, the LSH hot-bucket cap, LM and DSIR indexes)
 
 and writes ONE summary line to GATE.json (plus stdout) that SURVEY.md
 status claims must cite — a timestamped artifact, not memory.
@@ -59,6 +61,14 @@ STAGES: list[tuple[str, list[str]]] = [
     # legible in GATE.json at a glance
     ("window_rotation", [sys.executable, "-m", "pytest", "-q", "-m", "slow or not slow",
                          "tests/test_registry_window.py::test_window_rotation_rules"]),
+    # build / probe / append / verify / repair / stream-sink of every
+    # persisted index family: all of these suites are `slow`, so no
+    # other stage or the default collection runs them
+    ("index_lifecycle", [sys.executable, "-m", "pytest", "-q", "-m", "slow or not slow",
+                         "tests/test_index_lifecycle.py", "tests/test_phash_index.py",
+                         "tests/test_stream_dedup.py", "tests/test_stream_image_dedup.py",
+                         "tests/test_lsh_hot_bucket.py", "tests/test_lm_index.py",
+                         "tests/test_dsir_index.py"]),
 ]
 
 
