@@ -12,9 +12,11 @@ port.
 
 Differences from the reference, by design (SURVEY.md §2.9):
 - reruns converge instead of duplicating (quirk .4): a full build
-  overwrites, and a daily run appends only keys the warehouse lacks
-  and upserts facts on their natural id, rewriting only the files
-  those ids live in (see :func:`run_warehouse_table`);
+  overwrites, and a daily run writes only what the day changed — it
+  appends keys the warehouse lacks, upserts facts on their natural id,
+  and merges the full-load tables' snapshots on their natural key,
+  rewriting only the files the changed keys live in (see
+  :func:`run_warehouse_table`);
 - incremental mode filters on the SAME path the full load uses, so the
   incremental/full path mismatch bug (quirk .3) cannot exist;
 - dim_people and bridge_company_people are built (quirk .6 — declared
@@ -47,9 +49,13 @@ WAREHOUSE_ORDER = (
 
 
 def read_staging(
-    spark: SparkSession, staging_dir: str, ds: str | None = None
+    spark: SparkSession,
+    staging_dir: str,
+    ds: str | None = None,
+    names: tuple[str, ...] = STAGING_INPUTS,
 ) -> dict[str, DataFrame]:
-    """Read the staging zone with enforced schemas. With ``ds`` set,
+    """Read the staging tables ``names`` (default: all of
+    ``STAGING_INPUTS``) with enforced schemas. With ``ds`` set,
     tables carrying a timestamp ``created_at`` are sliced to
     created_at::date == ds - 1 day (P3, the reference's daily
     incremental predicate) — pushed into the scan. Tables without a
@@ -59,7 +65,7 @@ def read_staging(
     from pyspark.sql import types as T
 
     out: dict[str, DataFrame] = {}
-    for name in STAGING_INPUTS:
+    for name in names:
         schema = schemas.STAGING[name]
         df = SIO.read_parquet(spark, f"{staging_dir}/{name}", schema=schema)
         has_ts_created = any(
@@ -72,10 +78,23 @@ def read_staging(
     return out
 
 
-# incremental-merge metadata: surrogate + natural key per dim, natural
-# id per fact. dim_people and bridge_company_people (full-load staging
-# inputs, see read_staging) rebuild wholesale every run; the static
-# dim_date spine is written once.
+# the staging tables each warehouse builder consumes
+_INPUTS = {
+    "dim_date": (),
+    "dim_company": ("company",),
+    "dim_funds": ("funds",),
+    "dim_people": ("people",),
+    "fct_investments": ("investments", "funding_rounds"),
+    "fct_ipos": ("ipos",),
+    "fct_acquisition": ("acquisition",),
+    "bridge_company_people": ("relationships",),
+}
+
+# incremental-merge metadata: surrogate + natural key per dim sliced to
+# the day's new rows, natural id per fact, and surrogate + natural key
+# per table built from a full-load staging snapshot (people and
+# relationships, see read_staging). The static dim_date spine is
+# written once.
 _DIM_KEYS = {
     "dim_company": ("sk_company_id", "nk_company_id"),
     "dim_funds": ("sk_fund_id", "nk_fund_id"),
@@ -85,6 +104,79 @@ _FACT_KEYS = {
     "fct_ipos": "dd_ipo_id",
     "fct_acquisition": "dd_acquisition_id",
 }
+_SNAPSHOT_KEYS = {
+    "dim_people": ("sk_people_id", "nk_people_id"),
+    "bridge_company_people": ("sk_company_people_id", "dd_relationship_id"),
+}
+
+
+def merge_snapshot(
+    spark: SparkSession, rows: DataFrame, old: DataFrame, path: str, sk: str, nk: str
+) -> None:
+    """Commit the full snapshot ``rows`` (no surrogate key, natural
+    key ``nk``) to the keyed table ``old`` at ``path``, writing only
+    the difference through ``sources.io.upsert_parquet_files``:
+
+    - a natural key not yet in the table is new: new keys are numbered
+      on from the table's largest surrogate key, in natural-key order;
+    - a natural key whose attributes changed is upserted with its
+      existing surrogate key;
+    - a natural key gone from the snapshot is deleted;
+    - a natural key held more than once (a commit that crashed between
+      its append and its deletes) is upserted once, which rewrites
+      every file holding a copy.
+
+    Existing rows never change their surrogate key. A deleted key
+    leaves a gap in the sequence, as in a BIGSERIAL sequence, except
+    that the number of a deleted largest key is handed out again (new
+    keys continue from the largest key in the table); keys stay dense
+    1..N as long as nothing is deleted. A snapshot equal to the table
+    writes no file.
+
+    The diff is one shuffle of the snapshot and the table's rows on the
+    natural key (both dimension-sized); its per-key result is persisted
+    for one counting job and the commit.
+    """
+    from ..operators.surrogate import add_surrogate_key
+
+    attrs = [c for c in rows.columns if c != nk]
+    now = rows.select(nk, F.struct(*attrs).alias("__new"))
+    was = old.select(nk, sk, F.struct(*attrs).alias("__old"))
+    new, n_old = F.col("__new"), F.col("__n_old")
+    per_key = (
+        now.unionByName(was, allowMissingColumns=True)
+        .groupBy(nk)
+        .agg(
+            F.first("__new", ignorenulls=True).alias("__new"),
+            F.first("__old", ignorenulls=True).alias("__old"),
+            F.max(sk).alias(sk),
+            F.count("__old").alias("__n_old"),
+        )
+        .select(
+            nk, sk, "__new",
+            F.when(new.isNull(), "gone")
+            .when(n_old == 0, "fresh")
+            .when((n_old > 1) | ~F.col("__old").eqNullSafe(new), "changed")
+            .alias("__op"),
+        )
+        .persist()
+    )
+    op = F.col("__op")
+    try:
+        top, n_fresh, n_gone, n = per_key.agg(
+            F.max(sk), F.count_if(op == "fresh"), F.count_if(op == "gone"), F.count(op)
+        ).first()
+        if n == 0:
+            return
+        live = per_key.select(sk, nk, "__new.*", "__op")
+        upserts = live.filter(op == "changed").select(sk, *rows.columns)
+        if n_fresh:
+            fresh = live.filter(op == "fresh").select(*rows.columns)
+            upserts = add_surrogate_key(fresh, sk, [nk], top or 0).unionByName(upserts)
+        gone = per_key.filter(op == "gone").select(nk) if n_gone else None
+        SIO.upsert_parquet_files(spark, upserts, path, keys=[nk], delete=gone)
+    finally:
+        per_key.unpersist()
 
 
 def run_warehouse_table(
@@ -118,8 +210,15 @@ def run_warehouse_table(
       of the day's ids are rewritten, usually none, so the commit is a
       plain append (rerunning a day converges instead of duplicating,
       fixing reference quirk §2.9.4);
-    - dim_people / bridge_company_people: full rebuild each run
-      (full-load staging inputs).
+    - dim_people / bridge_company_people (built from the full-load
+      ``people`` / ``relationships`` snapshots; the bridge joins the
+      persisted, already-merged dims): the snapshot is merged on its
+      natural key (``nk_people_id`` / ``dd_relationship_id``) by
+      :func:`merge_snapshot` — existing keys keep their surrogate key,
+      new keys continue the sequence, and only the files holding a
+      changed or deleted key are rewritten; a day that changes neither
+      table writes nothing to it. A bridge persisted without
+      ``dd_relationship_id`` is written in full, as a missing one is.
 
     Every daily commit adds files before it removes any, so a crash
     never loses a row. A dim that crashes after its append reruns as a
@@ -127,11 +226,13 @@ def run_warehouse_table(
     and nothing is appended. A fact upsert that crashes between its
     append and its deletes leaves duplicate ids; the rerun of the same
     ``(table, ds)`` finds both copies among the touched files and
-    rewrites them into one.
+    rewrites them into one; a snapshot merge that crashes there is
+    repaired the same way, because its rerun upserts every natural key
+    the table holds twice.
     """
-    from ..operators.surrogate import max_key
+    from ..operators.surrogate import add_surrogate_key, max_key
 
-    staging = read_staging(spark, staging_dir, ds)
+    staging = read_staging(spark, staging_dir, ds, _INPUTS[name])
     path = f"{warehouse_dir}/{name}"
 
     def _persisted(table: str) -> DataFrame:
@@ -141,17 +242,20 @@ def run_warehouse_table(
         if ds is None or not SIO.is_committed(spark, path):
             SIO.write_parquet(DDATE.build_dim_date(spark), path, mode="overwrite")
         return
-    if name == "dim_people":
-        SIO.write_parquet(
-            WH.build_dim_people(staging["people"]), path, mode="overwrite"
-        )
-        return
-    if name == "bridge_company_people":
-        bridge = WH.build_bridge_company_people(
-            staging["relationships"], _persisted("dim_people"),
-            _persisted("dim_company"),
-        )
-        SIO.write_parquet(bridge, path, mode="overwrite")
+    if name in _SNAPSHOT_KEYS:
+        if name == "dim_people":
+            rows = WH.dim_people_rows(staging["people"])
+        else:
+            rows = WH.bridge_company_people_rows(
+                staging["relationships"], _persisted("dim_people"),
+                _persisted("dim_company"),
+            )
+        sk, nk = _SNAPSHOT_KEYS[name]
+        old = SIO.read_parquet_if_exists(spark, path) if ds is not None else None
+        if old is None or nk not in old.columns:
+            SIO.write_parquet(add_surrogate_key(rows, sk, [nk]), path, mode="overwrite")
+        else:
+            merge_snapshot(spark, rows, old, path, sk, nk)
         return
 
     if name in _DIM_KEYS:

@@ -79,18 +79,23 @@ def build_dim_funds(funds: DataFrame, dim_date: DataFrame, offset: int = 0) -> D
     return add_surrogate_key(dim, "sk_fund_id", ["nk_fund_id"], offset)
 
 
-def build_dim_people(people: DataFrame, offset: int = 0) -> DataFrame:
-    """dim_people — declared in init_dwh.sql:43-50, never built by the
-    reference. full_name = null-aware 'first last' concat."""
+def dim_people_rows(people: DataFrame) -> DataFrame:
+    """dim_people without its surrogate key — declared in
+    init_dwh.sql:43-50, never built by the reference. full_name =
+    null-aware 'first last' concat."""
     full_name = F.when(
         F.col("first_name").isNull() & F.col("last_name").isNull(), F.lit(None)
     ).otherwise(F.trim(F.concat_ws(" ", F.col("first_name"), F.col("last_name"))))
-    dim = people.select(
+    return people.select(
         F.col("object_id").alias("nk_people_id"),
         full_name.alias("full_name"),
         F.col("affiliation_name"),
     )
-    return add_surrogate_key(dim, "sk_people_id", ["nk_people_id"], offset)
+
+
+def build_dim_people(people: DataFrame) -> DataFrame:
+    """dim_people: :func:`dim_people_rows` keyed 1..N by natural key."""
+    return add_surrogate_key(dim_people_rows(people), "sk_people_id", ["nk_people_id"])
 
 
 def build_fct_investments(
@@ -228,18 +233,19 @@ def build_fct_acquisition(
     )
 
 
-def build_bridge_company_people(
+def bridge_company_people_rows(
     relationships: DataFrame,
     dim_people: DataFrame,
     dim_company: DataFrame,
-    offset: int = 0,
 ) -> DataFrame:
-    """bridge_company_people — declared in init_dwh.sql:63-73, never
-    built by the reference. Inner joins to both dims (FK-filter
-    semantics, §1.4); the all-varchar staging columns (init_stg.sql:
-    158-169) are typed here with try-casts: unparseable dates → NULL
-    keys, is_past passes through as its raw string (DDL type is
-    varchar(20))."""
+    """bridge_company_people without its surrogate key — declared in
+    init_dwh.sql:63-73, never built by the reference. Inner joins to
+    both dims (FK-filter semantics, §1.4); the all-varchar staging
+    columns (init_stg.sql:158-169) are typed here with try-casts:
+    unparseable dates → NULL keys, is_past passes through as its raw
+    string (DDL type is varchar(20)). The staging ``relationship_id``
+    is kept as the degenerate dimension ``dd_relationship_id``, the
+    row's natural key (a daily merge matches rows on it)."""
     df = relationships.join(
         F.broadcast(dim_people.select("sk_people_id", "nk_people_id")),
         relationships["person_object_id"] == F.col("nk_people_id"),
@@ -250,14 +256,23 @@ def build_bridge_company_people(
         df["relationship_object_id"] == F.col("nk_company_id"),
         "inner",
     )
-    bridge = df.select(
+    return df.select(
         "sk_company_id",
         "sk_people_id",
         F.col("title"),
         F.col("is_past"),
         E.try_date_key("start_at").alias("relationship_start_at"),
         E.try_date_key("end_at").alias("relationship_end_at"),
-        F.col("relationship_id").alias("__nk"),
+        F.col("relationship_id").alias("dd_relationship_id"),
     )
-    out = add_surrogate_key(bridge, "sk_company_people_id", ["__nk"], offset)
-    return out.drop("__nk")
+
+
+def build_bridge_company_people(
+    relationships: DataFrame,
+    dim_people: DataFrame,
+    dim_company: DataFrame,
+) -> DataFrame:
+    """bridge_company_people: :func:`bridge_company_people_rows` keyed
+    1..N by ``dd_relationship_id``."""
+    rows = bridge_company_people_rows(relationships, dim_people, dim_company)
+    return add_surrogate_key(rows, "sk_company_people_id", ["dd_relationship_id"])

@@ -367,6 +367,7 @@ WAREHOUSE: dict[str, T.StructType] = {
             ("is_past", _STR),
             ("relationship_start_at", _INT),
             ("relationship_end_at", _INT),
+            ("dd_relationship_id", _STR),
         ]
     ),
 }

@@ -650,29 +650,36 @@ def upsert_parquet_files(
     path: str,
     keys: list[str],
     order_by: str | None = None,
+    delete: DataFrame | None = None,
 ) -> None:
     """Key-upsert ``new_df`` into the parquet table at ``path`` in
-    place, rewriting only the data files that hold one of its keys
-    (file-level copy-on-write; S7, reference staging load.py:94-118).
+    place, and drop every row whose key is in ``delete``, rewriting
+    only the data files that hold one of those keys (file-level
+    copy-on-write; S7, reference staging load.py:94-118).
 
     One scan of the table's key columns, semi-joined with the keys of
-    ``new_df`` (AQE picks the join strategy from the persisted delta's
-    size), lists the touched files (``_metadata.file_path``). The commit
-    then appends :func:`merge_upsert` of ``new_df`` over the touched
-    files' rows as at most as many new files as it touched (one when it
-    touched none), and only then deletes the touched files. With no
-    touched file, the common case for a day of
-    new facts, the commit is a plain append; an empty ``new_df`` skips
-    the scan and writes nothing. Footer min/max cannot stand in for the
-    key scan: keys that arrive spread over the key range overlap every
-    file's range.
+    ``new_df`` and ``delete`` (AQE picks the join strategy from the
+    persisted delta's size), lists the touched files
+    (``_metadata.file_path``). The commit then appends
+    :func:`merge_upsert` of ``new_df`` over the touched files' rows,
+    less the deleted keys, as at most as many new files as it touched
+    (one when it touched none; none when nothing is left to write), and
+    only then deletes the touched files. With no touched file, the
+    common case for a day of new facts, the commit is a plain append;
+    an empty ``new_df`` with no ``delete`` skips the scan and writes
+    nothing. Footer min/max cannot stand in for the key scan: keys that
+    arrive spread over the key range overlap every file's range.
 
     The add-then-remove order never loses a row. A crash between the
-    append and the last delete leaves both copies of the touched keys
-    (duplicate keys, no lost rows); rerunning the same upsert finds both
-    copies among its touched files and rewrites them into one, because
-    the touched rows are deduplicated on the key before the merge.
-    Single writer assumed, same as the reference.
+    append and the last delete leaves both copies of the touched
+    files' rows (duplicate keys, no lost rows); rerunning the same
+    upsert finds both copies of every upserted key among its touched
+    files and rewrites them into one, because the touched rows are
+    deduplicated on the key before the merge. A file touched only by
+    deleted keys is not found again through the new file, so a caller
+    that deletes repairs duplicates by upserting their keys (see
+    ``plans.pipeline``). ``keys`` must identify rows. Single writer
+    assumed, same as the reference.
 
     Only a missing path is an empty table (the upsert then writes the
     table); any other read failure (corrupt footer, permissions,
@@ -683,12 +690,17 @@ def upsert_parquet_files(
         write_parquet(merge_upsert(new_df, None, keys, order_by), path)
         return
     new_df = new_df.persist()  # read by the probe, the key scan and the merge
+    gone = None if delete is None else delete.select(*keys).distinct().persist()
     try:
-        if new_df.isEmpty():
+        no_new = new_df.isEmpty()
+        if no_new and gone is None:
             return
+        probe = new_df.select(*keys)
+        if gone is not None:
+            probe = probe.unionByName(gone)
         hits = (
             table.select(*keys, F.col("_metadata.file_path").alias("__file"))
-            .join(new_df.select(*keys), on=keys, how="left_semi")
+            .join(probe, on=keys, how="left_semi")
             .select("__file")
             .distinct()
             .collect()
@@ -699,12 +711,18 @@ def upsert_parquet_files(
             jvm = spark._jvm
             files = [jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)).toString() for f in touched]
             old = spark.read.schema(new_df.schema).parquet(*files).dropDuplicates(keys)
-        # one file for a plain append; a rewrite keeps the touched
-        # files' parallelism instead of funnelling them through one task
-        _append_file(merge_upsert(new_df, old, keys, order_by), path, max(1, len(touched)))
+            if gone is not None:
+                old = old.join(gone, on=keys, how="left_anti")
+        merged = merge_upsert(new_df, old, keys, order_by)
+        if not no_new or (touched and not merged.isEmpty()):
+            # one file for a plain append; a rewrite keeps the touched
+            # files' parallelism instead of funnelling them through one task
+            _append_file(merged, path, max(1, len(touched)))
         remove_files(spark, touched)
     finally:
         new_df.unpersist()
+        if gone is not None:
+            gone.unpersist()
 
 
 def delete_keys(
@@ -717,22 +735,24 @@ def delete_keys(
     right-to-be-forgotten / takedown primitive every training-data lake
     needs (delete all rows whose key appears in ``keys_df``, e.g. a
     list of doc_ids to purge). Plain parquet has no DELETE, so this is
-    the anti-join rewrite: keep = table ⟕anti keys, landed via the
-    crash-safe rename swap. The deletion list is broadcast (it is
-    always tiny next to the table), so the rewrite costs ONE scan +
-    write, no shuffle of the table. Returns the number of rows
-    deleted.
+    the delete path of :func:`upsert_parquet_files`: only the files
+    holding a listed key are rewritten without those rows, and the
+    rewrite is added before the old files are removed. ``on`` must
+    identify rows (the rewrite deduplicates the touched files on it).
+    One count of the listed rows (the deletion list is broadcast, it is
+    always tiny next to the table) plus the upsert's key scan and
+    rewrite. Returns the number of rows deleted.
 
-    At 100 TB scale, pair with a date/bucket partition layout so the
-    anti-join rewrite touches only partitions that can contain the
-    keys (partition-prune by adding the partition column to ``on``).
+    A crash between the add and the remove loses no row but leaves the
+    touched files' other rows twice, and a rerun of the same delete
+    does not find the new file again (it holds no listed key): remove
+    the duplicates with an upsert of their keys.
     """
     old = read_parquet(spark, path)
-    keep = old.join(F.broadcast(keys_df.select(*on).distinct()), on=on, how="left_anti")
-    n_before = old.count()
-    replace_parquet_atomic(spark, keep, path)
-    n_after = spark.read.parquet(path).count()
-    return n_before - n_after
+    gone = keys_df.select(*on).distinct()
+    n = old.join(F.broadcast(gone), on=on, how="left_semi").count()
+    upsert_parquet_files(spark, old.limit(0), path, keys=on, delete=gone)
+    return n
 
 
 def read_parquet_if_exists(

@@ -30,8 +30,8 @@ TS_NEXT = dt.datetime(2013, 7, 2, 12, 0, 0)
 D_NEXT = dt.date(2013, 7, 2)
 DS_NEXT = "2013-07-03"  # slices created_at::date == 2013-07-02
 
-# the tables a daily run merges into; the other three are rebuilt
-MERGED = ("dim_company", "dim_funds", "fct_investments", "fct_ipos", "fct_acquisition")
+# the tables a daily run merges from a full-load staging snapshot
+SNAPSHOT = ("dim_people", "bridge_company_people")
 FACT_KEYS = {
     "fct_investments": "dd_investment_id",
     "fct_ipos": "dd_ipo_id",
@@ -112,12 +112,123 @@ def next_day_staging(spark, staging_dir, tmp_path_factory):
         "acquisition": [
             (701, "c:3", "c:2", "stock", Decimal("80.00"), "USD", TS_NEXT, None, "deal 2", TS_NEXT, TS_NEXT),
         ],
+        # full-load table: a new relationship for the day's new company
+        "relationships": [
+            ("r2", "p:1", "c:3", "2013-07-02", None, "false", "2", "Advisor",
+             "2013-07-02 12:00:00", "2013-07-02 12:00:00"),
+        ],
     }
     for name, data in rows.items():
         spark.createDataFrame(data, schema=schemas.STAGING[name]).coalesce(1).write.mode(
             "append"
         ).parquet(f"{root}/{name}")
     return root
+
+
+def _rel(rid: str, person: str, company: str, title: str) -> tuple:
+    return (rid, person, company, "2010-01-01", None, "false", "1", title,
+            "2013-07-01 12:00:00", "2013-07-01 12:00:00")
+
+
+BASE_PEOPLE = [
+    ("p1", "p:1", "Ada", "Lovelace", None, "c:1"),
+    ("p2", "p:2", "Bob", "Stone", None, None),
+    ("p3", "p:3", "Cy", "Young", None, None),
+    ("p4", "p:4", "Di", "Prince", None, "c:2"),
+]
+BASE_RELATIONSHIPS = [
+    _rel("r1", "p:1", "c:1", "CEO"),
+    _rel("r2", "p:2", "c:2", "CTO"),
+    _rel("r3", "p:3", "c:1", "CFO"),
+    _rel("r4", "p:2", "c:3", "Advisor"),  # c:3 arrives with the change day
+    _rel("r6", "p:4", "c:2", "COO"),
+]
+
+
+def _write_full_load(spark, root: str, people: list, relationships: list) -> None:
+    for name, data in (("people", people), ("relationships", relationships)):
+        spark.createDataFrame(data, schema=schemas.STAGING[name]).write.mode(
+            "overwrite"
+        ).parquet(f"{root}/{name}")
+
+
+@pytest.fixture(scope="module")
+def change_day(spark, staging_dir, next_day_staging, tmp_path_factory):
+    """``(base, day)`` staging zones for a full-load change day. ``base``
+    is the fixture zone with four people and five relationships (r4
+    points at company c:3, which does not exist yet). ``day`` adds the
+    next day's entities (c:3 among them) and changes the full-load
+    snapshots: p:1's affiliation changes, p:3 drops out (so r3 no
+    longer resolves), r5 is new for the existing company c:1, and r4
+    resolves through the new c:3."""
+    base = str(tmp_path_factory.mktemp("change_base") / "staging")
+    day = str(tmp_path_factory.mktemp("change_day") / "staging")
+    shutil.copytree(staging_dir, base)
+    shutil.copytree(next_day_staging, day)
+    _write_full_load(spark, base, BASE_PEOPLE, BASE_RELATIONSHIPS)
+    people = [
+        ("p1", "p:1", "Ada", "Lovelace", None, "c:3"),
+        BASE_PEOPLE[1],
+        BASE_PEOPLE[3],
+    ]
+    _write_full_load(
+        spark, day, people, BASE_RELATIONSHIPS + [_rel("r5", "p:4", "c:1", "Board")]
+    )
+    return base, day
+
+
+def _layout(spark, path: str, nk: str, groups: list[tuple[str, ...]]) -> dict[str, set]:
+    """Rewrite the table at ``path`` as one data file per group of
+    natural keys; returns data file name -> the natural keys it holds."""
+    df = spark.read.parquet(path)
+    rows, schema = df.collect(), df.schema
+    shutil.rmtree(path)
+    for keys in groups:
+        part = [r for r in rows if r[nk] in keys]
+        spark.createDataFrame(part, schema).coalesce(1).write.mode("append").parquet(path)
+    return _file_keys(spark, path, nk)
+
+
+def _build_laid_out(spark, staging: str, wh: str) -> tuple[dict, dict]:
+    """Full build, then dim_people and the bridge laid out so that each
+    has files a change day touches and files it does not."""
+    P.run_warehouse_pipeline(spark, staging, wh)
+    return (
+        _layout(spark, f"{wh}/dim_people", "nk_people_id", [("p:1", "p:2"), ("p:3",), ("p:4",)]),
+        _layout(spark, f"{wh}/bridge_company_people", "dd_relationship_id", [("r1", "r2"), ("r3", "r6")]),
+    )
+
+
+def _file_keys(spark, path: str, nk: str) -> dict[str, set]:
+    out: dict[str, set] = {}
+    for name in _data_files(path):
+        keys = spark.read.parquet(os.path.join(path, name)).select(nk).collect()
+        out[name] = {r[nk] for r in keys}
+    return out
+
+
+def _keys(spark, path: str, sk: str, nk: str) -> dict:
+    return {r[nk]: r[sk] for r in spark.read.parquet(path).select(sk, nk).collect()}
+
+
+def _natural_snapshot_tables(spark, wh: str) -> dict[str, list[tuple]]:
+    """dim_people and the bridge on natural keys and attributes: the
+    bridge's dim keys are replaced by the natural keys they resolve to
+    (a merge and a full build may number rows differently)."""
+    people = spark.read.parquet(f"{wh}/dim_people")
+    company = spark.read.parquet(f"{wh}/dim_company")
+    bridge = spark.read.parquet(f"{wh}/bridge_company_people")
+    resolved = (
+        bridge.join(people.select("sk_people_id", "nk_people_id"), "sk_people_id")
+        .join(company.select("sk_company_id", "nk_company_id"), "sk_company_id")
+        .drop("sk_company_people_id", "sk_people_id", "sk_company_id")
+    )
+    out = {}
+    for t, df in (("dim_people", people.drop("sk_people_id")), ("bridge", resolved)):
+        cols = sorted(df.columns)
+        out[t] = sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+    assert len(out["bridge"]) == bridge.count()  # every dim key resolved
+    return out
 
 
 def _data_files(path: str) -> dict[str, int]:
@@ -153,6 +264,7 @@ def test_pipeline_end_to_end(spark, staging_dir, tmp_path):
     assert bridge["relationship_start_at"] == 20100101
     assert bridge["relationship_end_at"] is None
     assert bridge["title"] == "CEO"
+    assert bridge["dd_relationship_id"] == "r1"
 
 
 def test_pipeline_rerun_idempotent(spark, staging_dir, tmp_path):
@@ -353,23 +465,25 @@ def test_failure_message_reference_fields():
 
 
 def test_daily_merge_is_delta_proportional(spark, staging_dir, next_day_staging, tmp_path):
-    """An insert-only daily run leaves every existing data file of
-    dim_date and the merged tables as it is and adds at most one file
-    per merged table; replaying the day rewrites only that day's file
-    and changes no row."""
+    """An insert-only daily run leaves every existing data file of every
+    warehouse table as it is and adds at most one file per table — none
+    to dim_date, nor to dim_people, whose snapshot did not change.
+    Replaying the day rewrites only that day's files, writes nothing to
+    dim_date and the snapshot-merged tables, and changes no row."""
     wh = str(tmp_path / "wh_delta")
     P.run_warehouse_pipeline(spark, staging_dir, wh)
-    tables = ("dim_date", *MERGED)
+    tables = P.WAREHOUSE_ORDER
     base = {t: _data_files(f"{wh}/{t}") for t in tables}
 
     P.run_warehouse_pipeline(spark, next_day_staging, wh, ds=DS_NEXT)
     day = {t: _data_files(f"{wh}/{t}") for t in tables}
     for t in tables:
         assert {n: day[t].get(n) for n in base[t]} == base[t], t
-        assert len(set(day[t]) - set(base[t])) <= (0 if t == "dim_date" else 1), t
+        assert len(set(day[t]) - set(base[t])) <= (0 if t in ("dim_date", "dim_people") else 1), t
     assert spark.read.parquet(f"{wh}/dim_company").count() == 5
     assert spark.read.parquet(f"{wh}/fct_investments").count() == 2
-    content = {t: _rows(spark, f"{wh}/{t}") for t in MERGED}
+    assert spark.read.parquet(f"{wh}/bridge_company_people").count() == 2
+    content = {t: _rows(spark, f"{wh}/{t}") for t in tables}
 
     P.run_warehouse_pipeline(spark, next_day_staging, wh, ds=DS_NEXT)
     replay = {t: _data_files(f"{wh}/{t}") for t in tables}
@@ -378,9 +492,84 @@ def test_daily_merge_is_delta_proportional(spark, staging_dir, next_day_staging,
         day_file = set(day[t]) - set(base[t])
         assert set(day[t]) - set(replay[t]) <= day_file, t
         assert len(set(replay[t]) - set(day[t])) <= len(day_file), t
-    assert replay["dim_date"] == base["dim_date"]
-    for t in MERGED:
+    for t in ("dim_date", *SNAPSHOT):
+        assert replay[t] == day[t], t
+    for t in tables:
         assert _rows(spark, f"{wh}/{t}") == content[t], t
+
+
+def test_daily_snapshot_merge_writes_only_changed_keys(spark, change_day, tmp_path):
+    """A full-load change day merges dim_people and the bridge on their
+    natural keys: both equal a full build on natural keys and
+    attributes, unchanged and changed rows keep their surrogate keys,
+    new keys continue the sequence past the deleted one's gap, and only
+    the files holding a changed or deleted key are replaced."""
+    base, day = change_day
+    wh, ref = str(tmp_path / "wh_change"), str(tmp_path / "wh_change_ref")
+    people_files, bridge_files = _build_laid_out(spark, base, wh)
+    people_path, bridge_path = f"{wh}/dim_people", f"{wh}/bridge_company_people"
+    people_sk = _keys(spark, people_path, "sk_people_id", "nk_people_id")
+    bridge_sk = _keys(spark, bridge_path, "sk_company_people_id", "dd_relationship_id")
+    assert sorted(bridge_sk) == ["r1", "r2", "r3", "r6"]
+    before = {t: _data_files(f"{wh}/{t}") for t in SNAPSHOT}
+
+    P.run_warehouse_pipeline(spark, day, wh, ds=DS_NEXT)
+    P.run_warehouse_pipeline(spark, day, ref)
+    assert _natural_snapshot_tables(spark, wh) == _natural_snapshot_tables(spark, ref)
+
+    assert _keys(spark, people_path, "sk_people_id", "nk_people_id") == {
+        k: people_sk[k] for k in ("p:1", "p:2", "p:4")
+    }
+    top = max(bridge_sk.values())
+    assert _keys(spark, bridge_path, "sk_company_people_id", "dd_relationship_id") == {
+        "r1": bridge_sk["r1"], "r2": bridge_sk["r2"], "r6": bridge_sk["r6"],
+        "r4": top + 1, "r5": top + 2,
+    }
+    for t, files, touched in (
+        ("dim_people", people_files, {"p:1", "p:3"}),
+        ("bridge_company_people", bridge_files, {"r3"}),
+    ):
+        after = _data_files(f"{wh}/{t}")
+        kept = {n for n, keys in files.items() if not keys & touched}
+        assert kept and kept < set(files), t
+        assert {n: after.get(n) for n in files if n in after} == {n: before[t][n] for n in kept}, t
+
+
+@pytest.mark.parametrize("table", SNAPSHOT)
+def test_snapshot_commit_crash_between_append_and_delete_recovers(
+    spark, change_day, tmp_path, monkeypatch, table
+):
+    """A snapshot merge that dies after its append committed but before
+    the replaced files are deleted leaves duplicate natural keys, never
+    lost rows; rerunning the date leaves every natural key once and the
+    tables equal a full build."""
+    base, day = change_day
+    wh, ref = str(tmp_path / "wh_crash_snap"), str(tmp_path / "wh_crash_snap_ref")
+    _build_laid_out(spark, base, wh)
+    ledger = ORCH.RunLedger(str(tmp_path / "ledger.jsonl"))
+    remove = SIO.remove_files
+
+    def delete_fails(spark_, files):
+        if any(f"/{table}/" in f for f in files):
+            raise IOError("injected fault in the delete step")
+        remove(spark_, files)
+
+    monkeypatch.setattr(SIO, "remove_files", delete_fails)
+    with pytest.raises(IOError, match="injected"):
+        ORCH.run_backfill(spark, day, wh, DS_NEXT, DS_NEXT, ledger)
+    assert ledger.status("vc_warehouse", table, DS_NEXT) == "failed"
+    nk = P._SNAPSHOT_KEYS[table][1]
+    crashed = spark.read.parquet(f"{wh}/{table}")
+    assert crashed.count() > crashed.select(nk).distinct().count()
+
+    monkeypatch.undo()
+    ORCH.run_backfill(spark, day, wh, DS_NEXT, DS_NEXT, ledger)
+    for t in SNAPSHOT:
+        df = spark.read.parquet(f"{wh}/{t}")
+        key = P._SNAPSHOT_KEYS[t][1]
+        assert df.count() == df.select(key).distinct().count(), t
+    P.run_warehouse_pipeline(spark, day, ref)
+    assert _natural_snapshot_tables(spark, wh) == _natural_snapshot_tables(spark, ref)
 
 
 def test_fact_commit_crash_between_append_and_delete_recovers(

@@ -213,6 +213,7 @@ def test_dim_people_and_bridge(spark):
     assert b["relationship_end_at"] is None  # garbage date → NULL try-cast
     assert b["title"] == "CEO"
     assert b["sk_company_people_id"] == 1
+    assert b["dd_relationship_id"] == "r1"  # the bridge's natural key
 
 
 def test_surrogate_two_phase_dense_at_scale(spark):
