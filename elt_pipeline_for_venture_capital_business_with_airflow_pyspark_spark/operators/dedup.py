@@ -46,7 +46,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from ..sources.io import path_exists, read_meta, read_partitioned, write_meta
+from ..sources.io import (
+    commit, path_exists, read_meta, read_partitioned, replace_table, write_meta,
+)
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -1149,18 +1151,21 @@ def write_index(
     expensive fingerprint pipeline then runs once, and an append
     cannot re-evaluate a plan that reads the table it just extended.
 
-    A crash between the two writes leaves a torn state that
+    Each table changes by one ``sources.io.commit`` (an overwrite
+    replaces every file), so compaction can rewrite them. A crash
+    between the two commits leaves a torn state that
     :func:`verify_index` reports and :func:`repair_index` heals."""
     spark = source.sparkSession
+    entries = f"{path}/{fam.entries}"
     if mode == "append":
         meta = _append_meta(spark, path, fam, params)
+        commit(spark, f"{path}/{fam.source}", source)
+        commit(spark, entries, fam.expand(source, meta), partition_by=[fam.part])
     else:
         meta = {**params, **fam.tag}
         write_meta(spark, path, meta)
-    source.write.mode(mode).parquet(f"{path}/{fam.source}")
-    fam.expand(source, meta).write.mode(mode).partitionBy(fam.part).parquet(
-        f"{path}/{fam.entries}"
-    )
+        replace_table(spark, source, f"{path}/{fam.source}")
+        replace_table(spark, fam.expand(source, meta), entries, [fam.part])
 
 
 def verify_index(spark, path: str, fam: BandedIndex) -> dict:
@@ -1203,10 +1208,10 @@ def verify_index(spark, path: str, fam: BandedIndex) -> dict:
 
 def repair_index(spark, path: str, fam: BandedIndex) -> dict:
     """Heal any torn state: rebuild the entries table from the source
-    table with a plain overwrite (the entries are a pure function of
-    the source, which lives at another path, so no swap is needed —
-    a crash mid-rewrite is just another state :func:`verify_index`
-    reports and a rerun repairs). Idempotent, and preserves
+    table with one commit that replaces every entries file (the
+    entries are a pure function of the source, which lives at another
+    path — a crash mid-rewrite is recovered by the next commit, and a
+    rerun repairs). Idempotent, and preserves
     ``incremental == full``: the repaired index is content-identical
     to one whose appends never tore. Returns the post-repair report."""
     report = verify_index(spark, path, fam)
@@ -1214,9 +1219,7 @@ def repair_index(spark, path: str, fam: BandedIndex) -> dict:
         return report
     meta = read_index_meta(spark, path, fam)
     source = spark.read.parquet(f"{path}/{fam.source}")
-    fam.expand(source, meta).write.mode("overwrite").partitionBy(fam.part).parquet(
-        f"{path}/{fam.entries}"
-    )
+    replace_table(spark, fam.expand(source, meta), f"{path}/{fam.entries}", [fam.part])
     return verify_index(spark, path, fam)
 
 
@@ -1434,7 +1437,7 @@ def compact_lsh_index(
     directory, and probe scan planning degrades with file count, not
     data size. Rewrites ``signatures`` (plain) and ``bands``
     (partition-preserving: still ``band=*`` directories, ~1 file per
-    target size per partition) via atomic rename swaps.
+    target size per partition), each as one table commit.
 
     Content-identical by construction — only file layout changes — so
     ``incremental == full`` and every probe/pair result is bit-for-bit
@@ -1444,8 +1447,8 @@ def compact_lsh_index(
     Returns before/after file counts."""
     from ..sources import io as IO
 
-    before_sig = IO.parquet_file_count(spark, f"{path}/signatures")
-    before_bands = IO.parquet_file_count(spark, f"{path}/bands")
+    before_sig = len(IO.data_files(spark, f"{path}/signatures"))
+    before_bands = len(IO.data_files(spark, f"{path}/bands"))
     IO.compact_parquet(spark, f"{path}/signatures", target_file_mb)
     IO.compact_partitioned_parquet(
         spark, f"{path}/bands", ["band"], target_file_mb
@@ -1453,11 +1456,11 @@ def compact_lsh_index(
     return {
         "signatures_files": (
             before_sig,
-            IO.parquet_file_count(spark, f"{path}/signatures"),
+            len(IO.data_files(spark, f"{path}/signatures")),
         ),
         "bands_files": (
             before_bands,
-            IO.parquet_file_count(spark, f"{path}/bands"),
+            len(IO.data_files(spark, f"{path}/bands")),
         ),
     }
 

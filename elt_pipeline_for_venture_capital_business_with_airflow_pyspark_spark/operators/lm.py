@@ -58,7 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..sources.io import read_meta, write_meta
+from ..sources.io import read_meta, recover, replace_table, write_meta
 
 __all__ = [
     "lm_score_stupid_backoff",
@@ -479,7 +479,6 @@ def lm_index_build(
     train_docs: DataFrame,
     path: str,
     text_col: str = "text",
-    mode: str = "overwrite",
 ) -> None:
     """Persist the LM's trained state: ``<path>/unigrams`` (w, cu),
     ``<path>/bigrams`` (w1, w, cb), ``<path>/trigrams`` (w2, w1, w,
@@ -489,15 +488,16 @@ def lm_index_build(
     a crash mid-build leaves no meta, and every reader
     (:func:`lm_index_read`, :func:`lm_index_append`,
     :func:`lm_index_score`) treats meta-absent as "no index", so a
-    torn build can never be half-read. ``mode`` is plumbing for
-    recovery tools; appends go through :func:`lm_index_append`, which
-    merges counts rather than unioning files."""
+    torn build can never be half-read. Each count table is replaced by
+    one ``sources.io`` commit; appends go through
+    :func:`lm_index_append`, which merges counts rather than unioning
+    files."""
     spark = train_docs.sparkSession
     train_toks = train_docs.select(_tokens(text_col).alias("ts"))
     uni, bi, tri = _ngram_count_tables(train_toks)
-    uni.write.mode(mode).parquet(f"{path}/unigrams")
-    bi.write.mode(mode).parquet(f"{path}/bigrams")
-    tri.write.mode(mode).parquet(f"{path}/trigrams")
+    replace_table(spark, uni, f"{path}/unigrams")
+    replace_table(spark, bi, f"{path}/bigrams")
+    replace_table(spark, tri, f"{path}/trigrams")
     write_meta(
         spark,
         path,
@@ -535,21 +535,21 @@ def lm_index_append(
     """Fold a new shard's counts into the persisted index WITHOUT
     retraining: counts are additive, so the merge is three per-key
     summed unions (shard scan + count-table merge — never a corpus
-    rescan). Each table is swapped via
-    :func:`..sources.io.replace_parquet_atomic` (the plans read the
-    same paths they replace); tables merge in trigram→bigram→unigram
-    order and meta stays untouched, so a crash mid-append leaves a
-    detectable mixed state behind an intact meta — re-running the
-    SAME append is NOT idempotent (counts would double); recovery is
-    a rebuild, the same posture as the LSH index's repair path.
+    rescan). Each table is replaced by one commit
+    (:func:`..sources.io.replace_table`; the plans read the same paths
+    they replace); tables merge in trigram→bigram→unigram order and
+    meta stays untouched, so a crash between two tables' commits
+    leaves a detectable mixed state behind an intact meta — re-running
+    the SAME append is NOT idempotent (counts would double); recovery
+    is a rebuild, the same posture as the LSH index's repair path.
 
     Incremental == full, exactly: merged counts are bit-identical to
     counts trained on corpus ∪ shard (per-key BIGINT sums), which the
     registry pins by hashing the appended index against an oracle
     that retrains from scratch."""
-    from ..sources.io import replace_parquet_atomic
-
     spark = new_docs.sparkSession
+    for table in ("unigrams", "bigrams", "trigrams"):
+        recover(spark, f"{path}/{table}")
     uni0, bi0, tri0 = lm_index_read(spark, path)
     toks = new_docs.select(_tokens(text_col).alias("ts"))
     uni1, bi1, tri1 = _ngram_count_tables(toks)
@@ -558,13 +558,13 @@ def lm_index_append(
         .groupBy("w2", "w1", "w")
         .agg(F.sum("ct").alias("ct"))
     )
-    replace_parquet_atomic(spark, tri_m, f"{path}/trigrams")
+    replace_table(spark, tri_m, f"{path}/trigrams")
     bi_m = (
         bi0.unionByName(bi1).groupBy("w1", "w").agg(F.sum("cb").alias("cb"))
     )
-    replace_parquet_atomic(spark, bi_m, f"{path}/bigrams")
+    replace_table(spark, bi_m, f"{path}/bigrams")
     uni_m = uni0.unionByName(uni1).groupBy("w").agg(F.sum("cu").alias("cu"))
-    replace_parquet_atomic(spark, uni_m, f"{path}/unigrams")
+    replace_table(spark, uni_m, f"{path}/unigrams")
 
 
 def lm_index_score(

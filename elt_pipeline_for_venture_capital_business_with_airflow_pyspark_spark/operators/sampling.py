@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.io import read_meta, write_meta
+from ..sources.io import read_meta, recover, replace_table, write_meta
 
 __all__ = [
     "cap_per_group",
@@ -719,7 +719,6 @@ def dsir_index_build(
     text_col: str = "text",
     n_buckets: int = 1024,
     k: int = 3,
-    mode: str = "overwrite",
 ) -> None:
     """Persist the DSIR distribution state: ``<path>/buckets``
     (b, tp, tq) + ``<path>/meta`` (featurizer contract, written LAST
@@ -737,7 +736,7 @@ def dsir_index_build(
             F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
         )
     )
-    bt.write.mode(mode).parquet(f"{path}/buckets")
+    replace_table(spark, bt, f"{path}/buckets")
     write_meta(
         spark,
         path,
@@ -768,15 +767,15 @@ def dsir_index_append(
     """Fold a new shard's bucket counts into the persisted
     distributions WITHOUT re-featurizing the pool: counts are
     additive, so the merge is one per-bucket summed union (shard scan
-    + a ≤n_buckets-row merge), swapped atomically. Incremental ==
+    + a ≤n_buckets-row merge), replacing the table in one commit
+    (:func:`..sources.io.replace_table`). Incremental ==
     full, exactly — merged counts are bit-identical to building on
     corpus ∪ shard, which the registry pins by hashing the appended
     index against an oracle that refeaturizes from scratch. Re-running
     the SAME append doubles counts (the LM/LSH posture: recovery is a
     rebuild); meta stays untouched."""
-    from ..sources.io import replace_parquet_atomic
-
     spark = df.sparkSession
+    recover(spark, f"{path}/buckets")
     bt0, meta = dsir_index_read(spark, path)
     base = df.filter(F.col(id_col).isNotNull()).withColumn(
         "__t", F.coalesce(target_pred, F.lit(False))
@@ -797,7 +796,7 @@ def dsir_index_append(
         .groupBy("b")
         .agg(F.sum("tp").alias("tp"), F.sum("tq").alias("tq"))
     )
-    replace_parquet_atomic(spark, merged, f"{path}/buckets")
+    replace_table(spark, merged, f"{path}/buckets")
 
 
 def dsir_score_from_index(

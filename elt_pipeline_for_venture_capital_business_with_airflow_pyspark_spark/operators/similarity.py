@@ -35,6 +35,8 @@ import math as _math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import io as IO
+
 
 def _py_norm(cv) -> float:
     """Plan-time euclidean norm of a collected centroid/plane vector,
@@ -685,7 +687,7 @@ def build_ivf_index(
     # reproducible ~4 s fixed overhead in this build (measured on a
     # 1-row frame; plain and repartition(1) writes are ~0.5 s).
     # Single file either way; _read_centroids orders by cell on read.
-    cent_df.repartition(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    IO.replace_table(spark, cent_df.repartition(1), f"{path}/centroids")
     if not cent_rows:
         # empty cells table with the right schema so probes read cleanly
         empty_schema = (
@@ -693,18 +695,14 @@ def build_ivf_index(
             if quantize
             else f"{id_col} long, {vec_col} array<float>, cell int"
         )
-        spark.createDataFrame([], empty_schema).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/cells")
+        IO.replace_table(spark, spark.createDataFrame([], empty_schema), f"{path}/cells")
         return 0
     assigned = _assign_cells(corpus, cent_rows, id_col, vec_col)
     if quantize:
         assigned = quantize_int8(
             assigned, id_col, vec_col, extra_cols=("cell",)
         ).select(id_col, "scale", "q", "cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/cells"
-    )
+    IO.replace_table(spark, assigned, f"{path}/cells", ["cell"])
     return len(cent_rows)
 
 
@@ -768,9 +766,7 @@ def append_ivf_index(
         assigned = quantize_int8(
             assigned, id_col, vec_col, extra_cols=("cell",)
         ).select(id_col, "scale", "q", "cell")
-    assigned.write.mode("append").partitionBy("cell").parquet(
-        f"{path}/cells"
-    )
+    IO.commit(spark, f"{path}/cells", assigned, partition_by=["cell"])
 
 
 def ivf_probe_index(
@@ -974,13 +970,11 @@ def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> dict:
     only risk the frozen-centroid contract. Content-identical, so
     probe results are bit-for-bit unchanged (pinned by tests).
     Returns before/after file counts."""
-    from ..sources import io as IO
-
-    before = IO.parquet_file_count(spark, f"{path}/cells")
+    before = len(IO.data_files(spark, f"{path}/cells"))
     IO.compact_partitioned_parquet(
         spark, f"{path}/cells", ["cell"], target_file_mb
     )
-    return {"cells_files": (before, IO.parquet_file_count(spark, f"{path}/cells"))}
+    return {"cells_files": (before, len(IO.data_files(spark, f"{path}/cells")))}
 
 
 def embedding_near_dup(

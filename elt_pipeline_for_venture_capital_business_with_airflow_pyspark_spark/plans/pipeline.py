@@ -12,7 +12,7 @@ port.
 
 Differences from the reference, by design (SURVEY.md §2.9):
 - reruns converge instead of duplicating (quirk .4): a full build
-  overwrites, and a daily run writes only what the day changed — it
+  replaces each table, and a daily run writes only what the day changed — it
   appends keys the warehouse lacks, upserts facts on their natural id,
   and merges the full-load tables' snapshots on their natural key,
   rewriting only the files the changed keys live in (see
@@ -121,10 +121,7 @@ def merge_snapshot(
       on from the table's largest surrogate key, in natural-key order;
     - a natural key whose attributes changed is upserted with its
       existing surrogate key;
-    - a natural key gone from the snapshot is deleted;
-    - a natural key held more than once (a commit that crashed between
-      its append and its deletes) is upserted once, which rewrites
-      every file holding a copy.
+    - a natural key gone from the snapshot is deleted.
 
     Existing rows never change their surrogate key. A deleted key
     leaves a gap in the sequence, as in a BIGSERIAL sequence, except
@@ -142,7 +139,7 @@ def merge_snapshot(
     attrs = [c for c in rows.columns if c != nk]
     now = rows.select(nk, F.struct(*attrs).alias("__new"))
     was = old.select(nk, sk, F.struct(*attrs).alias("__old"))
-    new, n_old = F.col("__new"), F.col("__n_old")
+    new, prev = F.col("__new"), F.col("__old")
     per_key = (
         now.unionByName(was, allowMissingColumns=True)
         .groupBy(nk)
@@ -150,13 +147,12 @@ def merge_snapshot(
             F.first("__new", ignorenulls=True).alias("__new"),
             F.first("__old", ignorenulls=True).alias("__old"),
             F.max(sk).alias(sk),
-            F.count("__old").alias("__n_old"),
         )
         .select(
             nk, sk, "__new",
             F.when(new.isNull(), "gone")
-            .when(n_old == 0, "fresh")
-            .when((n_old > 1) | ~F.col("__old").eqNullSafe(new), "changed")
+            .when(prev.isNull(), "fresh")
+            .when(~prev.eqNullSafe(new), "changed")
             .alias("__op"),
         )
         .persist()
@@ -192,13 +188,14 @@ def run_warehouse_table(
     from ``warehouse_dir``, so the only cross-table contract is
     ordering: dims strictly before facts (``WAREHOUSE_ORDER``).
 
-    Full mode (``ds=None``): idempotent overwrite.
+    Full mode (``ds=None``): each table is replaced by one commit that
+    removes every file it held (``sources.io.replace_table``).
 
     Incremental mode (``ds`` set): staging is sliced to the day and the
     warehouse MERGES instead of overwriting, writing only what the day
     changed — existing data files are never rewritten wholesale:
 
-    - dim_date: a committed spine (its ``_SUCCESS`` marker, no Spark
+    - dim_date: a committed spine (a published manifest, no Spark
       job) is left alone; a missing or uncommitted one is written;
     - sliced dims (dim_company, dim_funds): natural keys not yet in the
       warehouse get surrogate keys continuing from ``max_key(existing)``
@@ -220,27 +217,26 @@ def run_warehouse_table(
       table writes nothing to it. A bridge persisted without
       ``dd_relationship_id`` is written in full, as a missing one is.
 
-    Every daily commit adds files before it removes any, so a crash
-    never loses a row. A dim that crashes after its append reruns as a
+    Every change is one ``sources.io.commit``, and the task first
+    recovers its table (``sources.io.recover``): a commit that died
+    before its publish is rolled back and one that died after it is
+    finished, so a rerun starts from the last published table and never
+    sees a row twice. A dim that crashes after its commit reruns as a
     no-op: its new keys are in the warehouse, the anti-join drops them,
-    and nothing is appended. A fact upsert that crashes between its
-    append and its deletes leaves duplicate ids; the rerun of the same
-    ``(table, ds)`` finds both copies among the touched files and
-    rewrites them into one; a snapshot merge that crashes there is
-    repaired the same way, because its rerun upserts every natural key
-    the table holds twice.
+    and nothing is appended.
     """
     from ..operators.surrogate import add_surrogate_key, max_key
 
     staging = read_staging(spark, staging_dir, ds, _INPUTS[name])
     path = f"{warehouse_dir}/{name}"
+    SIO.recover(spark, path)
 
     def _persisted(table: str) -> DataFrame:
         return spark.read.parquet(f"{warehouse_dir}/{table}")
 
     if name == "dim_date":
         if ds is None or not SIO.is_committed(spark, path):
-            SIO.write_parquet(DDATE.build_dim_date(spark), path, mode="overwrite")
+            SIO.replace_table(spark, DDATE.build_dim_date(spark), path)
         return
     if name in _SNAPSHOT_KEYS:
         if name == "dim_people":
@@ -253,7 +249,7 @@ def run_warehouse_table(
         sk, nk = _SNAPSHOT_KEYS[name]
         old = SIO.read_parquet_if_exists(spark, path) if ds is not None else None
         if old is None or nk not in old.columns:
-            SIO.write_parquet(add_surrogate_key(rows, sk, [nk]), path, mode="overwrite")
+            SIO.replace_table(spark, add_surrogate_key(rows, sk, [nk]), path)
         else:
             merge_snapshot(spark, rows, old, path, sk, nk)
         return
@@ -269,7 +265,7 @@ def run_warehouse_table(
         sk, nk = _DIM_KEYS[name]
         old = SIO.read_parquet_if_exists(spark, path) if ds is not None else None
         if old is None:
-            SIO.write_parquet(build_dim(staging[src], 0), path, mode="overwrite")
+            SIO.replace_table(spark, build_dim(staging[src], 0), path)
         else:
             # anti-join BEFORE keying: replayed natural keys never burn
             # sequence numbers, and only genuinely-new rows are built.
@@ -300,7 +296,7 @@ def run_warehouse_table(
                 _persisted("dim_date"),
             )
         if ds is None:
-            SIO.write_parquet(df, path, mode="overwrite")
+            SIO.replace_table(spark, df, path)
         else:
             SIO.upsert_parquet_files(spark, df, path, keys=[_FACT_KEYS[name]])
         return
@@ -323,7 +319,7 @@ def run_warehouse_pipeline(
 
     A failed table write leaves earlier tables fully written (same
     at-least-once granularity as the reference's per-table Airflow
-    tasks); reruns converge because full mode overwrites and
+    tasks); reruns converge because full mode replaces each table and
     incremental mode merges idempotently.
 
     ``on_failure``: optional callback invoked with an Airflow-shaped

@@ -476,7 +476,6 @@ def _dsir_inc_bootstrap(spark: SparkSession, sf: str) -> str:
         docs.filter((F.col("doc_id") % 5).isin(1, 2)),
         target,
         path,
-        mode="overwrite",
     )
     SMP.dsir_index_append(
         docs.filter((F.col("doc_id") % 5).isin(0, 3, 4)), target, path
@@ -510,8 +509,8 @@ def _dsir_inc_bootstrap(spark: SparkSession, sf: str) -> str:
 def _sample_dsir_index_append(spark: SparkSession, sf: str) -> DataFrame:
     """APPEND leg of the persisted DSIR lifecycle (operators/sampling.
     dsir_index_append): build on the doc_id%5 ∈ {1,2} slice, fold the
-    {0,3,4} shard's bucket counts in by per-bucket summation (atomic
-    swap) — never a pool re-featurization. The returned frame is the
+    {0,3,4} shard's bucket counts in by per-bucket summation (one
+    table commit) — never a pool re-featurization. The returned frame is the
     merged (b, tp, tq) table read back from parquet; the oracle
     refeaturizes the FULL corpus from scratch, so this entry hash-pins
     incremental == full for DSIR distributions exactly the way

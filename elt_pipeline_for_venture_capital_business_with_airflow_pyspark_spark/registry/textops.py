@@ -1253,7 +1253,6 @@ def _lm_inc_bootstrap(spark: SparkSession, sf: str) -> str:
     LM.lm_index_build(
         docs.filter((F.col("doc_id") % 5).isin(1, 2)),
         path,
-        mode="overwrite",
     )
     LM.lm_index_append(
         docs.filter((F.col("doc_id") % 5).isin(3, 4)), path
@@ -1286,7 +1285,6 @@ def _text_lm_index_build(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("doc_id") % 5 == 1) | (F.col("doc_id") % 5 == 2)
         ),
         path,
-        mode="overwrite",
     )
     return spark.read.parquet(f"{path}/trigrams").select(
         "w2", "w1", "w", "ct"
@@ -1300,7 +1298,7 @@ def _text_lm_index_build(spark: SparkSession, sf: str) -> DataFrame:
 def _text_lm_index_append(spark: SparkSession, sf: str) -> DataFrame:
     """APPEND leg (operators/lm.lm_index_append): a fresh build on
     the doc_id%5 ∈ {1,2} corpus half, then the {3,4} shard's counts
-    are FOLDED IN by per-key summation (atomic table swaps; trigram →
+    are FOLDED IN by per-key summation (one table commit each; trigram →
     bigram → unigram, meta untouched) — never a corpus retrain. The
     returned frame is the merged trigram table read back from
     parquet; the oracle retrains on the UNION (doc_id%5 != 0) from

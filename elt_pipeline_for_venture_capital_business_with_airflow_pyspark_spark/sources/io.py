@@ -7,13 +7,15 @@ an edge connector (S1/S4) gated behind availability of a driver jar.
 
 Scale posture:
 - parquet scans carry explicit schemas (column pruning at the reader);
-- writes partition by a date key so incremental loads are
-  partition-overwrites (fixes reference quirks §2.9.3/.4 — append-only
-  rerun duplicates);
+- a table that changes after its first write changes only through
+  :func:`commit`: one add/remove-file commit published in a per-table
+  ``_log``, recovered by :func:`recover` after a crash (see "Table
+  commits" below). Write-once outputs use :func:`write_parquet`;
 - upsert (S7, reference staging load.py:94-118 via pangres) is the
   dedup-union rewrite: new ∪ (old ⟕anti new) — no MERGE needed on
   plain parquet, single shuffle on the key — applied per file: only
-  the files holding one of the new keys are rewritten.
+  the files holding one of the new keys are rewritten, in one commit
+  (fixes reference quirk §2.9.4 — append-only rerun duplicates).
 """
 
 from __future__ import annotations
@@ -233,8 +235,9 @@ def write_parquet(
     partition_by: list[str] | None = None,
     compression: str = "zstd",
 ) -> None:
-    """Parquet sink (S3, reference extract.py:66-71). Date-partitioned
-    layout + dynamic partition overwrite = idempotent incremental loads."""
+    """Parquet sink (S3, reference extract.py:66-71) for write-once
+    outputs; with ``partition_by``, a dynamic partition overwrite. A
+    table that changes in place goes through :func:`commit` instead."""
     writer = df.write.mode(mode).option("compression", compression)
     if partition_by:
         writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
@@ -297,34 +300,25 @@ def write_meta(spark: SparkSession, path: str, meta: dict) -> None:
 def read_meta(spark: SparkSession, path: str) -> dict | None:
     """The dict :func:`write_meta` stored under ``path``, or None when
     no meta has been written there. Read through the FileSystem
-    stream, like the version pointer: no Spark job per lookup."""
+    stream, like the table log: no Spark job per lookup."""
     _, hpath, fs = hadoop_fs(spark, path)
     meta = hpath(f"{path}/meta/part-00000")
     if not fs.exists(meta):
         return None
-    stream = fs.open(meta)
-    try:
-        return _json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    finally:
-        stream.close()
+    return _read_json(fs, meta)
 
 
 def read_partitioned(
     spark: SparkSession, path: str, partition_col: str, empty_schema
 ) -> DataFrame:
     """Read a parquet table written ``partitionBy(partition_col)``.
-    A partitioned write of zero rows emits no ``partition_col=*``
-    directories, so schema inference has nothing to read: that ONE
-    case (checked explicitly, as is a missing directory) returns an
+    A partitioned write of zero rows emits no data file, so schema
+    inference has nothing to read: that ONE case (checked explicitly
+    with :func:`data_files`, as is a missing directory) returns an
     empty frame of ``empty_schema``. Every other failure — corrupt
     footer, permissions, transient FS error — propagates: a blanket
     fallback would turn an infrastructure fault into "no rows"."""
-    _, hpath, fs = hadoop_fs(spark, path)
-    d = hpath(path)
-    if fs.exists(d) and any(
-        st.isDirectory() and st.getPath().getName().startswith(f"{partition_col}=")
-        for st in fs.listStatus(d)
-    ):
+    if data_files(spark, path):
         return spark.read.parquet(path)
     return spark.createDataFrame([], empty_schema)
 
@@ -338,8 +332,7 @@ def write_small_text(spark: SparkSession, dir_path: str, content: str) -> None:
     costs ~0.02 s (measured; parquet/json/csv sinks are ~0.5 s — the
     pathology is text-sink-specific) — and index metas are written
     once per build across four lifecycle families. Same FileSystem
-    API the version-pointer plumbing uses, so object stores work
-    unchanged. Overwrite semantics: the dir is deleted first, so a
+    API the table log uses, so object stores work unchanged. Overwrite semantics: the dir is deleted first, so a
     crash mid-write leaves either no dir or a hidden temp — both read
     as "no meta", preserving every index's meta-commits-LAST
     durability contract."""
@@ -358,8 +351,7 @@ def write_small_text(spark: SparkSession, dir_path: str, content: str) -> None:
     if not fs.rename(tmp, final):
         # a False return (racing writer, FS quirk) would otherwise
         # leave only the hidden .tmp file and the index would silently
-        # read as "no meta" — same convention as the version-pointer
-        # rename checks below
+        # read as "no meta"
         raise IOError(f"rename {tmp} -> {final} failed")
 
 
@@ -403,148 +395,6 @@ def write_jdbc(
     for k, v in (properties or {}).items():
         writer = writer.option(k, v)
     writer.save()
-
-
-def replace_parquet_atomic(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    compression: str = "zstd",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Overwrite ``path`` with ``df`` even when ``df``'s plan reads
-    from ``path`` itself (self-referencing rewrites: compaction,
-    upsert-merge). A plain ``mode("overwrite")`` deletes the target
-    before writing, so a mid-write failure destroys the original data;
-    here the new contents are fully written to ``{path}__swap_new``
-    first, then swapped in with two filesystem renames. At no point is
-    the data unrecoverable: a crash between the renames leaves the
-    original at ``{path}__swap_old`` and/or the new copy at
-    ``{path}__swap_new`` (recovery = rename whichever exists back).
-    Single writer assumed, same as the reference's loads.
-
-    FILESYSTEM CAVEAT — HDFS/local only. The safety argument rests on
-    ``rename`` being an O(1) atomic metadata operation, which is true
-    on HDFS and POSIX filesystems but FALSE on object stores: s3a
-    emulates a directory rename as a full copy + delete, so the swap
-    is neither atomic nor cheap, and a crash mid-"rename" leaves a
-    partial copy. On S3/MinIO (the reference's lake —
-    ``dags/helper/minio.py:20-45``) use :func:`write_versioned`
-    instead: it never renames data directories — snapshots land in
-    immutable ``_versions/v{n}`` dirs and visibility is published by
-    the tiny ``_LATEST`` pointer file, the manifest-pointer pattern
-    object stores need."""
-    _, hpath, fs = hadoop_fs(spark, path)
-    jpath = hpath(path)
-    staged, backup = hpath(path + "__swap_new"), hpath(path + "__swap_old")
-
-    if fs.exists(staged):
-        fs.delete(staged, True)
-    writer = df.write.mode("overwrite").option("compression", compression)
-    if partition_by:
-        # preserve a hive-partitioned layout (e.g. an LSH band table's
-        # band=* directories) through the rewrite
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path + "__swap_new")
-    if fs.exists(backup):
-        fs.delete(backup, True)
-    if fs.exists(jpath) and not fs.rename(jpath, backup):
-        raise IOError(f"could not move {path} aside for swap")
-    if not fs.rename(staged, jpath):
-        raise IOError(
-            f"swap failed: original preserved at {path}__swap_old, "
-            f"new data at {path}__swap_new"
-        )
-    fs.delete(backup, True)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 256,
-) -> int:
-    """Small-file compaction: rewrite a parquet dir into
-    ceil(bytes/target) files. Incremental daily writes accumulate
-    file counts that degrade scan planning (listing + row-group
-    overhead per file) — at 100 TB, compaction keeps file count
-    proportional to data, not to write cadence. Returns the new file
-    count. The rewrite lands via :func:`replace_parquet_atomic`
-    (rename swap), so the data is written once and a mid-compaction
-    crash never destroys the original."""
-    _, hpath, fs = hadoop_fs(spark, path)
-    jpath = hpath(path)
-    it = fs.listFiles(jpath, True)
-    byte_total = 0
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            byte_total += st.getLen()
-    n_files = int(max(1, -(-byte_total // (target_file_mb * 1024 * 1024))))
-
-    replace_parquet_atomic(spark, spark.read.parquet(path).repartition(n_files), path)
-    return n_files
-
-
-def parquet_file_count(spark: SparkSession, path: str) -> int:
-    """Recursive data-file count under a table dir (parquet files
-    only — markers/checksums skipped). Pure FS metadata, no job."""
-    _, hpath, fs = hadoop_fs(spark, path)
-    jpath = hpath(path)
-    n = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            n += 1
-    return n
-
-
-def compact_partitioned_parquet(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    target_file_mb: int = 256,
-) -> int:
-    """:func:`compact_parquet` for hive-partitioned dirs: rewrites the
-    table while PRESERVING its ``col=value`` directory layout (so
-    partition-pruned probes keep pruning), collapsing each partition's
-    accumulated small files into ~⌈partition_bytes/target⌉ files.
-
-    Mechanics: rows are shuffled onto the partition columns so all of
-    one partition value lands in one task (one output file per
-    directory); when the average partition exceeds the target size a
-    deterministic row-hash salt widens the shuffle to ``m`` tasks per
-    value (``m`` output files per directory). Content-identical by
-    construction; lands via the same rename swap as
-    :func:`replace_parquet_atomic` (see its object-store caveat).
-    Returns the new file count."""
-    _, hpath, fs = hadoop_fs(spark, path)
-    jpath = hpath(path)
-    byte_total = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            byte_total += st.getLen()
-
-    df = spark.read.parquet(path)
-    n_values = df.select(*partition_cols).distinct().count()
-    if n_values == 0:
-        return 0
-    target = target_file_mb * 1024 * 1024
-    m = int(max(1, -(-byte_total // (target * n_values))))
-    if m == 1:
-        out = df.repartition(*partition_cols)
-    else:
-        data_cols = [c for c in df.columns if c not in partition_cols]
-        out = (
-            df.withColumn("__salt", F.pmod(F.xxhash64(*data_cols), F.lit(m)))
-            .repartition(*(partition_cols + ["__salt"]))
-            .drop("__salt")
-        )
-    replace_parquet_atomic(spark, out, path, partition_by=partition_cols)
-    return parquet_file_count(spark, path)
 
 
 def write_bucketed(
@@ -604,44 +454,245 @@ def merge_upsert(
     return new_df.unionByName(keep_old)
 
 
-def is_committed(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` holds a committed write: the ``_SUCCESS``
-    marker the output committer creates last. Pure FS metadata (no
-    job); a missing table and a write that died before its commit both
-    read False."""
-    return path_exists(spark, f"{path}/_SUCCESS")
+# ---------------------------------------------------------------------------
+# Table commits: one add/remove-file protocol for every table that changes
+# after its first write
+# ---------------------------------------------------------------------------
+#
+# A table is a directory of parquet files plus ``_log/``, a log of
+# commits in the style of the Delta Lake and Apache Iceberg table logs
+# (Armbrust et al., VLDB 2020). ``_log/<n>.json`` lists, relative to the
+# table directory, every data file live after commit ``n``. A commit
+# creates ``_log/<n>.pending``, appends its new files with Spark, then
+# publishes ``_log/<n>.json`` and only then deletes the files it
+# replaced; :func:`recover` finishes or rolls back a commit that died
+# part-way. Outside that crash window the directory holds exactly the
+# live files, so readers keep reading the directory (Spark, pyarrow)
+# and never consult the log. Spark and pyarrow skip ``_``-prefixed
+# paths, so ``_log`` is invisible to them.
+#
+# Single writer per table, as the reference's loads. Both log files are
+# created without overwrite, which is atomic on HDFS and local
+# filesystems; on S3 it is not, so two writers racing on one table there
+# can both publish the same ``<n>``. Run one writer per table (the
+# pipeline's per-table task unit already does).
+
+_LOG = "_log"
 
 
-def _append_file(df: DataFrame, path: str, n_files: int = 1) -> None:
-    # at most n_files new files, written by as many parallel tasks
-    df.coalesce(n_files).write.mode("append").option("compression", "zstd").parquet(path)
-
-
-def append_parquet(df: DataFrame, path: str) -> None:
-    """Add ``df`` to the parquet table at ``path`` as ONE new data file;
-    every existing file keeps its name and bytes. An empty ``df``
-    writes nothing (Spark would commit an empty file), so replaying an
-    append whose rows are already in the table leaves it as it is.
-
-    ``df`` is persisted for the emptiness probe and the write, so its
-    plan runs once even when it reads ``path`` itself (the new file
-    lands under a fresh name, never over a file being read)."""
-    df = df.persist()
+def _read_json(fs, p):
+    stream = fs.open(p)
     try:
-        if not df.isEmpty():
-            _append_file(df, path)
+        return _json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
     finally:
-        df.unpersist()
+        stream.close()
+
+
+def _create_json(fs, p, obj) -> None:
+    out = fs.create(p, False)  # create-without-overwrite
+    try:
+        out.write(bytearray(_json.dumps(obj).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _log_versions(fs, log) -> tuple[list[int], list[int]]:
+    """Versions of the published manifests and of the pending markers
+    under the table log ``log`` (a Hadoop path), ascending."""
+    published: list[int] = []
+    pending: list[int] = []
+    if fs.exists(log):
+        for st in fs.listStatus(log):
+            stem, _, ext = st.getPath().getName().partition(".")
+            if stem.isdigit() and ext in ("json", "pending"):
+                (published if ext == "json" else pending).append(int(stem))
+    return sorted(published), sorted(pending)
+
+
+def _root(spark: SparkSession, path: str) -> str:
+    """The table directory as a qualified path string ending in ``/``:
+    the prefix that makes a data file's path relative to its table."""
+    _, hpath, fs = hadoop_fs(spark, path)
+    return fs.makeQualified(hpath(path)).toString().rstrip("/") + "/"
+
+
+def data_files(spark: SparkSession, path: str) -> dict[str, int]:
+    """The data files of the table at ``path``: relative path -> bytes,
+    sorted. A data file is a ``*.parquet`` file anywhere under
+    ``path`` whose relative path has no hidden (``_``/``.``) component
+    — the files Spark's reader scans; ``_SUCCESS``, checksums,
+    ``_log`` and a failed job's ``_temporary`` output are not data. A
+    missing path has none. Pure FileSystem metadata, no Spark job."""
+    _, hpath, fs = hadoop_fs(spark, path)
+    root = hpath(path)
+    if not fs.exists(root):
+        return {}
+    prefix = _root(spark, path)
+    out = {}
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        rel = st.getPath().toString()[len(prefix):]
+        if rel.endswith(".parquet") and not any(
+            part.startswith(("_", ".")) for part in rel.split("/")
+        ):
+            out[rel] = st.getLen()
+    return dict(sorted(out.items()))
 
 
 def remove_files(spark: SparkSession, files: list[str]) -> None:
-    """Delete data files given as ``_metadata.file_path`` URIs."""
-    jvm = spark._jvm
+    """Delete data files given as Hadoop path strings."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     conf = spark._jsc.hadoopConfiguration()
     for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f))
+        p = hpath(f)
         if not p.getFileSystem(conf).delete(p, False):
             raise IOError(f"could not delete {f}")
+
+
+def _publish(fs, manifest, files: list[str]) -> None:
+    """Publish a commit: create its manifest listing the live files."""
+    _create_json(fs, manifest, {"files": files})
+
+
+def _absolute(spark: SparkSession, path: str, files) -> list[str]:
+    root = _root(spark, path)
+    return [root + f for f in files]
+
+
+def recover(spark: SparkSession, path: str) -> None:
+    """Return the table at ``path`` to its last published commit. Uses
+    FileSystem listing and one small read, never a Spark job.
+
+    - A table with no published manifest and no pending marker has no
+      log yet and is left alone.
+    - A pending marker means a commit died part-way: every data file
+      the latest manifest does not list is deleted, then the marker.
+      Before the publish those are the commit's new files (rolled
+      back); after it they are the files it replaced (finished). When
+      the first commit of a table died before publishing, the marker's
+      own listing — the files live when it started — stands in for the
+      manifest.
+    - With no marker, a data file the latest manifest does not list
+      came from a writer that bypassed the log: ``IOError`` names it
+      and nothing is deleted — recovery never removes data silently.
+    """
+    _, hpath, fs = hadoop_fs(spark, path)
+    log = hpath(f"{path}/{_LOG}")
+    published, pending = _log_versions(fs, log)
+    if not published and not pending:
+        return
+    if published:
+        live = _read_json(fs, hpath(log, f"{published[-1]}.json"))["files"]
+    else:
+        live = _read_json(fs, hpath(log, f"{pending[-1]}.pending"))["files"]
+    live = set(live)
+    unlisted = [f for f in data_files(spark, path) if f not in live]
+    if not pending:
+        if unlisted:
+            raise IOError(
+                f"{path}: data file {unlisted[0]} is not in the table log "
+                f"({len(unlisted)} unlisted); it was written outside "
+                "sources.io.commit. Nothing was deleted: commit it or "
+                "remove it, then rerun"
+            )
+        return
+    remove_files(spark, _absolute(spark, path, unlisted))
+    for v in pending:
+        fs.delete(hpath(log, f"{v}.pending"), False)
+
+
+def commit(
+    spark: SparkSession,
+    path: str,
+    add: DataFrame | None = None,
+    remove=(),
+    partition_by: list[str] | None = None,
+) -> None:
+    """The one way a table changes after its first write: add the rows
+    of ``add`` as new data files and remove the data files ``remove``
+    (paths relative to ``path``, as :func:`data_files` lists them), as
+    one commit. Single writer per table.
+
+    1. :func:`recover` the table;
+    2. create ``_log/<n>.pending`` holding the live files;
+    3. write ``add`` with a Spark append (``partition_by`` keeps a
+       hive-partitioned layout); the files added are the difference
+       between the listings before and after;
+    4. publish ``_log/<n>.json`` listing every live file;
+    5. delete the removed files, the marker and older manifests.
+
+    A crash before step 4 leaves the old table plus files that
+    recovery deletes; a crash after it leaves the new table plus files
+    that recovery deletes. ``add`` may read the table itself (a
+    compaction, a merge): its files land under fresh names, and the
+    files it reads are removed only after the publish. A commit that
+    adds no file and removes none publishes nothing."""
+    recover(spark, path)
+    _, hpath, fs = hadoop_fs(spark, path)
+    log = hpath(f"{path}/{_LOG}")
+    before = data_files(spark, path)
+    remove = set(remove)
+    missing = sorted(remove - before.keys())
+    if missing:
+        raise ValueError(f"{path}: cannot remove files that are not live: {missing}")
+    if add is None and not remove:
+        return
+    published, _ = _log_versions(fs, log)
+    n = (published[-1] if published else 0) + 1
+    marker = hpath(log, f"{n}.pending")
+    _create_json(fs, marker, {"files": list(before)})
+    if add is not None:
+        writer = add.write.mode("append").option("compression", "zstd")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+    live = [f for f in data_files(spark, path) if f not in remove]
+    if remove or set(live) - before.keys():
+        _publish(fs, hpath(log, f"{n}.json"), live)
+        remove_files(spark, _absolute(spark, path, sorted(remove)))
+    fs.delete(marker, False)
+    for v in published:
+        fs.delete(hpath(log, f"{v}.json"), False)
+
+
+def replace_table(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+) -> None:
+    """Commit ``df`` as the whole content of the table at ``path``: a
+    :func:`commit` that removes every live file. ``df`` may read the
+    table itself."""
+    recover(spark, path)
+    commit(spark, path, df, data_files(spark, path), partition_by)
+
+
+def is_committed(spark: SparkSession, path: str) -> bool:
+    """True when a commit to ``path`` has published a manifest. Pure FS
+    metadata (no job); a missing table and a commit that died before
+    its publish both read False (Spark's ``_SUCCESS`` marker proves
+    nothing here: an append leaves it before the publish)."""
+    _, hpath, fs = hadoop_fs(spark, path)
+    return bool(_log_versions(fs, hpath(f"{path}/{_LOG}"))[0])
+
+
+def append_parquet(df: DataFrame, path: str) -> None:
+    """Add ``df`` to the parquet table at ``path`` as ONE new data file
+    (a :func:`commit` that removes nothing); every existing file keeps
+    its name and bytes. An empty ``df`` writes nothing (Spark would
+    commit an empty file), so replaying an append whose rows are
+    already in the table leaves it as it is.
+
+    ``df`` is persisted for the emptiness probe and the write, so its
+    plan runs once even when it reads ``path`` itself."""
+    df = df.persist()
+    try:
+        if not df.isEmpty():
+            commit(df.sparkSession, path, df.coalesce(1))
+    finally:
+        df.unpersist()
 
 
 def upsert_parquet_files(
@@ -660,34 +711,25 @@ def upsert_parquet_files(
     One scan of the table's key columns, semi-joined with the keys of
     ``new_df`` and ``delete`` (AQE picks the join strategy from the
     persisted delta's size), lists the touched files
-    (``_metadata.file_path``). The commit then appends
+    (``_metadata.file_path``). One :func:`commit` then adds
     :func:`merge_upsert` of ``new_df`` over the touched files' rows,
     less the deleted keys, as at most as many new files as it touched
     (one when it touched none; none when nothing is left to write), and
-    only then deletes the touched files. With no touched file, the
-    common case for a day of new facts, the commit is a plain append;
-    an empty ``new_df`` with no ``delete`` skips the scan and writes
-    nothing. Footer min/max cannot stand in for the key scan: keys that
-    arrive spread over the key range overlap every file's range.
-
-    The add-then-remove order never loses a row. A crash between the
-    append and the last delete leaves both copies of the touched
-    files' rows (duplicate keys, no lost rows); rerunning the same
-    upsert finds both copies of every upserted key among its touched
-    files and rewrites them into one, because the touched rows are
-    deduplicated on the key before the merge. A file touched only by
-    deleted keys is not found again through the new file, so a caller
-    that deletes repairs duplicates by upserting their keys (see
-    ``plans.pipeline``). ``keys`` must identify rows. Single writer
-    assumed, same as the reference.
+    removes the touched files. With no touched file, the common case
+    for a day of new facts, the commit is a plain append; an empty
+    ``new_df`` with no ``delete`` skips the scan and writes nothing.
+    Footer min/max cannot stand in for the key scan: keys that arrive
+    spread over the key range overlap every file's range. ``keys``
+    must identify rows.
 
     Only a missing path is an empty table (the upsert then writes the
     table); any other read failure (corrupt footer, permissions,
     transient FS error) propagates."""
+    recover(spark, path)
     key_schema = T.StructType([new_df.schema[k] for k in keys])
     table = read_parquet_if_exists(spark, path, schema=key_schema)
     if table is None:
-        write_parquet(merge_upsert(new_df, None, keys, order_by), path)
+        commit(spark, path, merge_upsert(new_df, None, keys, order_by))
         return
     new_df = new_df.persist()  # read by the probe, the key scan and the merge
     gone = None if delete is None else delete.select(*keys).distinct().persist()
@@ -705,20 +747,23 @@ def upsert_parquet_files(
             .distinct()
             .collect()
         )
-        touched = sorted(r["__file"] for r in hits)
+        jvm, hpath, _ = hadoop_fs(spark, path)
+        root = _root(spark, path)
+        touched = sorted(
+            hpath(jvm.java.net.URI(r["__file"])).toString()[len(root):] for r in hits
+        )
         old = None
         if touched:
-            jvm = spark._jvm
-            files = [jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(f)).toString() for f in touched]
-            old = spark.read.schema(new_df.schema).parquet(*files).dropDuplicates(keys)
+            old = spark.read.schema(new_df.schema).parquet(*(root + f for f in touched))
             if gone is not None:
                 old = old.join(gone, on=keys, how="left_anti")
         merged = merge_upsert(new_df, old, keys, order_by)
+        add = None
         if not no_new or (touched and not merged.isEmpty()):
             # one file for a plain append; a rewrite keeps the touched
             # files' parallelism instead of funnelling them through one task
-            _append_file(merged, path, max(1, len(touched)))
-        remove_files(spark, touched)
+            add = merged.coalesce(max(1, len(touched)))
+        commit(spark, path, add, touched)
     finally:
         new_df.unpersist()
         if gone is not None:
@@ -736,18 +781,11 @@ def delete_keys(
     needs (delete all rows whose key appears in ``keys_df``, e.g. a
     list of doc_ids to purge). Plain parquet has no DELETE, so this is
     the delete path of :func:`upsert_parquet_files`: only the files
-    holding a listed key are rewritten without those rows, and the
-    rewrite is added before the old files are removed. ``on`` must
-    identify rows (the rewrite deduplicates the touched files on it).
-    One count of the listed rows (the deletion list is broadcast, it is
-    always tiny next to the table) plus the upsert's key scan and
-    rewrite. Returns the number of rows deleted.
-
-    A crash between the add and the remove loses no row but leaves the
-    touched files' other rows twice, and a rerun of the same delete
-    does not find the new file again (it holds no listed key): remove
-    the duplicates with an upsert of their keys.
-    """
+    holding a listed key are rewritten without those rows, in one
+    :func:`commit`. One count of the listed rows (the deletion list is
+    broadcast, it is always tiny next to the table) plus the upsert's
+    key scan and rewrite. Returns the number of rows deleted."""
+    recover(spark, path)
     old = read_parquet(spark, path)
     gone = keys_df.select(*on).distinct()
     n = old.join(F.broadcast(gone), on=on, how="left_semi").count()
@@ -755,15 +793,69 @@ def delete_keys(
     return n
 
 
+def compact_parquet(
+    spark: SparkSession,
+    path: str,
+    target_file_mb: int = 256,
+) -> int:
+    """Small-file compaction: rewrite a parquet dir into
+    ceil(bytes/target) files. Incremental daily writes accumulate
+    file counts that degrade scan planning (listing + row-group
+    overhead per file) — at 100 TB, compaction keeps file count
+    proportional to data, not to write cadence. Returns the new file
+    count. The rewrite is one :func:`commit`, so the data is written
+    once and a mid-compaction crash never destroys the original."""
+    recover(spark, path)
+    files = data_files(spark, path)
+    n_files = int(max(1, -(-sum(files.values()) // (target_file_mb * 1024 * 1024))))
+    commit(spark, path, spark.read.parquet(path).repartition(n_files), files)
+    return n_files
+
+
+def compact_partitioned_parquet(
+    spark: SparkSession,
+    path: str,
+    partition_cols: list[str],
+    target_file_mb: int = 256,
+) -> int:
+    """:func:`compact_parquet` for hive-partitioned dirs: rewrites the
+    table while PRESERVING its ``col=value`` directory layout (so
+    partition-pruned probes keep pruning), collapsing each partition's
+    accumulated small files into ~⌈partition_bytes/target⌉ files.
+
+    Mechanics: rows are shuffled onto the partition columns so all of
+    one partition value lands in one task (one output file per
+    directory); when the average partition exceeds the target size a
+    deterministic row-hash salt widens the shuffle to ``m`` tasks per
+    value (``m`` output files per directory). Content-identical by
+    construction; lands as one :func:`commit`. Returns the new file
+    count."""
+    recover(spark, path)
+    files = data_files(spark, path)
+    df = spark.read.parquet(path)
+    n_values = df.select(*partition_cols).distinct().count()
+    if n_values == 0:
+        return 0
+    target = target_file_mb * 1024 * 1024
+    m = int(max(1, -(-sum(files.values()) // (target * n_values))))
+    if m == 1:
+        out = df.repartition(*partition_cols)
+    else:
+        data_cols = [c for c in df.columns if c not in partition_cols]
+        out = (
+            df.withColumn("__salt", F.pmod(F.xxhash64(*data_cols), F.lit(m)))
+            .repartition(*(partition_cols + ["__salt"]))
+            .drop("__salt")
+        )
+    commit(spark, path, out, files, partition_by=partition_cols)
+    return len(data_files(spark, path))
+
+
 def read_parquet_if_exists(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame | None:
     """Read a parquet table, returning None ONLY when the path does not
-    exist. Every other failure raises — including a missing path with
-    a :func:`replace_parquet_atomic` leftover (``__swap_old`` /
-    ``__swap_new``) beside it: that is a swap interrupted between its
-    two renames, and reading it as "no table yet" would rebuild the
-    table from scratch and let the next swap delete the only copy."""
+    exist. Every other failure raises."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -779,37 +871,21 @@ def read_parquet_if_exists(
                 except Exception:
                     pass
         if cond == "PATH_NOT_FOUND" or "[PATH_NOT_FOUND]" in str(e):
-            for leftover in (path + "__swap_old", path + "__swap_new"):
-                if path_exists(spark, leftover):
-                    raise IOError(
-                        f"{path} is missing but swap leftover {leftover} "
-                        "exists (interrupted replace_parquet_atomic); "
-                        f"restore it to {path} before rerunning"
-                    ) from e
             return None
         raise
 
 
 def table_file_stats(spark: SparkSession, path: str) -> dict:
     """Small-file audit for one table dir: data-file count, total
-    bytes, min/max/mean file size. Pure FileSystem metadata (no job).
-    The operational complement to :func:`compact_parquet` — at scale,
-    a table whose mean file size collapses (incremental drip-writes)
-    pays per-file listing, footer and row-group overhead on every
-    scan; alert when ``mean_bytes`` falls well below the writer's
-    target (e.g. <25% of 256 MB) and compact.
+    bytes, min/max/mean file size over its :func:`data_files`. Pure
+    FileSystem metadata (no job). The operational complement to
+    :func:`compact_parquet` — at scale, a table whose mean file size
+    collapses (incremental drip-writes) pays per-file listing, footer
+    and row-group overhead on every scan; alert when ``mean_bytes``
+    falls well below the writer's target (e.g. <25% of 256 MB) and
+    compact.
     """
-    _, hpath, fs = hadoop_fs(spark, path)
-    jpath = hpath(path)
-    sizes = []
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        # data files only: skip _SUCCESS, checksums, hidden files
-        if name.startswith(("_", ".")):
-            continue
-        sizes.append(st.getLen())
+    sizes = list(data_files(spark, path).values())
     if not sizes:
         return {"n_files": 0, "total_bytes": 0, "min_bytes": 0,
                 "max_bytes": 0, "mean_bytes": 0}
@@ -820,281 +896,3 @@ def table_file_stats(spark: SparkSession, path: str) -> dict:
         "max_bytes": max(sizes),
         "mean_bytes": sum(sizes) // len(sizes),
     }
-
-
-# ---------------------------------------------------------------------------
-# Versioned tables: snapshot isolation + time travel on plain parquet
-# ---------------------------------------------------------------------------
-
-_VERSIONS_DIR = "_versions"
-_LATEST_FILE = "_LATEST"
-
-
-def _vname(version: int) -> str:
-    return f"v{version:05d}"
-
-
-def list_versions(spark: SparkSession, path: str) -> list[int]:
-    """All committed snapshot versions of a versioned table, ascending."""
-    jvm, hpath, fs = hadoop_fs(spark, path)
-    vdir = hpath(f"{path}/{_VERSIONS_DIR}")
-    if not fs.exists(vdir):
-        return []
-    out = []
-    for st in fs.listStatus(vdir):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            # a snapshot is committed iff its _SUCCESS marker exists —
-            # a crashed write leaves no marker and is invisible
-            if fs.exists(hpath(f"{path}/{_VERSIONS_DIR}/{name}/_SUCCESS")):
-                out.append(int(name[1:]))
-    return sorted(out)
-
-
-def latest_version(spark: SparkSession, path: str) -> int | None:
-    """Resolve the current version: the ``_LATEST`` pointer if present
-    and valid, else the highest committed snapshot (pointer-loss
-    recovery — a crash between pointer delete and rename cannot lose
-    the table)."""
-    jvm, hpath, fs = hadoop_fs(spark, path)
-    ptr = hpath(f"{path}/{_LATEST_FILE}")
-    versions = list_versions(spark, path)
-    if not versions:
-        return None
-    if fs.exists(ptr):
-        stream = fs.open(ptr)
-        try:
-            raw = bytes(stream.readAllBytes()).decode("ascii").strip()
-        finally:
-            stream.close()
-        if raw.startswith("v") and raw[1:].isdigit() and int(raw[1:]) in versions:
-            return int(raw[1:])
-    return versions[-1]
-
-
-def _point_latest(spark: SparkSession, path: str, version: int) -> None:
-    """Swing the ``_LATEST`` pointer via temp-file + atomic
-    rename-with-overwrite (FileContext ``Options.Rename.OVERWRITE``).
-    The old pointer is never deleted first: a crash at any instant
-    leaves EITHER the previous pointer OR the new one, so an
-    intentional rollback can't be silently undone by the
-    highest-committed-version fallback (which only engages when no
-    pointer exists at all). Falls back to delete-then-rename only on
-    filesystems whose FileContext doesn't support overwriting rename."""
-    jvm, hpath, fs = hadoop_fs(spark, path)
-    tmp = hpath(f"{path}/{_LATEST_FILE}__tmp")
-    ptr = hpath(f"{path}/{_LATEST_FILE}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(_vname(version).encode("ascii")))
-    finally:
-        out.close()
-    try:
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            fs.getUri(), spark._jsc.hadoopConfiguration()
-        )
-        gw = spark.sparkContext._gateway
-        opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        fc.rename(tmp, ptr, opts)
-        return
-    except Exception:
-        pass
-    if fs.exists(ptr):
-        fs.delete(ptr, False)
-    if not fs.rename(tmp, ptr):
-        raise IOError(f"could not publish {_LATEST_FILE} for {path}")
-
-
-class VersionConflictError(RuntimeError):
-    """Optimistic-concurrency failure: the table's latest version
-    moved between the caller's read and its commit — the write was
-    ABORTED (snapshot dir + reservation removed), the table is
-    untouched. Re-read, re-derive, retry."""
-
-
-_EXPECTED_UNSET = object()
-
-
-def write_versioned(
-    df: DataFrame,
-    path: str,
-    *,
-    keep: int = 3,
-    compression: str = "zstd",
-    expected_parent: "int | None | object" = _EXPECTED_UNSET,
-) -> int:
-    """Commit ``df`` as a NEW immutable snapshot of the table at
-    ``path`` and return its version number — snapshot isolation on
-    plain parquet (the capability the reference's truncate-and-reload
-    staging loads lack, reference: dags/vcapital_staging/tasks/
-    components/load.py:38-56: a reader mid-scan of v_n is untouched
-    by the v_n+1 commit,
-    and yesterday's snapshot stays queryable for debugging/audit).
-
-    Commit protocol: data lands in ``_versions/v{n}`` (invisible until
-    its ``_SUCCESS`` marker exists — parquet's own atomicity), then the
-    ``_LATEST`` pointer swings via temp-file + rename. A crash at any
-    step leaves either the old pointer (new snapshot simply
-    uncommitted) or no pointer (readers fall back to the highest
-    committed snapshot). Old snapshots beyond ``keep`` are pruned,
-    never including the one just written or the pointer target.
-
-    Object-store posture: this is the commit protocol to use on
-    s3a/MinIO (unlike :func:`replace_parquet_atomic`, which requires
-    atomic directory rename). Data directories are IMMUTABLE once
-    committed — no data dir is ever renamed or rewritten; the only
-    rename in the whole protocol is the byte-sized ``_LATEST`` pointer
-    file, and even a lost/partial pointer degrades safely to the
-    highest-committed-snapshot fallback. (Pointer-only commits are
-    pinned by ``test_versioned_commit_never_touches_prior_snapshots``.)
-
-    Concurrent writers: each commit first RESERVES its version number
-    by atomically creating a ``.v{n}.reserved`` marker
-    (create-without-overwrite — atomic on HDFS and local FS); a
-    collision means another writer claimed n, so this writer takes
-    n+1. Two simultaneous commits thus land as two distinct snapshots
-    (last pointer-swing wins the "latest" title, neither commit is
-    lost). Note object stores without atomic create (e.g. S3 without
-    a consistency layer) degrade to last-writer-wins on the marker —
-    run single-writer or front with a lock service there.
-
-    ``expected_parent`` adds optimistic-concurrency DETECTION for
-    read-modify-write commits (the lost-update case the default
-    last-wins pointer cannot see): pass the version your transaction
-    READ (``latest_version(...)``, or None for "I expect to create
-    the table"). If the table's latest has moved by commit time —
-    checked cheaply before the data write and again immediately
-    before the pointer swing — the commit ABORTS with
-    :class:`VersionConflictError`: the just-written snapshot dir and
-    its reservation are removed, the pointer never swings, and the
-    winner's commit is untouched; re-read, re-derive, retry. The
-    check-then-swing pair is not itself atomic (a filesystem has no
-    pointer CAS — the same object-store caveat as the reservation
-    marker), so two conflicting writers that pass the final check in
-    the same instant can still both swing; this detects every
-    interleaving where the commits are not simultaneous, which is the
-    lost-update race a daily pipeline actually hits.
-    """
-    spark = df.sparkSession
-    jvm, hpath, fs = hadoop_fs(spark, path)
-    if expected_parent is not _EXPECTED_UNSET:
-        current = latest_version(spark, path)
-        if current != expected_parent:
-            raise VersionConflictError(
-                f"{path}: expected parent {expected_parent}, found "
-                f"{current} before write — another commit landed since "
-                "your read"
-            )
-    versions = list_versions(spark, path)
-    version = (versions[-1] + 1) if versions else 1
-    for _ in range(1000):
-        marker = hpath(f"{path}/{_VERSIONS_DIR}/.{_vname(version)}.reserved")
-        try:
-            out = fs.create(marker, False)
-            out.close()
-            break
-        except Exception:
-            version += 1
-    else:
-        raise IOError(f"could not reserve a version number at {path}")
-    df.write.mode("overwrite").option("compression", compression).parquet(
-        f"{path}/{_VERSIONS_DIR}/{_vname(version)}"
-    )
-    if expected_parent is not _EXPECTED_UNSET:
-        current = latest_version(spark, path)
-        # the just-written snapshot has a _SUCCESS marker, so it IS the
-        # highest committed version right now — the parent check must
-        # look at what latest resolves to WITHOUT this commit
-        if current == version:
-            others = [v for v in list_versions(spark, path) if v != version]
-            current = others[-1] if others else None
-        if current != expected_parent:
-            # abort: remove this commit's dir + reservation so the
-            # pointer-loss fallback can never resurrect the loser
-            fs.delete(hpath(f"{path}/{_VERSIONS_DIR}/{_vname(version)}"), True)
-            fs.delete(marker, False)
-            raise VersionConflictError(
-                f"{path}: expected parent {expected_parent}, found "
-                f"{current} at commit time — lost update detected, "
-                "write aborted"
-            )
-    _point_latest(spark, path, version)
-    # prune: keep the newest `keep` snapshots (and their markers)
-    for old in list_versions(spark, path)[:-keep] if keep > 0 else []:
-        if old != version:
-            fs.delete(hpath(f"{path}/{_VERSIONS_DIR}/{_vname(old)}"), True)
-            fs.delete(
-                hpath(f"{path}/{_VERSIONS_DIR}/.{_vname(old)}.reserved"),
-                False,
-            )
-    return version
-
-
-def read_versioned(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Time-travel read: the current snapshot by default, or any
-    still-retained ``version``."""
-    v = latest_version(spark, path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    if version is not None and version not in list_versions(spark, path):
-        raise FileNotFoundError(f"version {version} not present at {path}")
-    return read_parquet(
-        spark, f"{path}/{_VERSIONS_DIR}/{_vname(v)}", schema=schema
-    )
-
-
-def rollback_versioned(spark: SparkSession, path: str, version: int) -> None:
-    """Instant rollback: swing the pointer to an older retained
-    snapshot. O(1) metadata, no data rewrite — the operational undo
-    for a bad load."""
-    if version not in list_versions(spark, path):
-        raise FileNotFoundError(f"version {version} not present at {path}")
-    _point_latest(spark, path, version)
-
-
-def vacuum_versioned(spark: SparkSession, path: str) -> list[str]:
-    """Remove crash debris from a versioned table: snapshot dirs whose
-    ``_SUCCESS`` marker never appeared (a writer died mid-commit — the
-    dir is invisible to readers but still holds space), reservation
-    markers whose snapshot is gone, and a stale ``_LATEST__tmp``
-    pointer temp. Returns the deleted paths.
-
-    SAFE BY CONSTRUCTION, not by timing: committed snapshots are
-    recognized by their ``_SUCCESS`` marker (written last), so nothing
-    a reader can currently see is ever deleted — no grace-period
-    heuristics needed. The ONE unsafe window is a writer mid-commit
-    RIGHT NOW (its dir has no marker yet and would be vacuumed);
-    run vacuum from the single-writer owner, the same assumption the
-    commit protocol already documents for reservation markers on
-    object stores."""
-    jvm, hpath, fs = hadoop_fs(spark, path)
-    vdir = hpath(f"{path}/{_VERSIONS_DIR}")
-    deleted: list[str] = []
-    if not fs.exists(vdir):
-        return deleted
-    committed = set(list_versions(spark, path))
-    for st in fs.listStatus(vdir):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            if int(name[1:]) not in committed:
-                fs.delete(st.getPath(), True)
-                deleted.append(str(st.getPath()))
-        elif name.startswith(".v") and name.endswith(".reserved"):
-            core = name[1:-len(".reserved")]  # ".v00001.reserved" -> "v00001"
-            if core[1:].isdigit() and int(core[1:]) not in committed:
-                # keep the reservation if its snapshot dir still exists
-                # (that is the uncommitted dir handled above on THIS
-                # pass — both go together)
-                fs.delete(st.getPath(), False)
-                deleted.append(str(st.getPath()))
-    tmp = hpath(f"{path}/{_LATEST_FILE}__tmp")
-    if fs.exists(tmp):
-        fs.delete(tmp, False)
-        deleted.append(str(tmp))
-    return deleted

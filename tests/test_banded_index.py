@@ -19,6 +19,9 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     dedup as DD,
 )
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import (
+    io as IO,
+)
 
 _BASE = (
     "the quick brown fox jumps over the lazy dog while the venture fund "
@@ -123,7 +126,7 @@ def test_index_lifecycle_both_families(spark, tmp_path):
 
         # torn append: the shard's source rows landed, its entries did not
         meta = {**params, **fam.tag}
-        fam.sign(shard, meta).write.mode("append").parquet(f"{path}/{fam.source}")
+        IO.commit(spark, f"{path}/{fam.source}", fam.sign(shard, meta))
         report = DD.verify_index(spark, path, fam)
         assert not report["consistent"]
         assert report[f"missing_{fam.part}_ids"] == len(shard_rows)

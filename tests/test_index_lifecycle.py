@@ -120,10 +120,10 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
 
     sig_before, bands_before = DD.read_index(spark, index, DD.LSH_INDEX)
     sig_snap, bands_snap = _sig_set(sig_before), _band_set(bands_before)
-    files_before = IO.parquet_file_count(spark, f"{index}/bands")
+    files_before = len(IO.data_files(spark, f"{index}/bands"))
 
     report = DD.compact_lsh_index(spark, index)
-    files_after = IO.parquet_file_count(spark, f"{index}/bands")
+    files_after = len(IO.data_files(spark, f"{index}/bands"))
     assert report["bands_files"] == (files_before, files_after)
     # K-1 appends x 16 band dirs accumulate >= (K-1) files per dir;
     # compaction collapses each dir to one (tiny data << target size)
@@ -165,10 +165,11 @@ def test_torn_append_detected_and_repaired(spark, sf_dir, tmp_path):
     index = str(tmp_path / "idx")
     DD.build_lsh_index(corpus, index)
 
-    # simulate the crash: append the shard's SIGNATURES only
-    DD.minhash_signatures_poly(shard, "doc_id", "text", 3, 64).write.mode(
-        "append"
-    ).parquet(f"{index}/signatures")
+    # simulate the crash: commit the shard's SIGNATURES only
+    IO.commit(
+        spark, f"{index}/signatures",
+        DD.minhash_signatures_poly(shard, "doc_id", "text", 3, 64),
+    )
 
     report = DD.verify_index(spark, index, DD.LSH_INDEX)
     assert not report["consistent"]
@@ -201,8 +202,8 @@ def test_torn_append_detected_and_repaired(spark, sf_dir, tmp_path):
 
 def test_orphan_band_entries_trigger_full_rebuild(spark, sf_dir, tmp_path):
     """Band entries whose id has no signature (not producible by the
-    write order — models external tampering / partial task commits)
-    route to the rebuild-from-signatures path and are purged."""
+    write order — models a faulty writer committing bad entries) route
+    to the rebuild-from-signatures path and are purged."""
     docs = _docs(spark, sf_dir)
     index = str(tmp_path / "idx")
     DD.build_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), index)
@@ -218,7 +219,7 @@ def test_orphan_band_entries_trigger_full_rebuild(spark, sf_dir, tmp_path):
         64,
         16,
     )
-    orphans.write.mode("append").partitionBy("band").parquet(f"{index}/bands")
+    IO.commit(spark, f"{index}/bands", orphans, partition_by=["band"])
     report = DD.verify_index(spark, index, DD.LSH_INDEX)
     assert report["orphan_band_ids"] > 0
     healed = DD.repair_index(spark, index, DD.LSH_INDEX)
@@ -321,9 +322,9 @@ def test_compact_ivf_index_preserves_probe_results(spark, sf_dir, tmp_path):
         (r["query_id"], r["rank"], r["neighbor_id"], r["cosine_sim"])
         for r in SIM.ivf_probe_index(queries, index, k=5, n_probe=3).collect()
     }
-    files_before = IO.parquet_file_count(spark, f"{index}/cells")
+    files_before = len(IO.data_files(spark, f"{index}/cells"))
     report = SIM.compact_ivf_index(spark, index)
-    files_after = IO.parquet_file_count(spark, f"{index}/cells")
+    files_after = len(IO.data_files(spark, f"{index}/cells"))
     assert report["cells_files"] == (files_before, files_after)
     assert files_after < files_before
     after = {

@@ -193,19 +193,24 @@ def test_multimodal_resize_plan(spark):
     assert out[1]["payload"] == b"\x01" * 16  # stub passthrough
 
 
-def test_replace_parquet_atomic_self_referencing(spark, tmp_path):
-    """The swap write must handle a plan that reads the path it
-    replaces, and leave no __swap_* residue on success."""
-    path = str(tmp_path / "swap_tbl")
+def test_commit_self_referencing_rewrite(spark, tmp_path):
+    """A commit must handle a plan that reads the table it rewrites:
+    the old files are removed only after the new ones are published,
+    and the directory then holds exactly the new files."""
+    path = str(tmp_path / "self_tbl")
     spark.range(100).withColumnRenamed("id", "k").write.parquet(path)
     from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import io as SIO
 
+    old = SIO.data_files(spark, path)
     df = spark.read.parquet(path).filter("k < 50")  # reads `path` itself
-    SIO.replace_parquet_atomic(spark, df, path)
+    SIO.commit(spark, path, df, remove=old)
     assert spark.read.parquet(path).count() == 50
+    new = SIO.data_files(spark, path)
+    assert new and set(new).isdisjoint(old)
+    assert SIO.is_committed(spark, path)
     import os
-    assert not os.path.exists(path + "__swap_new")
-    assert not os.path.exists(path + "__swap_old")
+    log = os.listdir(os.path.join(path, "_log"))
+    assert [n for n in log if not n.startswith(".")] == ["1.json"]
 
 
 def test_upsert_parquet_missing_path_vs_corrupt(spark, tmp_path):

@@ -134,14 +134,14 @@ def test_append_equals_fresh_build(spark, index_path, tmp_path):
 
 def test_repair_torn_append(spark, index_path):
     from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources.io import (
-        replace_parquet_atomic,
+        replace_table,
     )
 
     build_phash_index(_media(spark, CORPUS + SHARD), index_path)
     hashes, chunks = read_index(spark, index_path, PHASH_INDEX)
     # simulate a torn append: drop every chunk row of two ids
     torn = chunks.filter(~chunks["id"].isin(10, 12)).localCheckpoint()
-    replace_parquet_atomic(spark, torn, f"{index_path}/chunks", partition_by=["chunk"])
+    replace_table(spark, torn, f"{index_path}/chunks", partition_by=["chunk"])
     rep = verify_index(spark, index_path, PHASH_INDEX)
     assert not rep["consistent"] and rep["missing_chunk_ids"] == 2
     after = repair_index(spark, index_path, PHASH_INDEX)

@@ -240,6 +240,45 @@ def _data_files(path: str) -> dict[str, int]:
     }
 
 
+# surrogate-key column -> the dim it resolves in, with that dim's keys
+_RESOLVE = {
+    "sk_company_id": ("dim_company", "sk_company_id", "nk_company_id"),
+    "sk_acquiring_company_id": ("dim_company", "sk_company_id", "nk_company_id"),
+    "sk_acquired_company_id": ("dim_company", "sk_company_id", "nk_company_id"),
+    "sk_fund_id": ("dim_funds", "sk_fund_id", "nk_fund_id"),
+    "sk_people_id": ("dim_people", "sk_people_id", "nk_people_id"),
+}
+_OWN_SK = {
+    "dim_company": "sk_company_id",
+    "dim_funds": "sk_fund_id",
+    "dim_people": "sk_people_id",
+    "bridge_company_people": "sk_company_people_id",
+}
+
+
+def _natural(spark, wh: str) -> dict[str, list]:
+    """Every warehouse table as a sorted row list with each surrogate
+    key replaced by the natural key it resolves to (a merge and a full
+    build may number rows differently). Asserts that no surrogate key
+    is held twice and that every foreign key resolves."""
+    out = {"dim_date": spark.read.parquet(f"{wh}/dim_date").count()}  # a static spine
+    for t in P.WAREHOUSE_ORDER[1:]:
+        df = spark.read.parquet(f"{wh}/{t}")
+        own = _OWN_SK.get(t)
+        if own is not None:
+            assert df.count() == df.select(own).distinct().count(), t
+            df = df.drop(own)
+        n = df.count()
+        for col in [c for c in df.columns if c in _RESOLVE]:
+            dim, sk, nk = _RESOLVE[col]
+            keys = spark.read.parquet(f"{wh}/{dim}").selectExpr(f"{sk} AS {col}", f"{nk} AS {col}__nk")
+            df = df.join(keys, col).drop(col)
+        assert df.count() == n, (t, "unresolved surrogate keys")
+        cols = sorted(df.columns)
+        out[t] = sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+    return out
+
+
 def _rows(spark, path: str) -> list[tuple]:
     return sorted((tuple(r) for r in spark.read.parquet(path).collect()), key=repr)
 
@@ -338,20 +377,23 @@ def test_airflow_dag_import_gated():
         assert {t.task_id for t in dag.tasks} == set(P.WAREHOUSE_ORDER)
 
 
-def test_swap_leftover_is_an_error_not_an_empty_table(spark, staging_dir, tmp_path):
-    """A table missing beside a swap leftover is a swap interrupted
-    between its two renames. The daily merge must refuse to run rather
-    than rebuild the dim from that day's rows alone (keys restarting
-    at 1), and must leave the leftover — the only copy — in place."""
-    import os
-
-    wh = str(tmp_path / "wh_swap")
+def test_unlisted_file_in_logged_table_is_an_error(spark, staging_dir, tmp_path):
+    """A data file that no published manifest lists, with no pending
+    commit to explain it, came from a writer that bypassed the table
+    log. The daily merge must refuse to run rather than guess, and
+    recovery must leave the file in place: it never deletes data
+    silently."""
+    wh = str(tmp_path / "wh_unlisted")
     P.run_warehouse_pipeline(spark, staging_dir, wh)
-    os.rename(f"{wh}/dim_company", f"{wh}/dim_company__swap_old")
-    with pytest.raises(IOError, match="dim_company__swap_old"):
+    path = f"{wh}/dim_company"
+    before = _data_files(path)
+    stray = spark.read.parquet(path)
+    stray.coalesce(1).write.mode("append").parquet(path)
+    (extra,) = set(_data_files(path)) - set(before)
+    with pytest.raises(IOError, match=extra):
         P.run_warehouse_table(spark, "dim_company", staging_dir, wh, ds="2013-07-02")
-    assert not os.path.exists(f"{wh}/dim_company")
-    assert spark.read.parquet(f"{wh}/dim_company__swap_old").count() == 3
+    assert set(_data_files(path)) == set(before) | {extra}
+    assert spark.read.parquet(path).count() == 6
 
 
 def test_run_single_table_unit(spark, staging_dir, tmp_path):
@@ -498,6 +540,47 @@ def test_daily_merge_is_delta_proportional(spark, staging_dir, next_day_staging,
         assert _rows(spark, f"{wh}/{t}") == content[t], t
 
 
+def _sql_plans(spark) -> dict[int, str]:
+    """Final physical plan of every SQL execution the session's status
+    store holds, by execution id."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        e.executionId(): e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+    }
+
+
+def test_daily_merge_sort_merge_join_branch(spark, staging_dir, next_day_staging, tmp_path):
+    """With broadcast joins off, as for dims and deltas past the
+    broadcast threshold, the sliced dims' left-anti join and the fact
+    upsert's key-scan semi-join plan as sort-merge joins, and the daily
+    merge still equals a full build."""
+    wh, ref = str(tmp_path / "wh_smj"), str(tmp_path / "wh_smj_ref")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    P.run_warehouse_pipeline(spark, next_day_staging, ref)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        before = _sql_plans(spark)
+        P.run_warehouse_pipeline(spark, next_day_staging, wh, ds=DS_NEXT)
+        plans = [p for i, p in _sql_plans(spark).items() if i not in before]
+    finally:
+        spark.conf.set(key, saved)
+    assert spark.conf.get(key) == saved
+
+    def smj(kind: str, marker: str) -> bool:
+        return any(
+            marker in plan
+            and any("SortMergeJoin" in line and kind in line for line in plan.splitlines())
+            for plan in plans
+        )
+
+    assert smj("LeftAnti", "object_id"), "sliced-dim anti-join"
+    assert smj("LeftSemi", "__file"), "upsert key-scan semi-join"
+    assert _natural(spark, wh) == _natural(spark, ref)
+
+
 def test_daily_snapshot_merge_writes_only_changed_keys(spark, change_day, tmp_path):
     """A full-load change day merges dim_people and the bridge on their
     natural keys: both equal a full build on natural keys and
@@ -539,10 +622,11 @@ def test_daily_snapshot_merge_writes_only_changed_keys(spark, change_day, tmp_pa
 def test_snapshot_commit_crash_between_append_and_delete_recovers(
     spark, change_day, tmp_path, monkeypatch, table
 ):
-    """A snapshot merge that dies after its append committed but before
-    the replaced files are deleted leaves duplicate natural keys, never
-    lost rows; rerunning the date leaves every natural key once and the
-    tables equal a full build."""
+    """A snapshot merge that dies after its publish, before the replaced
+    files are deleted, leaves them beside the new ones (readers see
+    duplicate natural keys, never lost rows); rerunning the date
+    recovers the table, leaves every natural key once and the tables
+    equal a full build."""
     base, day = change_day
     wh, ref = str(tmp_path / "wh_crash_snap"), str(tmp_path / "wh_crash_snap_ref")
     _build_laid_out(spark, base, wh)
@@ -575,10 +659,10 @@ def test_snapshot_commit_crash_between_append_and_delete_recovers(
 def test_fact_commit_crash_between_append_and_delete_recovers(
     spark, staging_dir, tmp_path, monkeypatch
 ):
-    """A fact upsert that dies after its append committed but before
-    the touched file is deleted leaves duplicate keys, never lost rows,
-    and no success in the ledger; rerunning the date removes the
-    duplicates and the warehouse equals a full build."""
+    """A fact upsert that dies after its publish, before the touched
+    file is deleted, leaves duplicate keys, never lost rows, and no
+    success in the ledger; rerunning the date recovers the table and
+    the warehouse equals a full build."""
     wh = str(tmp_path / "wh_crash_fact")
     P.run_warehouse_pipeline(spark, staging_dir, wh)
     ledger = ORCH.RunLedger(str(tmp_path / "ledger.jsonl"))
@@ -642,8 +726,9 @@ def test_dim_append_crash_before_ledger_success_reruns_clean(
 
 
 def test_daily_dim_date_written_only_when_not_committed(spark, staging_dir, tmp_path):
-    """A daily run writes the spine when it is missing or its write
-    never committed (no ``_SUCCESS``), and leaves a committed one alone."""
+    """A daily run writes the spine when it is missing or no commit to
+    it was published (a table without a log), and leaves a committed
+    one alone."""
     wh = str(tmp_path / "wh_date")
     path = f"{wh}/dim_date"
     P.run_warehouse_table(spark, "dim_date", staging_dir, wh, ds="2013-07-02")
@@ -653,8 +738,9 @@ def test_daily_dim_date_written_only_when_not_committed(spark, staging_dir, tmp_
     P.run_warehouse_table(spark, "dim_date", staging_dir, wh, ds="2013-07-02")
     assert _data_files(path) == first
 
-    os.remove(f"{path}/_SUCCESS")
+    shutil.rmtree(f"{path}/_log")
+    assert not SIO.is_committed(spark, path)
     P.run_warehouse_table(spark, "dim_date", staging_dir, wh, ds="2013-07-02")
     rewritten = _data_files(path)
     assert rewritten and set(rewritten).isdisjoint(first)
-    assert os.path.exists(f"{path}/_SUCCESS")
+    assert SIO.is_committed(spark, path)

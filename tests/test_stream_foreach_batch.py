@@ -106,7 +106,7 @@ def test_streaming_dim_merge_key_continuity(spark, tmp_path):
         fresh = add_surrogate_key(
             unseen, "sk", ["nk"], offset=max_key(old, "sk")
         ).select("sk", "nk", "name")
-        SIO.replace_parquet_atomic(s, old.select("sk", "nk", "name").unionByName(fresh), tgt)
+        SIO.replace_table(s, old.select("sk", "nk", "name").unionByName(fresh), tgt)
 
     emit([("c:1", "one"), ("c:2", "two")])
     stream = (

@@ -1,10 +1,13 @@
-"""Versioned tables: snapshot isolation, time travel, rollback,
-retention pruning, and pointer-loss recovery."""
+"""The table log (``sources.io.commit`` / ``recover``): a commit is
+invisible until its manifest is published, never touches the files it
+replaces before then, and recovery deletes only what a dead commit
+left behind."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import (
@@ -16,219 +19,83 @@ def _mk(spark, n):
     return spark.range(n).select(F.col("id"), (F.col("id") * 10).alias("val"))
 
 
-def test_versioned_write_read_rollback(spark, tmp_path):
-    path = str(tmp_path / "vt")
-    v1 = IO.write_versioned(_mk(spark, 5), path)
-    v2 = IO.write_versioned(_mk(spark, 7), path)
-    v3 = IO.write_versioned(_mk(spark, 9), path)
-    assert (v1, v2, v3) == (1, 2, 3)
-    assert IO.latest_version(spark, path) == 3
-
-    # latest + time travel
-    assert IO.read_versioned(spark, path).count() == 9
-    assert IO.read_versioned(spark, path, version=2).count() == 7
-
-    # rollback is O(1) pointer swing; the newer snapshot stays readable
-    IO.rollback_versioned(spark, path, 2)
-    assert IO.latest_version(spark, path) == 2
-    assert IO.read_versioned(spark, path).count() == 7
-    assert IO.read_versioned(spark, path, version=3).count() == 9
+def _state(spark, path):
+    """Data file -> (size, mtime, inode): identical only if untouched."""
+    out = {}
+    for rel in IO.data_files(spark, path):
+        st = os.stat(os.path.join(path, rel))
+        out[rel] = (st.st_size, st.st_mtime_ns, st.st_ino)
+    return out
 
 
-def test_versioned_retention_prunes_oldest(spark, tmp_path):
-    path = str(tmp_path / "vt2")
-    for n in (3, 4, 5, 6):
-        IO.write_versioned(_mk(spark, n), path, keep=2)
-    vs = IO.list_versions(spark, path)
-    assert vs == [3, 4]  # only the newest two retained
-    assert IO.read_versioned(spark, path).count() == 6
+def _log(path):
+    return sorted(n for n in os.listdir(os.path.join(path, "_log")) if not n.startswith("."))
 
 
-def test_versioned_pointer_loss_recovers_to_highest(spark, tmp_path):
-    path = str(tmp_path / "vt3")
-    IO.write_versioned(_mk(spark, 2), path)
-    IO.write_versioned(_mk(spark, 4), path)
-    os.remove(os.path.join(path, "_LATEST"))  # simulated crash window
-    assert IO.latest_version(spark, path) == 2
-    assert IO.read_versioned(spark, path).count() == 4
+def _die(*_args):
+    raise RuntimeError("killed before publish")
 
 
-def test_versioned_uncommitted_snapshot_is_invisible(spark, tmp_path):
-    path = str(tmp_path / "vt4")
-    IO.write_versioned(_mk(spark, 2), path)
-    # fake a crashed write: data dir without _SUCCESS
-    broken = os.path.join(path, "_versions", "v00009")
-    os.makedirs(broken)
-    with open(os.path.join(broken, "part-crashed.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    assert IO.list_versions(spark, path) == [1]
-    assert IO.latest_version(spark, path) == 1
+def test_uncommitted_write_is_invisible_after_recovery(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "t")
+    IO.commit(spark, path, _mk(spark, 5))
+    monkeypatch.setattr(IO, "_publish", _die)
+    with pytest.raises(RuntimeError, match="killed"):
+        IO.commit(spark, path, _mk(spark, 7))
+    monkeypatch.undo()
+    assert _log(path) == ["1.json", "2.pending"]
+    assert spark.read.parquet(path).count() == 12  # the crash window
+
+    IO.recover(spark, path)
+    assert spark.read.parquet(path).count() == 5
+    assert _log(path) == ["1.json"]
 
 
-def test_versioned_reservation_skips_claimed_numbers(spark, tmp_path):
-    """A concurrent writer that reserved v2 (marker exists, snapshot
-    not yet committed) must push this writer to v3 — neither commit is
-    lost to a max(version)+1 race."""
-    path = str(tmp_path / "vt5")
-    IO.write_versioned(_mk(spark, 2), path)
-    # simulate the other writer mid-commit: reservation marker only
-    open(os.path.join(path, "_versions", ".v00002.reserved"), "w").close()
-    v = IO.write_versioned(_mk(spark, 4), path)
-    assert v == 3
-    assert IO.latest_version(spark, path) == 3
-    assert IO.read_versioned(spark, path).count() == 4
-    # the other writer can still land v2 later; pointer stays at 3
-    assert sorted(IO.list_versions(spark, path)) == [1, 3]
+def test_prior_files_untouched_until_publish(spark, tmp_path, monkeypatch):
+    """Object-store posture: a commit never renames or rewrites a live
+    file. Up to its publish, every file it replaces keeps its path,
+    size, mtime and inode; only after it are they deleted."""
+    path = str(tmp_path / "t")
+    IO.commit(spark, path, _mk(spark, 5))
+    before = _state(spark, path)
+    seen = {}
+    publish = IO._publish
+
+    def check_then_publish(fs, manifest, files):
+        seen.update({rel: _state(spark, path).get(rel) for rel in before})
+        publish(fs, manifest, files)
+
+    monkeypatch.setattr(IO, "_publish", check_then_publish)
+    IO.commit(spark, path, _mk(spark, 7), remove=IO.data_files(spark, path))
+    assert seen == before
+    assert set(_state(spark, path)).isdisjoint(before)
+    assert spark.read.parquet(path).count() == 7
 
 
-def test_versioned_rollback_pointer_survives_overwrite_rename(spark, tmp_path):
-    """The pointer swing never deletes the old pointer before the new
-    one is in place — after rollback the pointer file exists and names
-    the rolled-back version (no temp residue)."""
-    path = str(tmp_path / "vt6")
-    IO.write_versioned(_mk(spark, 2), path)
-    IO.write_versioned(_mk(spark, 4), path)
-    IO.rollback_versioned(spark, path, 1)
-    ptr = os.path.join(path, "_LATEST")
-    assert os.path.exists(ptr)
-    assert not os.path.exists(ptr + "__tmp")
-    assert open(ptr).read().strip() == "v00001"
-    assert IO.latest_version(spark, path) == 1
+def test_recovery_deletes_only_uncommitted_debris(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "t")
+    IO.commit(spark, path, _mk(spark, 3))
+    IO.commit(spark, path, _mk(spark, 6))
+    committed = _state(spark, path)
+    monkeypatch.setattr(IO, "_publish", _die)
+    with pytest.raises(RuntimeError, match="killed"):
+        IO.commit(spark, path, _mk(spark, 9), remove=list(committed))
+    monkeypatch.undo()
+    debris = set(_state(spark, path)) - set(committed)
+    assert debris
 
+    IO.recover(spark, path)
+    assert _state(spark, path) == committed
+    assert spark.read.parquet(path).count() == 9
+    assert _log(path) == ["2.json"]
+    IO.recover(spark, path)  # idempotent on a clean table
+    assert _state(spark, path) == committed
+    # the next commit proceeds normally, reusing the freed number
+    IO.commit(spark, path, _mk(spark, 1))
+    assert _log(path) == ["3.json"]
+    assert spark.read.parquet(path).count() == 10
 
-def test_versioned_commit_never_touches_prior_snapshots(spark, tmp_path):
-    """Object-store posture (VERDICT r04 item 5): a commit must be
-    pointer-only — no prior snapshot directory is renamed, rewritten,
-    or even re-listed into a different state. On s3a a directory
-    rename is a copy+delete, so the protocol is only object-store-safe
-    if committed data dirs are immutable and visibility is published
-    exclusively by the tiny _LATEST pointer file."""
-    path = str(tmp_path / "tbl")
-    IO.write_versioned(_mk(spark, 5), path)
-
-    v1_dir = os.path.join(path, "_versions", "v00001")
-
-    def snapshot_state(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns, st.st_ino)
-        return out
-
-    before = snapshot_state(v1_dir)
-    v2 = IO.write_versioned(_mk(spark, 7), path)
-    assert v2 == 2
-    # v1's files: same paths, sizes, mtimes AND inodes — untouched,
-    # not copied back into place
-    assert snapshot_state(v1_dir) == before
-
-    # visibility flipped purely via the pointer file
-    with open(os.path.join(path, "_LATEST")) as fh:
-        assert fh.read().strip() == "v00002"
-    assert IO.read_versioned(spark, path).count() == 7
-    assert IO.read_versioned(spark, path, version=1).count() == 5
-
-
-def test_vacuum_removes_only_uncommitted_debris(spark, tmp_path):
-    """vacuum_versioned deletes crashed-commit leftovers (snapshot dir
-    without _SUCCESS, orphan reservation marker, stale pointer temp)
-    and never touches committed snapshots or their reservations."""
-    path = str(tmp_path / "tbl")
-    IO.write_versioned(_mk(spark, 3), path)
-    IO.write_versioned(_mk(spark, 6), path)
-
-    vdir = os.path.join(path, "_versions")
-    # simulate a writer that died mid-commit of v3: reserved + wrote
-    # data files but no _SUCCESS
-    crashed = os.path.join(vdir, "v00003")
-    os.makedirs(crashed)
-    with open(os.path.join(crashed, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"partial")
-    open(os.path.join(vdir, ".v00003.reserved"), "w").close()
-    # and a stale pointer temp from a dead pointer swing
-    open(os.path.join(path, "_LATEST__tmp"), "w").close()
-
-    deleted = IO.vacuum_versioned(spark, path)
-    assert {os.path.basename(d) for d in deleted} == {
-        "v00003", ".v00003.reserved", "_LATEST__tmp",
-    }
-    # committed state untouched and fully readable
-    assert IO.list_versions(spark, path) == [1, 2]
-    assert os.path.exists(os.path.join(vdir, ".v00001.reserved"))
-    assert os.path.exists(os.path.join(vdir, ".v00002.reserved"))
-    assert IO.read_versioned(spark, path).count() == 6
-    assert IO.read_versioned(spark, path, version=1).count() == 3
-    # idempotent on a clean table
-    assert IO.vacuum_versioned(spark, path) == []
-    # and the next commit proceeds normally, reusing the freed number
-    assert IO.write_versioned(_mk(spark, 9), path) == 3
-
-
-def test_versioned_optimistic_conflict_interleaved_writers(spark, tmp_path):
-    """Lost-update DETECTION (r7): two writers read the same parent,
-    both derive, writer A commits first — writer B's commit must fail
-    cleanly with VersionConflictError, its snapshot must leave no
-    debris (dir + reservation removed, so the pointer-loss fallback
-    can't resurrect it), and the table must still read as A's
-    commit."""
-    import pytest
-
-    path = str(tmp_path / "vt_occ")
-    v1 = IO.write_versioned(_mk(spark, 5), path)
-    parent = IO.latest_version(spark, path)
-    assert parent == v1
-
-    # writer A wins the race
-    v_a = IO.write_versioned(
-        _mk(spark, 50), path, expected_parent=parent
-    )
-    assert v_a == v1 + 1
-
-    # writer B, still holding the stale parent, must be rejected
-    with pytest.raises(IO.VersionConflictError):
-        IO.write_versioned(_mk(spark, 999), path, expected_parent=parent)
-
-    # table is consistent: latest is A's commit, B left no snapshot
-    assert IO.latest_version(spark, path) == v_a
-    assert IO.list_versions(spark, path) == [v1, v_a]
-    assert IO.read_versioned(spark, path).count() == 50
-    # no orphan reservation for the aborted version
-    vdir = tmp_path / "vt_occ" / "_versions"
-    orphan = [p.name for p in vdir.iterdir() if "reserved" in p.name]
-    assert f".v{v_a + 1:05d}.reserved" not in orphan
-
-    # B retries the CAS loop correctly: re-read, re-derive, commit
-    v_b = IO.write_versioned(
-        _mk(spark, 7), path, expected_parent=IO.latest_version(spark, path)
-    )
-    assert v_b == v_a + 1
-    assert IO.read_versioned(spark, path).count() == 7
-
-
-def test_versioned_expected_parent_none_creates_or_conflicts(spark, tmp_path):
-    """expected_parent=None means 'I create this table': succeeds on
-    an empty path, conflicts once anyone has committed."""
-    import pytest
-
-    path = str(tmp_path / "vt_create")
-    v1 = IO.write_versioned(_mk(spark, 3), path, expected_parent=None)
-    assert v1 == 1
-    with pytest.raises(IO.VersionConflictError):
-        IO.write_versioned(_mk(spark, 4), path, expected_parent=None)
-    assert IO.list_versions(spark, path) == [1]
-
-
-def test_versioned_default_stays_last_wins(spark, tmp_path):
-    """Without expected_parent the documented single-writer/last-wins
-    behavior is unchanged — no accidental strictness."""
-    path = str(tmp_path / "vt_lw")
-    IO.write_versioned(_mk(spark, 3), path)
-    IO.write_versioned(_mk(spark, 4), path)
-    assert IO.read_versioned(spark, path).count() == 4
 
 # round-13: GATE-covered heavy suite — deselected from the default
 # (driver-budget) collection, runs via tools/round_gate.py / -m 'slow or not slow'
-import pytest  # noqa: E402
 pytestmark = pytest.mark.slow
