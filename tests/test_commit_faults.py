@@ -35,6 +35,7 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.source
 
 POINTS = ("after_write", "after_publish", "mid_delete")
 
+
 class Killed(RuntimeError):
     pass
 
