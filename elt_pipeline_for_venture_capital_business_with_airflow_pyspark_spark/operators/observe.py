@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-__all__ = ["observed", "standard_load_metrics"]
+__all__ = ["observed", "scan_metrics", "standard_load_metrics"]
 
 
 def standard_load_metrics(
@@ -49,3 +49,16 @@ def observed(
     """
     obs = Observation(name)
     return df.observe(obs, *metrics), obs
+
+
+def scan_metrics(df: DataFrame, metrics: list[Column]) -> dict:
+    """Run ``df`` once through Spark's no-op sink and return the named
+    aggregates ``metrics`` observed on the way: one job, with no
+    exchange beyond ``df``'s own, where collecting the same aggregates
+    adds a shuffle map job and a result job (every exchange is a job of
+    its own under AQE). A persisted ``df`` is materialized by that job.
+    The aggregates must stay small (counts, bounds, a set of file
+    names): they are merged on the driver."""
+    obs = Observation()
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get

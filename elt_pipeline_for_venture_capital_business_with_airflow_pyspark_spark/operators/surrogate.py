@@ -8,13 +8,13 @@ over the natural key — reproducible across runs, required wherever
 goldens/oracles compare key values. Implemented as a TWO-PHASE
 partitioned rank (no global single-reducer sort): every row gets an
 order-preserving BUCKET id computed from the row's own value against
-exact min/max aggregates (uniform-width slices of the first key's
+the exact min/max of the first key (uniform-width slices of its
 range; string keys map through their first 8 UTF-8 bytes read as a
 big-endian integer — monotone, prefix ties share a bucket), a
-per-bucket ``row_number()`` window ranks within buckets, and broadcast
-prefix-sum offsets over the per-bucket counts (ONE ROW PER BUCKET,
-KB-sized at any scale) splice the buckets into the global sequence.
-The data never funnels through one reducer.
+per-bucket ``row_number()`` window ranks within buckets, and prefix-sum
+offsets over the per-bucket counts (ONE ROW PER BUCKET, KB-sized at
+any scale) splice the buckets into the global sequence. The data never
+funnels through one reducer.
 
 Why buckets instead of ``repartitionByRange``: the range partitioner
 SAMPLES its boundaries, and a DataFrame diamond (the data path and the
@@ -22,17 +22,40 @@ counts path both consume the partitioned frame) evaluates the exchange
 twice — two samplings, two different boundary sets, offsets that do
 not match positions. Silent key corruption that only appears once
 partition counts grow (caught at sf0.1; sf0.01 fit one sampling pass).
-Bucket ids are a pure function of the row value and two exact
-aggregates, so every re-evaluation agrees by construction.
+Bucket ids are a pure function of the row value and two exact bounds,
+so every evaluation agrees by construction. :func:`bucketed_rank`
+collects the bounds once and plans them into the counts and the data
+plan as literals; :func:`attach_order_bucket` (for lazy callers) plans
+them as a one-row broadcast instead.
+
+Job anatomy of one keyed write (``add_surrogate_key`` then a write;
+with AQE every exchange of a collect or a write runs as a job of its
+own before the action's result job):
+
+1. bounds: the input runs once through Spark's no-op sink, observing
+   [min, max] of the first key and the row count
+   (``operators.observe.scan_metrics``): one job, no shuffle. An empty
+   input stops here;
+2. counts: one aggregate per bucket (a shuffle map job and a result
+   job) gives the prefix-sum offsets and, with a frame ``offset``, the
+   largest existing key;
+3. the write: the bucket-partitioned window's shuffle map job and the
+   write job.
+
+Five jobs, plus the input's own in each pass that evaluates it (a
+broadcast join in the input is one job per pass). A caller that
+persists the input evaluates it once, in step 1: the pipeline does
+that for every keyed table.
 
 Bucket-balance caveat: uniform-width slices assume the first key is
 roughly uniform over its range (surrogate-key inputs — sequential
 ids, hashed names — usually are). Heavy skew concentrates rows in few
 buckets, degrading parallelism but never correctness; raise
-``num_buckets`` (default 4× shuffle partitions) to smooth it.
+``num_buckets`` (default: the shuffle partition count) to smooth it.
 
 ``offset`` carries the max existing key so incremental loads keep
-appending to the sequence instead of restarting at 1.
+appending to the sequence instead of restarting at 1 (an int, or a
+frame of the table's keys).
 
 Natural keys must uniquely identify rows — with duplicate keys the tie
 order (hence key assignment among the tied rows) is not reproducible,
@@ -44,6 +67,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .observe import scan_metrics
 
 _NUMERIC_TYPES = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -75,6 +100,51 @@ def _order_proxy(df: DataFrame, key: str) -> F.Column:
     raise TypeError(f"no order proxy for surrogate-key column type: {dt}")
 
 
+def _bucket(
+    proxy: F.Column,
+    lo: F.Column,
+    hi: F.Column,
+    nbuckets: int,
+    desc: bool,
+    nulls_last: bool,
+    is_float: bool,
+) -> F.Column:
+    """Bucket id of ``proxy`` (already negated for ``desc``) given the
+    exact bounds ``lo`` / ``hi`` of its finite values: uniform-width
+    slices 0..nbuckets-1, NaN and NULL in buckets of their own."""
+    span = hi - lo
+    # NaN is the GREATEST value in both engines' sorts: it follows the
+    # numbers ascending, precedes them descending; nulls sit outside
+    # both per nulls_last. Bucket ids just encode those positions.
+    if desc:
+        nan_b = -1
+        null_b = nbuckets + 1 if nulls_last else -2
+    else:
+        nan_b = nbuckets
+        null_b = nbuckets + 1 if nulls_last else -1
+    numeric_bucket = F.least(
+        F.lit(nbuckets - 1),
+        F.floor(
+            (proxy - lo) / (F.when(span > 0, span).otherwise(F.lit(1.0)) / nbuckets)
+        ).cast("int"),
+    )
+    bucket = F.when(proxy.isNull(), F.lit(null_b))
+    if is_float:
+        bucket = bucket.when(F.isnan(proxy), F.lit(nan_b))
+    return bucket.otherwise(numeric_bucket)
+
+
+def _finite(proxy: F.Column, is_float: bool) -> F.Column:
+    """``proxy`` with NaN as NULL, for the bounds aggregate: one NaN
+    would make the span NaN and floor every row into bucket 0 (a
+    silent single-reducer collapse)."""
+    return F.when(~F.isnan(proxy), proxy) if is_float else proxy
+
+
+def _is_float(df: DataFrame, key: str) -> bool:
+    return isinstance(df.schema[key].dataType, (T.FloatType, T.DoubleType))
+
+
 def attach_order_bucket(
     df: DataFrame,
     key: str,
@@ -93,49 +163,27 @@ def attach_order_bucket(
     sort defaults (asc → nulls first, desc → nulls last) and MUST be
     set to match any explicit NULLS FIRST/LAST on the sort the bucket
     feeds, or the null bucket splices at the wrong end. One KB-sized
-    broadcast of the bounds; no sampling, so any number of downstream
+    broadcast of the bounds, planned lazily into every plan that
+    consumes the frame; no sampling, so any number of downstream
     re-evaluations agree.
 
     NaN keys (float types): NaN sorts greater than every number in
     both Spark and DuckDB, so NaN rows get their own bucket one past
     the last numeric bucket (before the null bucket when nulls are
-    last) — and the bounds aggregate EXCLUDES NaN, otherwise one NaN
-    makes span NaN and every row floors into bucket 0 (a silent
-    single-reducer collapse)."""
+    last) — and the bounds aggregate EXCLUDES NaN."""
     if nulls_last is None:
         nulls_last = desc
     proxy = _order_proxy(df, key)
     if desc:
         proxy = -proxy
-    dt = df.schema[key].dataType
-    is_float = isinstance(dt, (T.FloatType, T.DoubleType))
-    finite = F.when(~F.isnan(proxy), proxy) if is_float else proxy
+    is_float = _is_float(df, key)
+    finite = _finite(proxy, is_float)
     bounds = df.agg(
         F.min(finite).alias("__ob_min"), F.max(finite).alias("__ob_max")
     )
-    span = F.col("__ob_max") - F.col("__ob_min")
-    # NaN is the GREATEST value in both engines' sorts: it follows the
-    # numbers ascending, precedes them descending; nulls sit outside
-    # both per nulls_last. Bucket ids just encode those positions.
-    if desc:
-        nan_b = -1
-        null_b = nbuckets + 1 if nulls_last else -2
-    else:
-        nan_b = nbuckets
-        null_b = nbuckets + 1 if nulls_last else -1
-    null_bucket = F.lit(null_b)
-    nan_bucket = F.lit(nan_b)
-    numeric_bucket = F.least(
-        F.lit(nbuckets - 1),
-        F.floor(
-            (proxy - F.col("__ob_min"))
-            / (F.when(span > 0, span).otherwise(F.lit(1.0)) / nbuckets)
-        ).cast("int"),
+    bucket = _bucket(
+        proxy, F.col("__ob_min"), F.col("__ob_max"), nbuckets, desc, nulls_last, is_float
     )
-    bucket = F.when(proxy.isNull(), null_bucket)
-    if is_float:
-        bucket = bucket.when(F.isnan(proxy), nan_bucket)
-    bucket = bucket.otherwise(numeric_bucket)
     return (
         df.crossJoin(F.broadcast(bounds))
         .withColumn(out_col, bucket)
@@ -148,7 +196,7 @@ def bucketed_rank(
     order_cols: list[str],
     out_col: str = "rank",
     num_buckets: int | None = None,
-    offset: int = 0,
+    offset: int | DataFrame = 0,
 ) -> DataFrame:
     """Global ``ROW_NUMBER() OVER (ORDER BY order_cols)`` with NO
     single-reducer window — the two-phase bucketed rank.
@@ -159,21 +207,27 @@ def bucketed_rank(
     at-scale failure of ranking/running-total queries. This operator
     produces the IDENTICAL column in three fully parallel steps:
 
-    1. every row gets an order-preserving bucket id computed from the
-       row's own value against the first order column's exact
-       [min, max] (``attach_order_bucket`` — one KB-sized broadcast,
-       value-deterministic, so re-evaluations agree by construction);
-    2. ``row_number()`` partitioned BY BUCKET over the full order —
-       one hash exchange, parallelism = bucket count;
-    3. per-bucket counts → prefix-sum offsets (one row per OCCUPIED
-       bucket, KB-sized at any scale) splice bucket-local ranks into
-       the global sequence as a literal-map lookup — no join.
+    1. one eager pass observes the first order column's exact
+       [min, max] (and the row count); every row's order-preserving
+       bucket id is then a pure function of its own value against
+       those two LITERALS, so the counts plan and the data plan agree
+       by construction and neither re-plans the bounds;
+    2. per-bucket counts → prefix-sum offsets (one row per OCCUPIED
+       bucket, KB-sized at any scale), collected eagerly;
+    3. ``row_number()`` partitioned BY BUCKET over the full order —
+       one hash exchange, parallelism = bucket count — plus the
+       bucket's offset as a literal-map lookup: no join, no singleton
+       window in the data plan.
 
     ``order_cols`` must totally order the frame (append a unique key
     as the last column, exactly as you would for a deterministic
-    ``ROW_NUMBER``); ranks start at ``1 + offset``. NULLs in the
-    first order column rank first (Spark ASC NULLS FIRST default),
-    matching ``ROW_NUMBER ... NULLS FIRST`` oracle semantics.
+    ``ROW_NUMBER``); ranks start at ``1 + offset``. ``offset`` may be
+    a one-column frame of existing keys instead of an int: ranks then
+    continue after its largest value (0 when it is empty), found by
+    the counts aggregate. NULLs in the first order column
+    rank first (Spark ASC NULLS FIRST default), matching
+    ``ROW_NUMBER ... NULLS FIRST`` oracle semantics. An empty frame
+    stops after step 1.
 
     Semantics twin: ``ROW_NUMBER() OVER (ORDER BY <order_cols> ASC
     NULLS FIRST)`` — oracle-checked in the registry
@@ -196,31 +250,52 @@ def bucketed_rank(
     else:
         nbuckets = num_buckets
 
-    # phase 1: value-deterministic, order-preserving bucket id from
-    # the first order column's exact [min, max] — a pure function of
-    # the row, immune to the re-evaluation nondeterminism of sampled
-    # range boundaries (see module docstring). One KB-sized broadcast.
-    tagged = attach_order_bucket(
-        df, order_cols[0], nbuckets, "__br_bucket", nulls_last=False
+    # phase 1: the bounds and the row count, observed while the input
+    # runs through a no-op sink (one job, no exchange)
+    proxy = _order_proxy(df, order_cols[0])
+    is_float = _is_float(df, order_cols[0])
+    finite = _finite(proxy, is_float)
+    stats = scan_metrics(
+        df, [F.min(finite).alias("lo"), F.max(finite).alias("hi"), F.count(F.lit(1)).alias("n")]
+    )
+    lo, hi, n = stats["lo"], stats["hi"], stats["n"]
+    if not n:
+        return df.withColumn(out_col, F.lit(None).cast("long"))
+    tagged = df.withColumn(
+        "__br_bucket",
+        _bucket(
+            proxy, F.lit(lo).cast("double"), F.lit(hi).cast("double"),
+            nbuckets, desc=False, nulls_last=False, is_float=is_float,
+        ),
     )
 
     # phase 2: per-bucket counts -> prefix-sum offsets, computed on
     # the driver (one row per OCCUPIED bucket — KB-sized at any scale,
-    # same sanctioned pattern as the IVF centroid collect). Recomputing
-    # `tagged` for the counts job is safe: bucket ids are
-    # value-deterministic, unlike sampled range boundaries.
+    # same sanctioned pattern as the IVF centroid collect). A frame
+    # offset rides along as the NULL bucket (a row's bucket is never
+    # NULL), whose largest key is the offset.
+    counted = tagged.select("__br_bucket", F.lit(None).cast("long").alias("__br_k"))
+    if isinstance(offset, DataFrame):
+        (existing,) = offset.columns
+        counted = counted.unionByName(
+            offset.select(
+                F.lit(None).cast("int").alias("__br_bucket"),
+                F.col(existing).cast("long").alias("__br_k"),
+            )
+        )
     counts = (
-        tagged.groupBy("__br_bucket")
-        .agg(F.count(F.lit(1)).alias("__br_cnt"))
+        counted.groupBy("__br_bucket")
+        .agg(F.count(F.lit(1)).alias("__br_cnt"), F.max("__br_k").alias("__br_top"))
         .collect()
     )
+    if isinstance(offset, DataFrame):
+        offset = next((r["__br_top"] for r in counts if r["__br_bucket"] is None), None) or 0
+        counts = [r for r in counts if r["__br_bucket"] is not None]
     running = 0
     offsets: dict[int, int] = {}
     for row in sorted(counts, key=lambda r: r["__br_bucket"]):
         offsets[row["__br_bucket"]] = running
         running += row["__br_cnt"]
-    if not offsets:
-        return df.withColumn(out_col, F.lit(None).cast("long"))
     offset_expr = F.element_at(
         F.create_map(
             *[F.lit(v) for kv in offsets.items() for v in kv]
@@ -230,8 +305,7 @@ def bucketed_rank(
 
     # phase 3: rank within bucket over the FULL order (unique order ->
     # deterministic), one hash exchange on the bucket id; the bucket
-    # offset splices in as a literal-map lookup — no join, no
-    # singleton window in the data plan
+    # offset splices in as a literal-map lookup
     wlocal = Window.partitionBy("__br_bucket").orderBy(*keys)
     local = tagged.withColumn("__br_local", F.row_number().over(wlocal))
     rank = (offset_expr + F.col("__br_local") + F.lit(offset)).cast("long")
@@ -242,19 +316,14 @@ def add_surrogate_key(
     df: DataFrame,
     key_name: str,
     natural_keys: list[str],
-    offset: int = 0,
+    offset: int | DataFrame = 0,
     num_buckets: int | None = None,
 ) -> DataFrame:
-    # the surrogate key IS the two-phase bucketed rank over the
-    # natural key (see bucketed_rank for the plan shape)
+    """``df`` with the surrogate key ``key_name`` (long) in front: the
+    two-phase bucketed rank over ``natural_keys`` (see
+    :func:`bucketed_rank`, also for ``offset``: a frame of the table's
+    existing keys continues the sequence after its largest)."""
     ranked = bucketed_rank(
         df, natural_keys, out_col="__sk", num_buckets=num_buckets, offset=offset
     )
     return ranked.select(F.col("__sk").alias(key_name), *df.columns)
-
-
-def max_key(df: DataFrame, key_name: str) -> int:
-    """Persisted-sequence lookup for incremental loads: max existing
-    surrogate key (0 on empty), the offset for the next batch."""
-    row = df.agg(F.max(key_name).alias("m")).collect()[0]
-    return int(row["m"] or 0)

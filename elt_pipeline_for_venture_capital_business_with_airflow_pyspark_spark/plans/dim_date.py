@@ -24,6 +24,15 @@ EPOCH_START = "1950-01-01"
 SPAN_DAYS = 29220  # 80 years, init_dwh.sql:233-235
 
 
+def in_span(datum: str | F.Column) -> F.Column:
+    """True for a date inside the spine ``EPOCH_START`` + 0..SPAN_DAYS-1
+    (NULL for a NULL date): the rows an inner join on ``date_id`` keeps,
+    without reading the table."""
+    d = F.col(datum) if isinstance(datum, str) else datum
+    start = F.lit(EPOCH_START).cast("date")
+    return d.between(start, F.date_add(start, SPAN_DAYS - 1))
+
+
 def isodow(datum: F.Column) -> F.Column:
     """Postgres EXTRACT(ISODOW): Monday=1 .. Sunday=7."""
     return ((F.dayofweek(datum) + 5) % 7) + 1

@@ -115,7 +115,7 @@ def merge_snapshot(
 ) -> None:
     """Commit the full snapshot ``rows`` (no surrogate key, natural
     key ``nk``) to the keyed table ``old`` at ``path``, writing only
-    the difference through ``sources.io.upsert_parquet_files``:
+    the difference as one ``sources.io.commit``:
 
     - a natural key not yet in the table is new: new keys are numbered
       on from the table's largest surrogate key, in natural-key order;
@@ -131,14 +131,22 @@ def merge_snapshot(
     writes no file.
 
     The diff is one shuffle of the snapshot and the table's rows on the
-    natural key (both dimension-sized); its per-key result is persisted
-    for one counting job and the commit.
+    natural key (both dimension-sized), each table row carrying the
+    data file it lives in. Its per-key result is persisted by one pass
+    that observes the counts, the largest key and the files holding a
+    changed or deleted key (``operators.observe.scan_metrics``) — the
+    files the commit rewrites, their unchanged rows written again — so
+    no key scan of the table runs. Keys are unique in the diff, so the
+    commit needs no upsert dedup.
     """
+    from ..operators.observe import scan_metrics
     from ..operators.surrogate import add_surrogate_key
 
     attrs = [c for c in rows.columns if c != nk]
     now = rows.select(nk, F.struct(*attrs).alias("__new"))
-    was = old.select(nk, sk, F.struct(*attrs).alias("__old"))
+    was = old.select(
+        nk, sk, F.struct(*attrs).alias("__old"), F.col("_metadata.file_path").alias("__file")
+    )
     new, prev = F.col("__new"), F.col("__old")
     per_key = (
         now.unionByName(was, allowMissingColumns=True)
@@ -147,9 +155,10 @@ def merge_snapshot(
             F.first("__new", ignorenulls=True).alias("__new"),
             F.first("__old", ignorenulls=True).alias("__old"),
             F.max(sk).alias(sk),
+            F.first("__file", ignorenulls=True).alias("__file"),
         )
         .select(
-            nk, sk, "__new",
+            nk, sk, "__new", "__file",
             F.when(new.isNull(), "gone")
             .when(prev.isNull(), "fresh")
             .when(~prev.eqNullSafe(new), "changed")
@@ -159,18 +168,28 @@ def merge_snapshot(
     )
     op = F.col("__op")
     try:
-        top, n_fresh, n_gone, n = per_key.agg(
-            F.max(sk), F.count_if(op == "fresh"), F.count_if(op == "gone"), F.count(op)
-        ).first()
-        if n == 0:
+        stats = scan_metrics(per_key, [
+            F.max(sk).alias("top"),
+            F.count_if(op == "fresh").alias("n_fresh"),
+            F.collect_set(F.when(op != "fresh", F.col("__file"))).alias("files"),
+            F.count(op).alias("n"),
+        ])
+        if stats["n"] == 0:
             return
+        top, n_fresh, files = stats["top"], stats["n_fresh"], stats["files"]
         live = per_key.select(sk, nk, "__new.*", "__op")
-        upserts = live.filter(op == "changed").select(sk, *rows.columns)
+        add = live.filter(op == "changed").select(sk, *rows.columns)
         if n_fresh:
             fresh = live.filter(op == "fresh").select(*rows.columns)
-            upserts = add_surrogate_key(fresh, sk, [nk], top or 0).unionByName(upserts)
-        gone = per_key.filter(op == "gone").select(nk) if n_gone else None
-        SIO.upsert_parquet_files(spark, upserts, path, keys=[nk], delete=gone)
+            add = add_surrogate_key(fresh, sk, [nk], top or 0).unionByName(add)
+        touched = SIO.relative_files(spark, path, files)
+        if touched:
+            # the touched files' other rows stay as they are
+            kept = SIO.read_files(spark, path, touched, old.schema).join(
+                per_key.filter(op.isNotNull()).select(nk), on=nk, how="left_anti"
+            )
+            add = add.unionByName(kept)
+        SIO.commit(spark, path, add.coalesce(max(1, len(touched))), touched)
     finally:
         per_key.unpersist()
 
@@ -185,8 +204,10 @@ def run_warehouse_table(
     """Build and persist ONE warehouse table — the per-table task unit
     (the reference schedules exactly this granularity as Airflow tasks,
     main.py:53-120). Fact/bridge builders read the *persisted* dims
-    from ``warehouse_dir``, so the only cross-table contract is
-    ordering: dims strictly before facts (``WAREHOUSE_ORDER``).
+    from ``warehouse_dir``, with their declared schemas
+    (``schemas.WAREHOUSE``, so a read plans no schema-inference job), so
+    the only cross-table contract is ordering: dims strictly before
+    facts (``WAREHOUSE_ORDER``).
 
     Full mode (``ds=None``): each table is replaced by one commit that
     removes every file it held (``sources.io.replace_table``).
@@ -198,9 +219,9 @@ def run_warehouse_table(
     - dim_date: a committed spine (a published manifest, no Spark
       job) is left alone; a missing or uncommitted one is written;
     - sliced dims (dim_company, dim_funds): natural keys not yet in the
-      warehouse get surrogate keys continuing from ``max_key(existing)``
-      (the BIGSERIAL posture — existing rows keep their keys, so facts
-      never dangle) and are appended as one new file
+      warehouse get surrogate keys continuing from the table's largest
+      key (the BIGSERIAL posture — existing rows keep their keys, so
+      facts never dangle) and are appended as one new file
       (``sources.io.append_parquet``); known keys stay untouched;
     - facts: upsert on the natural id through
       ``sources.io.upsert_parquet_files`` — only the files holding one
@@ -214,8 +235,15 @@ def run_warehouse_table(
       :func:`merge_snapshot` — existing keys keep their surrogate key,
       new keys continue the sequence, and only the files holding a
       changed or deleted key are rewritten; a day that changes neither
-      table writes nothing to it. A bridge persisted without
-      ``dd_relationship_id`` is written in full, as a missing one is.
+      table writes nothing to it.
+
+    A keyed table that does not store its natural key in every data
+    file — a missing table, or a bridge persisted before it had
+    ``dd_relationship_id`` — is written in full, as in full mode; that
+    is decided from the parquet footers (``sources.io.stored_columns``),
+    so a missing column is never read as NULL keys. The un-keyed rows
+    of a keyed write are persisted for the write's three passes (key
+    bounds, key counts, the write itself).
 
     Every change is one ``sources.io.commit``, and the task first
     recovers its table (``sources.io.recover``): a commit that died
@@ -225,58 +253,20 @@ def run_warehouse_table(
     no-op: its new keys are in the warehouse, the anti-join drops them,
     and nothing is appended.
     """
-    from ..operators.surrogate import add_surrogate_key, max_key
+    from ..operators.surrogate import add_surrogate_key
 
     staging = read_staging(spark, staging_dir, ds, _INPUTS[name])
     path = f"{warehouse_dir}/{name}"
     SIO.recover(spark, path)
 
     def _persisted(table: str) -> DataFrame:
-        return spark.read.parquet(f"{warehouse_dir}/{table}")
+        return SIO.read_parquet(
+            spark, f"{warehouse_dir}/{table}", schema=schemas.WAREHOUSE[table]
+        )
 
     if name == "dim_date":
         if ds is None or not SIO.is_committed(spark, path):
             SIO.replace_table(spark, DDATE.build_dim_date(spark), path)
-        return
-    if name in _SNAPSHOT_KEYS:
-        if name == "dim_people":
-            rows = WH.dim_people_rows(staging["people"])
-        else:
-            rows = WH.bridge_company_people_rows(
-                staging["relationships"], _persisted("dim_people"),
-                _persisted("dim_company"),
-            )
-        sk, nk = _SNAPSHOT_KEYS[name]
-        old = SIO.read_parquet_if_exists(spark, path) if ds is not None else None
-        if old is None or nk not in old.columns:
-            SIO.replace_table(spark, add_surrogate_key(rows, sk, [nk]), path)
-        else:
-            merge_snapshot(spark, rows, old, path, sk, nk)
-        return
-
-    if name in _DIM_KEYS:
-        src = "company" if name == "dim_company" else "funds"
-
-        def build_dim(src_df: DataFrame, off: int) -> DataFrame:
-            if name == "dim_company":
-                return WH.build_dim_company(src_df, off)
-            return WH.build_dim_funds(src_df, _persisted("dim_date"), off)
-
-        sk, nk = _DIM_KEYS[name]
-        old = SIO.read_parquet_if_exists(spark, path) if ds is not None else None
-        if old is None:
-            SIO.replace_table(spark, build_dim(staging[src], 0), path)
-        else:
-            # anti-join BEFORE keying: replayed natural keys never burn
-            # sequence numbers, and only genuinely-new rows are built.
-            # No broadcast hint — AQE picks broadcast vs shuffle by the
-            # dim's actual size (a 100x dim must not be force-broadcast)
-            unseen = staging[src].join(
-                old.select(F.col(nk).alias("object_id")),
-                on="object_id",
-                how="left_anti",
-            )
-            SIO.append_parquet(build_dim(unseen, max_key(old, sk)), path)
         return
 
     if name in _FACT_KEYS:
@@ -301,7 +291,42 @@ def run_warehouse_table(
             SIO.upsert_parquet_files(spark, df, path, keys=[_FACT_KEYS[name]])
         return
 
-    raise ValueError(f"unknown warehouse table: {name}")
+    if name not in _DIM_KEYS and name not in _SNAPSHOT_KEYS:
+        raise ValueError(f"unknown warehouse table: {name}")
+    sk, nk = _DIM_KEYS.get(name) or _SNAPSHOT_KEYS[name]
+    old = None
+    if ds is not None and nk in SIO.stored_columns(spark, path):
+        old = _persisted(name)
+    if name == "dim_people":
+        rows = WH.dim_people_rows(staging["people"])
+    elif name == "bridge_company_people":
+        rows = WH.bridge_company_people_rows(
+            staging["relationships"], _persisted("dim_people"),
+            _persisted("dim_company"),
+        )
+    else:
+        src = staging["company" if name == "dim_company" else "funds"]
+        if old is not None:
+            # anti-join BEFORE keying: replayed natural keys never burn
+            # sequence numbers, and only genuinely-new rows are built.
+            # No broadcast hint — AQE picks broadcast vs shuffle by the
+            # dim's actual size (a 100x dim must not be force-broadcast)
+            src = src.join(
+                old.select(F.col(nk).alias("object_id")), on="object_id", how="left_anti"
+            )
+        rows = WH.dim_company_rows(src) if name == "dim_company" else WH.dim_funds_rows(src)
+
+    if old is not None and name in _SNAPSHOT_KEYS:
+        merge_snapshot(spark, rows, old, path, sk, nk)
+        return
+    rows = rows.persist()
+    try:
+        if old is None:
+            SIO.replace_table(spark, add_surrogate_key(rows, sk, [nk]), path)
+        else:
+            SIO.append_parquet(add_surrogate_key(rows, sk, [nk], old.select(sk)), path)
+    finally:
+        rows.unpersist()
 
 
 def run_warehouse_pipeline(
@@ -345,6 +370,10 @@ def run_warehouse_pipeline(
                 )
             raise
         manifest[name] = (
-            spark.read.parquet(f"{warehouse_dir}/{name}").count() if audit else -1
+            SIO.read_parquet(
+                spark, f"{warehouse_dir}/{name}", schema=schemas.WAREHOUSE[name]
+            ).count()
+            if audit
+            else -1
         )
     return manifest

@@ -27,10 +27,12 @@ from pyspark.sql import functions as F
 
 from ..functions import expr as E
 from ..operators.surrogate import add_surrogate_key
+from . import dim_date as DDATE
 
 
-def build_dim_company(company: DataFrame, offset: int = 0) -> DataFrame:
-    """dim_company (reference extract_transform.py:60-130)."""
+def dim_company_rows(company: DataFrame) -> DataFrame:
+    """dim_company without its surrogate key (reference
+    extract_transform.py:60-130)."""
     df = (
         company.withColumn("entity_type", E.entity_type("object_id"))
         .withColumn("address1_cleaned", E.clean_address("address1"))
@@ -40,7 +42,7 @@ def build_dim_company(company: DataFrame, offset: int = 0) -> DataFrame:
         .withColumn("city", E.normalize_lower("city"))
         .withColumn("country_code", E.normalize_upper("country_code"))
     )
-    dim = df.select(
+    return df.select(
         F.col("object_id").alias("nk_company_id"),
         "entity_type",
         "full_address",
@@ -48,15 +50,19 @@ def build_dim_company(company: DataFrame, offset: int = 0) -> DataFrame:
         "city",
         "country_code",
     )
-    return add_surrogate_key(dim, "sk_company_id", ["nk_company_id"], offset)
 
 
-def build_dim_funds(funds: DataFrame, dim_date: DataFrame, offset: int = 0) -> DataFrame:
-    """dim_funds (reference extract_transform.py:146-220). The left
-    join to dim_date is vestigial in the reference (no date columns are
-    selected — quirk §2.9.2) and is reproduced only as the span check
-    it effectively isn't; we skip the dead join entirely (same output,
-    one less shuffle)."""
+def build_dim_company(company: DataFrame, offset: int = 0) -> DataFrame:
+    """dim_company: :func:`dim_company_rows` keyed by natural key from
+    ``offset + 1``."""
+    return add_surrogate_key(dim_company_rows(company), "sk_company_id", ["nk_company_id"], offset)
+
+
+def dim_funds_rows(funds: DataFrame) -> DataFrame:
+    """dim_funds without its surrogate key (reference
+    extract_transform.py:146-220). The reference's left join to
+    dim_date is vestigial (no date columns are selected — quirk
+    §2.9.2), so it is skipped (same output, one less join)."""
     df = (
         funds.withColumn("name", F.trim(F.lower(F.col("name"))))
         .withColumn("source_description", F.trim(F.lower(F.col("source_description"))))
@@ -69,14 +75,20 @@ def build_dim_funds(funds: DataFrame, dim_date: DataFrame, offset: int = 0) -> D
             ),
         )
     )
-    dim = df.select(
+    return df.select(
         F.col("object_id").alias("nk_fund_id"),
         F.col("name").alias("fund_name"),
         F.col("raised_amount_usd"),
         F.col("funded_date_id").alias("funded_at"),
         F.col("source_description").alias("fund_description"),
     )
-    return add_surrogate_key(dim, "sk_fund_id", ["nk_fund_id"], offset)
+
+
+def build_dim_funds(funds: DataFrame, dim_date: DataFrame, offset: int = 0) -> DataFrame:
+    """dim_funds: :func:`dim_funds_rows` keyed by natural key from
+    ``offset + 1``. ``dim_date`` is not read (see
+    :func:`dim_funds_rows`)."""
+    return add_surrogate_key(dim_funds_rows(funds), "sk_fund_id", ["nk_fund_id"], offset)
 
 
 def dim_people_rows(people: DataFrame) -> DataFrame:
@@ -110,9 +122,11 @@ def build_fct_investments(
     Join shapes preserved exactly: inner to dim_company (J2, orphans
     drop), inner to dim_funds (J3, non-fund investors drop),
     funding_rounds inner to dim_date on the int key (J4, out-of-span
-    rounds drop), then left join the round payload on the named key
-    (J5) — investments without a surviving round keep NULL payload.
-    The fact's ``funded_at`` comes from funding_rounds (quirk §2.9.2).
+    rounds drop — a predicate on the spine's own span,
+    ``dim_date.in_span``, so ``dim_date`` itself is not read), then left
+    join the round payload on the named key (J5) — investments without
+    a surviving round keep NULL payload. The fact's ``funded_at`` comes
+    from funding_rounds (quirk §2.9.2).
     """
     df = investments.join(
         F.broadcast(dim_company.select("sk_company_id", "nk_company_id")),
@@ -124,11 +138,8 @@ def build_fct_investments(
         df["investor_object_id"] == F.col("nk_fund_id"),
         "inner",
     )
-    fr = funding_rounds.withColumn("funded_at", E.date_key("funded_at"))
-    fr = fr.join(
-        F.broadcast(dim_date.select("date_id")),
-        fr["funded_at"] == F.col("date_id"),
-        "inner",
+    fr = funding_rounds.filter(DDATE.in_span("funded_at")).withColumn(
+        "funded_at", E.date_key("funded_at")
     )
     df = df.join(
         fr.select(

@@ -282,10 +282,46 @@ STAGING: dict[str, T.StructType] = {
 # --------------------------------------------------------------------------
 # VC warehouse schemas (reference: dataset/warehouse/init_dwh.sql:3-114).
 # Surrogate keys are LongType (BIGSERIAL equivalent, assigned by the
-# engine's surrogate-key operator, not a database sequence).
+# engine's surrogate-key operator, not a database sequence). The
+# pipeline reads persisted warehouse tables with these schemas, so a
+# read plans no schema-inference job;
+# tests/test_pipeline.py::test_warehouse_schemas_pin_builder_output pins
+# each one to its builder's output.
 # --------------------------------------------------------------------------
 
+_DATE = T.DateType()
+
 WAREHOUSE: dict[str, T.StructType] = {
+    # the 80-year spine (init_dwh.sql:199-236, plans/dim_date.py)
+    "dim_date": _struct(
+        [
+            ("date_id", _INT),
+            ("date_actual", _DATE),
+            ("day_suffix", _STR),
+            ("day_name", _STR),
+            ("day_of_year", _INT),
+            ("week_of_month", _INT),
+            ("week_of_year", _INT),
+            ("week_of_year_iso", _STR),
+            ("month_actual", _INT),
+            ("month_name", _STR),
+            ("month_name_abbreviated", _STR),
+            ("quarter_actual", _INT),
+            ("quarter_name", _STR),
+            ("year_actual", _INT),
+            ("first_day_of_week", _DATE),
+            ("last_day_of_week", _DATE),
+            ("first_day_of_month", _DATE),
+            ("last_day_of_month", _DATE),
+            ("first_day_of_quarter", _DATE),
+            ("last_day_of_quarter", _DATE),
+            ("first_day_of_year", _DATE),
+            ("last_day_of_year", _DATE),
+            ("mmyyyy", _STR),
+            ("mmddyyyy", _STR),
+            ("weekend_indr", _STR),
+        ]
+    ),
     # builder output columns match the reference transforms exactly
     # (extract_transform.py:123-130, :214-220, :319-329, :426-434,
     # :543-551); *_usd amounts that pass through to_usd's CASE become

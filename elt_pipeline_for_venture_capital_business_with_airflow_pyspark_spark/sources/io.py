@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import json as _json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -540,6 +540,28 @@ def data_files(spark: SparkSession, path: str) -> dict[str, int]:
     return dict(sorted(out.items()))
 
 
+def stored_columns(spark: SparkSession, path: str) -> set[str]:
+    """The columns every data file of the table at ``path`` stores, from
+    the parquet footers read through Hadoop (no Spark job); empty for a
+    table with no data file. A read with a declared schema turns a
+    column a file lacks into NULLs; this tells the two apart."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    parquet = jvm.org.apache.parquet.hadoop
+    out: set[str] | None = None
+    for f in _absolute(spark, path, data_files(spark, path)):
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromPath(jvm.org.apache.hadoop.fs.Path(f), conf)
+        )
+        try:
+            schema = reader.getFooter().getFileMetaData().getSchema()
+        finally:
+            reader.close()
+        names = {schema.getFieldName(i) for i in range(schema.getFieldCount())}
+        out = names if out is None else out & names
+    return out or set()
+
+
 def remove_files(spark: SparkSession, files: list[str]) -> None:
     """Delete data files given as Hadoop path strings."""
     hpath = spark._jvm.org.apache.hadoop.fs.Path
@@ -618,7 +640,12 @@ def commit(
     2. create ``_log/<n>.pending`` holding the live files;
     3. write ``add`` with a Spark append (``partition_by`` keeps a
        hive-partitioned layout); the files added are the difference
-       between the listings before and after;
+       between the listings before and after. The write counts its
+       rows (``pyspark.sql.Observation``, no extra job): when ``add``
+       held none and a file of the table stays live, the schema-only
+       file Spark leaves is deleted, so an empty ``add`` adds nothing
+       to a table that has files (a table left with none keeps it, so
+       it still has a schema to read);
     4. publish ``_log/<n>.json`` listing every live file;
     5. delete the removed files, the marker and older manifests.
 
@@ -627,7 +654,7 @@ def commit(
     that recovery deletes. ``add`` may read the table itself (a
     compaction, a merge): its files land under fresh names, and the
     files it reads are removed only after the publish. A commit that
-    adds no file and removes none publishes nothing."""
+    adds no row and removes no file publishes nothing."""
     recover(spark, path)
     _, hpath, fs = hadoop_fs(spark, path)
     log = hpath(f"{path}/{_LOG}")
@@ -642,13 +669,24 @@ def commit(
     n = (published[-1] if published else 0) + 1
     marker = hpath(log, f"{n}.pending")
     _create_json(fs, marker, {"files": list(before)})
+    rows = Observation()
     if add is not None:
-        writer = add.write.mode("append").option("compression", "zstd")
+        writer = add.observe(rows, F.count(F.lit(1)).alias("n")).write
+        writer = writer.mode("append").option("compression", "zstd")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
     live = [f for f in data_files(spark, path) if f not in remove]
-    if remove or set(live) - before.keys():
+    added = [f for f in live if f not in before]
+    kept = [f for f in live if f in before]
+    if added and kept and not rows.get["n"]:
+        # unpublished output of this commit: dropped as recovery would
+        # drop it, not through the delete step of a published commit
+        for f in _absolute(spark, path, added):
+            if not fs.delete(hpath(f), False):
+                raise IOError(f"could not delete {f}")
+        live, added = kept, []
+    if remove or added:
         _publish(fs, hpath(log, f"{n}.json"), live)
         remove_files(spark, _absolute(spark, path, sorted(remove)))
     fs.delete(marker, False)
@@ -681,18 +719,28 @@ def is_committed(spark: SparkSession, path: str) -> bool:
 def append_parquet(df: DataFrame, path: str) -> None:
     """Add ``df`` to the parquet table at ``path`` as ONE new data file
     (a :func:`commit` that removes nothing); every existing file keeps
-    its name and bytes. An empty ``df`` writes nothing (Spark would
-    commit an empty file), so replaying an append whose rows are
-    already in the table leaves it as it is.
+    its name and bytes. An empty ``df`` adds nothing (the commit counts
+    the rows it writes), so replaying an append whose rows are already
+    in the table leaves it as it is. ``df`` is evaluated once, by the
+    write."""
+    commit(df.sparkSession, path, df.coalesce(1))
 
-    ``df`` is persisted for the emptiness probe and the write, so its
-    plan runs once even when it reads ``path`` itself."""
-    df = df.persist()
-    try:
-        if not df.isEmpty():
-            commit(df.sparkSession, path, df.coalesce(1))
-    finally:
-        df.unpersist()
+
+def relative_files(spark: SparkSession, path: str, uris) -> list[str]:
+    """``_metadata.file_path`` URIs of files of the table at ``path``
+    as :func:`data_files` names them (relative, sorted)."""
+    jvm, hpath, _ = hadoop_fs(spark, path)
+    root = _root(spark, path)
+    return sorted(hpath(jvm.java.net.URI(u)).toString()[len(root):] for u in uris)
+
+
+def read_files(
+    spark: SparkSession, path: str, files: list[str], schema: T.StructType
+) -> DataFrame:
+    """The rows of the data files ``files`` (as :func:`data_files`
+    names them) of the table at ``path``, read with ``schema``."""
+    root = _root(spark, path)
+    return spark.read.schema(schema).parquet(*(root + f for f in files))
 
 
 def upsert_parquet_files(
@@ -708,7 +756,8 @@ def upsert_parquet_files(
     only the data files that hold one of those keys (file-level
     copy-on-write; S7, reference staging load.py:94-118).
 
-    One scan of the table's key columns, semi-joined with the keys of
+    One scan of the table's key columns (read with a key-only schema,
+    so no schema-inference job), semi-joined with the keys of
     ``new_df`` and ``delete`` (AQE picks the join strategy from the
     persisted delta's size), lists the touched files
     (``_metadata.file_path``). One :func:`commit` then adds
@@ -717,53 +766,42 @@ def upsert_parquet_files(
     (one when it touched none; none when nothing is left to write), and
     removes the touched files. With no touched file, the common case
     for a day of new facts, the commit is a plain append; an empty
-    ``new_df`` with no ``delete`` skips the scan and writes nothing.
-    Footer min/max cannot stand in for the key scan: keys that arrive
-    spread over the key range overlap every file's range. ``keys``
-    must identify rows.
+    ``new_df`` that touches nothing writes nothing. ``new_df`` is
+    persisted for the key scan and the write. Footer min/max cannot
+    stand in for the key scan: keys that arrive spread over the key
+    range overlap every file's range. ``keys`` must identify rows.
 
     Only a missing path is an empty table (the upsert then writes the
     table); any other read failure (corrupt footer, permissions,
     transient FS error) propagates."""
     recover(spark, path)
-    key_schema = T.StructType([new_df.schema[k] for k in keys])
-    table = read_parquet_if_exists(spark, path, schema=key_schema)
-    if table is None:
+    if not path_exists(spark, path):
         commit(spark, path, merge_upsert(new_df, None, keys, order_by))
         return
-    new_df = new_df.persist()  # read by the probe, the key scan and the merge
+    new_df = new_df.persist()
     gone = None if delete is None else delete.select(*keys).distinct().persist()
     try:
-        no_new = new_df.isEmpty()
-        if no_new and gone is None:
-            return
         probe = new_df.select(*keys)
         if gone is not None:
             probe = probe.unionByName(gone)
         hits = (
-            table.select(*keys, F.col("_metadata.file_path").alias("__file"))
+            read_parquet(spark, path, schema=T.StructType([new_df.schema[k] for k in keys]))
+            .select(*keys, F.col("_metadata.file_path").alias("__file"))
             .join(probe, on=keys, how="left_semi")
             .select("__file")
             .distinct()
             .collect()
         )
-        jvm, hpath, _ = hadoop_fs(spark, path)
-        root = _root(spark, path)
-        touched = sorted(
-            hpath(jvm.java.net.URI(r["__file"])).toString()[len(root):] for r in hits
-        )
+        touched = relative_files(spark, path, [r["__file"] for r in hits])
         old = None
         if touched:
-            old = spark.read.schema(new_df.schema).parquet(*(root + f for f in touched))
+            old = read_files(spark, path, touched, new_df.schema)
             if gone is not None:
                 old = old.join(gone, on=keys, how="left_anti")
         merged = merge_upsert(new_df, old, keys, order_by)
-        add = None
-        if not no_new or (touched and not merged.isEmpty()):
-            # one file for a plain append; a rewrite keeps the touched
-            # files' parallelism instead of funnelling them through one task
-            add = merged.coalesce(max(1, len(touched)))
-        commit(spark, path, add, touched)
+        # one file for a plain append; a rewrite keeps the touched
+        # files' parallelism instead of funnelling them through one task
+        commit(spark, path, merged.coalesce(max(1, len(touched))), touched)
     finally:
         new_df.unpersist()
         if gone is not None:
@@ -849,30 +887,6 @@ def compact_partitioned_parquet(
         )
     commit(spark, path, out, files, partition_by=partition_cols)
     return len(data_files(spark, path))
-
-
-def read_parquet_if_exists(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame | None:
-    """Read a parquet table, returning None ONLY when the path does not
-    exist. Every other failure raises."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return read_parquet(spark, path, schema=schema)
-    except AnalysisException as e:
-        cond = None
-        for attr in ("getCondition", "getErrorClass"):
-            fn = getattr(e, attr, None)
-            if fn is not None:
-                try:
-                    cond = fn()
-                    break
-                except Exception:
-                    pass
-        if cond == "PATH_NOT_FOUND" or "[PATH_NOT_FOUND]" in str(e):
-            return None
-        raise
 
 
 def table_file_stats(spark: SparkSession, path: str) -> dict:

@@ -66,6 +66,53 @@ def _canon_frame(pdf: pd.DataFrame) -> list[tuple[str, ...]]:
     return list(rows)
 
 
+def _frame_diffs(a: pd.DataFrame, b: pd.DataFrame, n: int = 3, parts: int = 64) -> list:
+    """Up to ``n`` differing row pairs between ``_canon_frame(a)`` and
+    ``_canon_frame(b)``; empty exactly when the two are equal. Runs in
+    bounded memory: rows are rendered a slice at a time (a slice keeps
+    the whole frame's dtypes, so every cell renders as in
+    ``_canon_frame``), hash-partitioned into ``parts`` spill files per
+    side, and compared one sorted partition at a time. Equal rows land
+    in the same partition, so the frames are equal exactly when every
+    partition is. Rendering a 10M-row result whole takes several GB of
+    Python strings."""
+    import pickle
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as tmp:
+        for side, pdf in enumerate((a, b)):
+            outs = [open(f"{tmp}/{side}.{p}", "wb") for p in range(parts)]
+            try:
+                for start in range(0, len(pdf), 200_000):
+                    buckets = [[] for _ in range(parts)]
+                    for row in _canon_frame(pdf.iloc[start:start + 200_000]):
+                        buckets[hash(row) % parts].append(row)
+                    for out, rows in zip(outs, buckets):
+                        pickle.dump(rows, out)
+            finally:
+                for out in outs:
+                    out.close()
+
+        def load(side: int, p: int) -> list:
+            rows = []
+            with open(f"{tmp}/{side}.{p}", "rb") as f:
+                while True:
+                    try:
+                        rows += pickle.load(f)
+                    except EOFError:
+                        return sorted(rows)
+
+        diffs: list = []
+        for p in range(parts):
+            ra, rb = load(0, p), load(1, p)
+            if ra != rb:
+                pairs = [(x, y) for x, y in zip(ra, rb) if x != y]
+                diffs += pairs or [(ra[len(rb):][:1], rb[len(ra):][:1])]
+            if len(diffs) >= n:
+                break
+        return diffs[:n]
+
+
 def _tail_queries() -> list[str]:
     qs = list(entry_mod.queries())
     oracles = entry_mod.oracle_sql()

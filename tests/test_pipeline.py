@@ -744,3 +744,186 @@ def test_daily_dim_date_written_only_when_not_committed(spark, staging_dir, tmp_
     rewritten = _data_files(path)
     assert rewritten and set(rewritten).isdisjoint(first)
     assert SIO.is_committed(spark, path)
+
+
+def _jobs_per_table(spark, staging: str, wh: str, ds: str | None = None) -> dict[str, int]:
+    """Spark jobs each warehouse task runs, from the DAG scheduler's job
+    id marks around it."""
+    dag = spark._jsc.sc().dagScheduler()
+    out = {}
+    for name in P.WAREHOUSE_ORDER:
+        before = dag.nextJobId()
+        P.run_warehouse_table(spark, name, staging, wh, ds)
+        out[name] = dag.nextJobId() - before
+    return out
+
+
+# Spark jobs per table on the fixture zone: a full build, then the
+# insert-only daily merge of next_day_staging. A table may run FEWER
+# jobs than budgeted, never more: an extra job (a probe, a count, a
+# schema-inference read, an input evaluated twice) fails here.
+JOB_BUDGET = {
+    "full": {
+        "dim_date": 1, "dim_company": 5, "dim_funds": 5, "dim_people": 5,
+        "fct_investments": 4, "fct_ipos": 2, "fct_acquisition": 2,
+        "bridge_company_people": 8,
+    },
+    "daily": {
+        "dim_date": 0, "dim_company": 7, "dim_funds": 7, "dim_people": 3,
+        "fct_investments": 9, "fct_ipos": 6, "fct_acquisition": 7,
+        "bridge_company_people": 10,
+    },
+}
+
+
+def test_warehouse_tasks_stay_in_job_budget(spark, staging_dir, next_day_staging, tmp_path):
+    wh = str(tmp_path / "wh_jobs")
+    got = {
+        "full": _jobs_per_table(spark, staging_dir, wh),
+        "daily": _jobs_per_table(spark, next_day_staging, wh, DS_NEXT),
+    }
+    over = {
+        (mode, t): (n, JOB_BUDGET[mode][t])
+        for mode, jobs in got.items()
+        for t, n in jobs.items()
+        if n > JOB_BUDGET[mode][t]
+    }
+    assert not over, f"(mode, table): (jobs, budget) {over}"
+
+
+def test_warehouse_schemas_pin_builder_output(spark, staging_dir, tmp_path):
+    """``schemas.WAREHOUSE`` — the schemas persisted tables are read
+    with — equals each builder's output and what a build stores: names,
+    order and types."""
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.plans import (
+        dim_date as DDATE,
+    )
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.plans import (
+        warehouse as WH,
+    )
+
+    def fields(schema) -> list[tuple]:
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    st = P.read_staging(spark, staging_dir)
+    dim_date = DDATE.build_dim_date(spark)
+    company = WH.build_dim_company(st["company"])
+    funds = WH.build_dim_funds(st["funds"], dim_date)
+    people = WH.build_dim_people(st["people"])
+    built = {
+        "dim_date": dim_date,
+        "dim_company": company,
+        "dim_funds": funds,
+        "dim_people": people,
+        "fct_investments": WH.build_fct_investments(
+            st["investments"], st["funding_rounds"], company, funds, dim_date
+        ),
+        "fct_ipos": WH.build_fct_ipos(st["ipos"], company, dim_date),
+        "fct_acquisition": WH.build_fct_acquisition(st["acquisition"], company, dim_date),
+        "bridge_company_people": WH.build_bridge_company_people(
+            st["relationships"], people, company
+        ),
+    }
+    assert set(schemas.WAREHOUSE) == set(P.WAREHOUSE_ORDER)
+    wh = str(tmp_path / "wh_schemas")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    for t in P.WAREHOUSE_ORDER:
+        want = fields(schemas.WAREHOUSE[t])
+        assert fields(built[t].schema) == want, t
+        assert fields(spark.read.parquet(f"{wh}/{t}").schema) == want, t
+
+
+def test_bridge_persisted_without_natural_key_is_written_in_full(
+    spark, staging_dir, next_day_staging, tmp_path
+):
+    """A bridge persisted before it carried ``dd_relationship_id`` is
+    rewritten in full by the next daily run, never merged with NULL
+    natural keys (a read with the declared schema would show the
+    missing column as NULLs)."""
+    wh, ref = str(tmp_path / "wh_legacy"), str(tmp_path / "wh_legacy_ref")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    path = f"{wh}/bridge_company_people"
+    legacy = spark.createDataFrame(
+        spark.read.parquet(path).drop("dd_relationship_id").collect(),
+        schemas.WAREHOUSE["bridge_company_people"][:-1],
+    )
+    SIO.replace_table(spark, legacy, path)
+    assert "dd_relationship_id" not in SIO.stored_columns(spark, path)
+
+    P.run_warehouse_pipeline(spark, next_day_staging, wh, ds=DS_NEXT)
+    assert "dd_relationship_id" in SIO.stored_columns(spark, path)
+    bridge = spark.read.parquet(path)
+    assert bridge.filter(bridge["dd_relationship_id"].isNull()).count() == 0
+    assert sorted(r[0] for r in bridge.select("sk_company_people_id").collect()) == [1, 2]
+    P.run_warehouse_pipeline(spark, next_day_staging, ref)
+    assert _natural_snapshot_tables(spark, wh) == _natural_snapshot_tables(spark, ref)
+
+
+def _fct_investments_by_dim_date_join(investments, funding_rounds, dim_company, dim_funds, dim_date):
+    """``build_fct_investments`` as it was when it checked the round's
+    date with an inner join to ``dim_date`` (J4): the reference the
+    span predicate must equal."""
+    from pyspark.sql import functions as F
+
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.functions import (
+        expr as E,
+    )
+
+    df = investments.join(
+        dim_company.select("sk_company_id", "nk_company_id"),
+        investments["funded_object_id"] == F.col("nk_company_id"),
+    )
+    df = df.join(
+        dim_funds.select("sk_fund_id", "nk_fund_id"),
+        df["investor_object_id"] == F.col("nk_fund_id"),
+    )
+    fr = funding_rounds.withColumn("funded_at", E.date_key("funded_at"))
+    fr = fr.join(dim_date.select("date_id"), fr["funded_at"] == F.col("date_id"))
+    df = df.join(
+        fr.select(
+            "funding_round_id", "funding_round_type", "participants", "raised_amount_usd",
+            "pre_money_valuation_usd", "post_money_valuation_usd", "funded_at",
+        ),
+        on="funding_round_id",
+        how="left",
+    )
+    return df.select(
+        F.col("investment_id").alias("dd_investment_id"), "sk_company_id", "sk_fund_id",
+        "funded_at", "funding_round_type", F.col("participants").alias("num_of_participants"),
+        "raised_amount_usd", "pre_money_valuation_usd", "post_money_valuation_usd",
+    )
+
+
+def test_fct_investments_span_predicate_equals_dim_date_join(spark):
+    """The round-date check of ``build_fct_investments`` (a predicate on
+    the spine's span) keeps exactly the rounds the inner join to
+    ``dim_date`` kept: dates before the spine, on its first and last
+    day, past its end, and NULL."""
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.plans import (
+        dim_date as DDATE,
+    )
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.plans import (
+        warehouse as WH,
+    )
+
+    first = dt.date.fromisoformat(DDATE.EPOCH_START)
+    last = first + dt.timedelta(days=DDATE.SPAN_DAYS - 1)
+    funded = [first - dt.timedelta(days=1), first, last, last + dt.timedelta(days=1), None]
+    rounds = [
+        (100 + i, "c:1", d, "series-a", "a", Decimal("5.00"), Decimal("5.00"), "USD",
+         None, None, None, None, None, None, "3", True, False, None, TS, TS)
+        for i, d in enumerate(funded)
+    ]
+    investments = [(1000 + i, 100 + i, "c:1", "f:1", TS, TS) for i in range(len(funded))]
+    inv = spark.createDataFrame(investments, schemas.STAGING["investments"])
+    fr = spark.createDataFrame(rounds, schemas.STAGING["funding_rounds"])
+    company = spark.createDataFrame([(1, "c:1", "company", None, None, None, None)], schemas.WAREHOUSE["dim_company"])
+    funds = spark.createDataFrame([(1, "f:1", "one", None, None, None)], schemas.WAREHOUSE["dim_funds"])
+    dim_date = DDATE.build_dim_date(spark)
+
+    got = WH.build_fct_investments(inv, fr, company, funds, dim_date)
+    want = _fct_investments_by_dim_date_join(inv, fr, company, funds, dim_date)
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in want.schema]
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    assert [r[3] for r in rows] == [None, 19500101, 20291231, None, None]

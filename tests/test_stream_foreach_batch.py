@@ -80,7 +80,6 @@ def test_streaming_dim_merge_key_continuity(spark, tmp_path):
 
     from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.surrogate import (
         add_surrogate_key,
-        max_key,
     )
 
     src = tmp_path / "stg_stream"
@@ -98,13 +97,13 @@ def test_streaming_dim_merge_key_continuity(spark, tmp_path):
 
     def sink(batch_df, batch_id):
         s = batch_df.sparkSession
-        old = SIO.read_parquet_if_exists(s, tgt)
-        if old is None:
+        if not SIO.path_exists(s, tgt):
             SIO.write_parquet(add_surrogate_key(batch_df, "sk", ["nk"]), tgt)
             return
+        old = SIO.read_parquet(s, tgt)
         unseen = batch_df.join(old.select("nk"), on="nk", how="left_anti")
         fresh = add_surrogate_key(
-            unseen, "sk", ["nk"], offset=max_key(old, "sk")
+            unseen, "sk", ["nk"], offset=old.select("sk")
         ).select("sk", "nk", "name")
         SIO.replace_table(s, old.select("sk", "nk", "name").unionByName(fresh), tgt)
 
