@@ -42,7 +42,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
@@ -753,6 +753,71 @@ class ConnectedComponentsDidNotConverge(RuntimeError):
     degraded answer."""
 
 
+def _large_star(edges: DataFrame, unsettled: Observation | None = None) -> DataFrame:
+    """LARGE-STAR over the symmetrized ``(x, p)`` edges, as one window
+    partitioned by node ``u`` and ordered by neighbor ``v``:
+    ``m = min(Γ(u) ∪ {u})`` (the running min of an ascending window is
+    the partition min), and every distinct neighbor ``v > u`` emits
+    ``(v, m)``. Duplicate rows are dropped inside the window (``lag``),
+    so no round needs a ``distinct`` of its own.
+
+    ``unsettled`` (if given) observes, in the same pass, how many rows
+    show that the INPUT is not yet the fixpoint: a node with both a
+    parent and a child (``v > u`` but ``m != u``) or a child with two
+    parents (``v < u`` but ``v != m``)."""
+    sym = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("x").alias("u"), F.col("p").alias("v")),
+                F.struct(F.col("p").alias("u"), F.col("x").alias("v")),
+            )
+        ).alias("e")
+    ).select("e.u", "e.v")
+    w = Window.partitionBy("u").orderBy("v")
+    star = sym.select(
+        "u",
+        "v",
+        F.least("u", F.min("v").over(w)).alias("m"),
+        F.lag("v").over(w).alias("prev"),
+    )
+    if unsettled is not None:
+        star = star.observe(
+            unsettled,
+            F.count(
+                F.when(
+                    F.when(F.col("v") > F.col("u"), F.col("m") != F.col("u"))
+                    .otherwise(F.col("v") != F.col("m")),
+                    1,
+                )
+            ).alias("rows"),
+        )
+    return star.filter(
+        (F.col("v") > F.col("u"))
+        & (F.col("prev").isNull() | (F.col("prev") != F.col("v")))
+    ).select(F.col("v").alias("x"), F.col("m").alias("p"))
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """SMALL-STAR over child→parent ``(x, p)`` edges, as one window
+    partitioned by child ``x`` and ordered by parent: with ``mp`` the
+    least parent, each distinct row emits ONE edge, ``(x, mp)`` from the
+    row ``p = mp`` and ``(p, mp)`` from every other parent."""
+    w = Window.partitionBy("x").orderBy("p")
+    star = edges.select(
+        "x", "p",
+        F.min("p").over(w).alias("mp"),
+        F.lag("p").over(w).alias("prev"),
+    )
+    return star.filter(
+        F.col("prev").isNull() | (F.col("prev") != F.col("p"))
+    ).select(
+        F.when(F.col("p") == F.col("mp"), F.col("x"))
+        .otherwise(F.col("p"))
+        .alias("x"),
+        F.col("mp").alias("p"),
+    )
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -770,15 +835,16 @@ def connected_components(
     Algorithm: alternating LARGE-STAR / SMALL-STAR (Kiveris et al.
     2014, "Connected Components in MapReduce and Beyond" — public
     algorithm). It contracts path length by roughly half per round
-    and provably converges in O(log² n) rounds on any graph, each
-    round two groupBys over the current edge set — so an adversarial
-    near-dup CHAIN (serial plagiarism: A≈B≈C≈…, each pair near-dup
-    but the ends unrelated) costs O(log² d) rounds, not the O(d) of
-    label propagation.
+    and provably converges in O(log² n) rounds on any graph — so an
+    adversarial near-dup CHAIN (serial plagiarism: A≈B≈C≈…, each pair
+    near-dup but the ends unrelated) costs O(log² d) rounds, not the
+    O(d) of label propagation.
 
-    Mechanics (edges held DIRECTED child→parent with parent < child,
-    so every step strictly decreases labels and termination is
-    well-founded):
+    Mechanics (edges held DIRECTED child→parent ``(x, p)`` with
+    ``p < x``, so every step strictly decreases labels and termination
+    is well-founded); both steps are window-min passes
+    (:func:`_large_star`, :func:`_small_star`) that drop duplicate rows
+    in the window:
 
     - large-star(u): over the SYMMETRIZED neighborhood,
       m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u —
@@ -787,93 +853,47 @@ def connected_components(
       emit (p, m) for every other parent p and (x, m) — x's parent
       list collapses into a star on its minimum.
 
-    Fixpoint = every edge is (node, component-min). Per-round
-    ``localCheckpoint`` cuts the lineage (an unbounded iterative plan
-    otherwise recompiles and recomputes from scratch every round).
+    Fixpoint = every component is a star on its minimum: no node is
+    both a parent and a child, and no child has two parents. Both
+    steps are the identity there, and a large-star window sees both
+    conditions row by row. So one materialized pass (one
+    ``localCheckpoint``, which also cuts the lineage) runs a round's
+    large-star and small-star plus the NEXT round's large-star, which
+    observes (``pyspark.sql.Observation``, no extra job) whether the
+    round's output was the fixpoint. The first pass starts from the
+    raw edges: large-star reads each edge's neighborhood in either
+    orientation and ignores duplicates, so no canonicalizing pass runs
+    before it. A graph that converges in one round costs one pass;
+    later passes are small-star + large-star.
 
     Only EDGES iterate: a node with no edges provably labels itself,
     so nodes meet the result once, in the final left join, never in
     the rounds. Edges whose endpoints are not both in ``nodes`` are
-    dropped before the loop, so every label is a node id. The output
-    has one row per ``nodes`` row.
+    dropped before the first pass, so every label is a node id. At the
+    fixpoint the last pass's output holds exactly one ``(x, root)`` row
+    per non-root node, so the output has one row per ``nodes`` row.
 
-    Exhausting ``max_iter`` without the fixpoint raises
+    Exhausting ``max_iter`` rounds without the fixpoint raises
     :class:`ConnectedComponentsDidNotConverge`. At the default budget
     this cannot fire on real graphs — 50 rounds covers n beyond any
     physical corpus (O(log² n)) — so the raise guards misconfigured
     small budgets. ``stats`` (if a dict is passed) records ``rounds``
     and ``converged``.
     """
-    sym = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-    ).filter(F.col("a") != F.col("b"))
-
     all_nodes = nodes.select(F.col(id_col).alias("id"))
-    # canonical directed form: (x child, p parent), p < x, over edges
-    # whose endpoints are BOTH nodes — a dangling endpoint would
-    # otherwise become the label of real nodes. sym holds every edge
-    # in both orientations, so once rows whose `a` is not a node are
-    # dropped, an edge keeps both orientations (min(a) != max(a)) iff
-    # neither endpoint dangles. The groupBy is the dedup of the
-    # canonical pairs, so the restriction costs one semi-join.
-    cur = (
-        sym.join(all_nodes.select(F.col("id").alias("a")), "a", "semi")
-        .groupBy(F.greatest("a", "b").alias("x"), F.least("a", "b").alias("p"))
-        .agg((F.min("a") != F.max("a")).alias("__both"))
-        .filter(F.col("__both"))
-        .select("x", "p")
-        .localCheckpoint(eager=True)
+    cur = _large_star(
+        edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("p"))
+        .filter(F.col("x") != F.col("p"))
+        .join(all_nodes.select(F.col("id").alias("x")), "x", "semi")
+        .join(all_nodes.select(F.col("id").alias("p")), "p", "semi")
     )
     rounds = 0
     converged = False
-    for _ in range(max_iter):
+    while rounds < max_iter and not converged:
         rounds += 1
-        # large-star over the symmetrized current edges
-        s = cur.select(F.col("x").alias("u"), F.col("p").alias("v")).unionByName(
-            cur.select(F.col("p").alias("u"), F.col("x").alias("v"))
-        )
-        mins = s.groupBy("u").agg(F.min("v").alias("mv"))
-        m = F.least("u", "mv")
-        # no distinct here: duplicate (x, p) rows are harmless to the
-        # min-aggregations below and the round's closing distinct
-        # dedups the output — dropping it removes a shuffle per round
-        large = (
-            s.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("x"), m.alias("p"))
-        )
-        # small-star over the directed parent lists
-        pm = large.groupBy("x").agg(F.min("p").alias("mp"))
-        joined = large.join(pm, "x")
-        small = (
-            joined.filter(F.col("p") != F.col("mp"))
-            .select(F.col("p").alias("x"), F.col("mp").alias("p"))
-            .unionByName(joined.select("x", F.col("mp").alias("p")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # fixpoint probe, STRUCTURAL (round-12): the alternation's
-        # fixpoint is exactly the canonical star forest — p < x on
-        # every edge, so a component whose parents never appear as
-        # children is a star rooted at its min, and replaying either
-        # star step on a star forest is the identity (large-star:
-        # every child's neighborhood min is the root; small-star:
-        # single-parent lists collapse to themselves). Probing "no
-        # parent is also a child" is one semi-join + isEmpty over the
-        # just-checkpointed frame — far cheaper than the original
-        # two-sided exceptAll set compare, and it fires the SAME
-        # round (equivalence + property tests vs union-find pin it)
-        if (
-            small.select("p")
-            .join(small.select(F.col("x").alias("p")), "p", "semi")
-            .isEmpty()
-        ):
-            cur = small
-            converged = True
-            break
-        cur = small
+        unsettled = Observation()
+        cur = _large_star(_small_star(cur), unsettled).localCheckpoint(eager=True)
+        converged = unsettled.get["rows"] == 0
     if stats is not None:
         stats["rounds"] = rounds
         stats["converged"] = converged
@@ -882,14 +902,9 @@ def connected_components(
             f"connected_components did not converge within "
             f"max_iter={max_iter} rounds; labels are NOT component minima"
         )
-
-    # at fixpoint every non-root node carries exactly one parent (the
-    # min is a no-op pass over single-parent rows); roots and nodes
-    # without edges have none and label themselves
-    parent = cur.groupBy(F.col("x").alias("id")).agg(F.min("p").alias("comp"))
-    return all_nodes.join(parent, "id", "left").select(
-        "id", F.coalesce("comp", "id").alias("component")
-    )
+    return all_nodes.join(
+        cur.select(F.col("x").alias("id"), F.col("p").alias("comp")), "id", "left"
+    ).select("id", F.coalesce("comp", "id").alias("component"))
 
 
 def survivors_from_edges(

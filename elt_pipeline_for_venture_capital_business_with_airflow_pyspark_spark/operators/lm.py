@@ -35,19 +35,20 @@ bit-for-bit against an ANSI-SQL oracle:
   single-rounded identically in both engines — the same discipline as
   ``text_pmi_pairs`` ("ln is left to the caller").
 
-Scale posture (100 TB): one corpus scan builds the n-gram tables
-(map-combinable groupBys); score arithmetic is attached to the
-TABLES (trigram joins its context-bigram count, bigram joins its
-context-unigram count) before the position stream joins them, so the
-wide position frame takes exactly three hash joins and one final
-per-doc groupBy. The LM trains on a caller-chosen corpus frame
-(deterministic — no external model file); CCNet trains on Wikipedia
-instead, which is a model-asset choice, not an algorithmic one. The
-registry entries train on the ``doc_id % 5 != 0`` corpus and score
-the held-out shard — the same daily-cadence split the incremental
-LSH lifecycle uses — so backoff and OOV are genuinely exercised
-(a self-trained LM sees every scored trigram at least once, its own
-occurrence). BIGINT headroom: the
+Scale posture (100 TB): the training corpus is tokenized and exploded
+once and ONE map-combinable aggregation counts every n-gram of order
+0..3 (:func:`_ngram_counts`; order 0 counts the tokens). Score
+arithmetic is attached to those counts (one join of the counts with
+their own context counts) before the position stream joins them, so
+the wide position frame takes three lookups of the one score table
+and one final per-doc groupBy. The LM trains on a caller-chosen corpus
+frame (deterministic — no external model file); CCNet trains on
+Wikipedia instead, which is a model-asset choice, not an algorithmic
+one. The registry entries train on the ``doc_id % 5 != 0`` corpus and
+score the held-out shard — the same daily-cadence split the
+incremental LSH lifecycle uses — so backoff and OOV are genuinely
+exercised (a self-trained LM sees every scored trigram at least once,
+its own occurrence). BIGINT headroom: the
 ``num << 30`` product needs ``num < 2**33``; beyond ~8.6e9
 occurrences of a single n-gram (deep 100 TB territory) drop the
 fixed point to ``<< 20`` or lift to DECIMAL(38,0) — noted here so
@@ -133,116 +134,149 @@ def lm_score_stupid_backoff(
     toks = docs.select(
         F.col(id_col).alias("id"), _tokens(text_col).alias("ts")
     )
-    uni, bi, tri = _ngram_count_tables(train_toks)
-    return _score_backoff_from_counts(toks, uni, bi, tri)
+    return _score_backoff_from_counts(toks, _ngram_counts(train_toks))
 
 
-_TRI_EXPR = (
-    "transform(sequence(3, size(ts)), i -> "
-    "struct(element_at(ts, i-2) as w2, element_at(ts, i-1) as w1, "
-    "element_at(ts, i) as w))"
-)
+def _gram(k: int, g: F.Column, ctx: F.Column) -> F.Column:
+    return F.struct(F.lit(k).alias("k"), g.alias("g"), ctx.alias("ctx"))
+
+
+def _ngram_counts(train_toks: DataFrame) -> DataFrame:
+    """The LM's entire trained state as ONE aggregate ``(k, g, ctx,
+    c)``: every n-gram of a tokenized corpus frame (one column ``ts``)
+    with its exact BIGINT count ``c``. ``k`` is the order (0..3), ``g``
+    the n-gram's tokens joined by single spaces (a token never holds a
+    space, so ``g`` alone identifies the n-gram across orders) and
+    ``ctx`` its context, ``g`` without the last token. The order-0
+    n-gram ``""`` occurs once per token, so its count is the token
+    total T.
+
+    Each token position emits the n-grams that end at it, so every
+    document is exploded once and one map-combinable groupBy counts
+    all orders; every consumer of the counts (the score table, the
+    persisted tables) reads that one exchange. Plain counts are
+    ADDITIVE: the counts of corpus ∪ shard are the per-key sums of the
+    two, which is what makes the persisted index appendable
+    (:func:`lm_index_append`)."""
+    i = F.col("i")
+    w, w1, w2 = F.col("w"), F.get("ts", i - 1), F.get("ts", i - 2)
+    # concat_ws keeps every key non-nullable: a nullable ctx would give
+    # the score table's context join an IS NOT NULL filter that lands
+    # below this aggregation on one side only, and the two sides would
+    # stop sharing one exchange
+    grams = F.array(
+        _gram(0, F.lit(""), F.lit("")),
+        _gram(1, w, F.lit("")),
+        _gram(2, F.concat_ws(" ", w1, w), F.concat_ws(" ", w1)),
+        _gram(3, F.concat_ws(" ", w2, w1, w), F.concat_ws(" ", w2, w1)),
+    )
+    return (
+        train_toks.select("ts", F.posexplode("ts").alias("i", "w"))
+        # position i (0-based) ends the n-grams of order 0..min(i + 1, 3)
+        .select(F.explode(F.slice(grams, 1, F.least(i, F.lit(2)) + 2)).alias("x"))
+        .groupBy("x.k", "x.g", "x.ctx")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
 def _ngram_count_tables(
     train_toks: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The LM's entire trained state: exact BIGINT n-gram count
-    tables ``uni (w, cu)``, ``bi (w1, w, cb)``, ``tri (w2, w1, w,
-    ct)`` from a tokenized corpus frame (one column ``ts``). Pure
-    map-combinable aggregations — and, being plain counts, ADDITIVE:
-    the counts of corpus ∪ shard are the per-key sums of the two,
-    which is what makes the persisted index appendable
-    (:func:`lm_index_append`)."""
-    uni = (
-        train_toks.select(F.explode("ts").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu"))
+    """The persisted form of :func:`_ngram_counts`: ``uni (w, cu)``,
+    ``bi (w1, w, cb)``, ``tri (w2, w1, w, ct)``. Each is a filter on
+    the order ``k``, which the optimizer pushes below the aggregation,
+    so writing one table aggregates only its own order."""
+    counts = _ngram_counts(train_toks)
+    t = F.split("g", " ")
+    return (
+        counts.filter("k = 1").select(
+            F.col("g").alias("w"), F.col("c").alias("cu")
+        ),
+        counts.filter("k = 2").select(
+            t[0].alias("w1"), t[1].alias("w"), F.col("c").alias("cb")
+        ),
+        counts.filter("k = 3").select(
+            t[0].alias("w2"), t[1].alias("w1"), t[2].alias("w"),
+            F.col("c").alias("ct"),
+        ),
     )
-    bi = (
-        train_toks.filter(F.size("ts") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(2, size(ts)), i -> "
-                    "struct(element_at(ts, i-1) as w1, element_at(ts, i) as w))"
-                )
-            ).alias("g")
-        )
-        .select("g.w1", "g.w")
-        .groupBy("w1", "w")
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-    tri = (
-        train_toks.filter(F.size("ts") >= 3)
-        .select(F.explode(F.expr(_TRI_EXPR)).alias("g"))
-        .select("g.w2", "g.w1", "g.w")
-        .groupBy("w2", "w1", "w")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
-    return uni, bi, tri
 
 
-def _score_backoff_from_counts(
-    toks: DataFrame, uni: DataFrame, bi: DataFrame, tri: DataFrame
+def _counts_from_tables(
+    uni: DataFrame, bi: DataFrame, tri: DataFrame
 ) -> DataFrame:
+    """The inverse of :func:`_ngram_count_tables`: the three persisted
+    tables as one :func:`_ngram_counts` frame, the token total summed
+    from the unigrams."""
+    def rows(table: DataFrame, k: int, words: list[str], c: str) -> DataFrame:
+        return table.select(
+            F.lit(k).alias("k"),
+            F.concat_ws(" ", *words).alias("g"),
+            F.concat_ws(" ", *words[:-1]).alias("ctx"),
+            F.col(c).alias("c"),
+        )
+
+    return (
+        rows(uni, 1, ["w"], "cu")
+        .unionByName(rows(bi, 2, ["w1", "w"], "cb"))
+        .unionByName(rows(tri, 3, ["w2", "w1", "w"], "ct"))
+        .unionByName(uni.agg(
+            F.lit(0).alias("k"), F.lit("").alias("g"), F.lit("").alias("ctx"),
+            F.sum("cu").alias("c"),
+        ))
+    )
+
+
+def _score_backoff_from_counts(toks: DataFrame, counts: DataFrame) -> DataFrame:
     """Stupid-backoff scoring of a tokenized ``(id, ts)`` frame
-    against count tables from ANY source — built in-plan
+    against :func:`_ngram_counts` from ANY source — aggregated in-plan
     (:func:`lm_score_stupid_backoff`) or read back from a persisted
     index (:func:`lm_index_score`); the arithmetic is identical by
     construction, so incremental == full holds bit-for-bit."""
-    total = uni.agg(F.sum("cu").alias("t"))
-    tri_pos = (
-        toks.filter(F.size("ts") >= 3)
-        .select("id", F.explode(F.expr(_TRI_EXPR)).alias("g"))
-        .select("id", "g.w2", "g.w1", "g.w")
-    )
-
     fp = 1 << FP_BITS
 
-    # score tables: fixed-point fractions attached to the n-gram
-    # tables (small) before the position stream (large) joins them.
-    # A trigram position's context bigram (w2, w1) always exists in
-    # the bigram table (it occurs at that very position), and likewise
-    # c(w1) and c(w) in the unigram table — the left joins below can
-    # only miss at the N-GRAM level, which is exactly the backoff.
-    tri_score = (
-        tri.join(
-            bi.select(
-                F.col("w1").alias("w2"),
-                F.col("w").alias("w1"),
-                F.col("cb").alias("cbc"),
-            ),
-            ["w2", "w1"],
-        )
-        .select(
-            "w2", "w1", "w",
-            F.greatest(
-                F.expr(f"(ct * {fp}L) div cbc"), F.lit(1).cast("long")
-            ).alias("m_tri"),
-        )
-    )
-    bi_score = (
-        bi.join(uni.select(F.col("w").alias("w1"), F.col("cu").alias("cuc")), "w1")
-        .select(
-            "w1", "w",
-            F.greatest(
-                F.expr(f"(2 * cb * {fp}L) div (5 * cuc)"),
-                F.lit(1).cast("long"),
-            ).alias("m_bi"),
-        )
-    )
-    uni_score = uni.crossJoin(F.broadcast(total)).select(
-        "w",
+    # the score table: each n-gram joins the count of its context
+    # (T for a unigram) in one join of the counts with themselves, on
+    # the small table before the position stream (large) joins it. The
+    # backoff penalty alpha = 2/5 per level below the trigram is folded
+    # into the fraction: trigram ct/cbc, bigram (2*cb)/(5*cuc), unigram
+    # (4*cu)/(25*T). A scored n-gram's context always exists in the
+    # counts (it occurs at that very position), so a lookup below can
+    # only miss at the N-GRAM level, which is exactly the backoff. The
+    # order-0 row is its own context and is never looked up.
+    score = counts.join(
+        counts.select(F.col("g").alias("ctx"), F.col("c").alias("cc")), "ctx"
+    ).select(
+        "g",
         F.greatest(
-            F.expr(f"(4 * cu * {fp}L) div (25 * t)"), F.lit(1).cast("long")
-        ).alias("m_uni"),
+            F.expr(
+                f"(CASE k WHEN 3 THEN 1L WHEN 2 THEN 2L ELSE 4L END * c * {fp}L)"
+                f" div (CASE k WHEN 3 THEN 1L WHEN 2 THEN 5L ELSE 25L END * cc)"
+            ),
+            F.lit(1).cast("long"),
+        ).alias("m"),
     )
 
+    i = F.col("i")
+    w, w1, w2 = F.col("w"), F.get("ts", i - 1), F.get("ts", i - 2)
+    pos = (
+        toks.select("id", "ts", F.posexplode("ts").alias("i", "w"))
+        .filter(i >= 2)
+        .select(
+            "id",
+            F.concat_ws(" ", w2, w1, w).alias("g3"),
+            F.concat_ws(" ", w1, w).alias("g2"),
+            w.alias("g1"),
+        )
+    )
+
+    def level(n: int, m: str) -> DataFrame:
+        return score.select(F.col("g").alias(f"g{n}"), F.col("m").alias(m))
+
     scored = (
-        tri_pos.join(tri_score, ["w2", "w1", "w"], "left")
-        .join(bi_score, ["w1", "w"], "left")
-        .join(uni_score, ["w"], "left")
+        pos.join(level(3, "m_tri"), "g3", "left")
+        .join(level(2, "m_bi"), "g2", "left")
+        .join(level(1, "m_uni"), "g1", "left")
         .select(
             "id",
             # OOV target word (never in training): fixed-point floor
@@ -574,14 +608,15 @@ def lm_index_score(
     text_col: str = "text",
 ) -> DataFrame:
     """Score documents against the PERSISTED index — the daily-cadence
-    read path: three parquet count-table scans + the same three hash
-    joins and one per-doc groupBy as the in-plan scorer, never a
-    training scan. Output schema and arithmetic identical to
-    :func:`lm_score_stupid_backoff` (both call
+    read path: the three parquet count tables, read back as one counts
+    frame, feed the same score table, lookups and per-doc groupBy as
+    the in-plan scorer, never a training scan. Output schema and
+    arithmetic identical to :func:`lm_score_stupid_backoff` (both call
     :func:`_score_backoff_from_counts`)."""
     spark = docs.sparkSession
-    uni, bi, tri = lm_index_read(spark, path)
     toks = docs.select(
         F.col(id_col).alias("id"), _tokens(text_col).alias("ts")
     )
-    return _score_backoff_from_counts(toks, uni, bi, tri)
+    return _score_backoff_from_counts(
+        toks, _counts_from_tables(*lm_index_read(spark, path))
+    )

@@ -1325,8 +1325,9 @@ def _lm_index_score_sql() -> str:
 def _text_lm_index_score(spark: SparkSession, sf: str) -> DataFrame:
     """SCORE-FROM-INDEX leg (operators/lm.lm_index_score): the
     held-out doc_id%5 == 0 shard is scored against the PERSISTED
-    count tables — three parquet scans + three hash joins + one
-    per-doc groupBy, no training scan anywhere in the plan. The
+    count tables — three parquet scans read back as one counts frame,
+    the score table's context join, three lookups and one per-doc
+    groupBy, no training scan anywhere in the plan. The
     index state is build({1,2}) ⊕ append({3,4}) ≡ train on
     doc_id%5 != 0, so this entry shares text_lm_perplexity's EXACT
     oracle: the daily read path must reproduce the in-plan trained

@@ -41,6 +41,10 @@ GRAPHS = {
     ),
     "duplicate_and_reversed_edges": (5, [(0, 1), (1, 0), (0, 1), (2, 3)]),
     "self_loops_only": (4, [(1, 1), (2, 2)]),
+    # after one round no node is both a parent and a child, yet node 5
+    # still hangs off root 2 and node 3 off roots 1 and 2: the fixpoint
+    # also needs every child to have one parent
+    "two_roots_after_one_round": (6, [(1, 3), (3, 4), (4, 5), (5, 2)]),
     "empty": (5, []),
 }
 

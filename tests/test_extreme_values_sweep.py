@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 
-from test_oracle_tail import _frame_diffs
+from test_oracle_tail import _duck_slices, _frame_diffs, _spark_slices
 
 pytestmark = pytest.mark.slow
 
@@ -149,17 +149,18 @@ def test_extreme_values_match_oracle(spark, extreme_dir, duck_extreme, name):
     fn = entry_mod.queries()[name]
     sql = entry_mod.oracle_sql()[name]
 
-    sdf = fn(spark, extreme_dir).toPandas()
-    odf = duck_extreme.execute(sql).df()
-
-    assert sorted(sdf.columns) == sorted(odf.columns), (
-        f"{name}: cols spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
-    )
-    assert len(sdf) == len(odf), (
-        f"{name}: rowcount on extreme input spark={len(sdf)} oracle={len(odf)}"
-    )
     # text_pack_chunks legitimately fans the injected bigint n_chars out
-    # into 15.1M chunk rows: compare in bounded memory
-    diffs = _frame_diffs(sdf, odf)
+    # into 15.1M chunk rows: both results stream in slices and compare
+    # in bounded memory
+    sdf = fn(spark, extreme_dir)
+    res = duck_extreme.execute(sql)
+    ocols = [d[0] for d in res.description]
+    assert sorted(sdf.columns) == sorted(ocols), (
+        f"{name}: cols spark={sorted(sdf.columns)} oracle={sorted(ocols)}"
+    )
+    srows, orows, diffs = _frame_diffs(_spark_slices(sdf), _duck_slices(res))
+    assert srows == orows, (
+        f"{name}: rowcount on extreme input spark={srows} oracle={orows}"
+    )
     if diffs:
         raise AssertionError(f"{name}: extreme-value results differ: {diffs}")

@@ -15,6 +15,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -66,41 +67,124 @@ def _canon_frame(pdf: pd.DataFrame) -> list[tuple[str, ...]]:
     return list(rows)
 
 
-def _frame_diffs(a: pd.DataFrame, b: pd.DataFrame, n: int = 3, parts: int = 64) -> list:
-    """Up to ``n`` differing row pairs between ``_canon_frame(a)`` and
-    ``_canon_frame(b)``; empty exactly when the two are equal. Runs in
-    bounded memory: rows are rendered a slice at a time (a slice keeps
-    the whole frame's dtypes, so every cell renders as in
-    ``_canon_frame``), hash-partitioned into ``parts`` spill files per
-    side, and compared one sorted partition at a time. Equal rows land
-    in the same partition, so the frames are equal exactly when every
-    partition is. Rendering a 10M-row result whole takes several GB of
-    Python strings."""
+def _spark_slices(sdf) -> Iterator[pd.DataFrame]:
+    """The rows of ``sdf`` as pandas slices, one per Arrow batch as the
+    batches arrive, each converted column by column as ``toPandas()``
+    converts the whole result. The result is never held whole in
+    Python; ``_frame_diffs`` gives the slices the whole result's
+    dtypes."""
+    import pyarrow as pa
+    from pyspark.errors.exceptions.captured import unwrap_spark_exception
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+    from pyspark.sql.pandas.types import _create_converter_to_pandas
+    from pyspark.util import _load_from_socket
+
+    conf = sdf.sparkSession._jconf
+    struct_mode = conf.pandasStructHandlingMode()
+    convert = [
+        _create_converter_to_pandas(
+            f.dataType,
+            f.nullable,
+            timezone=conf.sessionLocalTimeZone(),
+            struct_in_pandas="dict" if struct_mode == "legacy" else struct_mode,
+            error_on_duplicated_field_names=struct_mode == "legacy",
+        )
+        for f in sdf.schema.fields
+    ]
+    port, secret, server = sdf._jdf.collectAsArrowToPython()
+    try:
+        # batches arrive in completion order; the last item is the
+        # batch order, which an order-insensitive compare ignores
+        for batch in _load_from_socket((port, secret), ArrowCollectSerializer()):
+            if not isinstance(batch, pa.RecordBatch) or batch.num_rows == 0:
+                continue
+            pdf = batch.rename_columns(
+                [f"col_{i}" for i in range(batch.num_columns)]
+            ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+            yield pd.concat(
+                [
+                    conv(pdf[c]).rename(name)
+                    for conv, c, name in zip(convert, pdf.columns, sdf.columns)
+                ],
+                axis="columns",
+            )
+    finally:
+        with unwrap_spark_exception():
+            server.getResult()
+
+
+def _duck_slices(res, vectors: int = 100) -> Iterator[pd.DataFrame]:
+    """The rows of an executed DuckDB result as pandas slices of
+    ``vectors`` × 2048 rows, each converted as ``.df()`` converts the
+    whole result."""
+    while True:
+        pdf = res.fetch_df_chunk(vectors)
+        if pdf.empty:
+            return
+        yield pdf
+
+
+def _frame_diffs(
+    a: Iterable[pd.DataFrame], b: Iterable[pd.DataFrame], n: int = 3, parts: int = 64
+) -> tuple[int, int, list]:
+    """Row counts of the two results given as streams of pandas
+    slices, and up to ``n`` differing row pairs between their
+    ``_canon_frame`` renderings (empty exactly when the two are
+    equal), computed in bounded memory.
+
+    A column's pandas dtype depends on the rows converted with it (an
+    integer column with a NULL converts to float64 and renders
+    ``1.0``), so each side runs twice over its slices: the first pass
+    spills them to disk and resolves every column's dtype over all of
+    them, as concatenating the slices would; the second renders each
+    slice with those dtypes, so every cell renders as in
+    ``_canon_frame`` of the whole result, and hash-partitions the rows
+    into ``parts`` spill files. Equal rows land in the same partition,
+    so the results are equal exactly when every partition is, and the
+    partitions are compared one sorted pair at a time."""
     import pickle
     import tempfile
 
+    from pandas.core.dtypes.cast import find_common_type
+
     with tempfile.TemporaryDirectory() as tmp:
-        for side, pdf in enumerate((a, b)):
+        rows = []
+        for side, slices in enumerate((a, b)):
+            dtypes: dict[str, list] = {}
+            count = 0
+            with open(f"{tmp}/{side}.slices", "wb") as spill:
+                for pdf in slices:
+                    count += len(pdf)
+                    for c in pdf.columns:
+                        dtypes.setdefault(c, []).append(pdf[c].dtype)
+                    pickle.dump(pdf, spill)
+            rows.append(count)
+            common = {c: find_common_type(ds) for c, ds in dtypes.items()}
             outs = [open(f"{tmp}/{side}.{p}", "wb") for p in range(parts)]
             try:
-                for start in range(0, len(pdf), 200_000):
-                    buckets = [[] for _ in range(parts)]
-                    for row in _canon_frame(pdf.iloc[start:start + 200_000]):
-                        buckets[hash(row) % parts].append(row)
-                    for out, rows in zip(outs, buckets):
-                        pickle.dump(rows, out)
+                with open(f"{tmp}/{side}.slices", "rb") as spill:
+                    while True:
+                        try:
+                            pdf = pickle.load(spill)
+                        except EOFError:
+                            break
+                        buckets = [[] for _ in range(parts)]
+                        for row in _canon_frame(pdf.astype(common, copy=False)):
+                            buckets[hash(row) % parts].append(row)
+                        for out, part in zip(outs, buckets):
+                            pickle.dump(part, out)
             finally:
                 for out in outs:
                     out.close()
 
         def load(side: int, p: int) -> list:
-            rows = []
+            part = []
             with open(f"{tmp}/{side}.{p}", "rb") as f:
                 while True:
                     try:
-                        rows += pickle.load(f)
+                        part += pickle.load(f)
                     except EOFError:
-                        return sorted(rows)
+                        return sorted(part)
 
         diffs: list = []
         for p in range(parts):
@@ -110,7 +194,7 @@ def _frame_diffs(a: pd.DataFrame, b: pd.DataFrame, n: int = 3, parts: int = 64) 
                 diffs += pairs or [(ra[len(rb):][:1], rb[len(ra):][:1])]
             if len(diffs) >= n:
                 break
-        return diffs[:n]
+        return rows[0], rows[1], diffs[:n]
 
 
 def _tail_queries() -> list[str]:

@@ -291,26 +291,30 @@ SHUFFLE_BUDGET = {
     # r10 epoch shuffle: the per-shard ranking window's single
     # exchange (the md5 key is scan-stage; measured 1 at both SFs).
     "sample_epoch_shuffle": 1,
-    # r11 LM perplexity (CCNet stupid backoff): unigram + bigram +
-    # trigram count groupBys over the training slice + the final
-    # per-doc groupBy; the three score-table attach joins and the
-    # one-row total all broadcast (measured 4 + 5 bcast at both SFs).
+    # LM perplexity (CCNet stupid backoff): the one n-gram count
+    # aggregate (its exchange REUSED by the context join, which
+    # broadcasts), the position stream and the score table both
+    # hash-partitioned for the first lookup (AQE turns the three
+    # lookups into broadcast joins of the one score table once its size
+    # is known, after both shuffles ran), and the final per-doc groupBy
+    # (measured 4 + 3 reused at sf0.001 and sf0.01).
     "text_lm_perplexity": 4,
-    # r11 edges->survivors probe (the composed dedup_survivors left
-    # the headline for this persisted-edge form, VERDICT r10 #5): the
-    # RETURNED plan reads the checkpointed component labels (CC
-    # rounds are separate checkpointed jobs) + the singleton
-    # anti-join; the edge build never appears — it's a parquet read.
-    # Measured 1 at both SFs.
-    "dedup_survivors_from_edges": 1,
+    # edges->survivors probe (the composed dedup_survivors left the
+    # headline for this persisted-edge form, VERDICT r10 #5): the
+    # RETURNED plan is the node frame left-joined to the checkpointed
+    # last CC pass, which broadcasts (CC passes are separate
+    # checkpointed jobs); the edge build never appears — it's a
+    # parquet read. Measured 0 at sf0.001 and sf0.01.
+    "dedup_survivors_from_edges": 0,
     # r12 persisted LM index (VERDICT r11 #4). Build: the RETURNED
     # plan is the trigram table read back from parquet — the count
-    # groupBys run at write time as separate jobs (measured 0 at both
-    # SFs). Score: the three count-table attach joins (trigram⋈bigram,
-    # bigram⋈unigram shuffle as data-sized hash joins — correct at
-    # 100 TB) + the final per-doc groupBy; the position-stream joins
-    # and the one-row total broadcast (measured 3 + 5 bcast at both
-    # SFs).
+    # aggregation runs at write time as separate jobs (measured 0 at
+    # both SFs). Score: the three count tables read back as one counts
+    # frame (the token total is a single-partition sum, not a hash
+    # exchange), the position stream and the score table
+    # hash-partitioned for the first lookup before AQE broadcasts the
+    # score table, and the final per-doc groupBy (measured 3 + 3
+    # reused at sf0.001 and sf0.01).
     "text_lm_index_build": 0,
     "text_lm_index_score": 3,
     # r12 DSIR: one shared (doc,bucket) feature aggregate (its

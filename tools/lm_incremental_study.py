@@ -4,8 +4,8 @@ the LM sibling of round 5's tools/incremental_study.py).
 Claim under test: with the persisted n-gram count index
 (operators/lm.lm_index_build/append/score), the DAILY cost of scoring
 a fixed-size shard is O(shard + count-table scan) — while the
-index-less path re-trains the LM (full corpus scan + three count
-groupBys) every day, so its cost grows with the accumulated corpus.
+index-less path re-trains the LM (full corpus scan + the count
+aggregation) every day, so its cost grows with the accumulated corpus.
 Counts are additive, so appending a shard's counts replaces the
 retrain entirely.
 
