@@ -23,6 +23,16 @@ Each family has ONE implementation. Pair graphs resolve to clusters
 through :func:`connected_components` (large-star/small-star) and
 keep-first survivorship (:func:`survivors_from_edges`).
 
+Hot-bucket guard: every near-dup self-join here and in ``similarity``
+(MinHash bands, SimHash/pHash chunks, embedding bands, SemDeDup cells)
+runs behind ONE guard. :func:`collapse_identical_signatures` collapses
+rows with a byte-identical key to a min-id representative, so k
+clones are one node in every bucket; :func:`_expand_rep_pairs` expands
+the representative pairs back to document pairs (intra-group pairs
+plus each cross pair's members) with output-sized work; and
+:func:`_cap_buckets` skips buckets holding more than a cap of distinct
+keys, a recall trade the caller opts into.
+
 Persisted near-dup indexes (daily shard vs corpus, never re-signing
 the corpus) share ONE lifecycle too: :func:`write_index`,
 :func:`probe_index`, :func:`verify_index`, :func:`repair_index` and
@@ -314,38 +324,66 @@ def band_entries(
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
-def collapse_identical_signatures(sig: DataFrame) -> "tuple[DataFrame, DataFrame]":
-    """Hot-bucket guard, phase 1 (VERDICT r9 #1): collapse
-    byte-identical signatures to one canonical representative.
+def collapse_identical_signatures(
+    sig: DataFrame, key: str = "signature"
+) -> "tuple[DataFrame, DataFrame]":
+    """Hot-bucket guard, phase 1: collapse rows with a byte-identical
+    ``key`` to one canonical representative. Every near-dup family
+    runs it before its self-join: MinHash signatures
+    (:func:`banded_pairs`), SimHash/pHash longs
+    (:func:`hamming_near_pairs`) and embedding vectors
+    (``similarity.embedding_near_dup``, ``similarity.semantic_dedup``).
 
-    Returns ``(reps, membership)`` where ``reps`` is ``(id,
-    signature)`` restricted to the min-id document of each distinct
-    signature and ``membership`` is ``(id, rep_id)`` for every
-    non-NULL-id document. Grouping key is the FULL signature array —
-    never a hash of it: a 64-bit hash collision would silently merge
-    two distinct signatures and emit false est=1.0 pairs, and at
-    10^10 docs the birthday bound makes that a real event. One
-    shuffle on the signature key (a window min — no self-join).
+    ``sig`` has an ``id`` column and the ``key`` column. Returns
+    ``(reps, membership)`` where ``reps`` is ``(id, key)`` restricted
+    to the min-id row of each distinct key and ``membership`` is
+    ``(id, rep_id)`` for every non-NULL-id row. Grouping is on the
+    FULL key value — never a hash of it: a 64-bit hash collision would
+    silently merge two distinct signatures and emit false est=1.0
+    pairs, and at 10^10 docs the birthday bound makes that a real
+    event. One shuffle on the key (a window min — no self-join).
 
     The collapsed frame is ``localCheckpoint``-ed (round-13, guide §5):
     reps/membership feed 4-6 consumers downstream (both sides of the
-    band self-join, both signature-scoring joins, the membership
-    expansion legs) and several of those sit under BroadcastExchange,
-    which can NEVER reuse a shuffle exchange — the r12 plan dumps show
-    the whole shingle→signature→window pipeline replicated five times
-    per query. Cutting it here runs the corpus-scan pipeline ONCE. The
-    materialized state is the distinct-signature table — the exact
-    frame ``build_lsh_index`` persists to parquet anyway, strictly
-    smaller than the corpus (64 ints + 2 ids per doc, spills to disk
-    under memory pressure)."""
-    w = Window.partitionBy("signature")
+    band self-join, the scoring joins, the membership expansion legs)
+    and several of those sit under BroadcastExchange, which can NEVER
+    reuse a shuffle exchange — the r12 plan dumps show the whole
+    shingle→signature→window pipeline replicated five times per
+    query. Cutting it here runs the corpus-scan pipeline ONCE. The
+    materialized state is one key + two ids per row (for MinHash the
+    exact frame ``build_lsh_index`` persists anyway), spilling to disk
+    under memory pressure."""
     with_rep = (
-        sig.withColumn("rep_id", F.min("id").over(w))
+        sig.select("id", key)
+        .withColumn("rep_id", F.min("id").over(Window.partitionBy(key)))
         .localCheckpoint(eager=True)
     )
     membership = with_rep.select("id", "rep_id").filter(F.col("id").isNotNull())
-    reps = with_rep.filter(F.col("id") == F.col("rep_id")).select("id", "signature")
+    reps = with_rep.filter(F.col("id") == F.col("rep_id")).select("id", key)
     return reps, membership
+
+
+def _cap_buckets(
+    entries: DataFrame, key: list[str], max_size: int | None
+) -> DataFrame:
+    """Hot-bucket guard, second line of defense: drop the ``entries``
+    rows of every ``key`` bucket holding more than ``max_size`` rows
+    (``None`` = no cap, the frame unchanged). Used on band tables
+    (:func:`banded_pairs`) and SemDeDup cells
+    (``similarity.semantic_dedup``), where it follows the identical-key
+    collapse so the rows counted are DISTINCT keys, and on a persisted
+    index's corpus entries (:func:`probe_index`). The count aggregate
+    shares the self-join's key, so AQE keeps both co-partitioned: no
+    extra shuffle of the entries."""
+    if max_size is None:
+        return entries
+    ok = (
+        entries.groupBy(*key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") <= max_size)
+        .drop("__n")
+    )
+    return entries.join(ok, key)
 
 
 def band_bucket_overflow(
@@ -404,7 +442,12 @@ def banded_pairs(
     rep_pairs, membership = _rep_level_pairs(
         sig, num_hashes, bands, threshold, max_bucket_size
     )
-    return _expand_rep_pairs(rep_pairs, membership, threshold)
+    return _expand_rep_pairs(
+        rep_pairs,
+        membership,
+        [F.lit(1.0).alias("est_jaccard")],
+        F.lit(1.0) >= F.lit(float(threshold)),
+    )
 
 
 def _rep_level_pairs(
@@ -418,17 +461,9 @@ def _rep_level_pairs(
     the representatives only, score. Returns ``(rep_pairs,
     membership)``."""
     reps, membership = collapse_identical_signatures(sig)
-    bt = band_entries(reps, num_hashes, bands)
-    if max_bucket_size is not None:
-        ok = (
-            bt.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
-        # same (band, bucket) key as the self-join below — AQE keeps
-        # these co-partitioned, no extra shuffle of the band table
-        bt = bt.join(ok, ["band", "bucket"])
+    bt = _cap_buckets(
+        band_entries(reps, num_hashes, bands), ["band", "bucket"], max_bucket_size
+    )
     a = bt.alias("a")
     b = bt.alias("b")
     # the pre-score dropDuplicates STAYS here (round-13 measured both
@@ -510,13 +545,22 @@ def minhash_lsh_edges_grouped_poly(
 def _expand_rep_pairs(
     rep_pairs: DataFrame,
     membership: DataFrame,
-    threshold: float,
-    score_col: str = "est_jaccard",
+    intra_cols: list,
+    intra_keep: F.Column | None = None,
 ) -> DataFrame:
-    """Expand representative-level scored pairs to document-level
-    pairs: intra-group pairs (identical signatures — score exactly
-    1.0, the same double the ungrouped zip_with match-fraction
-    produces) plus cross-group pairs carrying their rep pair's score.
+    """Hot-bucket guard, phase 2: expand representative-level pairs
+    ``(id_a, id_b, *rest)`` back to document-level pairs through the
+    ``membership`` frame of :func:`collapse_identical_signatures`.
+
+    - intra-group pairs (identical keys) carry ``intra_cols`` — the
+      value the pair columns take for identical keys (est_jaccard 1.0,
+      hamming 0, or nothing when the caller scores every expanded
+      pair); ``intra_keep``, if given, is the constant predicate under
+      which they qualify at all;
+    - cross-group pairs carry their rep pair's ``rest`` columns: the
+      pair value depends only on the keys, so every member pair of
+      two groups has the reps' value.
+
     Work here is proportional to the OUTPUT pair count, which is the
     floor any implementation of the full-pair contract pays."""
     m1 = membership.select(F.col("rep_id").alias("__g"), F.col("id").alias("id_a"))
@@ -524,9 +568,10 @@ def _expand_rep_pairs(
     intra = (
         m1.join(m2, "__g")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(1.0).alias(score_col))
-        .filter(F.lit(1.0) >= F.lit(float(threshold)))
+        .select("id_a", "id_b", *intra_cols)
     )
+    if intra_keep is not None:
+        intra = intra.filter(intra_keep)
     ma = membership.select(F.col("rep_id").alias("id_a"), F.col("id").alias("__ma"))
     mb = membership.select(F.col("rep_id").alias("id_b"), F.col("id").alias("__mb"))
     cross = (
@@ -535,7 +580,7 @@ def _expand_rep_pairs(
         .select(
             F.least("__ma", "__mb").alias("id_a"),
             F.greatest("__ma", "__mb").alias("id_b"),
-            score_col,
+            *[c for c in rep_pairs.columns if c not in ("id_a", "id_b")],
         )
     )
     return intra.unionByName(cross)
@@ -671,8 +716,8 @@ def hamming_near_pairs(
             f"pigeonhole banding needs max_hamming < n_chunks "
             f"(got {max_hamming} >= {n_chunks})"
         )
-    # hot-bucket guard (VERDICT r9 #1, same as banded_pairs): collapse
-    # identical fingerprints to a min-id representative before the
+    # hot-bucket guard (the one banded_pairs runs): identical
+    # fingerprints collapse to a min-id representative before the
     # chunk self-join — k byte-identical docs (hence identical
     # SimHash/pHash longs) contribute ONE node to every chunk bucket
     # instead of k, keeping candidate volume linear on
@@ -680,21 +725,8 @@ def hamming_near_pairs(
     # fingerprint, so expanding scored rep pairs through the
     # membership frame reproduces the ungrouped output exactly
     # (intra-group pairs have hamming 0, always <= max_hamming >= 0).
-    # localCheckpoint (round-13, same rationale as
-    # collapse_identical_signatures): reps/membership feed six
-    # consumers (chunk-join sides a/b, intra m1/m2, cross ma/mb) and
-    # the fingerprint pipeline above this window would otherwise
-    # re-execute per consumer — the checkpointed state is one long +
-    # two ids per doc.
-    w = Window.partitionBy(hash_col)
-    with_rep = fp.withColumn("__rep", F.min(id_col).over(w)).localCheckpoint(
-        eager=True
-    )
-    membership = with_rep.select(
-        F.col(id_col).alias("id"), F.col("__rep").alias("rep_id")
-    ).filter(F.col(id_col).isNotNull())
-    reps = with_rep.filter(F.col(id_col) == F.col("__rep")).select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("h")
+    reps, membership = collapse_identical_signatures(
+        fp.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h")), "h"
     )
     chunks = hash_chunk_entries(reps, "id", "h", n_chunks)
 
@@ -723,25 +755,9 @@ def hamming_near_pairs(
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
-    m1 = membership.select(F.col("rep_id").alias("__g"), F.col("id").alias("id_a"))
-    m2 = membership.select(F.col("rep_id").alias("__g"), F.col("id").alias("id_b"))
-    intra = (
-        m1.join(m2, "__g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).cast("int").alias("hamming"))
+    return _expand_rep_pairs(
+        rep_pairs, membership, [F.lit(0).cast("int").alias("hamming")]
     )
-    ma = membership.select(F.col("rep_id").alias("id_a"), F.col("id").alias("__ma"))
-    mb = membership.select(F.col("rep_id").alias("id_b"), F.col("id").alias("__mb"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__ma", "__mb").alias("id_a"),
-            F.greatest("__ma", "__mb").alias("id_b"),
-            "hamming",
-        )
-    )
-    return intra.unionByName(cross)
 
 
 class ConnectedComponentsDidNotConverge(RuntimeError):
@@ -1287,14 +1303,7 @@ def probe_index(
             ids.withColumnRenamed(fam.id_col, "id"), "id", "left_anti"
         )
     key = [fam.part, fam.bucket]
-    if max_bucket_size is not None:
-        ok = (
-            corpus_entries.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .drop("__n")
-        )
-        corpus_entries = corpus_entries.join(ok, key)
+    corpus_entries = _cap_buckets(corpus_entries, key, max_bucket_size)
     shard_entries = fam.expand(shard, meta)
     if broadcast_new:
         shard_entries = F.broadcast(shard_entries)

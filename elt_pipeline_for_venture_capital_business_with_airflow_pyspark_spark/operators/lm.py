@@ -137,6 +137,29 @@ def lm_score_stupid_backoff(
     return _score_backoff_from_counts(toks, _ngram_counts(train_toks))
 
 
+def _doc_scores(scored: DataFrame) -> DataFrame:
+    """The per-document tail of both scorers: positions ``(id, __m,
+    level)`` — the fixed-point score and the level that fired — summed
+    per document into ``(id, n_scored, n_tri, n_bi, n_uni, n_oov,
+    qsum, bits_per_token)``."""
+    agg = scored.withColumn("q", _qlog2("__m").cast("long")).groupBy("id").agg(
+        F.count(F.lit(1)).alias("n_scored"),
+        F.sum((F.col("level") == 3).cast("long")).alias("n_tri"),
+        F.sum((F.col("level") == 2).cast("long")).alias("n_bi"),
+        F.sum((F.col("level") == 1).cast("long")).alias("n_uni"),
+        F.sum((F.col("level") == 0).cast("long")).alias("n_oov"),
+        F.sum("q").alias("qsum"),
+    )
+    return agg.select(
+        "id", "n_scored", "n_tri", "n_bi", "n_uni", "n_oov", "qsum",
+        (
+            F.lit(float(FP_BITS))
+            - F.col("qsum").cast("double")
+            / (F.lit(float(MANT)) * F.col("n_scored").cast("double"))
+        ).alias("bits_per_token"),
+    )
+
+
 def _gram(k: int, g: F.Column, ctx: F.Column) -> F.Column:
     return F.struct(F.lit(k).alias("k"), g.alias("g"), ctx.alias("ctx"))
 
@@ -186,7 +209,14 @@ def _ngram_count_tables(
     ``bi (w1, w, cb)``, ``tri (w2, w1, w, ct)``. Each is a filter on
     the order ``k``, which the optimizer pushes below the aggregation,
     so writing one table aggregates only its own order."""
-    counts = _ngram_counts(train_toks)
+    return _tables_from_counts(_ngram_counts(train_toks))
+
+
+def _tables_from_counts(
+    counts: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """:func:`_ngram_count_tables` of an already built counts frame —
+    the inverse of :func:`_counts_from_tables`."""
     t = F.split("g", " ")
     return (
         counts.filter("k = 1").select(
@@ -290,25 +320,8 @@ def _score_backoff_from_counts(toks: DataFrame, counts: DataFrame) -> DataFrame:
             .otherwise(F.lit(0))
             .alias("level"),
         )
-        .withColumn("q", _qlog2("__m").cast("long"))
     )
-
-    agg = scored.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_scored"),
-        F.sum((F.col("level") == 3).cast("long")).alias("n_tri"),
-        F.sum((F.col("level") == 2).cast("long")).alias("n_bi"),
-        F.sum((F.col("level") == 1).cast("long")).alias("n_uni"),
-        F.sum((F.col("level") == 0).cast("long")).alias("n_oov"),
-        F.sum("q").alias("qsum"),
-    )
-    return agg.select(
-        "id", "n_scored", "n_tri", "n_bi", "n_uni", "n_oov", "qsum",
-        (
-            F.lit(float(FP_BITS))
-            - F.col("qsum").cast("double")
-            / (F.lit(float(MANT)) * F.col("n_scored").cast("double"))
-        ).alias("bits_per_token"),
-    )
+    return _doc_scores(scored)
 
 
 def lm_score_kneser_ney(
@@ -350,16 +363,16 @@ def lm_score_kneser_ney(
     construction. BIGINT headroom mirrors the backoff variant
     (``(4*count) << 30`` needs count < 2**31).
 
-    Plan hygiene (VERDICT r11 #5): the bigram and trigram COUNT
-    tables feed five downstream consumers (continuation counts,
-    context totals, the position joins) — without a cut they each
-    re-run the corpus scan + explode + groupBy per consumer (the
-    round-11 plan audit showed 13 shuffles / 0 reused exchanges).
-    Both tables are ``localCheckpoint``-ed once after aggregation,
-    so every consumer reads the materialized counts instead of
-    re-deriving them — at 100 TB that's the difference between one
-    corpus scan and five. Values are unchanged (the oracle hash is
-    the proof).
+    Plan hygiene: the bigram and trigram tables are
+    the order-2 and order-3 rows of the one :func:`_ngram_counts`
+    aggregate the backoff scorer and the persisted index use, and they
+    feed six consumers (continuation counts, type totals, context
+    totals, the position join). Uncut, each consumer re-plans its own
+    corpus scan + explode + aggregate (measured at sf0.01: 22 jobs, 13
+    exchanges, none reused), so the shared counts carry one
+    ``localCheckpoint(eager=False)``: lazy, but under AQE building it
+    runs the aggregate's map stage, one job when the scorer is called
+    (16 jobs in all at sf0.01).
     """
     train = docs if train_docs is None else train_docs
     train_toks = train.select(_tokens(text_col).alias("ts"))
@@ -367,20 +380,9 @@ def lm_score_kneser_ney(
         F.col(id_col).alias("id"), _tokens(text_col).alias("ts")
     )
 
-    bi = (
-        train_toks.filter(F.size("ts") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(2, size(ts)), i -> "
-                    "struct(element_at(ts, i-1) as w1, element_at(ts, i) as w))"
-                )
-            ).alias("g")
-        )
-        .select("g.w1", "g.w")
-        .groupBy("w1", "w")
-        .agg(F.count(F.lit(1)).alias("cb"))
-        .localCheckpoint(eager=True)  # 3 consumers: n1p/nbb, ctx3, pos join
+    # one cut on the shared counts (see "Plan hygiene" above)
+    _, bi, tri = _tables_from_counts(
+        _ngram_counts(train_toks).localCheckpoint(eager=False)
     )
     tri_expr = F.explode(
         F.expr(
@@ -388,14 +390,6 @@ def lm_score_kneser_ney(
             "struct(element_at(ts, i-2) as w2, element_at(ts, i-1) as w1, "
             "element_at(ts, i) as w))"
         )
-    )
-    tri = (
-        train_toks.filter(F.size("ts") >= 3)
-        .select(tri_expr.alias("g"))
-        .select("g.w2", "g.w1", "g.w")
-        .groupBy("w2", "w1", "w")
-        .agg(F.count(F.lit(1)).alias("ct"))
-        .localCheckpoint(eager=True)  # 3 consumers: cc, ctx3, pos join
     )
 
     # continuation / type statistics
@@ -469,25 +463,8 @@ def lm_score_kneser_ney(
             .otherwise(F.lit(0))
             .alias("level"),
         )
-        .withColumn("q", _qlog2("__m").cast("long"))
     )
-
-    agg = scored.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_scored"),
-        F.sum((F.col("level") == 3).cast("long")).alias("n_tri"),
-        F.sum((F.col("level") == 2).cast("long")).alias("n_bi"),
-        F.sum((F.col("level") == 1).cast("long")).alias("n_uni"),
-        F.sum((F.col("level") == 0).cast("long")).alias("n_oov"),
-        F.sum("q").alias("qsum"),
-    )
-    return agg.select(
-        "id", "n_scored", "n_tri", "n_bi", "n_uni", "n_oov", "qsum",
-        (
-            F.lit(float(FP_BITS))
-            - F.col("qsum").cast("double")
-            / (F.lit(float(MANT)) * F.col("n_scored").cast("double"))
-        ).alias("bits_per_token"),
-    )
+    return _doc_scores(scored)
 
 
 # ---------------------------------------------------------------------------

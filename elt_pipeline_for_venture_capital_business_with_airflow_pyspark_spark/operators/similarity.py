@@ -5,7 +5,7 @@ Embeddings are ``array<float>`` columns. All vector math is built from
 are cast to double before accumulation so results are deterministic
 IEEE-754 left-to-right folds, matching a sequential oracle.
 
-Four tiers:
+Search paths:
 - ``cosine_topk``       : brute-force exact top-k — the correctness
                           baseline; broadcast the (small) query set, so
                           the corpus is scanned once, no shuffle of the
@@ -13,9 +13,18 @@ Four tiers:
 - ``lsh_ann_topk``      : random-hyperplane LSH buckets → candidates →
                           exact rerank. The 100 TB path: candidate
                           generation is an equi-join on bucket keys.
-- ``ivf_topk``/``ivfpq_topk``: partition-pruning ANN — and with PQ,
-                          32× memory compression + O(m) ADC scoring
-                          per candidate (the FAISS-style scale combo).
+- ``ivf_topk`` / ``build_ivf_index`` + ``ivf_probe_index``:
+                          partition-pruning ANN. One search
+                          (:func:`_ivf_search`) serves cells assigned
+                          in the plan and cells read back from a
+                          persisted index; an int8 index serves from
+                          the quantized tier.
+- ``ivfpq_topk``        : IVF-PQ — 32× memory compression + O(m) ADC
+                          scoring per candidate (the FAISS-style scale
+                          combo).
+- ``ann_topk_int8``     : brute-force top-k over int8-quantized vectors.
+
+Near-dup and dedup paths:
 - ``embedding_near_dup``: all pairs with cosine ≥ threshold via LSH
                           banding over sign bits.
 - ``semantic_dedup``    : SemDeDup-style per-vector keep/prune
@@ -23,9 +32,18 @@ Four tiers:
                           keep-first) — the semantic complement of
                           the lexical MinHash/SimHash dedup family.
 
-The banded paths carry the round-10 hot-bucket guard: byte-identical
-vectors collapse to a min-id representative before any band/cell
-self-join, so boilerplate clones cost O(n), never O(n²), candidates.
+Shared cores: every ranked search ends in :func:`_top_k` (one
+``row_number`` per query, ties to the lowest id); float scores are
+:func:`dot`/:func:`cosine_pre` and int8 scores :func:`int_dot`, one
+SQL builder for both (:func:`_dot_sql_text`); IVF cell assignment is
+:func:`_assign_cells` and probe choice :func:`_centroid_sims`, both
+with the centroid norms folded at plan time.
+
+The near-dup paths carry the hot-bucket guard of ``operators/dedup``
+(:func:`..dedup.collapse_identical_signatures`,
+``_expand_rep_pairs``, ``_cap_buckets``): byte-identical vectors
+collapse to a min-id representative before any band/cell self-join,
+so boilerplate clones cost O(n), never O(n²), candidates.
 """
 
 from __future__ import annotations
@@ -36,6 +54,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources import io as IO
+from . import dedup as DD
 
 
 def _py_norm(cv) -> float:
@@ -92,27 +111,31 @@ def lit_double_matrix(rows) -> F.Column:
     )
 
 
-def _dot_sql_text(a: str, b: str, dim: int | None) -> str:
-    """SQL text of the guarded-unrolled dot (see :func:`dot`): the
-    64-term tree built per node costs ~400 py4j round-trips PER
-    INSTANCE at plan construction; parsing one string is one call.
-    The parsed tree is operator-for-operator the tree the Column
-    builders produce (same casts, same left-associated fold, same
-    size guard), so values are bit-identical."""
+def _dot_sql_text(a: str, b: str, dim: int | None, typ: str = "DOUBLE") -> str:
+    """SQL text of the guarded-unrolled dot (see :func:`dot`), its
+    elements cast to ``typ`` and summed from ``typ``'s zero: DOUBLE
+    for the float dot, BIGINT for the exact int8 dot
+    (:func:`int_dot`). The 64-term tree built per node costs ~400
+    py4j round-trips PER INSTANCE at plan construction; parsing one
+    string is one call. The parsed tree is operator-for-operator the
+    tree the Column builders produce (same casts, same
+    left-associated fold, same size guard), so values are
+    bit-identical."""
+    zero = "0.0D" if typ == "DOUBLE" else f"CAST(0 AS {typ})"
     hof = (
         f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+        f"CAST(x AS {typ}) * CAST(y AS {typ})), {zero}, "
         f"(acc, v) -> acc + v)"
     )
     if dim is None:
         return hof
     terms = "".join(
-        f" + (CAST(get({a}, {i}) AS DOUBLE) * CAST(get({b}, {i}) AS DOUBLE))"
+        f" + (CAST(get({a}, {i}) AS {typ}) * CAST(get({b}, {i}) AS {typ}))"
         for i in range(dim)
     )
     return (
         f"CASE WHEN (size({a}) = {dim}) AND (size({b}) = {dim}) "
-        f"THEN (0.0D{terms}) ELSE {hof} END"
+        f"THEN ({zero}{terms}) ELSE {hof} END"
     )
 
 
@@ -148,6 +171,15 @@ def dot(a, b, dim: int | None = None) -> F.Column:
     for i in range(dim):
         s = s + F.get(a, i).cast("double") * F.get(b, i).cast("double")
     return F.when((F.size(a) == dim) & (F.size(b) == dim), s).otherwise(hof)
+
+
+def int_dot(a: str, b: str, dim: int | None = None) -> F.Column:
+    """Exact BIGINT Σ a[i]·b[i] over two integer-array COLUMN NAMES
+    (the int8 tier's dot): with ``dim`` the guarded unrolled sum
+    (codegen arithmetic, off-``dim`` rows fall back to the fold),
+    without it the ``aggregate``/``zip_with`` fold. Integer sums are
+    exact, so both forms agree bit for bit."""
+    return F.expr(_dot_sql_text(_q(a), _q(b), dim, "BIGINT"))
 
 
 def norm(a: F.Column, dim: int | None = None) -> F.Column:
@@ -206,6 +238,23 @@ def _centroid_sims(vec: F.Column, norm_col: F.Column, cent_rows) -> F.Column:
     )
 
 
+def _top_k(
+    scored: DataFrame, k: int, order: list, cols: list, by: str = "query_id"
+) -> DataFrame:
+    """The per-query ranking every search here ends in: ``rank`` =
+    ``row_number`` over ``by`` in ``order`` (each order ends in an id,
+    so ties are deterministic), rows with ``rank <= k``, projected to
+    ``cols``. The rank filter sits directly on the window, so Catalyst
+    plans a WindowGroupLimit: each partition keeps at most k rows per
+    query before the window's exchange."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -242,13 +291,11 @@ def cosine_topk(
             cosine_pre("__qvec", "__cvec", "__qn", "__cn", dim),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+    return _top_k(
+        scored,
+        k,
+        [F.col("cosine_sim").desc(), F.col("neighbor_id")],
+        ["query_id", "rank", "neighbor_id", "cosine_sim"],
     )
 
 
@@ -338,14 +385,14 @@ def bitext_margin_mine(
             / ((F.col("__avg_src") + F.col("__avg_tgt")) / F.lit(2.0)),
         )
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("margin").desc(), F.col("tgt_id")
+    best = _top_k(
+        scored,
+        1,
+        [F.col("margin").desc(), F.col("tgt_id")],
+        ["src_id", "tgt_id", "cosine_sim", "margin"],
+        by="src_id",
     )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("margin") >= threshold))
-        .select("src_id", "tgt_id", "cosine_sim", "margin")
-    )
+    return best.filter(F.col("margin") >= threshold)
 
 
 def _plane_values(seed: int, plane: int, dim: int) -> list[float]:
@@ -474,13 +521,11 @@ def lsh_ann_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine_sim").alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+    return _top_k(
+        scored,
+        k,
+        [F.col("cosine_sim").desc(), F.col("neighbor_id")],
+        ["query_id", "rank", "neighbor_id", "cosine_sim"],
     )
 
 
@@ -546,9 +591,13 @@ def ivf_topk(
     plain id-ordered frame instead of the hash sample — that variant
     is SQL-replicable end to end (see the ``embedding_ivf_sqlcheck``
     oracle query). Cluster assignment = argmax centroid cosine, ties
-    to the lowest cell index — deterministic. At 100 TB the assigned
-    corpus would be written ``partitionBy(cell)`` so a probe prunes
-    parquet partitions instead of filtering a scan.
+    to the lowest cell index — deterministic (:func:`_assign_cells`).
+    The search over the assigned cells is the one
+    :func:`ivf_probe_index` runs over a persisted index
+    (:func:`_ivf_search`), so both return the same rows for the same
+    centroids; at 100 TB persist the cells with
+    :func:`build_ivf_index` so a probe prunes parquet partitions
+    instead of filtering a scan.
     """
     cent_rows = _pick_centroids(
         corpus, n_centroids, id_col, vec_col, centroid_source
@@ -557,83 +606,10 @@ def ivf_topk(
         # empty corpus -> no centroids to fit; the search result is
         # defined (no neighbors), not an error — an empty slice must
         # flow through a pipeline
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, cosine_sim double"
-        )
-    # a small corpus yields fewer centroids than asked — every loop
-    # below must run over what EXISTS or element_at walks off the end
-    # (a crash under the session's default ANSI mode)
-    n_centroids = len(cent_rows)
-    n_probe = min(n_probe, n_centroids)
-
-    def with_sims(df: DataFrame, idc: str, out_id: str) -> DataFrame:
-        staged = df.select(
-            F.col(idc).alias(out_id),
-            F.col(vec_col).alias(f"__{out_id}_vec"),
-            norm(F.col(vec_col)).alias(f"__{out_id}_norm"),
-        )
-        sims = _centroid_sims(
-            F.col(f"__{out_id}_vec"), F.col(f"__{out_id}_norm"), cent_rows
-        )
-        return staged.select(
-            out_id,
-            f"__{out_id}_vec",
-            f"__{out_id}_norm",
-            sims.alias("__sims"),
-        )
-
-    assigned = with_sims(corpus, id_col, "neighbor_id").select(
-        "neighbor_id",
-        "__neighbor_id_vec",
-        "__neighbor_id_norm",
-        (F.array_position(F.col("__sims"), F.array_max(F.col("__sims"))) - 1)
-        .cast("int")
-        .alias("cell"),
-    )
-
-    idx_sims = F.transform(
-        F.sequence(F.lit(0), F.lit(n_centroids - 1)),
-        lambda i: F.struct(
-            i.cast("int").alias("idx"),
-            F.element_at(F.col("__sims"), (i + 1).cast("int")).alias("sim"),
-        ),
-    )
-    by_sim_desc = F.array_sort(
-        idx_sims,
-        lambda x, y: F.when(x["sim"] > y["sim"], -1)
-        .when(x["sim"] < y["sim"], 1)
-        .otherwise(x["idx"] - y["idx"]),
-    )
-    probes = with_sims(queries, query_id_col, "query_id").select(
-        "query_id",
-        "__query_id_vec",
-        "__query_id_norm",
-        F.explode(
-            F.transform(F.slice(by_sim_desc, 1, n_probe), lambda s: s["idx"])
-        ).alias("cell"),
-    )
-
-    scored = (
-        assigned.join(F.broadcast(probes), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine_sim",
-            cosine_pre(
-                "__query_id_vec",
-                "__neighbor_id_vec",
-                "__query_id_norm",
-                "__neighbor_id_norm",
-                dim,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine_sim")
+        return _no_neighbors(corpus.sparkSession, quantized=False)
+    cells = _assign_cells(corpus, cent_rows, id_col, vec_col)
+    return _ivf_search(
+        queries, cells, cent_rows, k, n_probe, id_col, vec_col, query_id_col, dim
     )
 
 
@@ -715,10 +691,11 @@ def _read_centroids(spark, path: str) -> list:
 def _assign_cells(
     vectors: DataFrame, cent_rows: list, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, vec, cell) — nearest-centroid assignment with the exact
-    argmax-cosine / lowest-index-ties expression :func:`ivf_topk`
-    uses, so a persisted index and the in-flight operator agree
-    bit-for-bit."""
+    """(id, vec, cell) — nearest-centroid assignment: argmax centroid
+    cosine, ties to the lowest cell index. The one assignment of
+    :func:`ivf_topk`, :func:`build_ivf_index` and
+    :func:`append_ivf_index`, so a persisted index and the in-flight
+    operator agree bit-for-bit."""
     staged = vectors.select(
         F.col(id_col),
         F.col(vec_col),
@@ -781,20 +758,21 @@ def ivf_probe_index(
 ) -> DataFrame:
     """Top-k ANN against a persisted IVF index. Per query, the
     ``n_probe`` nearest cells are computed from the KB-sized centroid
-    table; the union of probed cells across the query batch (≤
-    n_centroids values, collected driver-side — bounded metadata) is
-    pushed as a PARTITION filter into the cells scan, so only those
-    cell directories are read at all. Scoring and ranking match
-    :func:`ivf_topk` exactly: cosine in double with sequential fold,
-    ties to the lowest neighbor id.
+    table; the probes broadcast onto the cells scan with a join on the
+    partition column, so dynamic partition pruning reads only the
+    probed cell directories. The search is :func:`_ivf_search`, the
+    one :func:`ivf_topk` runs over cells it assigns in the plan:
+    cosine in double with sequential fold, ties to the lowest
+    neighbor id — the same rows for the same centroids.
 
     ``broadcast_queries`` (default) ships each query vector
     ``n_probe`` times to every executor — right for the typical
     few-thousand-query batch, but a huge query batch would exceed
     broadcast limits. Set it False to fall back to a shuffled hash
-    join on ``cell`` (both sides exchange; same results bit-for-bit —
-    the escape hatch mirroring ``dedup.incremental_lsh_pairs``'s
-    ``broadcast_new``).
+    join on ``cell`` (both sides exchange; the probed cells, ≤
+    n_centroids ints collected driver-side, become a literal
+    partition filter; same results bit-for-bit — the escape hatch
+    mirroring ``dedup.incremental_lsh_pairs``'s ``broadcast_new``).
 
     Against an int8 index (``build_ivf_index(quantize=True)``,
     detected from the cells schema) the probe serves from the
@@ -807,21 +785,83 @@ def ivf_probe_index(
     scanning and scoring ride the 4×-smaller representation."""
     spark = queries.sparkSession
     cent_rows = _read_centroids(spark, path)
-    cells_df = spark.read.parquet(f"{path}/cells")
-    quantized = "q" in cells_df.columns
+    cells = spark.read.parquet(f"{path}/cells")
     if not cent_rows:
-        empty_schema = (
-            "query_id long, rank int, neighbor_id long, dot_int bigint, "
-            "score double"
-            if quantized
-            else "query_id long, rank int, neighbor_id long, "
-            "cosine_sim double"
-        )
-        return spark.createDataFrame([], empty_schema)
+        return _no_neighbors(spark, quantized="q" in cells.columns)
+    return _ivf_search(
+        queries,
+        cells,
+        cent_rows,
+        k,
+        n_probe,
+        id_col,
+        vec_col,
+        query_id_col,
+        len(cent_rows[0]["cv"]),
+        broadcast_queries,
+    )
+
+
+def _no_neighbors(spark, quantized: bool) -> DataFrame:
+    """The empty result of an IVF search (no centroids: empty
+    corpus), with the schema of the tier it would have served."""
+    return spark.createDataFrame(
+        [],
+        "query_id long, rank int, neighbor_id long, "
+        + ("dot_int bigint, score double" if quantized else "cosine_sim double"),
+    )
+
+
+def _ivf_search(
+    queries: DataFrame,
+    cells: DataFrame,
+    cent_rows: list,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    dim: int,
+    broadcast_queries: bool = True,
+) -> DataFrame:
+    """The one IVF search: per query, probe the ``n_probe`` cells
+    whose centroids are nearest (cosine, ties to the lowest cell),
+    score every vector of those cells and rank the top ``k``.
+
+    ``cells`` is an assigned corpus ``(id_col, vec_col, cell)`` —
+    built in the plan (:func:`ivf_topk`) or read back from a
+    persisted index (:func:`ivf_probe_index`) — or an int8 cells
+    table ``(id_col, scale, q, cell)``, detected by its ``q`` column.
+    The int8 tier quantizes the queries in the probe projection and
+    scores with the exact BIGINT :func:`int_dot` rescaled by both
+    scales; cell CHOICE always runs on the float vectors, so both
+    tiers probe the same cells. ``broadcast_queries``: see
+    :func:`ivf_probe_index`."""
+    quantized = "q" in cells.columns
+    # a small corpus yields fewer centroids than asked — the probe
+    # loop runs over what EXISTS or element_at walks off the end (a
+    # crash under the session's default ANSI mode)
     n_cent = len(cent_rows)
     n_probe = min(n_probe, n_cent)
-    cmat = lit_double_matrix([r["cv"] for r in cent_rows])
-    sims = F.transform(cmat, lambda c: cosine(F.col(vec_col), c))
+    int8 = ["__sq", "__qq"] if quantized else []
+    if quantized:
+        # quantize the query side in the probe projection (zero extra
+        # passes); the float vector still chooses the cells
+        queries = quantize_int8(
+            queries, query_id_col, vec_col, extra_cols=(vec_col,)
+        ).select(
+            query_id_col,
+            vec_col,
+            F.col("scale").alias("__sq"),
+            F.col("q").alias("__qq"),
+        )
+    staged = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(vec_col).alias("__query_vec"),
+        norm(F.col(vec_col)).alias("__qn"),
+        *int8,
+    )
+    sims = _centroid_sims(F.col("__query_vec"), F.col("__qn"), cent_rows)
     idx_sims = F.transform(
         F.sequence(F.lit(0), F.lit(n_cent - 1)),
         lambda i: F.struct(
@@ -835,35 +875,12 @@ def ivf_probe_index(
         .when(x["sim"] < y["sim"], 1)
         .otherwise(x["idx"] - y["idx"]),
     )
-    qsrc = queries
-    if quantized:
-        # quantize the query side in the probe projection (zero extra
-        # passes); keep the float vector for cell CHOICE so the
-        # quantized tier probes exactly the cells the float tier would
-        qsrc = quantize_int8(
-            queries, query_id_col, vec_col, extra_cols=(vec_col,)
-        ).select(
-            query_id_col,
-            F.col("scale").alias("__sq"),
-            F.col("q").alias("__qq"),
-            vec_col,
-        )
-    carry = (
-        [F.col("__sq"), F.col("__qq")]
-        if quantized
-        else [
-            F.col(vec_col).alias("__query_vec"),
-            norm(F.col(vec_col)).alias("__qn"),
-        ]
-    )
-    carry_names = ["__sq", "__qq"] if quantized else ["__query_vec", "__qn"]
-    probes = qsrc.select(
-        F.col(query_id_col).alias("query_id"),
-        *carry,
-        sims.alias("__sims"),
+    carry = int8 or ["__query_vec", "__qn"]
+    probes = staged.select(
+        "query_id", *carry, sims.alias("__sims")
     ).select(
         "query_id",
-        *carry_names,
+        *carry,
         F.explode(
             F.transform(F.slice(by_sim_desc, 1, n_probe), lambda s: s["idx"])
         ).alias("cell"),
@@ -878,7 +895,6 @@ def ivf_probe_index(
         # tests/test_plan_shapes.py). The previous shape evaluated the
         # whole probe subplan a second time just to collect the cell
         # ids into a literal IN filter: one extra driver job per call.
-        cells = cells_df
         probe_side = F.broadcast(probes)
     else:
         # shuffled fallback (huge query batches): keep the bounded
@@ -887,75 +903,38 @@ def ivf_probe_index(
         probe_cells = sorted(
             r["cell"] for r in probes.select("cell").distinct().collect()
         )
-        cells = cells_df.filter(F.col("cell").isin(probe_cells))
+        cells = cells.filter(F.col("cell").isin(probe_cells))
         probe_side = probes
     if quantized:
-        # per-pair exact-BIGINT dot, guarded-unrolled like the float
-        # tier (dim from the centroid table — cells store same-dim q);
-        # rows with off-dim arrays fall back to the HOF fold
-        dim_q = len(cent_rows[0]["cv"])
-        # one parsed expression (round-13): the 64-term BIGINT unroll
-        # built per node cost ~400 py4j round-trips per construction
-        hof_sql = (
-            "aggregate(zip_with(`q`, `__qq`, (a, b) -> "
-            "CAST(a AS BIGINT) * CAST(b AS BIGINT)), CAST(0 AS BIGINT), "
-            "(acc, v) -> acc + v)"
-        )
-        terms = "".join(
-            f" + (CAST(get(`q`, {i}) AS BIGINT) * "
-            f"CAST(get(`__qq`, {i}) AS BIGINT))"
-            for i in range(dim_q)
-        )
-        dot_int = F.expr(
-            f"CASE WHEN (size(`q`) = {dim_q}) AND (size(`__qq`) = {dim_q}) "
-            f"THEN (CAST(0 AS BIGINT){terms}) ELSE {hof_sql} END"
-        )
+        # per-pair exact-BIGINT dot, guarded-unrolled (dim from the
+        # centroid table — cells store same-dim q)
         scored = (
             cells.join(probe_side, on="cell")
             .filter(F.col(id_col) != F.col("query_id"))
-            .withColumn("dot_int", dot_int)
+            .withColumn("dot_int", int_dot("q", "__qq", dim))
             .withColumn(
                 "score", F.col("dot_int") * F.col("scale") * F.col("__sq")
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col(id_col)
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "rank",
-                F.col(id_col).alias("neighbor_id"),
-                "dot_int",
-                "score",
+        out = ["dot_int", "score"]
+    else:
+        # cell-side norm projected once per stored row before the
+        # per-query fanout join; per-pair work = one guarded-unrolled dot
+        scored = (
+            cells.withColumn("__cn", norm(F.col(vec_col)))
+            .join(probe_side, on="cell")
+            .filter(F.col(id_col) != F.col("query_id"))
+            .withColumn(
+                "cosine_sim",
+                cosine_pre("__query_vec", vec_col, "__qn", "__cn", dim),
             )
         )
-    # cell-side norm projected once per stored row before the
-    # per-query fanout join; per-pair work = one guarded-unrolled dot
-    dim = len(cent_rows[0]["cv"])
-    scored = (
-        cells.withColumn("__cn", norm(F.col(vec_col)))
-        .join(probe_side, on="cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn(
-            "cosine_sim",
-            cosine_pre("__query_vec", vec_col, "__qn", "__cn", dim),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            F.col(id_col).alias("neighbor_id"),
-            "cosine_sim",
-        )
+        out = ["cosine_sim"]
+    return _top_k(
+        scored,
+        k,
+        [F.col(out[-1]).desc(), F.col(id_col)],
+        ["query_id", "rank", F.col(id_col).alias("neighbor_id"), *out],
     )
 
 
@@ -992,32 +971,26 @@ def embedding_near_dup(
     in some band with high probability). Band join and pair dedup
     shuffle bare ids; vectors rejoin once per side for the rerank.
 
-    Hot-bucket guard (round 10 — the embedding sibling of the
-    ``dedup.banded_pairs`` guard): byte-identical vectors (duplicate
-    docs embed identically, the dominant collision mode at crawl
-    scale) collapse to a min-id representative BEFORE the band
-    self-join, so k clones contribute ONE node per bucket instead of
-    k² candidates; candidate pairs then expand back through the
-    membership frame and EVERY expanded pair is scored by the same
-    cosine expression as before — identical floats give identical
+    Hot-bucket guard (``dedup.banded_pairs``' guard, the same
+    helpers): byte-identical vectors (duplicate docs embed
+    identically, the dominant collision mode at crawl scale) collapse
+    to a min-id representative BEFORE the band self-join
+    (``dedup.collapse_identical_signatures``), so k clones contribute
+    ONE node per bucket instead of k² candidates; candidate pairs then
+    expand back through the membership frame
+    (``dedup._expand_rep_pairs``) and EVERY expanded pair is scored by
+    the same cosine expression — identical floats give identical
     scores, so the output (and the hash-checked
     ``embedding_near_dup_sqlcheck`` oracle) is unchanged. Scoring is
     output-sized work, the floor the all-pairs contract sets."""
-    # localCheckpoint (round-13, guide §5): with_rep feeds SIX
-    # consumers (band-join sides a/b via b_df, intra m1/m2, cross
-    # ma/mb) and the window pipeline re-executed per consumer; b_df is
-    # checkpointed too so the 16 interpreted hyperplane dots per rep
-    # run once, not once per join side. State: a vector + two ids per
-    # row, and (id, band, bucket) per rep×band.
-    with_rep = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"))
-        .withColumn("__rep", F.min("id").over(Window.partitionBy("__vec")))
-        .localCheckpoint(eager=True)
+    # the collapse is checkpointed (feeds the band-join sides and both
+    # expansion legs); b_df is checkpointed too so the 16 interpreted
+    # hyperplane dots per rep run once, not once per join side. State:
+    # (id, band, bucket) per rep×band.
+    reps, membership = DD.collapse_identical_signatures(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")),
+        "__vec",
     )
-    membership = with_rep.select("id", F.col("__rep").alias("rep_id")).filter(
-        F.col("id").isNotNull()
-    )
-    reps = with_rep.filter(F.col("id") == F.col("__rep")).select("id", "__vec")
     b_df = _band_entries(
         reps, "id", "id", "__vec", dim, num_planes, bands, seed
     ).localCheckpoint(eager=True)
@@ -1028,24 +1001,8 @@ def embedding_near_dup(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    m1 = membership.select(F.col("rep_id").alias("__g"), F.col("id").alias("id_a"))
-    m2 = membership.select(F.col("rep_id").alias("__g"), F.col("id").alias("id_b"))
-    intra = (
-        m1.join(m2, "__g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    ma = membership.select(F.col("rep_id").alias("id_a"), F.col("id").alias("__ma"))
-    mb = membership.select(F.col("rep_id").alias("id_b"), F.col("id").alias("__mb"))
-    cross = (
-        rep_cand.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__ma", "__mb").alias("id_a"),
-            F.greatest("__ma", "__mb").alias("id_b"),
-        )
-    )
-    cand = intra.unionByName(cross)
+    # every expanded pair is scored below, so intra pairs carry no value
+    cand = DD._expand_rep_pairs(rep_cand, membership, [])
     # norms ride the vector rejoin (per-row work), so the candidate
     # rerank pays one guarded-unrolled dot per pair (cosine_pre)
     va = corpus.select(
@@ -1150,6 +1107,30 @@ def _cw_literal(qcw: list[list[int]], m: int, d_m: int) -> F.Column:
     )
 
 
+def _sub_d2(qv: F.Column, CW: F.Column, s, j, d_m: int) -> F.Column:
+    """Exact squared-L2 between subspace ``s`` of the quantized vector
+    ``qv`` and codeword ``j`` of that subspace (``CW`` from
+    :func:`_cw_literal`)."""
+    return _int_d2(
+        F.slice(qv, s * d_m + 1, d_m),
+        F.element_at(F.element_at(CW, s + 1), j + 1),
+    )
+
+
+def _pq_code(qv: F.Column, CW: F.Column, s, ks: int, d_m: int) -> F.Column:
+    """The PQ code of subspace ``s``: argmin over the ``ks`` codewords
+    of :func:`_sub_d2`, ties to the lowest code (an array_min over
+    struct(d2, j) — no explode and no window)."""
+    return F.array_min(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(ks - 1)),
+            lambda j: F.struct(
+                _sub_d2(qv, CW, s, j, d_m).alias("d2"), j.alias("j")
+            ),
+        )
+    )["j"]
+
+
 def pq_codes(
     corpus: DataFrame,
     dim: int,
@@ -1163,8 +1144,7 @@ def pq_codes(
     contiguous subspaces of dim/m dims; code_s = argmin over the ks
     codewords of exact integer squared-L2, ties to the lowest code.
     Output is long format ``(id, s, code)`` — one shuffle-free map
-    stage; the argmin is an array_min over struct(d2, j), pure
-    codegen, no explode and no window.
+    stage (:func:`_pq_code`, the encoding :func:`ivfpq_topk` uses).
     """
     assert dim % m == 0, "dim must divide evenly into m subspaces"
     d_m = dim // m
@@ -1175,24 +1155,15 @@ def pq_codes(
     ks = min(ks, len(qcw))  # small corpus: argmin only over real codewords
     CW = _cw_literal(qcw, m, d_m)
     qv = _quantized(vec_col)
-
-    def code_for(s: F.Column) -> F.Column:
-        sub = F.slice(qv, s * d_m + 1, d_m)
-        cands = F.transform(
-            F.sequence(F.lit(0), F.lit(ks - 1)),
-            lambda j: F.struct(
-                _int_d2(sub, F.element_at(F.element_at(CW, s + 1), j + 1)).alias("d2"),
-                j.alias("j"),
-            ),
-        )
-        return F.array_min(cands)["j"]
-
     return corpus.select(
         F.col(id_col).alias("id"),
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(s.cast("int").alias("s"), code_for(s).cast("int").alias("code")),
+                lambda s: F.struct(
+                    s.cast("int").alias("s"),
+                    _pq_code(qv, CW, s, ks, d_m).cast("int").alias("code"),
+                ),
             )
         ).alias("sc"),
     ).select("id", F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
@@ -1253,27 +1224,14 @@ def ivfpq_topk(
     # argmin with first-occurrence tie-break
     cell = (F.array_position(cell_d2s, F.array_min(cell_d2s)) - 1).cast("int")
 
-    def codes_col() -> F.Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.array_min(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(ks - 1)),
-                    lambda j: F.struct(
-                        _int_d2(
-                            F.slice(qv, s * d_m + 1, d_m),
-                            F.element_at(F.element_at(CW, s + 1), j + 1),
-                        ).alias("d2"),
-                        j.alias("j"),
-                    ),
-                )
-            )["j"].cast("int"),
-        )
-
+    codes = F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: _pq_code(qv, CW, s, ks, d_m).cast("int"),
+    )
     assigned = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         cell.alias("cell"),
-        codes_col().alias("codes"),
+        codes.alias("codes"),
     )
 
     # per-query: probe cells (n_probe smallest exact d2) + ADC table
@@ -1288,10 +1246,7 @@ def ivfpq_topk(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda s: F.transform(
             F.sequence(F.lit(0), F.lit(ks - 1)),
-            lambda j: _int_d2(
-                F.slice(qv, s * d_m + 1, d_m),
-                F.element_at(F.element_at(CW, s + 1), j + 1),
-            ),
+            lambda j: _sub_d2(qv, CW, s, j, d_m),
         ),
     )
     probed = queries.select(
@@ -1317,13 +1272,11 @@ def ivfpq_topk(
             ).alias("approx_d2"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "approx_d2")
+    return _top_k(
+        scored,
+        k,
+        [F.col("approx_d2").asc(), F.col("neighbor_id")],
+        ["query_id", "rank", "neighbor_id", "approx_d2"],
     )
 
 
@@ -1427,19 +1380,10 @@ def ann_topk_int8(
         F.col("scale").alias("__sq"),
         F.col("q").alias("__qq"),
     )
-    dot_int = F.aggregate(
-        F.zip_with(
-            F.col("__qc"),
-            F.col("__qq"),
-            lambda a, b: a.cast("bigint") * b.cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     scored = (
         cq.join(F.broadcast(qq))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dot_int", dot_int)
+        .withColumn("dot_int", int_dot("__qc", "__qq"))
         .withColumn(
             "score", F.col("dot_int") * F.col("__sc") * F.col("__sq")
         )
@@ -1448,13 +1392,11 @@ def ann_topk_int8(
     # dots incomparable across corpus rows); the score is exact-int ×
     # two fixed-order multiplies, so the ordering is still
     # deterministic cross-engine, tie-broken by neighbor id
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dot_int", "score")
+    return _top_k(
+        scored,
+        k,
+        [F.col("score").desc(), F.col("neighbor_id")],
+        ["query_id", "rank", "neighbor_id", "dot_int", "score"],
     )
 
 
@@ -1521,19 +1463,17 @@ def mmr_rerank(
             "__score",
             F.lit(lam) * F.col("__rel") - F.lit(1.0 - lam) * F.col("__maxsim"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("__score").desc(), F.col("cand_id")
-        )
-        sel = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
+        sel = _top_k(
+            scored,
+            1,
+            [F.col("__score").desc(), F.col("cand_id")],
+            [
                 "query_id",
                 F.col("cand_id").alias("__sel_id"),
                 F.col("__vec").alias("__sel_vec"),
                 F.col("__norm").alias("__sel_norm"),
                 F.col("__score").alias("__sel_score"),
-            )
+            ],
         )
         picks.append(
             sel.select(
@@ -1612,21 +1552,15 @@ def _semdedup_assigned(
         "array(" + ",".join(str(int(r["cid"])) for r in cent_rows) + ")"
     )
 
-    # localCheckpoint (round-13, guide §5): with_rep feeds membership
-    # (consumed by the final verdict join AND the prune aggregate) and
-    # reps→assigned (consumed by BOTH sides of the qualifying
-    # self-join plus the cell rejoin) — several of them under
-    # BroadcastExchange, which cannot reuse a shuffle exchange, so the
-    # scan+window pipeline re-executed per consumer. State is one
-    # vector + two ids per live row.
-    with_rep = (
+    # the collapse is checkpointed: membership
+    # feeds the final verdict join AND the prune aggregate, reps feed
+    # both sides of the qualifying self-join plus the cell rejoin —
+    # several of them under BroadcastExchange, which cannot reuse a
+    # shuffle exchange
+    reps, membership = DD.collapse_identical_signatures(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec"))
-        .filter(dot(F.col("__vec"), F.col("__vec")) > 0)
-        .withColumn("__rep", F.min("id").over(Window.partitionBy("__vec")))
-        .localCheckpoint(eager=True)
-    )
-    membership = with_rep.select("id", F.col("__rep").alias("rep_id")).filter(
-        F.col("id").isNotNull()
+        .filter(dot(F.col("__vec"), F.col("__vec")) > 0),
+        "__vec",
     )
     # the row norm is a per-ROW function: compute it once here and
     # carry it so the qualifying self-join scores pairs with ONE dot
@@ -1634,34 +1568,16 @@ def _semdedup_assigned(
     # HOF form (compact tree): this subtree feeds several consumers
     # and row-grain execution is not the bottleneck — the unrolled
     # form lives only at PAIR grain in the qualifying join.
-    reps = with_rep.filter(F.col("id") == F.col("__rep")).select(
-        "id", "__vec", norm(F.col("__vec")).alias("__norm")
-    )
+    reps = reps.select("id", "__vec", norm(F.col("__vec")).alias("__norm"))
 
     # assign representatives to cells: argmax centroid cosine, ties to
-    # the lowest centroid index (array_position returns the FIRST max).
-    # Centroid norms are plan-time literals (_py_norm: IEEE doubles in
-    # the same fold order, so each value is bit-identical to the JVM
-    # fold) and the row norm is the __norm column — the per-centroid
-    # lambda does ONE dot instead of three (measured 3× on the
-    # assignment stage). Kept as a compact zip_with rather than 16
-    # unrolled dots: the unrolled tree repeated per centroid made the
-    # OPTIMIZER the bottleneck (~8k expression nodes re-walked per
-    # consumer of this subtree).
-    cmat = lit_double_matrix([r["cv"] for r in cent_rows])
-    cnorms = lit_double_array([_py_norm(r["cv"]) for r in cent_rows])
-    sims = F.zip_with(
-        cmat,
-        cnorms,
-        lambda c, cn: F.when(
-            F.col("__norm") * cn != 0,
-            dot(F.col("__vec"), c) / (F.col("__norm") * cn),
-        ),
-    )
-    # second cut (round-13): the 16-dot assignment sims are themselves
+    # the lowest centroid index (array_position returns the FIRST max),
+    # the centroid norms folded at plan time (:func:`_centroid_sims`).
+    # Second cut: the 16-dot assignment sims are themselves
     # per-row work consumed by BOTH qualifying-join sides plus the
     # membership cell rejoin — checkpoint so they run once per rep
-    # (cheap on top of the checkpointed with_rep above)
+    # (cheap on top of the checkpointed collapse above)
+    sims = _centroid_sims(F.col("__vec"), F.col("__norm"), cent_rows)
     assigned = (
         reps.withColumn("__sims", sims)
         .select(
@@ -1769,18 +1685,8 @@ def semantic_dedup(
 
     # per-cell cap: over-cap cells are excluded from BOTH sides of
     # the qualifying self-join (their members fall through the final
-    # left join as kept) — same AQE-co-partitioned semi-join shape as
-    # the LSH bucket cap, no extra shuffle of the assigned frame
-    if max_cell_size is not None:
-        ok_cells = (
-            assigned.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_cell_size)
-            .drop("__n")
-        )
-        joinable = assigned.join(ok_cells, "cell")
-    else:
-        joinable = assigned
+    # left join as kept) — the LSH bucket cap, on the cell key
+    joinable = DD._cap_buckets(assigned, ["cell"], max_cell_size)
 
     # rep-level qualifying pairs within a cell, INCLUDING self-pairs
     # (a self-pair qualifies iff cos(v,v) >= threshold as floats —

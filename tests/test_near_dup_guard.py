@@ -1,0 +1,145 @@
+"""The shared hot-bucket guard and the shared IVF search, in the default
+collection.
+
+Every near-dup family collapses identical keys to a min-id
+representative before its self-join and expands the representative
+pairs back afterwards (``dedup.collapse_identical_signatures``,
+``dedup._expand_rep_pairs``). On a hand-made frame of byte-identical
+clones, near-dups and singletons, each family's output must equal an
+all-pairs reference computed here in Python. The IVF case pins that
+``ivf_topk`` and a persisted index probed with ``ivf_probe_index``
+are one search: same centroids, same rows.
+"""
+
+from __future__ import annotations
+
+import math
+from itertools import combinations
+
+from pyspark.sql import functions as F
+
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
+    dedup as DD,
+    similarity as SIM,
+)
+
+
+def _pairs(df, value_col):
+    return {(r["id_a"], r["id_b"]): r[value_col] for r in df.collect()}
+
+
+def test_banded_pairs_equal_all_pairs_reference(spark):
+    num_hashes, bands, threshold = 8, 4, 0.5
+    base = [11, 12, 13, 14, 15, 16, 17, 18]
+    near = [11, 12, 13, 14, 15, 16, 97, 98]  # shares bands 0-2 with base
+    far = [21, 22, 23, 24, 25, 26, 27, 28]
+    half = [11, 12, 93, 94, 95, 96, 91, 92]  # est 0.25: below threshold
+    rows = (
+        [(i, base) for i in (1, 2, 3)]  # three byte-identical clones
+        + [(4, near), (5, near)]  # a second clone group, near base
+        + [(6, far), (7, half)]
+    )
+    sig = spark.createDataFrame(rows, "id long, signature array<long>")
+    got = _pairs(DD.banded_pairs(sig, num_hashes, bands, threshold), "est_jaccard")
+
+    rows_per_band = num_hashes // bands
+
+    def collide(a, b):
+        return any(
+            a[i : i + rows_per_band] == b[i : i + rows_per_band]
+            for i in range(0, num_hashes, rows_per_band)
+        )
+
+    want = {}
+    for (ia, sa), (ib, sb) in combinations(sorted(rows), 2):
+        est = sum(x == y for x, y in zip(sa, sb)) / num_hashes
+        if collide(sa, sb) and est >= threshold:
+            want[(ia, ib)] = est
+    assert got == want
+    assert len(want) == 3 + 1 + 3 * 2  # intra clones + cross pairs
+
+
+def test_hamming_near_pairs_equal_all_pairs_reference(spark):
+    max_hamming, n_chunks = 3, 4
+    h0 = 0x0123_4567_89AB_CDEF
+    rows = (
+        [(i, h0) for i in (1, 2, 3)]  # identical fingerprints
+        + [(4, h0 ^ 0b101), (5, h0 ^ 0b101)]  # distance 2 from h0
+        + [(6, h0 ^ 0b1111)]  # distance 4 from h0: out
+        + [(7, 0x7654_3210_FEDC_BA98)]
+    )
+    fp = spark.createDataFrame(rows, "doc_id long, fingerprint long")
+    got = _pairs(
+        DD.hamming_near_pairs(fp, "doc_id", "fingerprint", max_hamming, n_chunks),
+        "hamming",
+    )
+    want = {}
+    for (ia, ha), (ib, hb) in combinations(sorted(rows), 2):
+        d = bin(ha ^ hb).count("1")
+        if d <= max_hamming:
+            want[(ia, ib)] = d
+    assert got == want
+    assert (4, 6) in want and (1, 6) not in want
+
+
+def _cos(a, b):
+    """Cosine in the operator's fold order (double accumulation left
+    to right), so the value equals the Spark one bit for bit."""
+
+    def dot(x, y):
+        acc = 0.0
+        for u, v in zip(x, y):
+            acc = acc + float(u) * float(v)
+        return acc
+
+    den = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+    return dot(a, b) / den if den != 0 else None
+
+
+def test_embedding_near_dup_equals_all_pairs_reference(spark):
+    dim, threshold = 8, 0.99
+    v1 = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
+    v1n = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.5]  # near-dup of v1
+    v2 = [-3.0, 1.0, -4.0, 1.0, -5.0, 9.0, -2.0, 6.0]
+    rows = (
+        [(i, v1) for i in (1, 2, 3)]  # byte-identical clones
+        + [(4, v1n)]
+        + [(5, v2), (6, v2)]
+        + [(7, [0.0] * dim)]  # zero vector: no cosine, never paired
+    )
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = _pairs(SIM.embedding_near_dup(corpus, dim, threshold), "cosine_sim")
+    want = {}
+    for (ia, a), (ib, b) in combinations(sorted(rows), 2):
+        c = _cos(a, b)
+        if c is not None and c >= threshold:
+            want[(ia, ib)] = c
+    assert got == want
+    assert len(want) == 6 + 1  # {1,2,3,4} all pairs + (5, 6)
+
+
+def test_ivf_topk_equals_persisted_probe(spark, tmp_path):
+    dim = 4
+    vecs = [
+        [1.0, 0.0, 0.0, 0.0], [0.9, 0.1, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
+        [0.1, 0.9, 0.1, 0.0], [0.0, 0.0, 1.0, 0.0], [0.0, 0.1, 0.9, 0.2],
+        [0.0, 0.0, 0.0, 1.0], [0.2, 0.0, 0.1, 0.9], [0.5, 0.5, 0.5, 0.5],
+        [0.9, 0.1, 0.0, 0.0],  # clone of id 1: a tie the ranking breaks by id
+    ]
+    corpus = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    queries = corpus.filter(F.col("vec_id") % 3 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    source = corpus.filter(F.col("vec_id") < 4)
+    in_plan = SIM.ivf_topk(
+        corpus, queries, dim, k=3, n_centroids=4, n_probe=2,
+        centroid_source=source,
+    )
+    path = str(tmp_path / "ivf")
+    SIM.build_ivf_index(corpus, path, n_centroids=4, centroid_source=source)
+    persisted = SIM.ivf_probe_index(queries, path, k=3, n_probe=2)
+    got = sorted(tuple(r) for r in in_plan.collect())
+    assert got == sorted(tuple(r) for r in persisted.collect())
+    assert len(got) == 4 * 3

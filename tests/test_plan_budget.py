@@ -247,11 +247,11 @@ SHUFFLE_BUDGET = {
     "multimodal_jpeg_progressive": 0,
     # IMA ADPCM audio: pure Arrow map pipeline (measured 0 at both SFs).
     "multimodal_audio_adpcm": 0,
-    # pHash near-dup: r10 hot-bucket guard — the identical-
-    # fingerprint collapse window is the single real exchange (the
-    # candidate equi-join + dedup ride broadcasts/ReusedExchange at
-    # these SFs — measured 1 at both).
-    "multimodal_phash_near_dup": 1,
+    # pHash near-dup: the identical-fingerprint collapse window runs in
+    # the collapse checkpoint's own job, outside the returned plan; the
+    # candidate equi-join + dedup ride broadcasts at these SFs
+    # (measured 0 at both).
+    "multimodal_phash_near_dup": 0,
     # FFT/STFT spectral features: pure Arrow map pipeline (measured 0
     # at both SFs).
     "multimodal_audio_spectrum": 0,
@@ -262,10 +262,10 @@ SHUFFLE_BUDGET = {
     # SFs).
     "multimodal_audio_g711": 0,
     # incremental pHash image index: the banded within-shard
-    # self-join dedup + (r10) the shard's identical-fingerprint
-    # collapse window; the corpus probe rides a broadcast and the
-    # index build is write-side (measured 2 at both SFs).
-    "multimodal_phash_incremental": 2,
+    # self-join dedup (the shard's identical-fingerprint collapse runs
+    # in its checkpoint's own job); the corpus probe rides a broadcast
+    # and the index build is write-side (measured 1 at both SFs).
+    "multimodal_phash_incremental": 1,
     # MS-ADPCM / IEEE-float WAV: pure Arrow map pipelines (measured 0
     # at both SFs).
     "multimodal_audio_msadpcm": 0,
@@ -278,16 +278,17 @@ SHUFFLE_BUDGET = {
     # homoglyph folding: scan + translate projection, zero exchanges
     # (measured 0 at both SFs).
     "text_homoglyph_fold": 0,
-    # r10 star-form grouped LSH: shingle->signature groupBy + the
-    # identical-signature collapse window + the rep-level candidate
-    # dedup (measured 3 real exchanges at both SFs — member edges are
-    # a projection of the collapse output, no extra shuffle).
-    "dedup_minhash_grouped": 3,
-    # r10 SemDeDup: identical-vector collapse window + the within-cell
-    # qualifying self-join pair of (rep_id, cell) exchanges + the
-    # per-vector min-qualifier groupBy (measured 5 at both SFs; every
-    # exchange is cell- or id-keyed, none data-cartesian).
-    "embedding_semdedup_prune": 5,
+    # r10 star-form grouped LSH: the rep-level candidate dedup; the
+    # shingle->signature groupBy and the identical-signature collapse
+    # window run in the collapse checkpoint's own job, and member edges
+    # are a projection of its output (measured 1 at both SFs).
+    "dedup_minhash_grouped": 1,
+    # r10 SemDeDup: the within-cell qualifying self-join and the
+    # per-vector verdict joins and min-qualifier groupBy (the
+    # identical-vector collapse window runs in its checkpoint's own
+    # job; measured 4 at both SFs; every exchange is cell- or
+    # id-keyed, none data-cartesian).
+    "embedding_semdedup_prune": 4,
     # r10 epoch shuffle: the per-shard ranking window's single
     # exchange (the md5 key is scan-stage; measured 1 at both SFs).
     "sample_epoch_shuffle": 1,
