@@ -267,9 +267,9 @@ HEADLINE = [
     # index, so the timed pass measures components+keep-first only)
     "dedup_survivors_from_edges",
     # round-12 (VERDICT r11 #4): the persisted LM index lifecycle's
-    # two cost poles — BUILD (corpus scan + three count-table writes;
+    # two cost poles — BUILD (corpus scan + one count-table write;
     # rebuilt every call, so the timing is the honest build cost) and
-    # SCORE-FROM-INDEX (the daily read path: three count-table scans
+    # SCORE-FROM-INDEX (the daily read path: one count-table scan
     # + joins, no training scan; warm-up bootstraps the index). The
     # APPEND leg is measured in BENCH_SCALING.md's
     # incremental-vs-retrain study.

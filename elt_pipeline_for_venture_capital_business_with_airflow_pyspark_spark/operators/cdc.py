@@ -16,8 +16,10 @@ window, no row amplification. Both sides are pruned to
 ``keys + compare_cols`` before the join (column pruning reaches the
 scans), and value comparison uses null-safe equality so NULL→value
 and value→NULL transitions count as updates. With both snapshots
-bucketed on the key (``operators.layout.write_bucketed``) the exchange
-disappears entirely.
+bucketed on the key (``operators.layout.write_bucketed``, the one
+bucketed writer) the exchange disappears entirely. The inverse,
+:func:`apply_changes`, picks each key's latest change through the one
+per-key top-k, ``operators.dedup.dedup_keep_first``.
 """
 
 from __future__ import annotations
@@ -173,8 +175,9 @@ def apply_changes(
     a frame with exactly ``base.columns``.
 
     Scale shape: one shuffle on the key for the latest-wins window
-    over the CHANGE FEED only (a CDC batch is orders of magnitude
-    smaller than the base), then one left-anti join base⋈keys —
+    (the one per-key top-k, :func:`.dedup.dedup_keep_first`) over the
+    CHANGE FEED only (a CDC batch is orders of magnitude smaller than
+    the base), then one left-anti join base⋈keys —
     broadcastable when the touched-key set is small, shuffle-hash
     otherwise — plus a union. The base is never windowed and never
     row-amplified; with base and feed bucketed on the key
@@ -193,22 +196,31 @@ def apply_changes(
     change (the one genuinely ambiguous case — which upsert payload
     wins would depend on partition order) fails the job with
     ``CDC_AMBIGUOUS_CHANGE`` instead of picking one silently. The
-    check rides the existing latest-wins shuffle (a count over the
-    same window partition), so it adds no exchange.
+    check rides the existing latest-wins shuffle (a peer count over
+    the ranking window's own partition and order), so it adds no
+    exchange.
     """
     from pyspark.sql import Window
 
+    from .dedup import dedup_keep_first
+
     is_delete = F.coalesce(F.col(op_col) == F.lit(delete_op), F.lit(False))
-    w_order = [F.col(seq_col).desc(), is_delete.desc()]
-    w = Window.partitionBy(*keys).orderBy(*w_order)
-    tagged = changes.withColumn("__rn", F.row_number().over(w))
+    order = [F.col(seq_col).desc(), is_delete.desc()]
     if validate:
-        w_group = Window.partitionBy(*keys, seq_col, is_delete)
-        n_peers = F.count(F.lit(1)).over(w_group)
-        tagged = tagged.withColumn(
-            "__rn",
+        # the rows of each key that tie with a row on (seq, is_delete):
+        # its peers in the latest-wins order, counted over the ranking
+        # window's own partition and order
+        peers = Window.partitionBy(*keys).orderBy(*order).rangeBetween(
+            Window.currentRow, Window.currentRow
+        )
+        changes = changes.withColumn(
+            "__ambiguous", ~is_delete & (F.count(F.lit(1)).over(peers) > 1)
+        )
+    latest = dedup_keep_first(changes, keys, order)
+    if validate:
+        latest = latest.filter(
             F.when(
-                (F.col("__rn") == 1) & ~is_delete & (n_peers > 1),
+                F.col("__ambiguous"),
                 F.raise_error(
                     F.concat(
                         F.lit(
@@ -217,10 +229,9 @@ def apply_changes(
                         ),
                         *[F.col(k).cast("string") for k in keys],
                     )
-                ).cast("int"),
-            ).otherwise(F.col("__rn")),
-        )
-    latest = tagged.filter(F.col("__rn") == 1).drop("__rn")
+                ),
+            ).otherwise(F.lit(True))
+        ).drop("__ambiguous")
     untouched = base.join(latest.select(*keys), keys, "left_anti")
     survivors = latest.filter(
         ~F.coalesce(F.col(op_col) == F.lit(delete_op), F.lit(False))

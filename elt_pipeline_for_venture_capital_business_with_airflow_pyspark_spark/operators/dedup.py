@@ -21,7 +21,12 @@ path — and all avoid driver-side materialization:
 
 Each family has ONE implementation. Pair graphs resolve to clusters
 through :func:`connected_components` (large-star/small-star) and
-keep-first survivorship (:func:`survivors_from_edges`).
+keep-first survivorship (:func:`survivors_from_edges`). The Jaccard
+and containment pairs share one shingle-overlap core
+(:func:`_shingle_overlap`), and :func:`dedup_keep_first` is the one
+per-key top-k of the package (latest-wins upsert, CDC apply, golden
+records, KMV bottom-k, per-group sampling caps, every similarity
+search).
 
 Hot-bucket guard: every near-dup self-join here and in ``similarity``
 (MinHash bands, SimHash/pHash chunks, embedding bands, SemDeDup cells)
@@ -96,21 +101,15 @@ def _shingle_index(
     return idx
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
+def _shingle_overlap(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_shingle_freq: int | None
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs (id_a < id_b, sim ≥ threshold).
-
-    Plan: shingle inverted index self-joined on shingle → count common
-    shingles per pair → join per-doc shingle counts → jaccard =
-    common / (|A| + |B| - common). Only docs sharing ≥1 shingle ever
-    meet, so cost is driven by shingle co-occurrence, not |corpus|².
-    """
+    """``(id_a, id_b, n_common, n_a, n_b)`` for every pair of docs
+    sharing at least one shingle (id_a < id_b): the shingle inverted
+    index self-joined on shingle, common shingles counted per pair, and
+    both docs' shingle-set sizes joined on. Only docs sharing ≥1
+    shingle ever meet, so cost is driven by shingle co-occurrence, not
+    |corpus|². The core of both overlap scores below."""
     idx = _shingle_index(df, id_col, text_col, n, max_shingle_freq)
     sizes = idx.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
 
@@ -124,9 +123,22 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
+    return common.join(sa, "id_a").join(sb, "id_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
+    max_shingle_freq: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity pairs (id_a < id_b, sim ≥ threshold):
+    jaccard = common / (|A| + |B| - common) over the shingle overlap
+    (:func:`_shingle_overlap`)."""
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, id_col, text_col, n, max_shingle_freq)
         .withColumn(
             "jaccard",
             F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
@@ -151,26 +163,12 @@ def containment_pairs(
     containment of the smaller side. Containment is the right signal
     for quote/boilerplate/aggregator dedup in crawl corpora.
 
-    Same inverted-index plan as :func:`ngram_jaccard_pairs` (docs only
-    meet through shared shingles — never all-pairs); the output adds
-    ``contained_id``, the doc whose shingle set is the (more) covered
-    one (ties → lower id)."""
-    idx = _shingle_index(df, id_col, text_col, n, max_shingle_freq)
-    sizes = idx.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-
-    a = idx.alias("a")
-    b = idx.alias("b")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
+    Same shingle overlap as :func:`ngram_jaccard_pairs`
+    (:func:`_shingle_overlap`: docs only meet through shared shingles —
+    never all-pairs); the output adds ``contained_id``, the doc whose
+    shingle set is the (more) covered one (ties → lower id)."""
     return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shingle_overlap(df, id_col, text_col, n, max_shingle_freq)
         .withColumn(
             "containment",
             F.col("n_common") / F.least(F.col("n_a"), F.col("n_b")),
@@ -337,7 +335,8 @@ def collapse_identical_signatures(
     ``sig`` has an ``id`` column and the ``key`` column. Returns
     ``(reps, membership)`` where ``reps`` is ``(id, key)`` restricted
     to the min-id row of each distinct key and ``membership`` is
-    ``(id, rep_id)`` for every non-NULL-id row. Grouping is on the
+    ``(id, rep_id)`` for every non-NULL-id row. A row whose key is
+    NULL is its own representative, so NULL keys never pair. Grouping is on the
     FULL key value — never a hash of it: a 64-bit hash collision would
     silently merge two distinct signatures and emit false est=1.0
     pairs, and at 10^10 docs the birthday bound makes that a real
@@ -353,9 +352,14 @@ def collapse_identical_signatures(
     materialized state is one key + two ids per row (for MinHash the
     exact frame ``build_lsh_index`` persists anyway), spilling to disk
     under memory pressure."""
+    # a NULL key equals no other key (the ungrouped rule pairs no NULL
+    # signature), so a row whose key is NULL is its own representative
+    rep_id = F.when(F.col(key).isNull(), F.col("id")).otherwise(
+        F.min("id").over(Window.partitionBy(key))
+    )
     with_rep = (
         sig.select("id", key)
-        .withColumn("rep_id", F.min("id").over(Window.partitionBy(key)))
+        .withColumn("rep_id", rep_id)
         .localCheckpoint(eager=True)
     )
     membership = with_rep.select("id", "rep_id").filter(F.col("id").isNotNull())
@@ -967,19 +971,29 @@ def survivors_from_edges(
 
 
 def dedup_keep_first(
-    df: DataFrame, keys: list[str], order_by: list
+    df: DataFrame,
+    keys: list[str],
+    order_by: list,
+    k: int = 1,
+    rank_col: str | None = None,
 ) -> DataFrame:
-    """Generic latest/first-wins dedup (S7 upsert semantics,
-    reference staging load.py:111-118): row_number()=1 per key.
-    ``order_by`` takes Columns (e.g. ``F.col("ts").desc()``) or names."""
+    """The one per-key top-k: the first ``k`` rows of each ``keys``
+    group in ``order_by`` (Columns, e.g. ``F.col("ts").desc()``, or
+    names). ``k = 1`` is latest/first-wins dedup (S7 upsert semantics,
+    reference staging load.py:111-118); the upsert, the CDC apply, the
+    golden-record mode, the KMV bottom-k and every similarity search
+    rank through here. ``rank_col`` keeps the 1-based ``row_number``
+    under that name; without it the rank is dropped.
+
+    The rank filter sits directly on the window, so Catalyst plans a
+    WindowGroupLimit: each partition keeps at most ``k`` rows per key
+    before the window's exchange."""
+    rn = rank_col or "__rn"
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c) if isinstance(c, str) else c for c in order_by]
     )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    top = df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+    return top if rank_col else top.drop(rn)
 
 
 def minhash_signatures_poly(

@@ -34,8 +34,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import dedup_keep_first
 
 __all__ = ["FieldRule", "link_pairs", "golden_records"]
 
@@ -224,14 +226,9 @@ def golden_records(
             .groupBy("component", c)
             .agg(F.count(F.lit(1)).alias("__n"))
         )
-        w = Window.partitionBy("component").orderBy(
-            F.col("__n").desc(), F.col(c)
-        )
-        best = (
-            counts.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("component", F.col(c).alias(f"__mode_{c}"))
-        )
+        best = dedup_keep_first(
+            counts, ["component"], [F.col("__n").desc(), F.col(c)]
+        ).select("component", F.col(c).alias(f"__mode_{c}"))
         golden = golden.join(best, "component", "left").withColumnRenamed(
             f"__mode_{c}", c
         )

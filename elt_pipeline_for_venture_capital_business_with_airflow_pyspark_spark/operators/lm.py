@@ -177,7 +177,7 @@ def _ngram_counts(train_toks: DataFrame) -> DataFrame:
     Each token position emits the n-grams that end at it, so every
     document is exploded once and one map-combinable groupBy counts
     all orders; every consumer of the counts (the score table, the
-    persisted tables) reads that one exchange. Plain counts are
+    persisted index) reads that one exchange. Plain counts are
     ADDITIVE: the counts of corpus ∪ shard are the per-key sums of the
     two, which is what makes the persisted index appendable
     (:func:`lm_index_append`)."""
@@ -202,21 +202,13 @@ def _ngram_counts(train_toks: DataFrame) -> DataFrame:
     )
 
 
-def _ngram_count_tables(
-    train_toks: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The persisted form of :func:`_ngram_counts`: ``uni (w, cu)``,
-    ``bi (w1, w, cb)``, ``tri (w2, w1, w, ct)``. Each is a filter on
-    the order ``k``, which the optimizer pushes below the aggregation,
-    so writing one table aggregates only its own order."""
-    return _tables_from_counts(_ngram_counts(train_toks))
-
-
 def _tables_from_counts(
     counts: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """:func:`_ngram_count_tables` of an already built counts frame —
-    the inverse of :func:`_counts_from_tables`."""
+    """The orders of a :func:`_ngram_counts` frame split into words:
+    ``uni (w, cu)``, ``bi (w1, w, cb)``, ``tri (w2, w1, w, ct)``. Each
+    is a filter on the order ``k``, which the optimizer pushes below
+    the aggregation."""
     t = F.split("g", " ")
     return (
         counts.filter("k = 1").select(
@@ -229,31 +221,6 @@ def _tables_from_counts(
             t[0].alias("w2"), t[1].alias("w1"), t[2].alias("w"),
             F.col("c").alias("ct"),
         ),
-    )
-
-
-def _counts_from_tables(
-    uni: DataFrame, bi: DataFrame, tri: DataFrame
-) -> DataFrame:
-    """The inverse of :func:`_ngram_count_tables`: the three persisted
-    tables as one :func:`_ngram_counts` frame, the token total summed
-    from the unigrams."""
-    def rows(table: DataFrame, k: int, words: list[str], c: str) -> DataFrame:
-        return table.select(
-            F.lit(k).alias("k"),
-            F.concat_ws(" ", *words).alias("g"),
-            F.concat_ws(" ", *words[:-1]).alias("ctx"),
-            F.col(c).alias("c"),
-        )
-
-    return (
-        rows(uni, 1, ["w"], "cu")
-        .unionByName(rows(bi, 2, ["w1", "w"], "cb"))
-        .unionByName(rows(tri, 3, ["w2", "w1", "w"], "ct"))
-        .unionByName(uni.agg(
-            F.lit(0).alias("k"), F.lit("").alias("g"), F.lit("").alias("ctx"),
-            F.sum("cu").alias("c"),
-        ))
     )
 
 
@@ -473,14 +440,17 @@ def lm_score_kneser_ney(
 # Every other heavy family carries a persist/append/probe lifecycle
 # (LSH and pHash: the banded-hash index in operators/dedup.py; IVF:
 # operators/similarity) — the LM family was the one rebuilding its
-# trained state per call. The index is simply the three exact
-# BIGINT n-gram count tables as parquet; counts are ADDITIVE, so a
-# daily shard appends by per-key summation instead of retraining on
-# the whole corpus (at 100 TB: one shard scan + three count-table
-# merges vs a full corpus rescan). Scoring from the index is
-# bit-identical to in-plan training by construction — both feed the
-# same _score_backoff_from_counts arithmetic — and the registry
-# entries pin it with the SAME oracle SQL as the in-plan entry. The
+# trained state per call. The index is the LM's whole trained state,
+# the one _ngram_counts aggregate (k, g, ctx, c), stored as ONE table
+# at <path>/counts; counts are ADDITIVE, so a daily shard appends by
+# per-key summation instead of retraining on the whole corpus (at
+# 100 TB: one shard scan + one count-table merge vs a full corpus
+# rescan). Build and append are each one table commit
+# (sources/io.replace_table), so a crash leaves the old index or the
+# new one, never a mix. Scoring from the index is bit-identical to
+# in-plan training by construction — both feed the same
+# _score_backoff_from_counts arithmetic — and the registry entries pin
+# it with the SAME oracle SQL as the in-plan entry. The
 # ``<path>/meta`` file is the shared one (sources/io.write_meta /
 # read_meta); here it doubles as the commit marker, written LAST.
 # ---------------------------------------------------------------------------
@@ -491,24 +461,20 @@ def lm_index_build(
     path: str,
     text_col: str = "text",
 ) -> None:
-    """Persist the LM's trained state: ``<path>/unigrams`` (w, cu),
-    ``<path>/bigrams`` (w1, w, cb), ``<path>/trigrams`` (w2, w1, w,
-    ct), plus ``<path>/meta`` (tokenizer + fixed-point contract).
+    """Persist the LM's trained state: ``<path>/counts``, the
+    :func:`_ngram_counts` aggregate ``(k, g, ctx, c)``, plus
+    ``<path>/meta`` (tokenizer + fixed-point contract).
 
-    Durability: the three count tables commit first, ``meta`` LAST —
-    a crash mid-build leaves no meta, and every reader
-    (:func:`lm_index_read`, :func:`lm_index_append`,
+    Durability: the count table commits first (one ``sources.io``
+    commit), ``meta`` LAST — a crash mid-build leaves no meta, and
+    every reader (:func:`lm_index_read`, :func:`lm_index_append`,
     :func:`lm_index_score`) treats meta-absent as "no index", so a
-    torn build can never be half-read. Each count table is replaced by
-    one ``sources.io`` commit; appends go through
+    torn build can never be half-read. Appends go through
     :func:`lm_index_append`, which merges counts rather than unioning
     files."""
     spark = train_docs.sparkSession
     train_toks = train_docs.select(_tokens(text_col).alias("ts"))
-    uni, bi, tri = _ngram_count_tables(train_toks)
-    replace_table(spark, uni, f"{path}/unigrams")
-    replace_table(spark, bi, f"{path}/bigrams")
-    replace_table(spark, tri, f"{path}/trigrams")
+    replace_table(spark, _ngram_counts(train_toks), f"{path}/counts")
     write_meta(
         spark,
         path,
@@ -521,61 +487,47 @@ def lm_index_build(
     )
 
 
-def lm_index_read(
-    spark, path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Load the persisted count tables → ``(uni, bi, tri)``. Raises
-    if the index was never committed (meta absent) — a missing index
-    must surface loudly, not as an empty LM that scores everything at
-    the OOV floor."""
+def lm_index_read(spark, path: str) -> DataFrame:
+    """Load the persisted counts ``(k, g, ctx, c)``. Raises if the
+    index was never committed (meta absent) — a missing index must
+    surface loudly, not as an empty LM that scores everything at the
+    OOV floor."""
     if read_meta(spark, path) is None:
         raise ValueError(
             f"no committed LM index at {path} (meta absent) — run "
             "lm_index_build first"
         )
-    return (
-        spark.read.parquet(f"{path}/unigrams"),
-        spark.read.parquet(f"{path}/bigrams"),
-        spark.read.parquet(f"{path}/trigrams"),
-    )
+    return spark.read.parquet(f"{path}/counts")
 
 
 def lm_index_append(
     new_docs: DataFrame, path: str, text_col: str = "text"
 ) -> None:
     """Fold a new shard's counts into the persisted index WITHOUT
-    retraining: counts are additive, so the merge is three per-key
-    summed unions (shard scan + count-table merge — never a corpus
-    rescan). Each table is replaced by one commit
-    (:func:`..sources.io.replace_table`; the plans read the same paths
-    they replace); tables merge in trigram→bigram→unigram order and
-    meta stays untouched, so a crash between two tables' commits
-    leaves a detectable mixed state behind an intact meta — re-running
-    the SAME append is NOT idempotent (counts would double); recovery
-    is a rebuild, the same posture as the LSH index's repair path.
+    retraining: counts are additive, so the merge is one per-key
+    summed union (shard scan + count-table merge — never a corpus
+    rescan), replacing the table in ONE commit
+    (:func:`..sources.io.replace_table`; the plan reads the table it
+    replaces). A crash anywhere in the append recovers to the old
+    counts or the new ones, never a mix; meta stays untouched.
+    Re-running the SAME append is NOT idempotent (counts would
+    double): a torn append is recovered by :func:`..sources.io.recover`,
+    never by a blind re-append.
 
     Incremental == full, exactly: merged counts are bit-identical to
     counts trained on corpus ∪ shard (per-key BIGINT sums), which the
     registry pins by hashing the appended index against an oracle
     that retrains from scratch."""
     spark = new_docs.sparkSession
-    for table in ("unigrams", "bigrams", "trigrams"):
-        recover(spark, f"{path}/{table}")
-    uni0, bi0, tri0 = lm_index_read(spark, path)
+    recover(spark, f"{path}/counts")
     toks = new_docs.select(_tokens(text_col).alias("ts"))
-    uni1, bi1, tri1 = _ngram_count_tables(toks)
-    tri_m = (
-        tri0.unionByName(tri1)
-        .groupBy("w2", "w1", "w")
-        .agg(F.sum("ct").alias("ct"))
+    merged = (
+        lm_index_read(spark, path)
+        .unionByName(_ngram_counts(toks))
+        .groupBy("k", "g", "ctx")
+        .agg(F.sum("c").alias("c"))
     )
-    replace_table(spark, tri_m, f"{path}/trigrams")
-    bi_m = (
-        bi0.unionByName(bi1).groupBy("w1", "w").agg(F.sum("cb").alias("cb"))
-    )
-    replace_table(spark, bi_m, f"{path}/bigrams")
-    uni_m = uni0.unionByName(uni1).groupBy("w").agg(F.sum("cu").alias("cu"))
-    replace_table(spark, uni_m, f"{path}/unigrams")
+    replace_table(spark, merged, f"{path}/counts")
 
 
 def lm_index_score(
@@ -585,15 +537,13 @@ def lm_index_score(
     text_col: str = "text",
 ) -> DataFrame:
     """Score documents against the PERSISTED index — the daily-cadence
-    read path: the three parquet count tables, read back as one counts
-    frame, feed the same score table, lookups and per-doc groupBy as
-    the in-plan scorer, never a training scan. Output schema and
-    arithmetic identical to :func:`lm_score_stupid_backoff` (both call
+    read path: the parquet count table feeds the same score table,
+    lookups and per-doc groupBy as the in-plan scorer, never a
+    training scan. Output schema and arithmetic identical to
+    :func:`lm_score_stupid_backoff` (both call
     :func:`_score_backoff_from_counts`)."""
     spark = docs.sparkSession
     toks = docs.select(
         F.col(id_col).alias("id"), _tokens(text_col).alias("ts")
     )
-    return _score_backoff_from_counts(
-        toks, _counts_from_tables(*lm_index_read(spark, path))
-    )
+    return _score_backoff_from_counts(toks, lm_index_read(spark, path))

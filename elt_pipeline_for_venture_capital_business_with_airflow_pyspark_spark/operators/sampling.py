@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.io import read_meta, recover, replace_table, write_meta
+from .dedup import dedup_keep_first
 
 __all__ = [
     "cap_per_group",
@@ -59,11 +60,7 @@ def cap_per_group(
     final tiebreak so equal hashes (never in practice) stay total-ordered.
     """
     h = F.md5(F.col(id_col).cast("string"))
-    w = Window.partitionBy(*group_cols).orderBy(h, F.col(id_col))
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
+    return dedup_keep_first(df, group_cols, [h, F.col(id_col)], k, rank_col)
 
 
 def weighted_mix(
@@ -220,15 +217,12 @@ def sample_negatives(
         F.lit("@"),
         F.col("__cid").cast("string"),
     )
-    w = Window.partitionBy("__qid").orderBy(rk, F.col("__cid"))
-    return (
-        cand.withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= k)
-        .select(
-            F.col("__qid").alias("query_id"),
-            F.col("__cid").alias("neg_id"),
-            "neg_rank",
-        )
+    return dedup_keep_first(
+        cand, ["__qid"], [rk, F.col("__cid")], k, "neg_rank"
+    ).select(
+        F.col("__qid").alias("query_id"),
+        F.col("__cid").alias("neg_id"),
+        "neg_rank",
     )
 
 
@@ -530,33 +524,7 @@ def dsir_importance_weights(
 
     Output: ``(id, n_grams, logw256, logw_bits)`` for raw-pool docs.
     """
-    base = df.filter(F.col(id_col).isNotNull()).withColumn(
-        "__t", F.coalesce(target_pred, F.lit(False))
-    )
-    # two consumers (bucket distributions + the raw-pool scoring leg)
-    # share ONE per-(doc, bucket) aggregate. The target flag rides as
-    # a max() AGGREGATE, not a grouping key: a filter on an aggregated
-    # value cannot be pushed below its aggregate, so both consumers
-    # see a bit-identical subtree and Spark reuses the exchange — the
-    # corpus is scanned and gram-exploded ONCE with no materialized
-    # intermediate. (The earlier localCheckpoint form materialized the
-    # corpus-sized feature matrix; the sf1→sf10 octave showed that
-    # spilling it is superlinear — exponent 1.27 — while the shared-
-    # exchange form stays streaming.)
-    # the explicit isnotnull(b) matches the null-filter the scoring
-    # join infers on its key — without it Catalyst pushes that filter
-    # below the scoring-side aggregate only, the subtrees stop being
-    # canonically equal, and the exchange is NOT reused (two corpus
-    # scans). b = pmod(h, n_buckets) is never null, so this is a
-    # no-op semantically; it exists purely to keep both consumers'
-    # subtrees identical.
-    cdb = _dsir_bucket_counts(
-        base, id_col, text_col, n_buckets, k, carry=("__t",)
-    ).filter(F.col("b").isNotNull())
-    bt = cdb.groupBy("b").agg(
-        F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
-        F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
-    )
+    cdb, bt = _dsir_bucket_table(df, target_pred, id_col, text_col, n_buckets, k)
     lw = _dsir_log_ratios(bt, n_buckets)
     scored = (
         cdb.join(F.broadcast(lw), "b")
@@ -594,6 +562,48 @@ def _dsir_bucket_counts(
         .groupBy("id", *carry, F.pmod(F.col("h"), F.lit(n_buckets)).alias("b"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
+
+
+def _dsir_bucket_table(
+    df: DataFrame,
+    target_pred: F.Column,
+    id_col: str,
+    text_col: str,
+    n_buckets: int,
+    k: int,
+) -> tuple[DataFrame, DataFrame]:
+    """``(cdb, bt)``: the per-(doc, bucket) counts ``(id, __t, b, c)``
+    of the non-NULL-id docs, ``__t`` the target flag, and the bucket
+    distributions ``(b, tp, tq)`` (target / raw totals per bucket) —
+    the one state the in-plan scorer and the persisted index's build
+    and append derive.
+
+    The target flag rides as a max() AGGREGATE in the in-plan scorer,
+    not a grouping key: a filter on an aggregated value cannot be
+    pushed below its aggregate, so the distributions and the scoring
+    leg see a bit-identical ``cdb`` subtree and Spark reuses its
+    exchange — the corpus is scanned and gram-exploded ONCE with no
+    materialized intermediate. (The earlier localCheckpoint form
+    materialized the corpus-sized feature matrix; the sf1→sf10 octave
+    showed that spilling it is superlinear — exponent 1.27 — while the
+    shared-exchange form stays streaming.) The explicit
+    ``isnotnull(b)`` matches the null-filter the scoring join infers on
+    its key — without it Catalyst pushes that filter below the
+    scoring-side aggregate only, the subtrees stop being canonically
+    equal, and the exchange is NOT reused (two corpus scans).
+    ``b = pmod(h, n_buckets)`` is never null, so the filter is a no-op
+    semantically."""
+    base = df.filter(F.col(id_col).isNotNull()).withColumn(
+        "__t", F.coalesce(target_pred, F.lit(False))
+    )
+    cdb = _dsir_bucket_counts(
+        base, id_col, text_col, n_buckets, k, carry=("__t",)
+    ).filter(F.col("b").isNotNull())
+    bt = cdb.groupBy("b").agg(
+        F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
+        F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
+    )
+    return cdb, bt
 
 
 def _dsir_log_ratios(bt: DataFrame, n_buckets: int) -> DataFrame:
@@ -705,10 +715,12 @@ def dsir_gumbel_topk(
 # IVF, pHash and LM indexes: at daily cadence over 100 TB the raw
 # pool is never re-featurized to score a new shard — the ≤n_buckets
 # count table persists, shards fold their counts in, and scoring
-# reads one tiny parquet table. Same durability discipline as
-# operators/lm.lm_index_build: data tables commit first, the shared
-# ``<path>/meta`` (sources/io.write_meta) LAST, meta-absent reads as
-# "no index".
+# reads one tiny parquet table. Build and append derive that table
+# from the same _dsir_bucket_table state as the in-plan scorer, and
+# each replaces it in one commit. Same durability discipline as
+# operators/lm.lm_index_build: the one count table commits first, the
+# shared ``<path>/meta`` (sources/io.write_meta) LAST, meta-absent
+# reads as "no index".
 
 
 def dsir_index_build(
@@ -725,17 +737,7 @@ def dsir_index_build(
     so a torn build reads as no-index). One corpus pass; the stored
     table is ≤ n_buckets rows no matter the corpus size."""
     spark = df.sparkSession
-    base = df.filter(F.col(id_col).isNotNull()).withColumn(
-        "__t", F.coalesce(target_pred, F.lit(False))
-    )
-    bt = (
-        _dsir_bucket_counts(base, id_col, text_col, n_buckets, k, carry=("__t",))
-        .groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
-            F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
-        )
-    )
+    _, bt = _dsir_bucket_table(df, target_pred, id_col, text_col, n_buckets, k)
     replace_table(spark, bt, f"{path}/buckets")
     write_meta(
         spark,
@@ -777,19 +779,8 @@ def dsir_index_append(
     spark = df.sparkSession
     recover(spark, f"{path}/buckets")
     bt0, meta = dsir_index_read(spark, path)
-    base = df.filter(F.col(id_col).isNotNull()).withColumn(
-        "__t", F.coalesce(target_pred, F.lit(False))
-    )
-    bt1 = (
-        _dsir_bucket_counts(
-            base, id_col, text_col, int(meta["n_buckets"]), int(meta["k"]),
-            carry=("__t",),
-        )
-        .groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
-            F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
-        )
+    _, bt1 = _dsir_bucket_table(
+        df, target_pred, id_col, text_col, int(meta["n_buckets"]), int(meta["k"])
     )
     merged = (
         bt0.unionByName(bt1)

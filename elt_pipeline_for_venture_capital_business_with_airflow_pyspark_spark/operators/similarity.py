@@ -32,10 +32,11 @@ Near-dup and dedup paths:
                           keep-first) — the semantic complement of
                           the lexical MinHash/SimHash dedup family.
 
-Shared cores: every ranked search ends in :func:`_top_k` (one
-``row_number`` per query, ties to the lowest id); float scores are
-:func:`dot`/:func:`cosine_pre` and int8 scores :func:`int_dot`, one
-SQL builder for both (:func:`_dot_sql_text`); IVF cell assignment is
+Shared cores: every ranked search ends in the one per-key top-k,
+:func:`..dedup.dedup_keep_first` (one ``row_number`` per query, ties
+to the lowest id); float scores are :func:`dot`/:func:`cosine_pre`
+and int8 scores :func:`int_dot`, one SQL builder for both
+(:func:`_dot_sql_text`); IVF cell assignment is
 :func:`_assign_cells` and probe choice :func:`_centroid_sims`, both
 with the centroid norms folded at plan time.
 
@@ -50,7 +51,7 @@ from __future__ import annotations
 
 import math as _math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources import io as IO
@@ -238,23 +239,6 @@ def _centroid_sims(vec: F.Column, norm_col: F.Column, cent_rows) -> F.Column:
     )
 
 
-def _top_k(
-    scored: DataFrame, k: int, order: list, cols: list, by: str = "query_id"
-) -> DataFrame:
-    """The per-query ranking every search here ends in: ``rank`` =
-    ``row_number`` over ``by`` in ``order`` (each order ends in an id,
-    so ties are deterministic), rows with ``rank <= k``, projected to
-    ``cols``. The rank filter sits directly on the window, so Catalyst
-    plans a WindowGroupLimit: each partition keeps at most k rows per
-    query before the window's exchange."""
-    w = Window.partitionBy(by).orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*cols)
-    )
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -291,12 +275,10 @@ def cosine_topk(
             cosine_pre("__qvec", "__cvec", "__qn", "__cn", dim),
         )
     )
-    return _top_k(
-        scored,
-        k,
-        [F.col("cosine_sim").desc(), F.col("neighbor_id")],
-        ["query_id", "rank", "neighbor_id", "cosine_sim"],
-    )
+    return DD.dedup_keep_first(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")],
+        k, "rank",
+    ).select("query_id", "rank", "neighbor_id", "cosine_sim")
 
 
 def _knn_avg(topk: DataFrame, out_id: str, out_avg: str) -> DataFrame:
@@ -385,13 +367,9 @@ def bitext_margin_mine(
             / ((F.col("__avg_src") + F.col("__avg_tgt")) / F.lit(2.0)),
         )
     )
-    best = _top_k(
-        scored,
-        1,
-        [F.col("margin").desc(), F.col("tgt_id")],
-        ["src_id", "tgt_id", "cosine_sim", "margin"],
-        by="src_id",
-    )
+    best = DD.dedup_keep_first(
+        scored, ["src_id"], [F.col("margin").desc(), F.col("tgt_id")]
+    ).select("src_id", "tgt_id", "cosine_sim", "margin")
     return best.filter(F.col("margin") >= threshold)
 
 
@@ -521,12 +499,10 @@ def lsh_ann_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine_sim").alias("cosine_sim"))
     )
-    return _top_k(
-        scored,
-        k,
-        [F.col("cosine_sim").desc(), F.col("neighbor_id")],
-        ["query_id", "rank", "neighbor_id", "cosine_sim"],
-    )
+    return DD.dedup_keep_first(
+        scored, ["query_id"], [F.col("cosine_sim").desc(), F.col("neighbor_id")],
+        k, "rank",
+    ).select("query_id", "rank", "neighbor_id", "cosine_sim")
 
 
 def _pick_centroids(
@@ -930,12 +906,9 @@ def _ivf_search(
             )
         )
         out = ["cosine_sim"]
-    return _top_k(
-        scored,
-        k,
-        [F.col(out[-1]).desc(), F.col(id_col)],
-        ["query_id", "rank", F.col(id_col).alias("neighbor_id"), *out],
-    )
+    return DD.dedup_keep_first(
+        scored, ["query_id"], [F.col(out[-1]).desc(), F.col(id_col)], k, "rank"
+    ).select("query_id", "rank", F.col(id_col).alias("neighbor_id"), *out)
 
 
 def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> dict:
@@ -1272,12 +1245,10 @@ def ivfpq_topk(
             ).alias("approx_d2"),
         )
     )
-    return _top_k(
-        scored,
-        k,
-        [F.col("approx_d2").asc(), F.col("neighbor_id")],
-        ["query_id", "rank", "neighbor_id", "approx_d2"],
-    )
+    return DD.dedup_keep_first(
+        scored, ["query_id"], [F.col("approx_d2").asc(), F.col("neighbor_id")],
+        k, "rank",
+    ).select("query_id", "rank", "neighbor_id", "approx_d2")
 
 
 def quantize_int8(
@@ -1392,12 +1363,10 @@ def ann_topk_int8(
     # dots incomparable across corpus rows); the score is exact-int ×
     # two fixed-order multiplies, so the ordering is still
     # deterministic cross-engine, tie-broken by neighbor id
-    return _top_k(
-        scored,
-        k,
-        [F.col("score").desc(), F.col("neighbor_id")],
-        ["query_id", "rank", "neighbor_id", "dot_int", "score"],
-    )
+    return DD.dedup_keep_first(
+        scored, ["query_id"], [F.col("score").desc(), F.col("neighbor_id")],
+        k, "rank",
+    ).select("query_id", "rank", "neighbor_id", "dot_int", "score")
 
 
 def mmr_rerank(
@@ -1463,17 +1432,14 @@ def mmr_rerank(
             "__score",
             F.lit(lam) * F.col("__rel") - F.lit(1.0 - lam) * F.col("__maxsim"),
         )
-        sel = _top_k(
-            scored,
-            1,
-            [F.col("__score").desc(), F.col("cand_id")],
-            [
-                "query_id",
-                F.col("cand_id").alias("__sel_id"),
-                F.col("__vec").alias("__sel_vec"),
-                F.col("__norm").alias("__sel_norm"),
-                F.col("__score").alias("__sel_score"),
-            ],
+        sel = DD.dedup_keep_first(
+            scored, ["query_id"], [F.col("__score").desc(), F.col("cand_id")]
+        ).select(
+            "query_id",
+            F.col("cand_id").alias("__sel_id"),
+            F.col("__vec").alias("__sel_vec"),
+            F.col("__norm").alias("__sel_norm"),
+            F.col("__score").alias("__sel_score"),
         )
         picks.append(
             sel.select(

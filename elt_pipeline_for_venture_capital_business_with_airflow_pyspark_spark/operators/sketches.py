@@ -28,8 +28,10 @@ real hash-checked oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import dedup_keep_first
 
 __all__ = [
     "hll_partials",
@@ -301,12 +303,7 @@ def kmv_state(
         F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
     ).cast("bigint")
     hv = df.select(*group_cols, h.alias("hv")).distinct()
-    w = Window.partitionBy(*group_cols).orderBy("hv")
-    return (
-        hv.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return dedup_keep_first(hv, group_cols, ["hv"], k)
 
 
 def kmv_estimate(
@@ -347,12 +344,7 @@ def kmv_union(
     either side's raw data. Closed under composition: the result is
     itself a valid :func:`kmv_state`."""
     merged = state_a.unionByName(state_b).distinct()
-    w = Window.partitionBy(*group_cols).orderBy("hv")
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return dedup_keep_first(merged, group_cols, ["hv"], k)
 
 
 def kmv_setop_estimate(

@@ -84,33 +84,32 @@ def synthetic_partsupp(part: DataFrame, supplier: DataFrame) -> DataFrame:
     Precondition |supplier| >= 4 is ENFORCED, not assumed: with
     S div 4 == 0 the four supplier offsets collapse and the relation
     emits duplicate (ps_partkey, ps_suppkey) rows — a PK violation.
-    The check is an ``assert_true`` folded into the one-row supplier
-    count (evaluated once per job, unprunable because it feeds the
-    ps_s column every row reads; zero per-row cost).
+    The check is an ``assert_true`` folded into the ``ps_s`` column
+    of every generated row, so it fires exactly when a part row is
+    generated: an empty ``part`` generates nothing and never raises,
+    whichever side of the join AQE materializes first (on the one-row
+    count itself it fired whenever the count ran before AQE pruned the
+    empty part side).
     """
-    s_cnt = supplier.agg(F.count(F.lit(1)).alias("__ps_s_raw")).select(
-        (
-            F.col("__ps_s_raw")
-            + F.coalesce(
-                F.assert_true(
-                    F.col("__ps_s_raw") >= 4,
-                    F.lit(
-                        "synthetic_partsupp requires |supplier| >= 4: "
-                        "S div 4 == 0 collapses the four supplier "
-                        "offsets into duplicate (ps_partkey, "
-                        "ps_suppkey) rows"
-                    ),
-                ).cast("long"),
-                F.lit(0),
-            )
-        ).alias("ps_s")
+    s_cnt = supplier.agg(F.count(F.lit(1)).alias("__ps_s_raw"))
+    ps_s = F.col("__ps_s_raw") + F.coalesce(
+        F.assert_true(
+            F.col("__ps_s_raw") >= 4,
+            F.lit(
+                "synthetic_partsupp requires |supplier| >= 4: "
+                "S div 4 == 0 collapses the four supplier "
+                "offsets into duplicate (ps_partkey, "
+                "ps_suppkey) rows"
+            ),
+        ).cast("long"),
+        F.lit(0),
     )
     exploded = (
         part.select("p_partkey")
         .join(F.broadcast(s_cnt))  # 1-row cross: supplier count as a column
         .select(
             "p_partkey",
-            "ps_s",
+            ps_s.alias("ps_s"),
             F.explode(F.sequence(F.lit(0), F.lit(3))).alias("ps_i"),
         )
     )

@@ -1213,7 +1213,7 @@ _LM_TOK_SQL = (
 
 
 def _lm_trigram_counts_sql(train_pred: str) -> str:
-    """ANSI restatement of the persisted trigram count table over a
+    """ANSI restatement of the persisted index's trigram counts over a
     training predicate — the oracle retrains FROM SCRATCH, so hashing
     it against the index read back from parquet pins both the build
     write path and (for the append entry) incremental == full."""
@@ -1230,11 +1230,11 @@ def _lm_trigram_counts_sql(train_pred: str) -> str:
 def _lm_build_path(sf: str) -> str:
     # fingerprinted per-user cache paths (round-12): dataset regen
     # under the same sf name yields a new path — no stale index reuse
-    return _dataset_cache_path("lm_index_build_v1", sf)
+    return _dataset_cache_path("lm_index_build_v2", sf)
 
 
 def _lm_inc_path(sf: str) -> str:
-    return _dataset_cache_path("lm_index_inc_v1", sf)
+    return _dataset_cache_path("lm_index_inc_v2", sf)
 
 
 _LM_INC_TAG = "corpus12_plus_shard34"
@@ -1269,15 +1269,15 @@ def _lm_inc_bootstrap(spark: SparkSession, sf: str) -> str:
 )
 def _text_lm_index_build(spark: SparkSession, sf: str) -> DataFrame:
     """BUILD leg of the persisted LM lifecycle (operators/lm.
-    lm_index_build, VERDICT r11 #4): the trigram/bigram/unigram count
-    tables — the LM's ENTIRE trained state — are written to parquet
-    once and returned READ BACK from the files; the oracle retrains
-    the trigram table from scratch in ANSI SQL, so a torn write, a
-    tokenizer drift, or a count error fails the hash, not just the
-    row count. Mirrors the LSH/IVF/pHash index discipline (VERDICT
+    lm_index_build, VERDICT r11 #4): the n-gram count table — the
+    LM's ENTIRE trained state — is written to parquet once and its
+    trigram rows are returned READ BACK from the files; the oracle
+    retrains the trigram counts from scratch in ANSI SQL, so a torn
+    write, a tokenizer drift, or a count error fails the hash, not
+    just the row count. Mirrors the LSH/IVF/pHash index discipline (VERDICT
     r11 "missing" #3 closed): at daily cadence over 100 TB the corpus
     is never re-scanned to score a shard — counts persist, shards
-    append, scoring reads three count tables."""
+    append, scoring reads one count table."""
     docs = read_table(spark, sf, "documents")
     path = _lm_build_path(sf)
     LM.lm_index_build(
@@ -1286,9 +1286,7 @@ def _text_lm_index_build(spark: SparkSession, sf: str) -> DataFrame:
         ),
         path,
     )
-    return spark.read.parquet(f"{path}/trigrams").select(
-        "w2", "w1", "w", "ct"
-    )
+    return LM._tables_from_counts(LM.lm_index_read(spark, path))[2]
 
 
 @_register(
@@ -1298,19 +1296,17 @@ def _text_lm_index_build(spark: SparkSession, sf: str) -> DataFrame:
 def _text_lm_index_append(spark: SparkSession, sf: str) -> DataFrame:
     """APPEND leg (operators/lm.lm_index_append): a fresh build on
     the doc_id%5 ∈ {1,2} corpus half, then the {3,4} shard's counts
-    are FOLDED IN by per-key summation (one table commit each; trigram →
-    bigram → unigram, meta untouched) — never a corpus retrain. The
-    returned frame is the merged trigram table read back from
-    parquet; the oracle retrains on the UNION (doc_id%5 != 0) from
-    scratch, so this entry hash-pins incremental == full for the LM
-    exactly the way dedup_incremental_lsh pins it for LSH. The
-    entry re-bootstraps build+append each call, so it is idempotent
-    even though a bare re-append of the same shard would double
-    counts (documented in lm_index_append)."""
+    are FOLDED IN by per-key summation (one table commit, meta
+    untouched) — never a corpus retrain. The returned frame is the
+    merged index's trigram rows read back from parquet; the oracle
+    retrains on the UNION (doc_id%5 != 0) from scratch, so this entry
+    hash-pins incremental == full for the LM exactly the way
+    dedup_incremental_lsh pins it for LSH. The entry re-bootstraps
+    build+append each call, so it is idempotent even though a bare
+    re-append of the same shard would double counts (documented in
+    lm_index_append)."""
     path = _lm_inc_bootstrap(spark, sf)
-    return spark.read.parquet(f"{path}/trigrams").select(
-        "w2", "w1", "w", "ct"
-    )
+    return LM._tables_from_counts(LM.lm_index_read(spark, path))[2]
 
 
 def _lm_index_score_sql() -> str:
@@ -1325,9 +1321,9 @@ def _lm_index_score_sql() -> str:
 def _text_lm_index_score(spark: SparkSession, sf: str) -> DataFrame:
     """SCORE-FROM-INDEX leg (operators/lm.lm_index_score): the
     held-out doc_id%5 == 0 shard is scored against the PERSISTED
-    count tables — three parquet scans read back as one counts frame,
-    the score table's context join, three lookups and one per-doc
-    groupBy, no training scan anywhere in the plan. The
+    count table — one parquet scan, the score table's context join,
+    three lookups and one per-doc groupBy, no training scan anywhere
+    in the plan. The
     index state is build({1,2}) ⊕ append({3,4}) ≡ train on
     doc_id%5 != 0, so this entry shares text_lm_perplexity's EXACT
     oracle: the daily read path must reproduce the in-plan trained

@@ -101,9 +101,9 @@ def _window_running_sum(spark: SparkSession, sf: str) -> DataFrame:
 )
 def _tumbling_window_agg(spark: SparkSession, sf: str) -> DataFrame:
     """§2.7: 1-day tumbling window aggregation (batch form; the
-    streaming twin is streaming.incremental.streaming_tumbling_agg)."""
+    streaming twin is streaming.incremental.streaming_window_agg)."""
     ev = read_table(spark, sf, "events")
-    out = INC.tumbling_agg(ev, "ts", "1 day")
+    out = INC.window_agg(ev, "ts", "1 day")
     return out.select(
         F.unix_micros("window_start").alias("window_start_us"),
         "event_type",
@@ -437,14 +437,14 @@ def _window_rolling_range(spark: SparkSession, sf: str) -> DataFrame:
 )
 def _sliding_window_agg(spark: SparkSession, sf: str) -> DataFrame:
     """Sliding-window aggregation (10-minute windows every 5 minutes,
-    streaming/incremental.sliding_agg — the same F.window op
+    streaming/incremental.window_agg — the same F.window op
     Structured Streaming executes): each event lands in
     window/slide = 2 windows, amplified map-side BEFORE the partial
     agg, so the shuffle carries (window,type) partials only. The
     oracle replicates Spark's epoch-aligned window-start math
     explicitly."""
     ev = read_table(spark, sf, "events")
-    out = INC.sliding_agg(ev, "ts", "10 minutes", "5 minutes")
+    out = INC.window_agg(ev, "ts", "10 minutes", "5 minutes")
     return out.select(
         F.unix_micros("window_start").alias("ws_us"),
         "event_type",

@@ -126,17 +126,20 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     return spark.read.schema(schema).json(path)
 
 
-def read_csv_quarantine(
+def read_quarantine(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
+    fmt: str,
     header: bool = True,
     corrupt_col: str = "_corrupt_record",
 ) -> tuple[DataFrame, DataFrame]:
-    """PERMISSIVE CSV scan split into (clean, quarantined) frames —
-    the production staging-load pattern for dirty feeds (the
-    reference trusts its API extracts and would crash the task on a
-    malformed row; a 100 TB load can't).
+    """PERMISSIVE scan of a ``fmt`` feed (``"csv"`` or ``"json"``, the
+    REST-landed blobs of reference helper/minio.py:19-45) split into
+    (clean, quarantined) frames — the production staging-load pattern
+    for dirty feeds (the reference trusts its API extracts and would
+    crash the task on a malformed row; a 100 TB load can't).
+    ``header`` applies to CSV; the JSON reader ignores it.
 
     Malformed rows land with the raw line preserved in
     ``corrupt_col`` and every schema column NULL; clean rows have
@@ -154,33 +157,9 @@ def read_csv_quarantine(
         spark.read.schema(aug)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt_col)
-        .csv(path, header=header)
-        .cache()
-    )
-    good = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = raw.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw_record")
-    )
-    return good, bad
-
-
-def read_json_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """PERMISSIVE JSON scan split into (clean, quarantined) frames —
-    same contract as `read_csv_quarantine` for REST-landed JSON
-    blobs (reference: helper/minio.py:19-45 land path)."""
-    aug = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-    )
-    raw = (
-        spark.read.schema(aug)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
+        .option("header", header)
+        .format(fmt)
+        .load(path)
         .cache()
     )
     good = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
@@ -397,30 +376,6 @@ def write_jdbc(
     writer.save()
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed-table sink — the co-located-join layout.
-
-    Two fact tables bucketed on the same key with the same bucket
-    count join with **zero shuffle** (Catalyst proves the partitioning
-    requirement is already satisfied — no Exchange in the plan; see
-    tests/test_plan_shapes.py). At 100 TB this converts the biggest
-    recurring fact⋈fact shuffle into a map-side merge per bucket.
-    Bucketing requires the session catalog (``saveAsTable``), not a
-    bare path — buckets are recorded in table metadata.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
-
-
 def merge_upsert(
     new_df: DataFrame,
     old_df: DataFrame | None,
@@ -436,15 +391,11 @@ def merge_upsert(
     ordering is given. One shuffle on the key for the dedup window +
     one for the anti join (broadcast when ``new_df`` is small).
     """
-    from pyspark.sql import Window as W
-
     if order_by is not None:
-        w = W.partitionBy(*keys).orderBy(F.col(order_by).desc())
-        new_df = (
-            new_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        # imported here: operators.dedup imports this module
+        from ..operators.dedup import dedup_keep_first
+
+        new_df = dedup_keep_first(new_df, keys, [F.col(order_by).desc()])
     else:
         new_df = new_df.dropDuplicates(keys)
 

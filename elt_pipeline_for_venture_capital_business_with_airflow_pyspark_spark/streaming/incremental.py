@@ -5,8 +5,11 @@ The reference's "stream" is an Airflow daily batch with a
 ``created_at::DATE = ds - 1 day`` slice predicate
 (reference: dags/vcapital_staging/tasks/components/extract.py:41-43) —
 late data is silently ignored. The engine keeps batch-incremental as
-the contract and adds a true Structured Streaming mode with
-watermarked tumbling windows as the scale path for continuous feeds.
+the contract and adds a true Structured Streaming mode as the scale
+path for continuous feeds. Windowed aggregation is one body,
+:func:`window_agg` (tumbling or sliding, over a batch frame or a
+stream); :func:`streaming_window_agg` runs it over a watermarked
+file-source stream.
 Continuous near-dup detection (:func:`streaming_index_dedup`) is one
 stream start for both persisted index families (text MinHash-LSH,
 image pHash); its exactly-once micro-batch sink is
@@ -38,16 +41,24 @@ def incremental_slice(df: DataFrame, ts_col: str, ds: str, lag_days: int = 1) ->
     return df.filter((c >= lo) & (c < hi))
 
 
-def tumbling_agg(df: DataFrame, ts_col: str, window: str = "1 day") -> DataFrame:
-    """Batch tumbling-window aggregation over an event stream: count +
-    sum(value) per (window, event_type). Same logical op as the
-    streaming variant below — one groupBy, map-side partials."""
+def window_agg(
+    df: DataFrame, ts_col: str, window: str, slide: str | None = None
+) -> DataFrame:
+    """Windowed aggregation over an event frame, batch or streaming:
+    count + sum(value) per (window, event_type), windows of ``window``
+    length every ``slide`` (``None``: tumbling, one window per event;
+    overlapping when slide < window — each event lands in
+    window/slide windows). One groupBy with map-side partials; the
+    row amplification of a sliding window is applied map-side before
+    the partial aggregation, so the shuffle carries pre-combined
+    (window, type) partials, not events. The same ``F.window`` op runs
+    on a stream (:func:`streaming_window_agg`), so the batch result
+    is the streaming result's oracle."""
     return (
-        # null-ts rows are excluded: a time window cannot be assigned to
-        # an undated event — the same contract the STREAMING twin is
-        # forced into (F.window drops them), made explicit for batch
+        # null-ts rows are excluded: a time window cannot be assigned
+        # to an undated event (F.window drops them on a stream too)
         df.filter(F.col(ts_col).isNotNull())
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
+        .groupBy(F.window(F.col(ts_col), window, slide).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # exact decimal accumulation → result independent of
@@ -64,99 +75,26 @@ def tumbling_agg(df: DataFrame, ts_col: str, window: str = "1 day") -> DataFrame
     )
 
 
-def sliding_agg(
-    df: DataFrame,
+def streaming_window_agg(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
     ts_col: str,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
+    window: str,
+    slide: str | None = None,
+    *,
+    watermark: str,
 ) -> DataFrame:
-    """Batch sliding-window aggregation: count + sum(value) per
-    (window, event_type), windows of ``window`` length every ``slide``
-    (overlapping when slide < window — each event lands in
-    window/slide windows). Same ``F.window`` op Structured Streaming
-    uses, so the batch result is the streaming result's oracle.
-    Row amplification is the overlap factor, applied map-side before
-    the partial aggregation — the shuffle carries pre-combined
-    (window, type) partials, not events."""
-    return (
-        # same null-ts exclusion contract as tumbling_agg
-        df.filter(F.col(ts_col).isNotNull())
-        .groupBy(F.window(F.col(ts_col), window, slide).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_tumbling_agg(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    ts_col: str = "ts",
-    window: str = "1 day",
-    watermark: str = "1 day",
-):
-    """Structured Streaming equivalence mode: file-source stream with a
-    watermark bounding late data (the reference's implicit
-    late-data-dropped semantics made explicit). Returns an unstarted
-    streaming DataFrame; callers attach a sink (tests use a memory
-    sink + processAllAvailable)."""
+    """Structured Streaming equivalence mode: :func:`window_agg` over a
+    file-source stream with a watermark bounding late data (the
+    reference's implicit late-data-dropped semantics made explicit).
+    The watermark closes windows older than max(event time) −
+    ``watermark``, so state stays bounded (window/slide concurrent
+    windows per key when sliding). Returns an unstarted streaming
+    DataFrame; callers attach a sink (tests use a memory sink +
+    processAllAvailable and pin it to the batch result)."""
     stream = spark.readStream.schema(schema).parquet(path)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_sliding_agg(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "1 hour",
-):
-    """Streaming twin of :func:`sliding_agg`: overlapping windows on a
-    watermarked file-source stream. State per key is window/slide
-    concurrent windows; the watermark closes windows older than
-    max(event time) − watermark so state stays bounded. Returns an
-    unstarted streaming DataFrame (tests pin it to the batch twin)."""
-    stream = spark.readStream.schema(schema).parquet(path)
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window, slide).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(20,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return window_agg(stream.withWatermark(ts_col, watermark), ts_col, window, slide)
 
 
 def sessionize(

@@ -128,9 +128,7 @@ def sessionize_stream(
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas — Spark 4's arbitrary-state successor to
-# applyInPandasWithState: typed state handles (value/list/map), per-key
-# TTL, and timers, against the RocksDB state store.
+# Running per-key event count: state is one long per key.
 # ---------------------------------------------------------------------------
 
 COUNT_OUTPUT_SCHEMA = T.StructType(
@@ -139,71 +137,6 @@ COUNT_OUTPUT_SCHEMA = T.StructType(
         T.StructField("n_events", T.LongType()),
     ]
 )
-
-
-try:  # pyspark >= 4.0
-    from pyspark.sql.streaming import StatefulProcessor as _StatefulProcessor
-except ImportError:  # pragma: no cover
-    _StatefulProcessor = object
-
-
-class _RunningCount(_StatefulProcessor):
-    """Per-key lifetime event counter. State = ONE long per key — the
-    minimal demonstration of a typed ValueState handle; swap the
-    schema for richer per-key aggregates (the session state above)
-    without changing the operator shape."""
-
-    def init(self, handle):  # StatefulProcessorHandle
-        self._count = handle.getValueState(
-            "count", T.StructType([T.StructField("cnt", T.LongType())])
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        n = 0
-        for pdf in rows:
-            n += len(pdf)
-        prev = self._count.get()
-        total = (prev[0] if prev is not None else 0) + n
-        self._count.update((total,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [total]})
-
-    def close(self) -> None:
-        pass
-
-
-def running_count_stream(
-    events: DataFrame,
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Continuous per-user event counter on the new
-    ``transformWithStateInPandas`` API (requires the RocksDB state
-    store provider — set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...RocksDBStateStoreProvider`` — and the ``protobuf`` package,
-    the TWS state-server wire protocol; absent in this sandbox, so the
-    pytest is import-gated and ``sessionize_stream`` above is the
-    executed custom-state path here). Update-mode emissions: the last
-    row per key equals the batch groupBy count (pinned in
-    tests/test_stateful_streaming.py). State is one long per key,
-    shuffled once per micro-batch on the key — the same bounded-state
-    posture as the sessionizer."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(the TWS state-server wire protocol). Install protobuf, or "
-            "use running_count_stream_ap (applyInPandasWithState) which "
-            "has identical semantics without the dependency."
-        ) from exc
-    prepared = events.select(F.col(user_col).cast("long").alias("user_id"))
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningCount(),
-        outputStructType=COUNT_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
 
 _COUNT_STATE_SCHEMA = T.StructType([T.StructField("cnt", T.LongType())])
 
@@ -222,16 +155,15 @@ def _running_count_ap_fn(
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [total]})
 
 
-def running_count_stream_ap(
+def running_count_stream(
     events: DataFrame,
     user_col: str = "user_id",
 ) -> DataFrame:
-    """Continuous per-user event counter on ``applyInPandasWithState``
-    — bit-identical semantics to :func:`running_count_stream` (update-
-    mode emissions; last row per key equals the batch groupBy count)
-    without the TWS protobuf dependency, so it executes everywhere
-    this engine runs. State is one long per key, shuffled once per
-    micro-batch on the key — bounded by |active users|, not |events|."""
+    """Continuous per-user event counter on ``applyInPandasWithState``:
+    update-mode emissions, the last row per key equals the batch
+    groupBy count (pinned in tests/test_stateful_streaming.py). State
+    is one long per key, shuffled once per micro-batch on the key —
+    bounded by |active users|, not |events|."""
     prepared = events.select(F.col(user_col).cast("long").alias("user_id"))
     return prepared.groupBy("user_id").applyInPandasWithState(
         _running_count_ap_fn,

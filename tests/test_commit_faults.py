@@ -6,7 +6,8 @@ publish (``_publish`` raises once the manifest is out), and between two
 of its deletes (``remove_files`` deletes one file, then raises). The next
 run must recover on its own: the warehouse then equals a full build on
 natural keys and attributes with no surrogate key held twice, and a
-rewritten table holds exactly the rows it should."""
+rewritten table holds exactly the rows it should. The LM index's
+one-commit append recovers to the counts before it or after it."""
 
 from __future__ import annotations
 
@@ -160,6 +161,36 @@ def test_delete_keys_and_compaction_killed_recover(spark, tmp_path, monkeypatch,
     assert SIO.compact_parquet(spark, path) == 1
     assert len(_data_files(path)) == 1
     assert _rows(spark, path) == left
+
+
+@pytest.mark.parametrize("point", ("after_write", "after_publish"))
+def test_lm_index_append_killed_recovers_to_one_state(spark, tmp_path, monkeypatch, point):
+    """``lm_index_append`` is one commit: killed after its data write
+    or after its publish, the recovered counts equal exactly the index
+    before the append or the index after it, never a mix."""
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
+        lm as LM,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the lazy dog naps all day"),
+         (3, "the quick dog jumps over the lazy fox")],
+        "doc_id long, text string",
+    )
+    p = str(tmp_path / "lm")
+    LM.lm_index_build(docs.filter("doc_id < 3"), p)
+    before = _rows(spark, f"{p}/counts")
+    after = Counter(
+        tuple(r) for r in LM._ngram_counts(docs.select(LM._tokens("text").alias("ts"))).collect()
+    )
+    assert before != after
+
+    armed = _arm(monkeypatch, point, {"counts"})
+    with pytest.raises(Killed):
+        LM.lm_index_append(docs.filter("doc_id = 3"), p)
+    assert not armed
+    SIO.recover(spark, f"{p}/counts")
+    assert _rows(spark, f"{p}/counts") == (before if point == "after_write" else after)
 
 
 def test_dim_date_killed_before_publish_is_written_again(spark, staging_dir, tmp_path, monkeypatch):

@@ -94,7 +94,7 @@ def test_sliding_agg_overlap_factor(spark):
         (2, _ts("2024-01-01 00:12:00"), "x", 10.0),
     ]
     ev = spark.createDataFrame(rows, ["event_id", "ts", "event_type", "value"])
-    res = INC.sliding_agg(ev, "ts", "10 minutes", "5 minutes")
+    res = INC.window_agg(ev, "ts", "10 minutes", "5 minutes")
     cells = {
         r["window_start"].strftime("%H:%M"): (r["n_events"], r["sum_value"])
         for r in res.collect()

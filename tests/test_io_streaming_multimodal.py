@@ -54,9 +54,9 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir, tmp_path):
     # stream source needs µs timestamps on disk (the raw files are ns)
     stream_dir = str(tmp_path / "events_us")
     ev.write.parquet(stream_dir)
-    batch = INC.tumbling_agg(ev, "ts", "1 day").collect()
+    batch = INC.window_agg(ev, "ts", "1 day").collect()
 
-    stream_df = INC.streaming_tumbling_agg(
+    stream_df = INC.streaming_window_agg(
         spark, stream_dir, ev.schema, "ts", "1 day", watermark="0 seconds"
     )
     q = (
@@ -78,15 +78,15 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_streaming_sliding_matches_batch(spark, sf_dir, tmp_path):
-    """Overlapping-window streaming agg == batch sliding_agg on the
+    """Overlapping-window streaming agg == batch window_agg on the
     same data: proves the overlap fan-out and decimal-exact sums
     survive the streaming state machinery."""
     ev = read_table(spark, sf_dir, "events")
     stream_dir = str(tmp_path / "events_us_sliding")
     ev.write.parquet(stream_dir)
-    batch = INC.sliding_agg(ev, "ts", "10 minutes", "5 minutes").collect()
+    batch = INC.window_agg(ev, "ts", "10 minutes", "5 minutes").collect()
 
-    stream_df = INC.streaming_sliding_agg(
+    stream_df = INC.streaming_window_agg(
         spark, stream_dir, ev.schema, "ts", "10 minutes", "5 minutes",
         watermark="0 seconds",
     )
@@ -294,7 +294,7 @@ def test_csv_quarantine_split(spark, tmp_path):
         T.StructField("name", T.StringType()),
         T.StructField("score", T.DoubleType()),
     ])
-    good, bad = SIO.read_csv_quarantine(spark, str(p), schema)
+    good, bad = SIO.read_quarantine(spark, str(p), schema, "csv")
     assert good.columns == ["id", "name", "score"]
     assert {tuple(r) for r in good.collect()} == {
         (1, "alpha", 1.5),
@@ -321,7 +321,7 @@ def test_json_quarantine_split(spark, tmp_path):
         T.StructField("id", T.LongType()),
         T.StructField("name", T.StringType()),
     ])
-    good, bad = SIO.read_json_quarantine(spark, str(p), schema)
+    good, bad = SIO.read_quarantine(spark, str(p), schema, "json")
     assert {tuple(r) for r in good.collect()} == {(1, "alpha"), (3, "gamma")}
     assert [r["raw_record"] for r in bad.collect()] == ['{"id": 2, "name": broken']
 
@@ -492,10 +492,10 @@ def test_streaming_tumbling_null_ts_contract(spark, sf_dir, tmp_path):
     )
     stream_dir = str(tmp_path / "events_nullts")
     ev.write.parquet(stream_dir)
-    batch = INC.tumbling_agg(ev, "ts", "1 day").collect()
+    batch = INC.window_agg(ev, "ts", "1 day").collect()
     assert batch  # non-degenerate
 
-    stream_df = INC.streaming_tumbling_agg(
+    stream_df = INC.streaming_window_agg(
         spark, stream_dir, ev.schema, "ts", "1 day", watermark="0 seconds"
     )
     q = (

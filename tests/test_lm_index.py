@@ -42,14 +42,11 @@ def test_read_raises_without_committed_meta(spark, tmp_path):
     p = str(tmp_path / "lm_idx")
     with pytest.raises(ValueError, match="no committed LM index"):
         LM.lm_index_read(spark, p)
-    # a torn build (tables landed, meta did not) must ALSO read as
-    # "no index" — meta is the commit marker, written last
+    # a torn build (the count table landed, meta did not) must ALSO
+    # read as "no index" — meta is the commit marker, written last
     corpus = _docs(spark, {1, 2, 3})
     toks = corpus.select(LM._tokens("text").alias("ts"))
-    uni, bi, tri = LM._ngram_count_tables(toks)
-    uni.write.parquet(f"{p}/unigrams")
-    bi.write.parquet(f"{p}/bigrams")
-    tri.write.parquet(f"{p}/trigrams")
+    LM._ngram_counts(toks).write.parquet(f"{p}/counts")
     assert read_meta(spark, p) is None
     with pytest.raises(ValueError, match="no committed LM index"):
         LM.lm_index_read(spark, p)
@@ -59,12 +56,12 @@ def test_append_equals_full_retrain(spark, tmp_path):
     p = str(tmp_path / "lm_idx")
     LM.lm_index_build(_docs(spark, {1, 2, 3}), p)
     LM.lm_index_append(_docs(spark, {4, 5}), p)
-    uni_i, bi_i, tri_i = LM.lm_index_read(spark, p)
+    uni_i, bi_i, tri_i = LM._tables_from_counts(LM.lm_index_read(spark, p))
 
     full = _docs(spark, {1, 2, 3, 4, 5}).select(
         LM._tokens("text").alias("ts")
     )
-    uni_f, bi_f, tri_f = LM._ngram_count_tables(full)
+    uni_f, bi_f, tri_f = LM._tables_from_counts(LM._ngram_counts(full))
     assert _counts(uni_i, ["w", "cu"]) == _counts(uni_f, ["w", "cu"])
     assert _counts(bi_i, ["w1", "w", "cb"]) == _counts(
         bi_f, ["w1", "w", "cb"]
@@ -96,21 +93,21 @@ def test_score_from_index_equals_in_plan(spark, tmp_path):
 
 def test_bare_reappend_doubles_counts(spark, tmp_path):
     """Documented NON-idempotence: re-appending the same shard doubles
-    its counts — the recovery posture for a torn append is rebuild,
-    never blind re-append (docstring contract)."""
+    its counts — a torn append is recovered by the table commit, never
+    by a blind re-append (docstring contract)."""
     p = str(tmp_path / "lm_idx")
     LM.lm_index_build(_docs(spark, {1, 2}), p)
-    uni0, _, _ = LM.lm_index_read(spark, p)
+    uni0, _, _ = LM._tables_from_counts(LM.lm_index_read(spark, p))
     base = dict(_counts(uni0, ["w", "cu"]))
     LM.lm_index_append(_docs(spark, {3}), p)
     LM.lm_index_append(_docs(spark, {3}), p)
-    uni2, _, _ = LM.lm_index_read(spark, p)
+    uni2, _, _ = LM._tables_from_counts(LM.lm_index_read(spark, p))
     after = dict(_counts(uni2, ["w", "cu"]))
     shard_tokens = {
         r["w"]: r["cu"]
-        for r in LM._ngram_count_tables(
+        for r in LM._tables_from_counts(LM._ngram_counts(
             _docs(spark, {3}).select(LM._tokens("text").alias("ts"))
-        )[0].collect()
+        ))[0].collect()
     }
     for w, n in shard_tokens.items():
         assert after[w] == base.get(w, 0) + 2 * n

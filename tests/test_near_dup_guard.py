@@ -143,3 +143,29 @@ def test_ivf_topk_equals_persisted_probe(spark, tmp_path):
     got = sorted(tuple(r) for r in in_plan.collect())
     assert got == sorted(tuple(r) for r in persisted.collect())
     assert len(got) == 4 * 3
+
+
+def test_null_keys_pair_with_nothing(spark):
+    """A NULL key equals no key, its own included: two rows with a NULL
+    signature, fingerprint or embedding pair with nothing, as in the
+    all-pairs reference, while their non-NULL clones still pair."""
+    sig = spark.createDataFrame(
+        [(1, None), (2, None), (3, [1, 2, 3, 4]), (4, [1, 2, 3, 4])],
+        "id long, signature array<long>",
+    )
+    assert _pairs(DD.banded_pairs(sig, 4, 2, 0.5), "est_jaccard") == {(3, 4): 1.0}
+
+    fp = spark.createDataFrame(
+        [(1, None), (2, None), (3, 0x0F0F), (4, 0x0F0F)], "doc_id long, fingerprint long"
+    )
+    assert _pairs(DD.hamming_near_pairs(fp, "doc_id", "fingerprint", 3, 4), "hamming") == {
+        (3, 4): 0
+    }
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    corpus = spark.createDataFrame(
+        [(1, None), (2, None), (3, v), (4, v)], "vec_id long, embedding array<float>"
+    )
+    assert _pairs(SIM.embedding_near_dup(corpus, 4, 0.99), "cosine_sim") == {
+        (3, 4): _cos(v, v)
+    }

@@ -308,14 +308,13 @@ SHUFFLE_BUDGET = {
     # parquet read. Measured 0 at sf0.001 and sf0.01.
     "dedup_survivors_from_edges": 0,
     # r12 persisted LM index (VERDICT r11 #4). Build: the RETURNED
-    # plan is the trigram table read back from parquet — the count
-    # aggregation runs at write time as separate jobs (measured 0 at
-    # both SFs). Score: the three count tables read back as one counts
-    # frame (the token total is a single-partition sum, not a hash
-    # exchange), the position stream and the score table
-    # hash-partitioned for the first lookup before AQE broadcasts the
-    # score table, and the final per-doc groupBy (measured 3 + 3
-    # reused at sf0.001 and sf0.01).
+    # plan is the trigram rows of the count table read back from
+    # parquet — the count aggregation runs at write time as separate
+    # jobs (measured 0 at both SFs). Score: the one count table read
+    # back, the position stream and the score table hash-partitioned
+    # for the first lookup before AQE broadcasts the score table, and
+    # the final per-doc groupBy (measured 3 at sf0.001 both as three
+    # tables and as one).
     "text_lm_index_build": 0,
     "text_lm_index_score": 3,
     # r12 DSIR: one shared (doc,bucket) feature aggregate (its

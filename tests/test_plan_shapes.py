@@ -14,6 +14,9 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
+    layout as LYT,
+)
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import (
     io as SIO,
 )
@@ -107,8 +110,8 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         b = spark.range(1000).select(
             F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
         )
-        SIO.write_bucketed(a, "bkt_a", ["k"], 8)
-        SIO.write_bucketed(b, "bkt_b", ["k"], 8)
+        LYT.write_bucketed(a, "bkt_a", str(tmp_path / "a"), "k", 8)
+        LYT.write_bucketed(b, "bkt_b", str(tmp_path / "b"), "k", 8)
         ta, tb = spark.table("bkt_a"), spark.table("bkt_b")
         joined = ta.join(tb, "k")
         plan = _plan(joined)

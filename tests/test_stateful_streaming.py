@@ -9,7 +9,6 @@ without full reprocessing)."""
 from __future__ import annotations
 
 import pytest
-import pytest as _pytest_mod
 from pyspark.sql import functions as F
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources.io import (
@@ -128,7 +127,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     the streaming mode makes that policy explicit: a window older than
     the watermark is finalized and late arrivals into it are dropped."""
     from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.streaming.incremental import (
-        streaming_tumbling_agg,
+        streaming_window_agg,
     )
 
     def mk(rows):
@@ -147,7 +146,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
                  (2, "2024-01-02 10:30:00", 1, "click", 2.0)])
     batch1.coalesce(1).write.parquet(src)
 
-    agg = streaming_tumbling_agg(
+    agg = streaming_window_agg(
         spark, src, batch1.schema, ts_col="ts", window="1 day", watermark="1 day"
     )
     q = (
@@ -249,21 +248,10 @@ def test_native_session_window_matches_batch_sessionize(spark, sf_dir, tmp_path)
     assert got == want
 
 
-def _have_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def test_running_count_ap_matches_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState running counter: final emission per user
     equals the batch groupBy count, and state survives across
-    micro-batches (two files, maxFilesPerTrigger=1). Same semantics as
-    the transformWithStateInPandas variant, zero extra deps, so this
-    path executes in every environment."""
+    micro-batches (two files, maxFilesPerTrigger=1)."""
     from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import schemas
 
     ev = read_table(spark, sf_dir, "events")
@@ -281,7 +269,7 @@ def test_running_count_ap_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    counts = ST.running_count_stream_ap(stream)
+    counts = ST.running_count_stream(stream)
     q = (
         counts.writeStream.format("memory")
         .queryName("apcount_out")
@@ -306,93 +294,6 @@ def test_running_count_ap_matches_batch(spark, sf_dir, tmp_path):
         for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert got == want
-
-
-def test_transform_with_state_gate_without_protobuf(spark, sf_dir):
-    """Without protobuf the TWS wrapper must fail fast with an
-    actionable message pointing at the applyInPandasWithState twin —
-    not a cryptic worker-side crash mid-query. (With protobuf present
-    this test is a no-op; the end-to-end TWS run below covers it.)"""
-    if _have_protobuf():
-        return
-    ev = read_table(spark, sf_dir, "events")
-    with _pytest_mod.raises(ImportError, match="running_count_stream_ap"):
-        ST.running_count_stream(ev)
-
-
-def test_transform_with_state_running_count_matches_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas running counter: final emission per
-    user equals the batch groupBy count, and state survives across
-    micro-batches (two files, maxFilesPerTrigger=1).
-
-    Requires protobuf (the TWS state-server wire protocol); where it
-    isn't installed this degrades to checking the fail-fast gate (the
-    applyInPandasWithState twin above is the executed custom-state
-    path), so the test always runs — never skips."""
-    if not _have_protobuf():
-        ev = read_table(spark, sf_dir, "events")
-        with _pytest_mod.raises(ImportError, match="protobuf"):
-            ST.running_count_stream(ev)
-        return
-    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import schemas
-
-    ev = read_table(spark, sf_dir, "events")
-    src = tmp_path / "twcount_src"
-    src.mkdir()
-    # two micro-batches: split events by parity into two files
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(schemas.TESTDATA["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        counts = ST.running_count_stream(stream)
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("twcount_out")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "chk_twcount"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        # update mode appends every emission; last per key is the total
-        rows = spark.sql(
-            """
-            SELECT user_id, n_events FROM (
-              SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY user_id ORDER BY n_events DESC) rn
-              FROM twcount_out
-            ) WHERE rn = 1
-            """
-        ).collect()
-        got = {r["user_id"]: r["n_events"] for r in rows}
-        want = {
-            r["user_id"]: r["n"]
-            for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        assert got == want
-    finally:
-        if prev_provider is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 # ---------------------------------------------------------------------------

@@ -18,8 +18,8 @@ past the corpus id range. At each corpus scale, time (median of
 - retrain : lm_score_stupid_backoff(shard, train_docs=corpus) — the
             daily cost WITHOUT an index (corpus re-scanned, count
             tables rebuilt in-plan);
-- score   : lm_index_score(shard, prebuilt index) — three count-table
-            parquet scans + joins, no training scan;
+- score   : lm_index_score(shard, prebuilt index) — one count-table
+            parquet scan + joins, no training scan;
 - append  : lm_index_append(shard) — the one-shot daily index update
             (mutates the index; measured once, not repped).
 
