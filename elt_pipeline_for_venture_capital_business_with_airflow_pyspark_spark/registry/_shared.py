@@ -126,7 +126,7 @@ _DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 def _sf001_dir(sf_dir: str) -> str:
     """sf0.001 root for the driver's entry() smoke contract: the
-    sibling directory of ``sf_dir`` (the bench's $SPARK_GRAFT_SF_DIR),
+    sibling directory of ``sf_dir`` (``$SPARK_GRAFT_SF_DIR``),
     as an absolute path. A relative or non-sibling ``sf_dir`` whose
     sibling does not exist falls back to the default root's sibling."""
     derived = _os.path.join(

@@ -59,8 +59,7 @@ _WINDOW_ORDER: list[str] = [
     # r8, winnow_fingerprints in r10, text_stats in r12 — the family
     # stays represented by the r9-r11 flagships below: homoglyph
     # folding, packing, decontamination, BPE, and the two LM scorers;
-    # text_stats remains hash-checked in the CI tail and stays a
-    # bench CONTROL)
+    # text_stats remains hash-checked in the CI tail)
     # r12 rotation (VERDICT r11 #1): the round-11 LM flagships under
     # the driver's hard hash check — CCNet-style stupid-backoff
     # perplexity and its interpolated Kneser-Ney sibling (exact

@@ -1,6 +1,6 @@
-"""Shuffle-budget regression guard for the bench headline set.
+"""Shuffle-budget regression guard for the budgeted query set.
 
-Each headline query carries an explicit hash-exchange budget (the
+Each budgeted query carries an explicit hash-exchange budget (the
 count recorded in PLANS.md when its plan was last reviewed). A plan
 picking up an extra shuffle — a broadcast silently becoming a
 sort-merge join, a lost ReusedExchange, an accidental repartition —
@@ -16,7 +16,6 @@ import re
 import pytest
 
 import __spark_entry__ as entry
-from bench import HEADLINE
 
 # hash-exchange budgets, from the executed-plan audit (PLANS.md).
 # A query may use FEWER shuffles than budgeted, never more.
@@ -337,9 +336,10 @@ SHUFFLE_BUDGET = {
 
 
 def test_budget_covers_every_headline_query():
-    assert set(SHUFFLE_BUDGET) == set(HEADLINE), (
-        "headline set changed — review the new query's plan and record "
-        "its shuffle budget"
+    stale = sorted(set(SHUFFLE_BUDGET) - set(entry.queries()))
+    assert not stale, (
+        f"budgets for queries the registry no longer has: {stale} — "
+        "drop the budget or follow the rename"
     )
 
 

@@ -82,65 +82,6 @@ def test_golden_records_overlapping_rule_columns_raise(spark):
 
 
 # ---------------------------------------------------------------------------
-# variance-band bench gate (VERDICT r8 #7) — pure-python logic
-# ---------------------------------------------------------------------------
-
-
-def test_bench_gate_variance_band():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import bench_gate
-
-    baseline = {
-        "queries": {"stable": 10.0, "noisy": 0.2, "legacy": 1.0},
-        "sigma": {"stable": 0.05, "noisy": 0.08},
-    }
-    # stable query with recorded sigma: band = median + max(5*0.05,
-    # 0.15*10, 0.15) = 11.5 — far sharper than the 2x (20s) rule; a
-    # 12s run (1.2x) must flag, 11.2s must pass
-    r = bench_gate.evaluate({"queries": {"stable": 12.0}}, baseline)
-    assert [x["query"] for x in r["regressions"]] == ["stable"]
-    r = bench_gate.evaluate({"queries": {"stable": 11.2}}, baseline)
-    assert not r["regressions"]
-    # noisy sub-second query: 5*sigma (0.4s) dominates, but the 2x cap
-    # (0.4s) binds first — 0.39 passes, 0.45 flags
-    r = bench_gate.evaluate({"queries": {"noisy": 0.39}}, baseline)
-    assert not r["regressions"]
-    r = bench_gate.evaluate({"queries": {"noisy": 0.45}}, baseline)
-    assert [x["query"] for x in r["regressions"]] == ["noisy"]
-    # sigma-less legacy recording degrades to rel/abs floors capped by 2x
-    r = bench_gate.evaluate({"queries": {"legacy": 1.2}}, baseline)
-    assert not r["regressions"]  # within 25% floor
-    r = bench_gate.evaluate({"queries": {"legacy": 1.3}}, baseline)
-    assert [x["query"] for x in r["regressions"]] == ["legacy"]
-    # new queries without baselines report, never fail
-    r = bench_gate.evaluate({"queries": {"brand_new": 5.0}}, baseline)
-    assert r["unrecorded"] == ["brand_new"] and not r["regressions"]
-
-
-def test_bench_gate_coerces_driver_records():
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import bench_gate
-
-    # bench stdout passes through
-    doc = {"queries": {"a": 1.0}}
-    assert bench_gate._coerce_candidate(doc) == doc
-    # complete driver record: parsed dict wins
-    doc = {"parsed": {"queries": {"a": 2.0}}, "tail": "ignored"}
-    assert bench_gate._coerce_candidate(doc)["queries"] == {"a": 2.0}
-    # truncated tail: regex recovery of name: sec pairs
-    doc = {
-        "parsed": None,
-        "tail": 'x\\"q1_pricing\\": 0.217, \\"dedup_lsh\\": 9.228, ',
-    }
-    got = bench_gate._coerce_candidate(doc)["queries"]
-    assert got == {"q1_pricing": 0.217, "dedup_lsh": 9.228}
-
-
-# ---------------------------------------------------------------------------
 # quota_mix — largest-remainder dataset mixing
 # ---------------------------------------------------------------------------
 

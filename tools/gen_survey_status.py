@@ -65,8 +65,9 @@ def render_block() -> str:
         "writes GATE.json).",
         "- **Full per-query inventory**: README.md registry table "
         "(generated, drift-guarded); **plan audit**: PLANS.md "
-        "(generated, drift-guarded); **bench baselines**: BENCH.json "
-        "(5-run medians + sigma; gate: `tools/bench_gate.py`).",
+        "(generated, drift-guarded); **benchmark**: `perfbench/run.py` "
+        "under `BENCHMARK.json` (the `elt` and `curate_corpus` pipeline "
+        "workloads).",
     ] + gate_lines + [
         "",
         END,

@@ -103,7 +103,7 @@ def main() -> int:
             # the left joins against the unique-keyed score tables and
             # with them the ENTIRE trained-LM subplan — a count()-based
             # first cut of this study timed the 500k-doc retrain at
-            # 0.6 s (i.e. it never trained). Same fix as bench.py r12.
+            # 0.6 s (i.e. it never trained).
             df.write.format("noop").mode("overwrite").save()
 
         retrain_q = lambda: consume(LM.lm_score_stupid_backoff(  # noqa: E731

@@ -1,6 +1,6 @@
-"""Generate PLANS.md: per-headline-query physical-plan summary.
+"""Generate PLANS.md: per-query physical-plan summary.
 
-For every bench headline query, records the executed-plan shape that
+For every registered query, records the executed-plan shape that
 matters at 100 TB — number of exchanges (shuffles), join strategies,
 whether scan filters/projections pushed down, Python boundaries, and
 whole-stage-codegen coverage — so the scale posture is auditable by
@@ -20,7 +20,6 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod
-from bench import HEADLINE
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.session import (
     build_session,
 )
@@ -87,11 +86,10 @@ def main() -> None:
         "scale-invariant; AQE final plans after execution). Columns:",
         "shuffles (hash exchanges), joins by strategy, reused exchanges,",
         "scans with pushed filters, Arrow/pandas Python stages, distinct",
-        "whole-stage-codegen spans, top-k short-circuit. `bench` marks the",
-        "35 headline queries timed against BASELINE.md.",
+        "whole-stage-codegen spans, top-k short-circuit.",
         "",
-        "| query | bench | shuffles | bcast joins | sort-merge | reused | pushed scans | py stages | codegen | top-k |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | bcast joins | sort-merge | reused | pushed scans | py stages | codegen | top-k |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
         graph as _graph,
@@ -110,8 +108,7 @@ def main() -> None:
         df.collect()
         s = summarize(df._jdf.queryExecution().executedPlan().toString())
         lines.append(
-            f"| {name} | {'✓' if name in HEADLINE else ''} "
-            f"| {s['shuffles']} | {s['broadcast_joins']} | {s['smj']} "
+            f"| {name} | {s['shuffles']} | {s['broadcast_joins']} | {s['smj']} "
             f"| {s['reused']} | {s['pushed']} | {s['arrow_python']} "
             f"| {s['codegen_spans']} | {'✓' if s['topk'] else ''} |"
         )

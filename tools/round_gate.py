@@ -13,6 +13,7 @@ Runs, suite-wide:
   4. the doc drift guards (README registry block, PLANS.md)
   5. the persisted-index lifecycle suites (LSH, pHash, their stream
      sinks, the LSH hot-bucket cap, LM and DSIR indexes)
+  6. the pipeline benchmark's own tests (perfbench/tests)
 
 and writes ONE summary line to GATE.json (plus stdout) that SURVEY.md
 status claims must cite — a timestamped artifact, not memory.
@@ -69,6 +70,10 @@ STAGES: list[tuple[str, list[str]]] = [
                          "tests/test_stream_dedup.py", "tests/test_stream_image_dedup.py",
                          "tests/test_lsh_hot_bucket.py", "tests/test_lm_index.py",
                          "tests/test_dsir_index.py"]),
+    # metric names and units against BENCHMARK.json, generator
+    # determinism, process-CPU accounting, status-store counters: the
+    # default collection covers tests/ only
+    ("perfbench_tests", [sys.executable, "-m", "pytest", "-q", "perfbench/tests"]),
 ]
 
 
