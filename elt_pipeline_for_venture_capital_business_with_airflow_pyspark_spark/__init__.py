@@ -2,8 +2,7 @@
 capabilities of the reference ELT pipeline (Rico-febrian/
 elt-pipeline-for-venture-capital-business-with-airflow-pyspark),
 re-expressed Spark-first and extended with large-scale training-data
-pipeline operators (dedup, similarity search, text analysis,
-multimodal columns).
+pipeline operators (dedup, similarity search, text analysis).
 
 Layout
 ------
@@ -18,7 +17,8 @@ Layout
                    dims/facts the reference computes).
 - ``streaming``  : incremental-batch contract + Structured Streaming
                    equivalents.
-- ``multimodal`` : binary-column (image/audio/video) plumbing.
+- ``multimodal`` : binary-column image/audio codecs (library only; no
+                   registry query runs them).
 """
 
 __version__ = "0.1.0"

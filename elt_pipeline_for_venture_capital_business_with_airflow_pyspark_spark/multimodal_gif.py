@@ -1,10 +1,9 @@
 """GIF87a/89a codec — pure stdlib, exact-integer end to end (round 9
 continuation).
 
-GIF is the third real IMAGE codec after PNG (stdlib zlib inflate) and
-JPEG (multimodal_jpeg's Huffman + fixed-point IDCT): variable-width
-LSB-first LZW over palette indices, the one mainstream compression
-family the repo did not yet implement from scratch. Web-scrape corpora
+GIF is a real IMAGE codec beside PNG (stdlib zlib inflate):
+variable-width LSB-first LZW over palette indices, implemented from
+scratch. Web-scrape corpora
 are full of GIFs, so an LLM data pipeline's decode stage must open
 them; everything here is deterministic integer work, byte-identical on
 any platform.

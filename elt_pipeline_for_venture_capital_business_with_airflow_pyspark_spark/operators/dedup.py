@@ -29,7 +29,7 @@ records, KMV bottom-k, per-group sampling caps, every similarity
 search).
 
 Hot-bucket guard: every near-dup self-join here and in ``similarity``
-(MinHash bands, SimHash/pHash chunks, embedding bands, SemDeDup cells)
+(MinHash bands, SimHash chunks, embedding bands, SemDeDup cells)
 runs behind ONE guard. :func:`collapse_identical_signatures` collapses
 rows with a byte-identical key to a min-id representative, so k
 clones are one node in every bucket; :func:`_expand_rep_pairs` expands
@@ -38,12 +38,10 @@ plus each cross pair's members) with output-sized work; and
 :func:`_cap_buckets` skips buckets holding more than a cap of distinct
 keys, a recall trade the caller opts into.
 
-Persisted near-dup indexes (daily shard vs corpus, never re-signing
-the corpus) share ONE lifecycle too: :func:`write_index`,
+The persisted MinHash-LSH index (daily shard vs corpus, never
+re-signing the corpus) has ONE lifecycle: :func:`write_index`,
 :func:`probe_index`, :func:`verify_index`, :func:`repair_index` and
-the exactly-once :func:`index_sink_batch`, parameterised by a
-:class:`BandedIndex` record — :data:`LSH_INDEX` here for text MinHash,
-``multimodal.PHASH_INDEX`` for image pHash. Build parameters live in
+the exactly-once :func:`index_sink_batch`. Build parameters live in
 the index's ``meta`` and are read back by every later call.
 
 Scale notes (100 TB): the shingle inverted index must drop
@@ -53,9 +51,6 @@ linear; everything shuffles on hash keys → uniform partitioning.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -328,7 +323,7 @@ def collapse_identical_signatures(
     """Hot-bucket guard, phase 1: collapse rows with a byte-identical
     ``key`` to one canonical representative. Every near-dup family
     runs it before its self-join: MinHash signatures
-    (:func:`banded_pairs`), SimHash/pHash longs
+    (:func:`banded_pairs`), SimHash longs
     (:func:`hamming_near_pairs`) and embedding vectors
     (``similarity.embedding_near_dup``, ``similarity.semantic_dedup``).
 
@@ -658,10 +653,8 @@ def hash_chunk_entries(
     each, keyed via shift+mask. The fingerprint rides along (it is one
     long — nothing to save by rejoining it later). Arithmetic
     shiftright sign-extends the top chunk; the mask AND restores the
-    unsigned bit pattern. Shared by the in-flight banded hamming join
-    (:func:`hamming_near_pairs`) and the persisted pHash image index
-    (``multimodal.build_phash_index``) so a shard's in-flight entries
-    and a persisted corpus index always agree on bucketing."""
+    unsigned bit pattern. The chunk keys of the banded hamming join
+    (:func:`hamming_near_pairs`)."""
     if not 1 <= n_chunks <= 64:
         # n_chunks > 64 would give zero-width chunks: every row keys
         # to (chunk, 0) and the candidate join degenerates to an
@@ -712,9 +705,8 @@ def hamming_near_pairs(
     touch at most h of the h+1 chunks either way), so candidates come
     from an EQUI-join on ``(chunk, chunk_value)`` — shuffle-
     partitioned by key, never all-pairs — then the exact
-    ``bit_count(xor)`` filter. Shared by SimHash text dedup and pHash
-    image dedup (round 9). Output ``(id_a, id_b, hamming)`` with
-    id_a < id_b."""
+    ``bit_count(xor)`` filter. The SimHash candidate path. Output
+    ``(id_a, id_b, hamming)`` with id_a < id_b."""
     if max_hamming >= n_chunks:
         raise ValueError(
             f"pigeonhole banding needs max_hamming < n_chunks "
@@ -723,7 +715,7 @@ def hamming_near_pairs(
     # hot-bucket guard (the one banded_pairs runs): identical
     # fingerprints collapse to a min-id representative before the
     # chunk self-join — k byte-identical docs (hence identical
-    # SimHash/pHash longs) contribute ONE node to every chunk bucket
+    # SimHash longs) contribute ONE node to every chunk bucket
     # instead of k, keeping candidate volume linear on
     # boilerplate-heavy corpora. The distance depends only on the
     # fingerprint, so expanding scored rep pairs through the
@@ -1056,96 +1048,72 @@ def minhash_lsh_pairs_poly(
 
 
 # ---------------------------------------------------------------------------
-# Persisted banded-hash index: one lifecycle for text MinHash-LSH and
-# image pHash near-dup detection.
+# Persisted text MinHash-LSH index.
 #
 # A daily pipeline does not re-sign its whole corpus per run (the
 # reference's own cadence is daily incremental slices —
 # dags/vcapital_staging/tasks/components/extract.py:41-43): it builds
 # an index once, then each day's shard is signed, probed against the
-# persisted entries and appended. Both near-dup families persist the
-# same three things under one root:
+# persisted band entries and appended. The index persists three things
+# under one root:
 #
-# - ``<path>/<source>``: per-id fingerprints, the source of truth;
-# - ``<path>/<entries>``: the banded expansion of the source, a pure
-#   function of it, written ``partitionBy(<part>)`` so a
-#   part-restricted probe prunes at the directory level while
-#   ``(<part>, <bucket>)`` is the equi-join key;
-# - ``<path>/meta``: the parameters fixed at build time. Every later
+# - ``<path>/signatures``: per-id ``(id, signature)``, the source of
+#   truth;
+# - ``<path>/bands``: the ``(id, band, bucket)`` expansion of the
+#   signatures (:func:`band_entries`), a pure function of them,
+#   written ``partitionBy(band)`` so a band-restricted probe prunes at
+#   the directory level while ``(band, bucket)`` is the equi-join key;
+# - ``<path>/meta``: the parameters fixed at build time (``k``,
+#   ``num_hashes``, ``bands``, ``signature: "poly"``). Every later
 #   call (probe, append, verify, repair) reads them from here, so no
 #   caller can probe or extend an index with parameters it was not
 #   built with.
-#
-# A :class:`BandedIndex` record names only what differs between the
-# families; :data:`LSH_INDEX` is defined below, ``multimodal.PHASH_INDEX``
-# next to the pHash fingerprint it indexes.
 # ---------------------------------------------------------------------------
 
-
-@dataclass(frozen=True)
-class BandedIndex:
-    """The per-family half of a persisted banded-hash index.
-
-    ``sign(df, meta)`` fingerprints an input frame into the source
-    schema, ``expand(source, meta)`` derives the entries (columns
-    ``id``, ``part``, ``bucket`` and anything the pair scoring
-    needs), ``near_pairs(source, meta, cutoff, max_bucket_size)``
-    finds the pairs inside one frame, and ``cross_pairs(cand,
-    corpus_source, shard_source, meta, cutoff)`` scores the corpus
-    (``c``) × shard (``n``) entry candidates of a probe. ``tag`` holds
-    constant meta entries naming the fingerprint family, and
-    ``per_id`` the meta key giving the number of entries per id."""
-
-    source: str
-    id_col: str
-    entries: str
-    part: str
-    bucket: str
-    per_id: str
-    tag: dict
-    sign: Callable[[DataFrame, dict], DataFrame]
-    expand: Callable[[DataFrame, dict], DataFrame]
-    near_pairs: Callable[..., DataFrame]
-    cross_pairs: Callable[..., DataFrame]
+_SIGNATURE = {"signature": "poly"}
 
 
-def index_exists(spark, path: str, fam: BandedIndex) -> bool:
+def _bands(sig: DataFrame, meta: dict) -> DataFrame:
+    return band_entries(sig, meta["num_hashes"], meta["bands"])
+
+
+def index_exists(spark, path: str) -> bool:
     """True iff an index exists at ``path`` — the presence of its
-    source table, which exists for any index in any state, including
-    a torn append. An explicit existence test, NOT a try/except
-    around a read: a transient read failure on a real index must
-    surface as an error, never masquerade as "no index yet" (that
+    signatures table, which exists for any index in any state,
+    including a torn append. An explicit existence test, NOT a
+    try/except around a read: a transient read failure on a real index
+    must surface as an error, never masquerade as "no index yet" (that
     misread would re-bootstrap and corrupt the corpus)."""
-    return path_exists(spark, f"{path}/{fam.source}")
+    return path_exists(spark, f"{path}/signatures")
 
 
-def read_index_meta(spark, path: str, fam: BandedIndex) -> dict:
+def read_index_meta(spark, path: str) -> dict:
     """The build parameters recorded in ``<path>/meta``. Raises when
     there is no meta (nothing here writes an index without one, so
     the index predates it or is not an index: rebuild it with
-    ``mode="overwrite"``) and when the meta names another fingerprint
-    family, which cannot be probed or extended with this one's."""
+    ``mode="overwrite"``) and when the meta names a signature other
+    than the polynomial MinHash, which this index cannot probe or
+    extend — a persisted index is input from outside the program."""
     meta = read_meta(spark, path)
     if meta is None:
         raise ValueError(
             f"index at {path} has no meta; rebuild it with "
             'mode="overwrite"'
         )
-    for key, want in fam.tag.items():
-        if meta.get(key) != want:
-            raise ValueError(
-                f"index at {path} holds {key}={meta.get(key)!r}; only "
-                f"{key}={want!r} indexes can be probed or appended here"
-            )
+    if meta.get("signature") != "poly":
+        raise ValueError(
+            f"index at {path} holds signature={meta.get('signature')!r}; "
+            "only signature='poly' indexes can be probed or appended here"
+        )
     return meta
 
 
-def _append_meta(spark, path: str, fam: BandedIndex, params: dict) -> dict:
-    """``params`` plus the family tag, refused unless they equal the
-    meta of the index at ``path`` — an append with other build
+def _append_meta(spark, path: str, params: dict) -> dict:
+    """``params`` plus the signature tag, refused unless they equal
+    the meta of the index at ``path`` — an append with other build
     parameters would write entries no probe of this index can match."""
-    meta = {**params, **fam.tag}
-    on_disk = read_index_meta(spark, path, fam)
+    meta = {**params, **_SIGNATURE}
+    on_disk = read_index_meta(spark, path)
     if {k: on_disk.get(k) for k in meta} != meta:
         raise ValueError(
             f"append parameters {params} differ from the index at {path} "
@@ -1155,82 +1123,81 @@ def _append_meta(spark, path: str, fam: BandedIndex, params: dict) -> dict:
     return meta
 
 
-def read_index(spark, path: str, fam: BandedIndex) -> tuple[DataFrame, DataFrame]:
-    """``(source, entries)`` frames of a persisted index, the entries
-    with the exact schema ``fam.expand`` produces (the partition
-    column is cast back to int for join parity). An index built from
-    an EMPTY corpus has no partition directories; that one case reads
-    as an empty entries frame (:func:`..sources.io.read_partitioned`)
-    and every other failure propagates — a blanket fallback would
-    silently answer "no corpus candidates"."""
-    meta = read_index_meta(spark, path, fam)
-    source = spark.read.parquet(f"{path}/{fam.source}")
-    shape = fam.expand(source.limit(0), meta)
-    entries = read_partitioned(
-        spark, f"{path}/{fam.entries}", fam.part, shape.schema
+def read_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
+    """``(signatures, bands)`` frames of a persisted index, the bands
+    with the exact schema :func:`band_entries` produces (``band`` is
+    cast back to int for join parity). An index built from an EMPTY
+    corpus has no partition directories; that one case reads as an
+    empty bands frame (:func:`..sources.io.read_partitioned`) and
+    every other failure propagates — a blanket fallback would silently
+    answer "no corpus candidates"."""
+    meta = read_index_meta(spark, path)
+    sig = spark.read.parquet(f"{path}/signatures")
+    shape = _bands(sig.limit(0), meta)
+    bands = read_partitioned(
+        spark, f"{path}/bands", "band", shape.schema
     ).select(
-        *[F.col(c).cast("int") if c == fam.part else F.col(c) for c in shape.columns]
+        *[F.col(c).cast("int") if c == "band" else F.col(c) for c in shape.columns]
     )
-    return source, entries
+    return sig, bands
 
 
 def write_index(
-    source: DataFrame,
+    sig: DataFrame,
     path: str,
-    fam: BandedIndex,
     params: dict,
     mode: str = "overwrite",
 ) -> None:
-    """Persist a fingerprint frame: the source table, then its entries.
+    """Persist a ``(id, signature)`` frame: the signatures table, then
+    its bands.
 
-    ``mode="overwrite"`` writes ``meta`` (``params`` plus the family
-    tag) FIRST, so every index whose source table exists can be read,
-    verified and repaired. ``mode="append"`` adds a shard; its
-    ``params`` must equal the meta on disk, or it raises before
-    anything is written. Ids must be unique across appends — the index
-    models immutable document ids, not updates.
+    ``mode="overwrite"`` writes ``meta`` (``params`` plus the
+    signature tag) FIRST, so every index whose signatures table exists
+    can be read, verified and repaired. ``mode="append"`` adds a
+    shard; its ``params`` must equal the meta on disk, or it raises
+    before anything is written. Ids must be unique across appends —
+    the index models immutable document ids, not updates.
 
-    ``source`` is read twice (for the source table, then for the
-    entries expanded from it), so it must be materialized and
+    ``sig`` is read twice (for the signatures table, then for the
+    bands expanded from it), so it must be materialized and
     lineage-free w.r.t. this index (``localCheckpoint()`` it): the
-    expensive fingerprint pipeline then runs once, and an append
+    expensive shingle→sign pipeline then runs once, and an append
     cannot re-evaluate a plan that reads the table it just extended.
 
     Each table changes by one ``sources.io.commit`` (an overwrite
     replaces every file), so compaction can rewrite them. A crash
     between the two commits leaves a torn state that
     :func:`verify_index` reports and :func:`repair_index` heals."""
-    spark = source.sparkSession
-    entries = f"{path}/{fam.entries}"
+    spark = sig.sparkSession
     if mode == "append":
-        meta = _append_meta(spark, path, fam, params)
-        commit(spark, f"{path}/{fam.source}", source)
-        commit(spark, entries, fam.expand(source, meta), partition_by=[fam.part])
+        meta = _append_meta(spark, path, params)
+        commit(spark, f"{path}/signatures", sig)
+        commit(spark, f"{path}/bands", _bands(sig, meta), partition_by=["band"])
     else:
-        meta = {**params, **fam.tag}
+        meta = {**params, **_SIGNATURE}
         write_meta(spark, path, meta)
-        replace_table(spark, source, f"{path}/{fam.source}")
-        replace_table(spark, fam.expand(source, meta), entries, [fam.part])
+        replace_table(spark, sig, f"{path}/signatures")
+        replace_table(spark, _bands(sig, meta), f"{path}/bands", ["band"])
 
 
-def verify_index(spark, path: str, fam: BandedIndex) -> dict:
-    """Consistency report. The source table is the truth (written
+def verify_index(spark, path: str) -> dict:
+    """Consistency report. The signatures table is the truth (written
     first), so the torn states are:
 
-    - ``missing_<part>_ids`` — source ids with NO entries (the
+    - ``missing_band_ids`` — signed ids with NO band entries (the
       crash-between-writes state; probes silently never surface these
       ids as candidates);
-    - ``incomplete_<part>_ids`` — ids with some but not
-      ``<entries>_per_id`` entries (not producible by the job-level
-      commit: task-level tearing or external edits);
-    - ``orphan_<part>_ids`` — entries whose id has no source row.
+    - ``incomplete_band_ids`` — ids with some but not ``bands_per_id``
+      entries (not producible by the job-level commit: task-level
+      tearing or external edits);
+    - ``orphan_band_ids`` — band entries whose id has no signature.
 
     ``consistent`` is True iff all three are zero. Cost: one scan of
     each table — run on recovery/startup, not per batch."""
-    n = int(read_index_meta(spark, path, fam)[fam.per_id])
-    source, entries = read_index(spark, path, fam)
-    ids = source.select(F.col(fam.id_col).alias("id"))
-    per_id = entries.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    n = int(read_index_meta(spark, path)["bands"])
+    sig, bands = read_index(spark, path)
+    ids = sig.select("id")
+    per_id = bands.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     counts = ids.join(per_id, "id", "left").agg(
         F.count(F.lit(1)).alias("n_src"),
         F.sum(F.when(F.col("n").isNull(), 1).otherwise(0)).alias("missing"),
@@ -1242,156 +1209,33 @@ def verify_index(spark, path: str, fam: BandedIndex) -> dict:
     missing = int(counts["missing"] or 0)
     incomplete = int(counts["incomplete"] or 0)
     return {
-        fam.source: int(counts["n_src"]),
-        f"missing_{fam.part}_ids": missing,
-        f"incomplete_{fam.part}_ids": incomplete,
-        f"orphan_{fam.part}_ids": int(orphans),
-        f"{fam.entries}_per_id": n,
+        "signatures": int(counts["n_src"]),
+        "missing_band_ids": missing,
+        "incomplete_band_ids": incomplete,
+        "orphan_band_ids": int(orphans),
+        "bands_per_id": n,
         "consistent": missing == 0 and incomplete == 0 and orphans == 0,
     }
 
 
-def repair_index(spark, path: str, fam: BandedIndex) -> dict:
-    """Heal any torn state: rebuild the entries table from the source
-    table with one commit that replaces every entries file (the
-    entries are a pure function of the source, which lives at another
-    path — a crash mid-rewrite is recovered by the next commit, and a
-    rerun repairs). Idempotent, and preserves
+def repair_index(spark, path: str) -> dict:
+    """Heal any torn state: rebuild the bands table from the
+    signatures table with one commit that replaces every bands file
+    (the bands are a pure function of the signatures, which live at
+    another path — a crash mid-rewrite is recovered by the next
+    commit, and a rerun repairs). Idempotent, and preserves
     ``incremental == full``: the repaired index is content-identical
     to one whose appends never tore. Returns the post-repair report."""
-    report = verify_index(spark, path, fam)
+    report = verify_index(spark, path)
     if report["consistent"]:
         return report
-    meta = read_index_meta(spark, path, fam)
-    source = spark.read.parquet(f"{path}/{fam.source}")
-    replace_table(spark, fam.expand(source, meta), f"{path}/{fam.entries}", [fam.part])
-    return verify_index(spark, path, fam)
+    meta = read_index_meta(spark, path)
+    sig = spark.read.parquet(f"{path}/signatures")
+    replace_table(spark, _bands(sig, meta), f"{path}/bands", ["band"])
+    return verify_index(spark, path)
 
 
-def probe_index(
-    shard: DataFrame,
-    path: str,
-    fam: BandedIndex,
-    cutoff: float,
-    *,
-    update_index: bool = False,
-    broadcast_new: bool = True,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs touching a fingerprinted shard: shard vs the
-    persisted corpus plus shard-internal, WITHOUT recomputing anything
-    over the corpus. ``shard`` is in the source schema and
-    lineage-free (``localCheckpoint``), as for :func:`write_index`.
-
-    Scale shape: the corpus entries are SCANNED once and never
-    shuffled — with ``broadcast_new`` (default) the shard's entries
-    broadcast onto the scan, so a day costs O(|shard| + |index| scan
-    + |candidates|); set it False for a shard too large to broadcast
-    (hash join on ``(part, bucket)``).
-
-    Hot-bucket posture: the shard-internal leg runs the structural
-    identical-fingerprint guard of ``fam.near_pairs``. The corpus leg
-    cannot collapse without shuffling the corpus — the cost this path
-    exists to avoid — so its defense is ``max_bucket_size``: buckets
-    holding more CORPUS entries than that are skipped as candidates
-    (one count aggregate over the index scan, co-partitioned with the
-    probe key). A recall trade the caller opts into; unset is exact.
-
-    With ``update_index`` the shard is appended FIRST (eager) and the
-    corpus side is the on-disk index minus the shard's ids, so
-    index-update ∘ probe composes to exactly the full-recompute index.
-    A crash after that append but before the caller lands its pairs
-    must not skip the shard as "already indexed" on replay — callers
-    that need exactly-once pairs probe with ``update_index=False`` and
-    append after landing them (:func:`index_sink_batch`)."""
-    spark = shard.sparkSession
-    meta = read_index_meta(spark, path, fam)
-    if update_index:
-        write_index(shard, path, fam, meta, mode="append")
-    corpus, corpus_entries = read_index(spark, path, fam)
-    if update_index:
-        ids = shard.select(fam.id_col)
-        ids = F.broadcast(ids) if broadcast_new else ids
-        corpus = corpus.join(ids, fam.id_col, "left_anti")
-        corpus_entries = corpus_entries.join(
-            ids.withColumnRenamed(fam.id_col, "id"), "id", "left_anti"
-        )
-    key = [fam.part, fam.bucket]
-    corpus_entries = _cap_buckets(corpus_entries, key, max_bucket_size)
-    shard_entries = fam.expand(shard, meta)
-    if broadcast_new:
-        shard_entries = F.broadcast(shard_entries)
-    cand = corpus_entries.alias("c").join(shard_entries.alias("n"), key)
-    # the two pair sets are disjoint by construction (one touches the
-    # corpus, the other is shard-internal) — plain union, no re-dedup
-    return fam.cross_pairs(cand, corpus, shard, meta, cutoff).unionByName(
-        fam.near_pairs(shard, meta, cutoff, max_bucket_size)
-    )
-
-
-def index_sink_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_path: str,
-    pairs_path: str,
-    fam: BandedIndex,
-    params: dict,
-    cutoff: float,
-) -> None:
-    """One micro-batch through a persisted index with EXACTLY-ONCE pair
-    output within a checkpoint lineage. Write order is the whole
-    safety argument:
-
-    1. the batch is fingerprinted and ids already in the index drop
-       (explicit :func:`index_exists` test — a transient read failure
-       raises and lets the checkpoint retry the batch, it is never
-       mistaken for first-batch bootstrap);
-    2. the batch's pairs (vs corpus and within the batch) land as an
-       idempotent overwrite of the ``batch_id=<n>`` partition of
-       ``pairs_path``;
-    3. only then is the shard appended to the index.
-
-    A crash before (3) replays into the same state and the partition
-    overwrite replaces, never duplicates, the earlier attempt. A crash
-    after (3) replays to an empty batch — "already indexed" proves the
-    pairs already landed, because the append is the LAST durable step.
-    A crash inside (3) can tear the index; ``repair_on_start`` of
-    ``streaming.incremental.streaming_index_dedup`` heals it.
-
-    ``params`` are the build parameters. They bootstrap the index
-    from the first batch and must equal the meta of an existing index
-    (checked before anything is written). The fingerprints are
-    locally checkpointed, NOT persisted, across (2) and (3): their
-    plan anti-joins against the index's source table, and (3)'s
-    append to that very path would make a persisted frame re-evaluate
-    against the refreshed listing — where the shard's own ids are now
-    excluded. ``batch_id`` partitions are scoped to one checkpoint
-    lineage: a fresh checkpoint over the same paths is safe only
-    because already-indexed ids skip in (1)."""
-    spark = batch_df.sparkSession
-    bootstrap = not index_exists(spark, index_path, fam)
-    if bootstrap:
-        meta = {**params, **fam.tag}
-    else:
-        meta = _append_meta(spark, index_path, fam, params)
-    src = fam.sign(batch_df, meta)
-    if not bootstrap:
-        indexed = spark.read.parquet(f"{index_path}/{fam.source}")
-        src = src.join(indexed.select(fam.id_col), fam.id_col, "left_anti")
-    src = src.localCheckpoint(eager=True)
-    if src.isEmpty():
-        return
-    if bootstrap:
-        pairs = fam.near_pairs(src, meta, cutoff, None)
-    else:
-        pairs = probe_index(src, index_path, fam, cutoff)
-    pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch_id={batch_id}")
-    write_index(
-        src, index_path, fam, params, "overwrite" if bootstrap else "append"
-    )
-
-
-def _lsh_cross_pairs(
+def _cross_pairs(
     cand: DataFrame,
     corpus_sig: DataFrame,
     shard_sig: DataFrame,
@@ -1400,7 +1244,7 @@ def _lsh_cross_pairs(
 ) -> DataFrame:
     """Corpus × shard band collisions re-scored by estimated Jaccard
     from the signatures. The (corpus id, shard id) orientation is kept
-    through scoring so each side joins its OWN signature source (no
+    through scoring so each side joins its OWN signatures (no
     corpus ∪ shard union scan); ids canonicalize to ``id_a < id_b``
     only at the end — the estimate is symmetric."""
     old_new = (
@@ -1417,26 +1261,127 @@ def _lsh_cross_pairs(
     )
 
 
-# text MinHash-LSH: signatures (id, signature) → bands (id, band,
-# bucket); meta {k, num_hashes, bands, signature: "poly"}. The stream
-# sink signs ``(doc_id, text)`` rows.
-LSH_INDEX = BandedIndex(
-    source="signatures",
-    id_col="id",
-    entries="bands",
-    part="band",
-    bucket="bucket",
-    per_id="bands",
-    tag={"signature": "poly"},
-    sign=lambda docs, m: minhash_signatures_poly(
-        docs, "doc_id", "text", m["k"], m["num_hashes"]
-    ),
-    expand=lambda sig, m: band_entries(sig, m["num_hashes"], m["bands"]),
-    near_pairs=lambda sig, m, threshold, cap: banded_pairs(
-        sig, m["num_hashes"], m["bands"], threshold, cap
-    ),
-    cross_pairs=_lsh_cross_pairs,
-)
+def probe_index(
+    shard: DataFrame,
+    path: str,
+    threshold: float,
+    *,
+    update_index: bool = False,
+    broadcast_new: bool = True,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Near-dup pairs touching a signed shard: shard vs the persisted
+    corpus plus shard-internal, WITHOUT recomputing anything over the
+    corpus. ``shard`` is ``(id, signature)`` and lineage-free
+    (``localCheckpoint``), as for :func:`write_index`.
+
+    Scale shape: the corpus bands are SCANNED once and never
+    shuffled — with ``broadcast_new`` (default) the shard's bands
+    broadcast onto the scan, so a day costs O(|shard| + |index| scan
+    + |candidates|); set it False for a shard too large to broadcast
+    (hash join on ``(band, bucket)``).
+
+    Hot-bucket posture: the shard-internal leg runs the structural
+    identical-signature guard of :func:`banded_pairs`. The corpus leg
+    cannot collapse without shuffling the corpus — the cost this path
+    exists to avoid — so its defense is ``max_bucket_size``: buckets
+    holding more CORPUS entries than that are skipped as candidates
+    (one count aggregate over the index scan, co-partitioned with the
+    probe key). A recall trade the caller opts into; unset is exact.
+
+    With ``update_index`` the shard is appended FIRST (eager) and the
+    corpus side is the on-disk index minus the shard's ids, so
+    index-update ∘ probe composes to exactly the full-recompute index.
+    A crash after that append but before the caller lands its pairs
+    must not skip the shard as "already indexed" on replay — callers
+    that need exactly-once pairs probe with ``update_index=False`` and
+    append after landing them (:func:`index_sink_batch`)."""
+    spark = shard.sparkSession
+    meta = read_index_meta(spark, path)
+    if update_index:
+        write_index(shard, path, meta, mode="append")
+    corpus, corpus_bands = read_index(spark, path)
+    if update_index:
+        ids = shard.select("id")
+        ids = F.broadcast(ids) if broadcast_new else ids
+        corpus = corpus.join(ids, "id", "left_anti")
+        corpus_bands = corpus_bands.join(ids, "id", "left_anti")
+    key = ["band", "bucket"]
+    corpus_bands = _cap_buckets(corpus_bands, key, max_bucket_size)
+    shard_bands = _bands(shard, meta)
+    if broadcast_new:
+        shard_bands = F.broadcast(shard_bands)
+    cand = corpus_bands.alias("c").join(shard_bands.alias("n"), key)
+    # the two pair sets are disjoint by construction (one touches the
+    # corpus, the other is shard-internal) — plain union, no re-dedup
+    return _cross_pairs(cand, corpus, shard, meta, threshold).unionByName(
+        banded_pairs(
+            shard, meta["num_hashes"], meta["bands"], threshold, max_bucket_size
+        )
+    )
+
+
+def index_sink_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    index_path: str,
+    pairs_path: str,
+    params: dict,
+    threshold: float,
+) -> None:
+    """One micro-batch of ``(doc_id, text)`` rows through a persisted
+    index with EXACTLY-ONCE pair output within a checkpoint lineage.
+    Write order is the whole safety argument:
+
+    1. the batch is signed and ids already in the index drop
+       (explicit :func:`index_exists` test — a transient read failure
+       raises and lets the checkpoint retry the batch, it is never
+       mistaken for first-batch bootstrap);
+    2. the batch's pairs (vs corpus and within the batch) land as an
+       idempotent overwrite of the ``batch_id=<n>`` partition of
+       ``pairs_path``;
+    3. only then is the shard appended to the index.
+
+    A crash before (3) replays into the same state and the partition
+    overwrite replaces, never duplicates, the earlier attempt. A crash
+    after (3) replays to an empty batch — "already indexed" proves the
+    pairs already landed, because the append is the LAST durable step.
+    A crash inside (3) can tear the index; ``repair_on_start`` of
+    ``streaming.incremental.streaming_index_dedup`` heals it.
+
+    ``params`` are the build parameters (``k``, ``num_hashes``,
+    ``bands``). They bootstrap the index from the first batch and must
+    equal the meta of an existing index (checked before anything is
+    written). The signatures are locally checkpointed, NOT persisted,
+    across (2) and (3): their plan anti-joins against the index's
+    signatures table, and (3)'s append to that very path would make a
+    persisted frame re-evaluate against the refreshed listing — where
+    the shard's own ids are now excluded. ``batch_id`` partitions are
+    scoped to one checkpoint lineage: a fresh checkpoint over the same
+    paths is safe only because already-indexed ids skip in (1)."""
+    spark = batch_df.sparkSession
+    bootstrap = not index_exists(spark, index_path)
+    if bootstrap:
+        meta = {**params, **_SIGNATURE}
+    else:
+        meta = _append_meta(spark, index_path, params)
+    sig = minhash_signatures_poly(
+        batch_df, "doc_id", "text", meta["k"], meta["num_hashes"]
+    )
+    if not bootstrap:
+        indexed = spark.read.parquet(f"{index_path}/signatures")
+        sig = sig.join(indexed.select("id"), "id", "left_anti")
+    sig = sig.localCheckpoint(eager=True)
+    if sig.isEmpty():
+        return
+    if bootstrap:
+        pairs = banded_pairs(sig, meta["num_hashes"], meta["bands"], threshold)
+    else:
+        pairs = probe_index(sig, index_path, threshold)
+    pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch_id={batch_id}")
+    write_index(
+        sig, index_path, params, "overwrite" if bootstrap else "append"
+    )
 
 
 def build_lsh_index(
@@ -1449,8 +1394,8 @@ def build_lsh_index(
     bands: int = 16,
     mode: str = "overwrite",
 ) -> None:
-    """Persist a corpus LSH index (:func:`write_index` with
-    :data:`LSH_INDEX`): ``<path>/signatures`` (id, signature),
+    """Persist a corpus LSH index (:func:`write_index`):
+    ``<path>/signatures`` (id, signature),
     ``<path>/bands`` (id, band, bucket) and ``<path>/meta``.
     ``mode="append"`` adds a shard (used by the incremental path) and
     raises before writing if ``k``, ``num_hashes`` or ``bands``
@@ -1460,7 +1405,6 @@ def build_lsh_index(
     write_index(
         sig.localCheckpoint(eager=False),
         path,
-        LSH_INDEX,
         {"k": k, "num_hashes": num_hashes, "bands": bands},
         mode,
     )
@@ -1514,7 +1458,7 @@ def incremental_lsh_pairs(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection: today's shard vs a persisted
-    corpus LSH index (:func:`probe_index` with :data:`LSH_INDEX`),
+    corpus LSH index (:func:`probe_index`),
     WITHOUT recomputing anything over the corpus. The shard is signed
     with the ``k`` and ``num_hashes`` of the index's meta, once
     (checkpointed: the signatures feed the broadcast band side, the
@@ -1531,14 +1475,13 @@ def incremental_lsh_pairs(
     generation to pairs touching the shard loses nothing. See
     :func:`probe_index` for ``update_index``, ``broadcast_new`` and
     ``max_bucket_size``."""
-    meta = read_index_meta(new_docs.sparkSession, index_path, LSH_INDEX)
+    meta = read_index_meta(new_docs.sparkSession, index_path)
     sig = minhash_signatures_poly(
         new_docs, id_col, text_col, meta["k"], meta["num_hashes"]
     ).localCheckpoint(eager=True)
     return probe_index(
         sig,
         index_path,
-        LSH_INDEX,
         threshold,
         update_index=update_index,
         broadcast_new=broadcast_new,

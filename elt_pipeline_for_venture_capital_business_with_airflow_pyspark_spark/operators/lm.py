@@ -438,7 +438,7 @@ def lm_score_kneser_ney(
 # persisted / incremental LM index (VERDICT r11 #4)
 #
 # Every other heavy family carries a persist/append/probe lifecycle
-# (LSH and pHash: the banded-hash index in operators/dedup.py; IVF:
+# (LSH: the persisted MinHash index in operators/dedup.py; IVF:
 # operators/similarity) — the LM family was the one rebuilding its
 # trained state per call. The index is the LM's whole trained state,
 # the one _ngram_counts aggregate (k, g, ctx, c), stored as ONE table

@@ -712,7 +712,7 @@ def dsir_gumbel_topk(
 #
 # The bucket-distribution state (b, tp, tq) is ADDITIVE in documents,
 # so DSIR gets the same persist/append/score lifecycle as the LSH,
-# IVF, pHash and LM indexes: at daily cadence over 100 TB the raw
+# IVF and LM indexes: at daily cadence over 100 TB the raw
 # pool is never re-featurized to score a new shard — the ≤n_buckets
 # count table persists, shards fold their counts in, and scoring
 # reads one tiny parquet table. Build and append derive that table

@@ -25,7 +25,6 @@ from . import textops  # noqa: F401,E402
 from . import dedup  # noqa: F401,E402
 from . import embeddings  # noqa: F401,E402
 from . import sketches  # noqa: F401,E402
-from . import multimodal  # noqa: F401,E402
 from . import sampling  # noqa: F401,E402
 from . import layout  # noqa: F401,E402
 from . import graph  # noqa: F401,E402

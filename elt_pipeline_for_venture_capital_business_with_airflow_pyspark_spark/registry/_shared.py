@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import (
-    multimodal,  # noqa: F401  (imported for coverage; exercised in tests)
     schemas,
 )
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.functions import (
@@ -374,30 +373,6 @@ SELECT l_returnflag, n,
        ROUND((n * sqp - sq * sp) / (sqrt(n * sq2 - sq * sq) * sqrt(n * sp2 - sp * sp)), 6) AS corr_qty_price
 FROM sums
 """
-
-
-# --- multimodal plumbing (north star) ----------------------------------------
-
-def _media_frame(spark: SparkSession, sf: str, with_payload: bool) -> DataFrame:
-    """Synthesized media table over documents: payload = utf-8 bytes of
-    the text, kind cycles image/audio/video, duration from n_chars."""
-    docs = read_table(spark, sf, "documents")
-    kind = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit("image"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("audio"))
-        .otherwise(F.lit("video"))
-    )
-    meta = F.struct(
-        kind.alias("kind"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        (F.col("n_chars") % 10000 + 500).cast("int").alias("duration_ms"),
-    )
-    cols = [F.col("doc_id").alias("media_id"), F.lit(None).cast("string").alias("uri"), meta.alias("meta")]
-    if with_payload:
-        cols.insert(2, F.encode(F.col("text"), "UTF-8").alias("payload"))
-    return docs.select(*cols)
 
 
 def _minhash_poly_sql(
@@ -1525,41 +1500,6 @@ _GEO_COORD_SQL = (
 def _geo_coord_sql(key: str, salt: str, axis: str) -> str:
     mod, off = (1_200_000, "60.0") if axis == "lat" else (3_600_000, "180.0")
     return _GEO_COORD_SQL.format(salt=salt, axis=axis, key=key, mod=mod, off=off)
-
-
-def _synth_family_media(docs: DataFrame) -> DataFrame:
-    """(media_id, fam) -> (media_id, payload) with a 48x40 pseudo-
-    random PPM image keyed by FAMILY: same fam ⇒ byte-identical
-    image. Shared by the pHash entries; the 29 family rasters'
-    pairwise hamming > 3 is pinned in tests/test_phash.py (the
-    formula there must stay in sync with this one)."""
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            encode_ppm,
-        )
-
-        w, h = 48, 40
-        idx = np.arange(w * h * 3, dtype=np.uint64)
-        for pdf in batches:
-            rows = []
-            for mid, fam in zip(pdf["media_id"], pdf["fam"]):
-                x = idx * np.uint64(2654435761) + np.uint64(
-                    int(fam) * 1000003 + 12345
-                )
-                x ^= x >> np.uint64(13)
-                x = x * np.uint64(0x9E3779B97F4A7C15)
-                x ^= x >> np.uint64(7)
-                rgb = (x & np.uint64(255)).astype(np.uint8).tobytes()
-                rows.append((int(mid), encode_ppm(w, h, rgb)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return docs.mapInPandas(synth, "media_id long, payload binary")
-
-
 
 
 _HG_FROM = TX._HOMOGLYPH_FROM

@@ -96,19 +96,13 @@ _WINDOW_ORDER: list[str] = [
     # + the exact bitext-mining twin of embedding_bitext_ivf)
     "embedding_near_dup_sqlcheck", "embedding_ann_sqlcheck", "embedding_ivf_sqlcheck",
     "embedding_bitext_mine",
-    # multimodal (r9 rotation: the REAL codec paths take the window —
-    # jpeg_roundtrip drives the baseline JPEG encoder/decoder,
-    # frame_sample_mjpeg drives RIFF/AVI walk + 4:2:0 JPEG decode;
-    # r10 rotation adds the round-9 codec flagships: pHash image
-    # near-dup, TIFF IFD/PackBits/LZW round-trip, G.711 companding,
-    # and DIB-AVI frame sampling; r12 rotates the long-green
-    # tiff_roundtrip + frame_sample_dib to the tail (each served two
-    # window rounds; the family keeps four reps — baseline JPEG,
-    # MJPEG-AVI walk, pHash near-dup, G.711 audio — and both rotated
-    # entries stay hash-checked in the CI tail)
-    "multimodal_jpeg_roundtrip", "multimodal_frame_sample_mjpeg",
-    "multimodal_phash_near_dup",
-    "multimodal_audio_g711",
+    # r12 same-round rotation (3): the retired multimodal family's
+    # four slots go to code the curation pipeline runs — the
+    # persisted-LSH probe leg (probe_index), the edges build leg that
+    # dedup_survivors_from_edges reads, the LM count-index build, and
+    # the exact_dedup fingerprint groups
+    "dedup_incremental_lsh_probe", "dedup_edges_build",
+    "text_lm_index_build", "dedup_exact_groups",
     # corpus-trained BPE: the production 32k-vocab apply path
     # (broadcast + one Arrow stage); bpe_learn rotated to the tail in
     # r10 — tokenize_large exercises the same learned-merge lifecycle
@@ -171,6 +165,10 @@ _CURRENT_ROUND = 12
 # are dropped — the ledger tracks the live window, the rule only needs
 # "entered this round ⇒ still here next round")
 _ENTERED_ROUND: dict[str, int] = {
+    "dedup_incremental_lsh_probe": 12,
+    "dedup_edges_build": 12,
+    "text_lm_index_build": 12,
+    "dedup_exact_groups": 12,
     "sample_dsir_weights": 12,
     "sample_dsir_select": 12,
     "text_lm_index_append": 12,
@@ -185,10 +183,6 @@ _ENTERED_ROUND: dict[str, int] = {
     "text_homoglyph_fold": 10,
     "text_pack_chunks": 10,
     "sample_quota_mix": 10,
-    "multimodal_phash_near_dup": 10,
-    "multimodal_audio_g711": 10,
-    "multimodal_jpeg_roundtrip": 9,
-    "multimodal_frame_sample_mjpeg": 9,
     "link_golden_records": 9,
     "layout_zorder_prune": 9,
     # everything else predates the rotation ledger (rounds 1-7)
@@ -234,10 +228,6 @@ _FAMILY_REPS: dict[str, list[str]] = {
         "embedding_near_dup_sqlcheck", "embedding_ann_sqlcheck",
         "embedding_ivf_sqlcheck", "embedding_bitext_mine",
         "embedding_ivf_int8", "embedding_semdedup_prune",
-    ],
-    "multimodal": [
-        "multimodal_jpeg_roundtrip", "multimodal_frame_sample_mjpeg",
-        "multimodal_phash_near_dup", "multimodal_audio_g711",
     ],
     "linkage": ["link_fellegi_sunter", "link_golden_records"],
     "layout": ["layout_zorder_prune"],

@@ -240,7 +240,7 @@ def _dedup_incremental_lsh_probe(spark: SparkSession, sf: str) -> DataFrame:
     docs = read_table(spark, sf, "documents")
     shard = docs.filter(F.col("doc_id") % 5 == 0)
     path = _incr_lsh_split_path(sf)
-    if not DD.index_exists(spark, path, DD.LSH_INDEX):
+    if not DD.index_exists(spark, path):
         DD.build_lsh_index(
             docs.filter(F.col("doc_id") % 5 != 0), path, mode="overwrite"
         )

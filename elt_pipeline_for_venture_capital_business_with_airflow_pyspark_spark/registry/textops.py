@@ -1274,7 +1274,7 @@ def _text_lm_index_build(spark: SparkSession, sf: str) -> DataFrame:
     trigram rows are returned READ BACK from the files; the oracle
     retrains the trigram counts from scratch in ANSI SQL, so a torn
     write, a tokenizer drift, or a count error fails the hash, not
-    just the row count. Mirrors the LSH/IVF/pHash index discipline (VERDICT
+    just the row count. Mirrors the LSH/IVF index discipline (VERDICT
     r11 "missing" #3 closed): at daily cadence over 100 TB the corpus
     is never re-scanned to score a shard — counts persist, shards
     append, scoring reads one count table."""

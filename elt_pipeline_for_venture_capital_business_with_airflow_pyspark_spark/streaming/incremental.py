@@ -10,10 +10,9 @@ path for continuous feeds. Windowed aggregation is one body,
 :func:`window_agg` (tumbling or sliding, over a batch frame or a
 stream); :func:`streaming_window_agg` runs it over a watermarked
 file-source stream.
-Continuous near-dup detection (:func:`streaming_index_dedup`) is one
-stream start for both persisted index families (text MinHash-LSH,
-image pHash); its exactly-once micro-batch sink is
-``operators.dedup.index_sink_batch``.
+Continuous near-dup detection (:func:`streaming_index_dedup`) runs a
+stream of documents against the persisted text MinHash-LSH index; its
+exactly-once micro-batch sink is ``operators.dedup.index_sink_batch``.
 """
 
 from __future__ import annotations
@@ -190,22 +189,19 @@ def streaming_index_dedup(
     index_path: str,
     pairs_path: str,
     checkpoint: str,
-    fam,
     params: dict,
-    cutoff: float,
+    threshold: float,
     repair_on_start: bool = True,
 ):
-    """Continuous NEAR-dup detection against a persisted banded-hash
-    index: ``operators.dedup.LSH_INDEX`` for ``(doc_id, text)``
-    documents (``cutoff`` = Jaccard threshold, ``params`` = ``k``,
-    ``num_hashes``, ``bands``) or ``multimodal.PHASH_INDEX`` for
-    ``(media_id, payload)`` images (``cutoff`` = max Hamming
-    distance, ``params`` = ``n_chunks``). Each micro-batch is
-    fingerprinted, probed against the index, and its pairs (vs the
-    whole corpus so far AND within the batch) land in ``pairs_path``
-    tagged with the batch id before the batch is appended — the
-    daily-shard cadence compressed to micro-batch latency; per-batch
-    cost is O(|batch| + one index scan), never O(corpus).
+    """Continuous NEAR-dup detection of ``(doc_id, text)`` documents
+    against a persisted MinHash-LSH index (``params`` = ``k``,
+    ``num_hashes``, ``bands``; ``threshold`` = estimated Jaccard).
+    Each micro-batch is signed, probed against the index, and its
+    pairs (vs the whole corpus so far AND within the batch) land in
+    ``pairs_path`` tagged with the batch id before the batch is
+    appended — the daily-shard cadence compressed to micro-batch
+    latency; per-batch cost is O(|batch| + one index scan), never
+    O(corpus).
 
     Bootstraps from nothing: with no index at ``index_path`` the first
     batch becomes the initial corpus (its intra-batch pairs are still
@@ -216,17 +212,17 @@ def streaming_index_dedup(
     exactly-once (within a checkpoint lineage) by the write order of
     ``operators.dedup.index_sink_batch``. With ``repair_on_start``
     (default) the index is verified once at query start and a torn
-    append (a crash inside it) is healed from the index's source table
-    before the first batch runs."""
+    append (a crash inside it) is healed from the index's signatures
+    table before the first batch runs."""
     from ..operators import dedup as DD
 
     spark = stream.sparkSession
-    if repair_on_start and DD.index_exists(spark, index_path, fam):
-        DD.repair_index(spark, index_path, fam)
+    if repair_on_start and DD.index_exists(spark, index_path):
+        DD.repair_index(spark, index_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         DD.index_sink_batch(
-            batch_df, batch_id, index_path, pairs_path, fam, params, cutoff
+            batch_df, batch_id, index_path, pairs_path, params, threshold
         )
 
     return (

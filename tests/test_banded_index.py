@@ -1,21 +1,16 @@
-"""The persisted banded-hash index (operators/dedup.py) on tiny frames,
-for both families that share it — text MinHash-LSH and image pHash:
-build, incremental == full, a torn append that verify reports, repair
-back to consistent; and the build parameters recorded in the index's
-meta are the ones every later probe, verify, repair and append uses.
+"""The persisted MinHash-LSH index (operators/dedup.py) on tiny
+frames: build, incremental == full, a torn append that verify reports,
+repair back to consistent; and the build parameters recorded in the
+index's meta are the ones every later probe, verify, repair and append
+uses.
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark import (
-    multimodal as MM,
-)
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     dedup as DD,
 )
@@ -49,114 +44,48 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _family_rgb(fam: int, w: int = 48, h: int = 40) -> bytes:
-    idx = np.arange(w * h * 3, dtype=np.uint64)
-    x = idx * np.uint64(2654435761) + np.uint64(fam * 1000003 + 12345)
-    x ^= x >> np.uint64(13)
-    x = x * np.uint64(0x9E3779B97F4A7C15)
-    x ^= x >> np.uint64(7)
-    return (x & np.uint64(255)).astype(np.uint8).tobytes()
-
-
-def _media(spark, ids_fams):
-    rows = [
-        (i, bytearray(MM.encode_ppm(48, 40, _family_rgb(f)))) for i, f in ids_fams
-    ]
-    return spark.createDataFrame(rows, "media_id long, payload binary")
-
-
-# (media_id, family): one family = identical pixels = hamming 0
-PHASH_CORPUS = [(1, 0), (2, 0), (3, 1), (4, 2)]
-PHASH_SHARD = [(10, 1), (11, 4), (12, 5), (13, 5)]
-
-
 def _lsh_pairs(df):
     return {(r["id_a"], r["id_b"], round(r["est_jaccard"], 9)) for r in df.collect()}
 
 
-def _phash_pairs(df):
-    return {(r["id_a"], r["id_b"], r["hamming"]) for r in df.collect()}
+def _full_pairs(df):
+    return _lsh_pairs(DD.minhash_lsh_pairs_poly(df, "doc_id", "text", threshold=0.5))
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_index_lifecycle_both_families(spark, tmp_path):
-    families = [
-        (
-            DD.LSH_INDEX,
-            {"k": 3, "num_hashes": 64, "bands": 16},
-            _docs,
-            LSH_CORPUS,
-            LSH_SHARD,
-            lambda df, p: DD.build_lsh_index(df, p),
-            lambda df, p: DD.incremental_lsh_pairs(df, p, update_index=False),
-            lambda df: _lsh_pairs(
-                DD.minhash_lsh_pairs_poly(df, "doc_id", "text", threshold=0.5)
-            ),
-            _lsh_pairs,
-        ),
-        (
-            MM.PHASH_INDEX,
-            {"n_chunks": 4},
-            _media,
-            PHASH_CORPUS,
-            PHASH_SHARD,
-            lambda df, p: MM.build_phash_index(df, p),
-            lambda df, p: MM.incremental_phash_pairs(df, p, update_index=False),
-            lambda df: _phash_pairs(MM.image_near_pairs(df)),
-            _phash_pairs,
-        ),
-    ]
-    for fam, params, frame, corpus_rows, shard_rows, *fns in families:
-        build, probe, full_pairs, pairs = fns
-        corpus, shard = frame(spark, corpus_rows), frame(spark, shard_rows)
-        path = str(tmp_path / fam.source)
-        build(corpus, path)
-        assert DD.verify_index(spark, path, fam)["consistent"]
+def test_lsh_index_lifecycle(spark, tmp_path):
+    corpus, shard = _docs(spark, LSH_CORPUS), _docs(spark, LSH_SHARD)
+    path = str(tmp_path / "lsh")
+    DD.build_lsh_index(corpus, path)
+    assert DD.verify_index(spark, path)["consistent"]
 
-        # incremental == full: the shard's probe adds exactly the pairs
-        # a full recompute finds beyond the corpus-only pairs
-        inc = pairs(probe(shard, path))
-        both = corpus.unionByName(shard)
-        corpus_pairs = full_pairs(corpus)
-        assert inc and not corpus_pairs & inc
-        assert corpus_pairs | inc == full_pairs(both)
+    # incremental == full: the shard's probe adds exactly the pairs
+    # a full recompute finds beyond the corpus-only pairs
+    inc = _lsh_pairs(DD.incremental_lsh_pairs(shard, path, update_index=False))
+    both = corpus.unionByName(shard)
+    corpus_pairs = _full_pairs(corpus)
+    assert inc and not corpus_pairs & inc
+    assert corpus_pairs | inc == _full_pairs(both)
 
-        # torn append: the shard's source rows landed, its entries did not
-        meta = {**params, **fam.tag}
-        IO.commit(spark, f"{path}/{fam.source}", fam.sign(shard, meta))
-        report = DD.verify_index(spark, path, fam)
-        assert not report["consistent"]
-        assert report[f"missing_{fam.part}_ids"] == len(shard_rows)
-
-        healed = DD.repair_index(spark, path, fam)
-        assert healed["consistent"]
-        assert healed[fam.source] == len(corpus_rows) + len(shard_rows)
-        clean = str(tmp_path / f"{fam.source}_clean")
-        build(both, clean)
-        for got, want in zip(
-            DD.read_index(spark, path, fam), DD.read_index(spark, clean, fam)
-        ):
-            assert _rows(got) == _rows(want)
-
-
-def test_phash_repair_and_probe_use_the_built_n_chunks(spark, tmp_path):
-    path = str(tmp_path / "phash")
-    MM.build_phash_index(_media(spark, PHASH_CORPUS), path, n_chunks=8)
-    report = DD.repair_index(spark, path, MM.PHASH_INDEX)
-    assert report["consistent"] and report["chunks_per_id"] == 8
-    _, chunks = DD.read_index(spark, path, MM.PHASH_INDEX)
-    per_id = chunks.groupBy("id").agg(F.count("*").alias("n")).collect()
-    assert {(r["id"], r["n"]) for r in per_id} == {(i, 8) for i, _ in PHASH_CORPUS}
-
-    got = _phash_pairs(
-        MM.incremental_phash_pairs(
-            _media(spark, PHASH_SHARD), path, update_index=False
-        )
+    # torn append: the shard's signatures landed, its bands did not
+    IO.commit(
+        spark, f"{path}/signatures",
+        DD.minhash_signatures_poly(shard, "doc_id", "text", 3, 64),
     )
-    assert (3, 10, 0) in got and (12, 13, 0) in got
+    report = DD.verify_index(spark, path)
+    assert not report["consistent"]
+    assert report["missing_band_ids"] == len(LSH_SHARD)
+
+    healed = DD.repair_index(spark, path)
+    assert healed["consistent"]
+    assert healed["signatures"] == len(LSH_CORPUS) + len(LSH_SHARD)
+    clean = str(tmp_path / "lsh_clean")
+    DD.build_lsh_index(both, clean)
+    for got, want in zip(DD.read_index(spark, path), DD.read_index(spark, clean)):
+        assert _rows(got) == _rows(want)
 
 
 def test_lsh_probe_uses_the_built_num_hashes_and_bands(spark, tmp_path):

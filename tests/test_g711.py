@@ -3,8 +3,7 @@ CPython's audioop (the CCITT g711.c reference tables), round 9
 continuation.
 
 audioop is deprecated-but-present on this Python (3.11); if a future
-runtime drops it, the exhaustive pins skip and the registry entry's
-SQL-recomputed expansion oracle remains the independent check.
+runtime drops it, this suite skips.
 """
 
 from __future__ import annotations

@@ -1,11 +1,9 @@
 """GIF87a/89a codec (multimodal_gif) — LZW, interlace, transparency,
 frame walking (round 9 continuation).
 
-The registry entry ``multimodal_gif_roundtrip`` proves the distributed
-boundary against a closed-form oracle; the codec substance is pinned
-here: a HAND-ASSEMBLED fixture whose LZW stream was bit-packed by hand
-from the spec (independent of the encoder), exhaustive small-alphabet
-LZW fuzz, the width-growth boundary at the flush code (the desync the
+The codec substance is pinned here: a HAND-ASSEMBLED fixture whose LZW
+stream was bit-packed by hand from the spec (independent of the
+encoder), exhaustive small-alphabet LZW fuzz, the width-growth boundary at the flush code (the desync the
 common ``next_code`` shortcut hits), 12-bit table overflow with clear
 resets, interlace, sub-frame placement + GCE transparency, and the
 error taxonomy.

@@ -60,8 +60,8 @@ def test_n_day_append_composes_to_full_build(spark, sf_dir, tmp_path):
 
     full = str(tmp_path / "full")
     DD.build_lsh_index(docs, full)
-    sig_inc, bands_inc = DD.read_index(spark, index, DD.LSH_INDEX)
-    sig_full, bands_full = DD.read_index(spark, full, DD.LSH_INDEX)
+    sig_inc, bands_inc = DD.read_index(spark, index)
+    sig_full, bands_full = DD.read_index(spark, full)
     assert _sig_set(sig_inc) == _sig_set(sig_full)
     assert _band_set(bands_inc) == _band_set(bands_full)
 
@@ -118,7 +118,7 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
             docs.filter(F.col("doc_id") % K_DAYS == day), index
         ).count()
 
-    sig_before, bands_before = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig_before, bands_before = DD.read_index(spark, index)
     sig_snap, bands_snap = _sig_set(sig_before), _band_set(bands_before)
     files_before = len(IO.data_files(spark, f"{index}/bands"))
 
@@ -130,7 +130,7 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
     assert files_before >= 16 * (K_DAYS - 1)
     assert files_after == 16
 
-    sig_after, bands_after = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig_after, bands_after = DD.read_index(spark, index)
     assert _sig_set(sig_after) == sig_snap
     assert _band_set(bands_after) == bands_snap
 
@@ -151,7 +151,7 @@ def test_compact_lsh_index_preserves_results_and_cuts_files(
     }
     assert got == want
     # still consistent per the verifier
-    assert DD.verify_index(spark, index, DD.LSH_INDEX)["consistent"]
+    assert DD.verify_index(spark, index)["consistent"]
 
 
 def test_torn_append_detected_and_repaired(spark, sf_dir, tmp_path):
@@ -171,21 +171,21 @@ def test_torn_append_detected_and_repaired(spark, sf_dir, tmp_path):
         DD.minhash_signatures_poly(shard, "doc_id", "text", 3, 64),
     )
 
-    report = DD.verify_index(spark, index, DD.LSH_INDEX)
+    report = DD.verify_index(spark, index)
     assert not report["consistent"]
     assert report["missing_band_ids"] == shard.count()
     assert report["incomplete_band_ids"] == 0
     assert report["orphan_band_ids"] == 0
 
-    healed = DD.repair_index(spark, index, DD.LSH_INDEX)
+    healed = DD.repair_index(spark, index)
     assert healed["consistent"]
     # idempotent: repairing a consistent index is a no-op
-    assert DD.repair_index(spark, index, DD.LSH_INDEX)["consistent"]
+    assert DD.repair_index(spark, index)["consistent"]
 
     clean = str(tmp_path / "clean")
     DD.build_lsh_index(corpus.unionByName(shard), clean)
-    sig_r, bands_r = DD.read_index(spark, index, DD.LSH_INDEX)
-    sig_c, bands_c = DD.read_index(spark, clean, DD.LSH_INDEX)
+    sig_r, bands_r = DD.read_index(spark, index)
+    sig_c, bands_c = DD.read_index(spark, clean)
     assert _sig_set(sig_r) == _sig_set(sig_c)
     assert _band_set(bands_r) == _band_set(bands_c)
 
@@ -220,11 +220,11 @@ def test_orphan_band_entries_trigger_full_rebuild(spark, sf_dir, tmp_path):
         16,
     )
     IO.commit(spark, f"{index}/bands", orphans, partition_by=["band"])
-    report = DD.verify_index(spark, index, DD.LSH_INDEX)
+    report = DD.verify_index(spark, index)
     assert report["orphan_band_ids"] > 0
-    healed = DD.repair_index(spark, index, DD.LSH_INDEX)
+    healed = DD.repair_index(spark, index)
     assert healed["consistent"]
-    sig, bands = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig, bands = DD.read_index(spark, index)
     assert _band_set(bands) == _band_set(
         DD.band_entries(sig, 64, 16)
     )
@@ -240,7 +240,7 @@ def test_read_lsh_index_raises_on_corrupt_bands(spark, sf_dir, tmp_path):
     bad = tmp_path / "idx" / "bands" / "band=0" / "part-corrupt.parquet"
     bad.write_bytes(b"this is not a parquet file")
     with pytest.raises(Exception):
-        sig, bands = DD.read_index(spark, index, DD.LSH_INDEX)
+        sig, bands = DD.read_index(spark, index)
         bands.count()
 
 
@@ -248,9 +248,50 @@ def test_missing_index_read_raises_not_empty(spark, tmp_path):
     """Reading a nonexistent index path raises (typo'd path is an
     error, not an empty corpus); existence is queried explicitly."""
     missing = str(tmp_path / "nope")
-    assert not DD.index_exists(spark, missing, DD.LSH_INDEX)
+    assert not DD.index_exists(spark, missing)
     with pytest.raises(Exception):
-        DD.read_index(spark, missing, DD.LSH_INDEX)
+        DD.read_index(spark, missing)
+
+
+def test_broadcast_flag_result_invariant(spark, sf_dir, tmp_path):
+    """``broadcast_new`` picks only how the shard's bands join the
+    index scan (broadcast, or a hash join on ``(band, bucket)``): both
+    probes return the same pairs."""
+    docs = _docs(spark, sf_dir)
+    index = str(tmp_path / "idx")
+    DD.build_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), index)
+    shard = docs.filter(F.col("doc_id") % 2 == 1)
+    broadcast, hashed = (
+        _pair_set(
+            DD.incremental_lsh_pairs(
+                shard, index, update_index=False, broadcast_new=flag
+            )
+        )
+        for flag in (True, False)
+    )
+    assert broadcast and broadcast == hashed
+
+
+def test_empty_corpus_index_probes_cleanly(spark, sf_dir, tmp_path):
+    """An index built from an empty corpus has no band directories: it
+    verifies, a lone document probes to an empty frame with the pair
+    schema, and a shard still finds its own near-dups."""
+    docs = _docs(spark, sf_dir)
+    index = str(tmp_path / "idx")
+    DD.build_lsh_index(docs.limit(0), index)
+    assert DD.verify_index(spark, index)["signatures"] == 0
+
+    lone = DD.incremental_lsh_pairs(docs.limit(1), index, update_index=False)
+    assert lone.isEmpty()
+    assert lone.dtypes == [
+        ("id_a", "bigint"), ("id_b", "bigint"), ("est_jaccard", "double")
+    ]
+    shard = docs.filter(F.col("doc_id") % 2 == 1)
+    got = _pair_set(DD.incremental_lsh_pairs(shard, index, update_index=False))
+    want = _pair_set(
+        DD.minhash_lsh_pairs_poly(shard, "doc_id", "text", threshold=0.5)
+    )
+    assert got and got == want
 
 
 def test_sink_crash_between_pairs_and_append_is_exactly_once(
@@ -266,16 +307,16 @@ def test_sink_crash_between_pairs_and_append_is_exactly_once(
     index = str(tmp_path / "idx")
     pairs = str(tmp_path / "pairs")
 
-    DD.index_sink_batch(b0, 0, index, pairs, DD.LSH_INDEX, LSH_PARAMS, 0.5)
-    n_sig_after_b0 = DD.read_index(spark, index, DD.LSH_INDEX)[0].count()
+    DD.index_sink_batch(b0, 0, index, pairs, LSH_PARAMS, 0.5)
+    n_sig_after_b0 = DD.read_index(spark, index)[0].count()
 
     # crashed attempt at batch 1: pairs written, index append skipped
     crashed_pairs = DD.incremental_lsh_pairs(b1, index, update_index=False)
     crashed_pairs.write.mode("overwrite").parquet(f"{pairs}/batch_id=1")
-    assert DD.read_index(spark, index, DD.LSH_INDEX)[0].count() == n_sig_after_b0
+    assert DD.read_index(spark, index)[0].count() == n_sig_after_b0
 
     # replay the batch through the real sink
-    DD.index_sink_batch(b1, 1, index, pairs, DD.LSH_INDEX, LSH_PARAMS, 0.5)
+    DD.index_sink_batch(b1, 1, index, pairs, LSH_PARAMS, 0.5)
     got = _pair_set(
         spark.read.parquet(pairs).select("id_a", "id_b", "est_jaccard")
     )
@@ -286,10 +327,10 @@ def test_sink_crash_between_pairs_and_append_is_exactly_once(
     )
     assert got == want  # nothing lost, nothing duplicated
     # and the append completed
-    assert DD.read_index(spark, index, DD.LSH_INDEX)[0].count() == b0.count() + b1.count()
+    assert DD.read_index(spark, index)[0].count() == b0.count() + b1.count()
 
     # second replay (crash AFTER append): skips cleanly, pairs intact
-    DD.index_sink_batch(b1, 1, index, pairs, DD.LSH_INDEX, LSH_PARAMS, 0.5)
+    DD.index_sink_batch(b1, 1, index, pairs, LSH_PARAMS, 0.5)
     assert (
         _pair_set(
             spark.read.parquet(pairs).select("id_a", "id_b", "est_jaccard")
@@ -507,7 +548,7 @@ def test_maybe_compact_index_lsh_kind_detection_and_threshold(
             docs.filter(F.col("doc_id") % 5 == day), index
         ).collect()
     assert MNT.index_kind(spark, index) == "lsh"
-    before = _sig_set(DD.read_index(spark, index, DD.LSH_INDEX)[0])
+    before = _sig_set(DD.read_index(spark, index)[0])
 
     # mean-size guard: with a tiny floor fraction the mean is "fine",
     # so even a high file count must NOT trigger
@@ -519,7 +560,7 @@ def test_maybe_compact_index_lsh_kind_detection_and_threshold(
     r = MNT.maybe_compact_index(spark, index, min_files=4)
     assert r["kind"] == "lsh" and r["compacted"]
     assert r["report"]["bands_files"][1] <= r["report"]["bands_files"][0]
-    assert _sig_set(DD.read_index(spark, index, DD.LSH_INDEX)[0]) == before
+    assert _sig_set(DD.read_index(spark, index)[0]) == before
 
     with _pytest.raises(ValueError):
         MNT.index_kind(spark, str(tmp_path / "not_an_index"))

@@ -133,13 +133,6 @@ def test_multimodal_feature_extraction(spark):
     assert feats[1]["feature"] == feats2[1]["feature"]
 
 
-def test_multimodal_frame_sample_plan(spark):
-    rows = [(1, None, b"", ("video", "video/mp4", None, None, 3500))]
-    media = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-    frames = multimodal.frame_sample_plan(media, every_ms=1000).collect()
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000]
-
-
 def test_events_schema_roundtrip(spark, sf_dir):
     ev = read_table(spark, sf_dir, "events")
     assert [f.name for f in ev.schema.fields] == [f.name for f in TESTDATA["events"].fields]

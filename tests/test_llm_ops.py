@@ -540,10 +540,10 @@ def test_incremental_lsh_equals_full_recompute(spark, sf_dir, tmp_path):
     assert corpus_pairs | _pairs_set(inc) == _pairs_set(full)
 
     # (b) index-update ∘ apply == full index build
-    upd_sig, upd_bands = DD.read_index(spark, path, DD.LSH_INDEX)
+    upd_sig, upd_bands = DD.read_index(spark, path)
     full_path = str(tmp_path / "lsh_index_full")
     DD.build_lsh_index(docs, full_path)
-    full_sig, full_bands = DD.read_index(spark, full_path, DD.LSH_INDEX)
+    full_sig, full_bands = DD.read_index(spark, full_path)
     assert upd_sig.exceptAll(full_sig).isEmpty()
     assert full_sig.exceptAll(upd_sig).isEmpty()
     assert upd_bands.exceptAll(full_bands).isEmpty()

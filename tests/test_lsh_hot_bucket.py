@@ -78,8 +78,8 @@ def test_grouped_equals_ungrouped_on_duplicate_heavy_corpus(spark):
 
 
 def test_hamming_grouped_equals_ungrouped(spark):
-    """Same equivalence for the pigeonhole hamming join (SimHash /
-    pHash family): identical fingerprints collapse, output matches an
+    """Same equivalence for the pigeonhole hamming join (SimHash
+    family): identical fingerprints collapse, output matches an
     ungrouped chunk self-join restated inline."""
     fp = spark.createDataFrame(
         [(1, 0b1111), (2, 0b1111), (3, 0b1111), (4, 0b0111), (5, -1), (6, 1 << 40)],
@@ -132,7 +132,7 @@ def test_skew_10k_identical_docs_linear_candidate_volume(spark):
 
 
 def test_skew_identical_fingerprints_linear_candidates(spark):
-    """Hamming-join version of the skew test: 5k identical pHash/
+    """Hamming-join version of the skew test: 5k identical
     SimHash longs → one rep, chunk table n_chunks rows, full output."""
     n = 5_000
     fp = spark.range(n).select(

@@ -1,7 +1,5 @@
 """MS-ADPCM (WAV tag 2) and IEEE-float (tag 3) codecs — round 9
-continuation, closing the last WAV-format stubs. The registry entries
-prove the distributed boundary with exact fixed points (constant
-signal / dyadic values); the codec substance is pinned here.
+continuation, closing the last WAV-format stubs.
 """
 
 from __future__ import annotations

@@ -8,7 +8,9 @@ pairs back afterwards (``dedup.collapse_identical_signatures``,
 clones, near-dups and singletons, each family's output must equal an
 all-pairs reference computed here in Python. The IVF case pins that
 ``ivf_topk`` and a persisted index probed with ``ivf_probe_index``
-are one search: same centroids, same rows.
+are one search: same centroids, same rows. The last four cases pin the
+band-configuration guards and the single-chunk boundary of the SimHash
+chunk banding (``dedup.hash_chunk_entries``, ``hamming_near_pairs``).
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import math
 from itertools import combinations
 
+import pytest
 from pyspark.sql import functions as F
 
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
@@ -169,3 +172,68 @@ def test_null_keys_pair_with_nothing(spark):
     assert _pairs(SIM.embedding_near_dup(corpus, 4, 0.99), "cosine_sim") == {
         (3, 4): _cos(v, v)
     }
+
+
+def test_hamming_near_pairs_rejects_bad_band_config(spark):
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.dedup import (
+        hamming_near_pairs,
+    )
+
+    fp = spark.createDataFrame([(1, 0)], "id long, h long")
+    with pytest.raises(ValueError):
+        hamming_near_pairs(fp, max_hamming=4, n_chunks=4)
+
+
+def test_hamming_near_pairs_wider_banding(spark):
+    """8x8-bit chunks admit hamming up to 7; verify an exact distance
+    is reported and the threshold filter holds."""
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.dedup import (
+        hamming_near_pairs,
+    )
+
+    fp = spark.createDataFrame(
+        [(1, 0b1111), (2, 0b0111), (3, -1)], "id long, h long"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in hamming_near_pairs(fp, max_hamming=7, n_chunks=8).collect()
+    }
+    assert got == {(1, 2): 1}  # 3 is 60+ bits from both
+
+
+def test_chunk_entries_reject_degenerate_chunk_count(spark):
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.dedup import (
+        hash_chunk_entries,
+    )
+
+    fp = spark.createDataFrame([(1, 0)], "id long, h long")
+    with pytest.raises(ValueError):
+        hash_chunk_entries(fp, n_chunks=65)  # zero-width chunks
+    with pytest.raises(ValueError):
+        hash_chunk_entries(fp, n_chunks=0)
+
+
+def test_chunk_entries_full_width_single_chunk(spark):
+    """n_chunks=1 is the documented lower boundary: the chunk IS the
+    whole long (a (1<<64)-1 mask literal would overflow Spark's long —
+    ADVICE r9). Values, including negative longs, pass through
+    unchanged, and hamming_near_pairs(max_hamming=0, n_chunks=1)
+    degenerates to exact-hash pairing."""
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.dedup import (
+        hamming_near_pairs,
+        hash_chunk_entries,
+    )
+
+    fp = spark.createDataFrame(
+        [(1, -1), (2, -1), (3, 7), (4, 7), (5, 8)], "id long, h long"
+    )
+    rows = hash_chunk_entries(fp, n_chunks=1).collect()
+    assert {r["chunk"] for r in rows} == {0}
+    assert {(r["id"], r["val"]) for r in rows} == {
+        (1, -1), (2, -1), (3, 7), (4, 7), (5, 8)
+    }
+    pairs = sorted(
+        (r["id_a"], r["id_b"], r["hamming"])
+        for r in hamming_near_pairs(fp, max_hamming=0, n_chunks=1).collect()
+    )
+    assert pairs == [(1, 2, 0), (3, 4, 0)]

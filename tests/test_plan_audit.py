@@ -128,16 +128,10 @@ NESTED_LOOP_OK = {
     "embedding_mmr_rerank",
 }
 
-# row-at-a-time Python eval (BatchEvalPython) is never acceptable;
-# Arrow-batched eval (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)
-# is the sanctioned Python boundary (multimodal + stateful ops).
-ARROW_OK = {
-    "multimodal_features",
-    "multimodal_resize",
-    # WAV fixture encode + PCM decode/extract — the two sanctioned
-    # codec-boundary Arrow stages back-to-back (no shuffle between).
-    "multimodal_audio_features",
-}
+# row-at-a-time Python eval (BatchEvalPython) is never acceptable, and
+# no registry query plans an Arrow-batched Python UDF (ArrowEvalPython)
+# either; MapInPandas / FlatMapGroupsInPandas stay the sanctioned
+# Python boundary (stateful ops).
 
 
 @pytest.mark.parametrize("name", sorted(entry.queries()))
@@ -156,10 +150,9 @@ def test_plan_has_no_scale_red_flags(spark, sf_dir, name):
     assert "BatchEvalPython" not in plan, (
         f"{name}: row-at-a-time Python UDF — use Arrow/pandas\n{plan}"
     )
-    if name not in ARROW_OK:
-        assert "ArrowEvalPython" not in plan, (
-            f"{name}: unexpected Python boundary\n{plan}"
-        )
+    assert "ArrowEvalPython" not in plan, (
+        f"{name}: unexpected Python boundary\n{plan}"
+    )
 
 
 # windows whose required child distribution is SinglePartition but

@@ -42,7 +42,6 @@ SHUFFLE_BUDGET = {
     "sample_hash_stratified": 0,
     "dedup_exact_groups": 1,
     "dedup_edit1_names": 1,
-    "multimodal_features": 0,
     "dedup_latest_wins": 1,
     "tumbling_window_agg": 1,
     "embedding_topk_bruteforce": 1,
@@ -160,10 +159,8 @@ SHUFFLE_BUDGET = {
     # skew diagnostic: the key-count agg + the counts-frame reuse for
     # the totals lobe (TakeOrdered ships driver-side, no exchange).
     "skew_diagnose_events": 2,
-    # round-7: audio features are two Arrow map stages + a select —
-    # zero shuffles; int8 IVF probe = one per-query ranking exchange
+    # round-7: int8 IVF probe = one per-query ranking exchange
     # (index build/append are separate write jobs, not this plan).
-    "multimodal_audio_features": 0,
     "embedding_ivf_int8": 1,
     # round-7 continuation (plans reviewed 2026-08-15): IVM refresh =
     # the one big old⋈old exchange pair collapses under AQE to a
@@ -194,7 +191,6 @@ SHUFFLE_BUDGET = {
     "layout_quantile_buckets": 1,
     "sample_negatives_contrastive": 4,
     # round-8 continuation (plans reviewed at sf0.001 AND sf0.01):
-    # JPEG round trip = one Arrow map stage, zero exchanges;
     # decontaminate = eval-gram distinct (eval-sized) + train-id
     # groupBy, eval grams broadcast (budget 3 allows the AQE
     # broadcast→shuffle flip on a corpus-sized eval set);
@@ -203,7 +199,6 @@ SHUFFLE_BUDGET = {
     # blocklist = blocked-id distinct + broadcast blocklist join +
     # broadcast anti join (measured 2, budget 4 for the anti-join
     # flip when the blocked set scales).
-    "multimodal_jpeg_roundtrip": 0,
     "text_decontaminate": 3,
     "text_bpe_tokenize_large": 1,
     "curation_blocklist_filter": 4,
@@ -226,12 +221,6 @@ SHUFFLE_BUDGET = {
     # window).
     "sample_temporal_embargo_split": 2,
     "events_markov_transitions": 4,
-    # round-9: both pure Arrow map pipelines over a pruned documents
-    # scan — zero exchanges by construction (measured 0 at both SFs;
-    # a nonzero count here means the codec entries grew a shuffle,
-    # which would be a real plan bug).
-    "multimodal_jpeg_subsampled": 0,
-    "multimodal_frame_sample_mjpeg": 0,
     # quota mixing: the per-source row_number partition + the count
     # aggregate feeding the KB-state seat apportionment (measured 2 at
     # both SFs; +1 for an AQE broadcast->shuffle flip of the quota
@@ -241,39 +230,6 @@ SHUFFLE_BUDGET = {
     # exchange + the offsets equi-join (measured 3 at both SFs; the
     # bounds frame rides a KB broadcast, see NESTED_LOOP_OK).
     "text_pack_chunks": 4,
-    # progressive JPEG: pure Arrow map pipeline, zero exchanges by
-    # construction (measured 0 at both SFs).
-    "multimodal_jpeg_progressive": 0,
-    # IMA ADPCM audio: pure Arrow map pipeline (measured 0 at both SFs).
-    "multimodal_audio_adpcm": 0,
-    # pHash near-dup: the identical-fingerprint collapse window runs in
-    # the collapse checkpoint's own job, outside the returned plan; the
-    # candidate equi-join + dedup ride broadcasts at these SFs
-    # (measured 0 at both).
-    "multimodal_phash_near_dup": 0,
-    # FFT/STFT spectral features: pure Arrow map pipeline (measured 0
-    # at both SFs).
-    "multimodal_audio_spectrum": 0,
-    # GIF LZW round-trip + frame walk: pure Arrow map pipeline
-    # (measured 0 at both SFs).
-    "multimodal_gif_roundtrip": 0,
-    # G.711 companding: pure Arrow map pipeline (measured 0 at both
-    # SFs).
-    "multimodal_audio_g711": 0,
-    # incremental pHash image index: the banded within-shard
-    # self-join dedup (the shard's identical-fingerprint collapse runs
-    # in its checkpoint's own job); the corpus probe rides a broadcast
-    # and the index build is write-side (measured 1 at both SFs).
-    "multimodal_phash_incremental": 1,
-    # MS-ADPCM / IEEE-float WAV: pure Arrow map pipelines (measured 0
-    # at both SFs).
-    "multimodal_audio_msadpcm": 0,
-    "multimodal_audio_float": 0,
-    # baseline TIFF: pure Arrow map pipeline (measured 0 at both SFs).
-    "multimodal_tiff_roundtrip": 0,
-    # DIB-AVI frame sampling: pure Arrow map pipeline (measured 0 at
-    # both SFs).
-    "multimodal_frame_sample_dib": 0,
     # homoglyph folding: scan + translate projection, zero exchanges
     # (measured 0 at both SFs).
     "text_homoglyph_fold": 0,

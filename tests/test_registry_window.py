@@ -9,8 +9,11 @@ These tests fail the build if a future registration silently pushes a
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import __spark_entry__ as entry_mod
 
+REPO = Path(__file__).resolve().parents[1]
 WINDOW = entry_mod._DRIVER_WINDOW
 
 # queries the judge explicitly required inside the window (VERDICT r01)
@@ -47,23 +50,24 @@ REQUIRED_IN_WINDOW = {
     "curation_pipeline",
     "q3_shipping_priority",
     "dq_expectations",
-    # r9 rotation (VERDICT r8 #1): round-8 LLM flagships + the round-9
-    # real-codec multimodal paths under the driver's hard hash check
+    # r9 rotation (VERDICT r8 #1): round-8 LLM flagships under the
+    # driver's hard hash check
     "link_golden_records",
     "layout_zorder_prune",
     "text_bpe_tokenize_large",
-    "multimodal_jpeg_roundtrip",
-    "multimodal_frame_sample_mjpeg",
     # r10 rotation (VERDICT r9 #4): round-9 flagships + the
-    # hot-bucket-guard star form (VERDICT r9 #1); r12 rotated the
-    # long-green multimodal_tiff_roundtrip/frame_sample_dib to the
-    # CI tail (two window rounds served; four codec reps remain)
+    # hot-bucket-guard star form (VERDICT r9 #1)
     "sample_quota_mix",
     "text_pack_chunks",
     "text_homoglyph_fold",
-    "multimodal_phash_near_dup",
-    "multimodal_audio_g711",
     "dedup_minhash_grouped",
+    # the retired multimodal family's four slots: curation-pipeline
+    # code — the persisted-LSH probe leg, the edges build leg, the LM
+    # count-index build and the exact_dedup fingerprint groups
+    "dedup_incremental_lsh_probe",
+    "dedup_edges_build",
+    "text_lm_index_build",
+    "dedup_exact_groups",
     # r11 rotation (VERDICT r10 #1): SemDeDup pruning and the epoch
     # shuffle; the composed kill chain dedup_survivors served its r11
     # window round and moved to the CI tail in r12 — its recursive-CTE
@@ -81,9 +85,8 @@ REQUIRED_IN_WINDOW = {
     # §2 coverage representatives (one per family; the r9 rotation
     # moved the redundant siblings — entity_type/try_cast,
     # flatten_struct, profile_catalog, sort_limit_topk,
-    # join_named_key_left, multimodal_features — to the CI tail
-    # sweep; the r10 rotation moved scalar_to_usd,
-    # profile_report_json, agg_stats, text_winnow_fingerprints,
+    # join_named_key_left — to the CI tail sweep; the r10 rotation
+    # moved scalar_to_usd, profile_report_json, agg_stats, text_winnow_fingerprints,
     # sample_hash_stratified, dedup_ngram_jaccard, dedup_edit1_names
     # and text_bpe_learn there, each leaving a family sibling under
     # the hard hash check)
@@ -227,10 +230,10 @@ def test_readme_registry_block_in_sync():
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO / "tools"))
     import gen_registry_docs as gen
 
-    with open("/root/repo/README.md") as f:
+    with open(REPO / "README.md") as f:
         text = f.read()
     m = re.search(
         re.escape(gen.BEGIN) + r".*?" + re.escape(gen.END), text, re.DOTALL
@@ -251,10 +254,10 @@ def test_survey_status_block_in_sync():
     import re
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO / "tools"))
     import gen_survey_status as gen
 
-    with open("/root/repo/SURVEY.md") as f:
+    with open(REPO / "SURVEY.md") as f:
         text = f.read()
     m = re.search(
         re.escape(gen.BEGIN) + r".*?" + re.escape(gen.END), text, re.DOTALL
@@ -273,7 +276,7 @@ def test_plans_md_in_sync_with_registry():
     fails here. The fix is one `python tools/plan_report.py`."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO / "tools"))
     import plan_report
 
     assert plan_report.check() == 0, (
@@ -288,7 +291,7 @@ def test_readme_coverage_table_references_only_live_queries():
     stale documentation."""
     import re
 
-    with open("/root/repo/README.md") as f:
+    with open(REPO / "README.md") as f:
         text = f.read()
     cov = text.split("## Operator coverage")[1].split("## Design for scale")[0]
     live = set(entry_mod._REGISTRY)
@@ -331,7 +334,7 @@ def test_readme_tpch_prose_matches_registry():
     coverage section."""
     import re
 
-    with open("/root/repo/README.md") as f:
+    with open(REPO / "README.md") as f:
         text = f.read()
     cov = text.split("## Operator coverage")[1].split("## Design for scale")[0]
     live = set(entry_mod._REGISTRY)

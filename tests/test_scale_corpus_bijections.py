@@ -10,8 +10,9 @@ two composed levels of the round-10 octave (sf1 -> sf10).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 from scale_stress_10x import REPLICAS, _rot
 

@@ -101,7 +101,7 @@ def test_streaming_incremental_lsh_accumulates_to_full_recompute(
     )
     q = INC.streaming_index_dedup(
         stream, index, pairs, str(tmp_path / "chk"),
-        DD.LSH_INDEX, {"k": 3, "num_hashes": 64, "bands": 16}, 0.5,
+        {"k": 3, "num_hashes": 64, "bands": 16}, 0.5,
     )
     q.processAllAvailable()
     q.stop()
@@ -119,10 +119,10 @@ def test_streaming_incremental_lsh_accumulates_to_full_recompute(
     assert got == want
 
     # the accumulated index equals a one-shot build over everything
-    sig, _ = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig, _ = DD.read_index(spark, index)
     full_index = str(tmp_path / "lsh_full")
     DD.build_lsh_index(docs, full_index)
-    full_sig, _ = DD.read_index(spark, full_index, DD.LSH_INDEX)
+    full_sig, _ = DD.read_index(spark, full_index)
     assert sig.exceptAll(full_sig).isEmpty()
     assert full_sig.exceptAll(sig).isEmpty()
 
@@ -131,13 +131,13 @@ def test_streaming_incremental_lsh_accumulates_to_full_recompute(
     # no pair is duplicated
     q2 = INC.streaming_index_dedup(
         stream, index, pairs, str(tmp_path / "chk2"),
-        DD.LSH_INDEX, {"k": 3, "num_hashes": 64, "bands": 16}, 0.5,
+        {"k": 3, "num_hashes": 64, "bands": 16}, 0.5,
     )
     q2.processAllAvailable()
     q2.stop()
     replayed = spark.read.parquet(pairs)
     assert replayed.count() == len(got)
-    sig2, _ = DD.read_index(spark, index, DD.LSH_INDEX)
+    sig2, _ = DD.read_index(spark, index)
     assert sig2.count() == sig.count()
 
 # round-13: GATE-covered heavy suite — deselected from the default

@@ -1,11 +1,9 @@
 """Baseline TIFF codec (multimodal_tiff) — IFD walk, strips, PackBits,
 byte orders, multi-page chains (round 9 continuation).
 
-The registry entry ``multimodal_tiff_roundtrip`` proves the
-distributed boundary against a closed-form oracle; the codec substance
-is pinned here: a HAND-ASSEMBLED grayscale fixture (independent of the
-encoder — exercises photometric 0/1 inversion and inline tag values),
-PackBits unit laws, round trips across compression × endianness ×
+The codec substance is pinned here: a HAND-ASSEMBLED grayscale
+fixture (independent of the encoder — exercises photometric 0/1
+inversion and inline tag values), PackBits unit laws, round trips across compression × endianness ×
 strip segmentation, page walking, and the error taxonomy.
 """
 

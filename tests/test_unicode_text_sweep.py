@@ -7,9 +7,8 @@ The text stack deliberately uses ASCII-explicit regex classes
 BPE_PATTERN note) because Java regex (Spark) and RE2 (DuckDB) DIVERGE
 on unicode-aware classes (\\w, \\p{L}, case folding). This sweep is
 the proof the claim holds end to end: multibyte text flowing through
-tokenizers, fingerprints, shingles, language-ID, quality scores, LSH
-signatures and the Arrow multimodal boundary produces bit-identical
-results in both engines.
+tokenizers, fingerprints, shingles, language-ID, quality scores and
+LSH signatures produces bit-identical results in both engines.
 
 Construction: ~every third document gets a deterministic unicode
 decoration woven into its text (prefix + an infix after the first

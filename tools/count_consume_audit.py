@@ -24,8 +24,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entry_mod
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.session import (

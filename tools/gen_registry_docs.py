@@ -15,12 +15,14 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 BEGIN = "<!-- REGISTRY:BEGIN (generated by tools/gen_registry_docs.py — do not edit by hand) -->"
 END = "<!-- REGISTRY:END -->"
-README = "/root/repo/README.md"
+README = ROOT / "README.md"
 
 
 def render_block() -> str:

@@ -16,13 +16,15 @@ from __future__ import annotations
 import json
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 BEGIN = "<!-- STATUS:BEGIN (generated by tools/gen_survey_status.py — do not edit by hand) -->"
 END = "<!-- STATUS:END -->"
-SURVEY = "/root/repo/SURVEY.md"
-GATE = "/root/repo/GATE.json"
+SURVEY = ROOT / "SURVEY.md"
+GATE = ROOT / "GATE.json"
 
 
 def render_block() -> str:

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entry_mod
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.session import (
@@ -46,7 +48,7 @@ def summarize(executed: str) -> dict:
     }
 
 
-def plans_md_names(path: str = "/root/repo/PLANS.md") -> list[str]:
+def plans_md_names(path: Path = ROOT / "PLANS.md") -> list[str]:
     """Query names recorded in PLANS.md (first cell of each table row)."""
     names = []
     with open(path) as f:
@@ -128,7 +130,7 @@ def main() -> None:
         "  unpartitioned window for their grand total — constant cost,",
         "  never applied to fact-grain rows.",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(qs)} queries)")
     spark.stop()
