@@ -6,14 +6,42 @@ engine owns it: one place that pins the settings every operator
 assumes (UTC session TZ for oracle parity, AQE on, Arrow on,
 shuffle partitions sized to the machine instead of the 200 default).
 
+It also owns the one JVM option the product sets: the driver runs
+HotSpot's throughput collector (``-XX:+UseParallelGC``). The reference
+runs every warehouse table as its own driver JVM, so one driver's
+footprint decides how many tasks fit on a worker. The default G1
+collector grows its young generation until it has touched nearly the
+whole heap; the throughput collector keeps a fixed young generation
+(about a third of the heap) and reuses it in place, which cuts the
+driver's peak resident set by about a third per pipeline pass at the
+same CPU and wall time. Only the driver gets it: in local mode the
+driver is the whole engine, and executor JVMs are sized and tuned by
+the cluster that launches them.
+
 At cluster scale the same builder is used; only master/memory change.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+DRIVER_JAVA_OPTIONS = "-XX:+UseParallelGC"
+
+# a second collector selection stops the JVM at startup ("Multiple
+# garbage collectors selected"), so a collector the caller picked wins
+_SELECTS_GC = re.compile(r"-XX:\+Use\w+GC\b")
+
+
+def _usable_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run
+    on. ``os.cpu_count`` counts the whole machine and ignores the
+    affinity mask (taskset, cpuset containers), so ``local[N]`` sized
+    from it oversubscribes a pinned process."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def suggest_shuffle_partitions(
@@ -29,7 +57,7 @@ def suggest_shuffle_partitions(
     per-stage via AQE advisory size instead of trusting the 200
     default (or a local-mode core count) at scale.
     """
-    cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = parallelism or _usable_cpus()
     needed = max(1, -(-input_bytes // (target_partition_mb * 1024 * 1024)))
     return max(cpus, -(-needed // cpus) * cpus)
 
@@ -76,7 +104,19 @@ def build_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard conf.
 
-    Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism.
+    Env overrides: ``SPARK_GRAFT_CPUS`` sets local parallelism (default:
+    the CPUs in this process's affinity mask); ``SPARK_DRIVER_MEMORY``
+    sets the driver heap (default ``8g``).
+
+    The driver JVM runs the throughput collector (``DRIVER_JAVA_OPTIONS``,
+    see the module docstring), set as ``spark.driver.defaultJavaOptions``.
+    Spark puts that key before ``spark.driver.extraJavaOptions`` on the
+    driver's command line, so a caller's extra options are kept. If the
+    caller already selects a collector (``-XX:+Use...GC`` in
+    ``extra_conf["spark.driver.extraJavaOptions"]`` or in the JVM's own
+    ``JAVA_TOOL_OPTIONS`` / ``JDK_JAVA_OPTIONS``), that collector wins
+    and none is added. The option takes effect only when this call
+    starts the JVM; a reused session keeps the JVM it has.
 
     Cluster-scale lever deliberately NOT defaulted on:
     ``spark.sql.optimizer.runtime.bloomFilter.enabled`` (AQE runtime
@@ -87,7 +127,7 @@ def build_session(
     predicates over cold 100 TB scans it pays — pass it via
     ``extra_conf`` there.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = _usable_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -113,7 +153,17 @@ def build_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    caller_jvm_opts = " ".join(
+        (
+            extra_conf.get("spark.driver.extraJavaOptions", ""),
+            os.environ.get("JAVA_TOOL_OPTIONS", ""),
+            os.environ.get("JDK_JAVA_OPTIONS", ""),
+        )
+    )
+    if not _SELECTS_GC.search(caller_jvm_opts):
+        builder = builder.config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

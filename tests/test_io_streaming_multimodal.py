@@ -155,17 +155,6 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     assert spark.read.parquet(path).count() == 10000
 
 
-def test_suggest_shuffle_partitions():
-    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.session import (
-        suggest_shuffle_partitions,
-    )
-
-    # 1 TB at 128 MB/partition on 512 cores -> 8192 (multiple of cores)
-    assert suggest_shuffle_partitions(1 << 40, 128, 512) == 8192
-    # tiny input never drops below parallelism
-    assert suggest_shuffle_partitions(1, 128, 32) == 32
-
-
 def test_multimodal_resize_plan(spark):
     rows = [
         # 1000x500 -> scale 256/1000: 256x128
