@@ -13,7 +13,7 @@ footprint decides how many tasks fit on a worker. The default G1
 collector grows its young generation until it has touched nearly the
 whole heap; the throughput collector keeps a fixed young generation
 (about a third of the heap) and reuses it in place, which cuts the
-driver's peak resident set by about a third per pipeline pass at the
+driver's peak resident set by about a third per pipeline pass at about the
 same CPU and wall time. Only the driver gets it: in local mode the
 driver is the whole engine, and executor JVMs are sized and tuned by
 the cluster that launches them.
